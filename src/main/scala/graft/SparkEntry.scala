@@ -7,6 +7,7 @@ import org.apache.spark.sql.types._
 
 import graft.functions.{Stats, TextAnalysis}
 import graft.operators.{Association, Curation, Dedup, Graphs, Joins, Multimodal, Similarity, Timeseries, TrainingPipeline}
+import graft.operators.Multimodal.{Bilinear, Box, Codec}
 import graft.sources.{EventFixtures, Tables}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
@@ -1529,10 +1530,10 @@ object SparkEntry {
     "q256_audio_resample" -> ((s, dir) =>
       landed( // q279's fixture-shape notes (repartition + landed-before-order)
         Multimodal.decodeWavFeatures(s,
-            Multimodal.resampleWav(s,
+            Multimodal.resize(s,
               Multimodal.toWav16(Tables.documents(s, dir)
                 .spreadWide("doc_id")),
-              k = 4))
+              Codec.Wav, Box(4)))
           .toDF())
         .orderBy("doc_id")),
 
@@ -1548,10 +1549,10 @@ object SparkEntry {
     "q269_png_resize" -> ((s, dir) =>
       landed( // q279's fixture-shape notes (repartition + landed-before-order)
         Multimodal.decodePngFeatures(s,
-            Multimodal.resizePng(s,
+            Multimodal.resize(s,
               Multimodal.toPng(Tables.documents(s, dir).filter(col("n_chars") >= 6)
                 .spreadWide("doc_id")),
-              kx = 4))
+              Codec.Png, Box(4)))
           .toDF()
           .drop("idat_len"))
         .orderBy("doc_id")),
@@ -1567,10 +1568,10 @@ object SparkEntry {
     "q275_linear_resample" -> ((s, dir) =>
       landed( // q279's fixture-shape notes (repartition + landed-before-order)
         Multimodal.decodeWavFeatures(s,
-            Multimodal.resampleWavTo(s,
+            Multimodal.resize(s,
               Multimodal.toWav16(Tables.documents(s, dir)
                 .spreadWide("doc_id")),
-              targetRate = 3000))
+              Codec.Wav, Bilinear(3000)))
           .toDF())
         .orderBy("doc_id")),
 
@@ -1600,10 +1601,10 @@ object SparkEntry {
     "q277_jpeg_thumbnail" -> ((s, dir) =>
       landed( // q279's fixture-shape notes (repartition + landed-before-order)
         Multimodal.decodeJpegFeatures(s,
-            Multimodal.resizeJpegTo(s,
+            Multimodal.resize(s,
               Multimodal.toJpeg(Tables.documents(s, dir).filter(col("n_chars") >= 64)
                 .spreadWide("doc_id")),
-              targetW = 24, targetH = 16))
+              Codec.Jpeg, Bilinear(24, 16)))
           .toDF()
           .drop("scan_bits", "recon_sum"))
         .orderBy("doc_id")),
@@ -1652,11 +1653,11 @@ object SparkEntry {
     "q280_color_jpeg_thumbnail" -> ((s, dir) =>
       landed(
         Multimodal.decodeJpegColorFeatures(s,
-            Multimodal.resizeJpegTo(s,
+            Multimodal.resize(s,
               Multimodal.toJpegColor(
                 Tables.documents(s, dir).filter(col("n_chars") >= 3)
                   .spreadWide("doc_id")),
-              targetW = 24, targetH = 16)) // q279's fixture-shape notes
+              Codec.Jpeg, Bilinear(24, 16))) // q279's fixture-shape notes
           .toDF())
         .orderBy("doc_id")),
 
@@ -1673,10 +1674,10 @@ object SparkEntry {
       landed( // q279's fixture-shape notes (repartition + landed-before-order)
         Multimodal.videoFrameStats(
           Multimodal.decodeAviFrames(s,
-            Multimodal.resizeAviTo(s,
+            Multimodal.resize(s,
               Multimodal.toAvi(Tables.documents(s, dir)
                 .spreadWide("doc_id")),
-              targetBytes = 12))))
+              Codec.Avi, Bilinear(12)))))
         .orderBy("doc_id", "frame_idx")),
 
     // BILINEAR resize to an EXPLICIT target — the non-integer-scale
@@ -1688,9 +1689,9 @@ object SparkEntry {
     // integers end to end, so the oracle replays every output pixel.
     "q272_bilinear_resize" -> ((s, dir) =>
       Multimodal.decodePgmFeatures(s,
-          Multimodal.resizePgmTo(s,
+          Multimodal.resize(s,
             Multimodal.toPgm(Tables.documents(s, dir).filter(col("n_chars") >= 1)),
-            targetW = 48, targetH = 1))
+            Codec.Pgm, Bilinear(48, 1)))
         .toDF()
         .orderBy("doc_id")),
 
@@ -1700,9 +1701,9 @@ object SparkEntry {
     // R/G/B independence and the vertical pass both pin.
     "q273_bilinear_color_resize" -> ((s, dir) =>
       Multimodal.decodePpmFeatures(s,
-          Multimodal.resizePpmTo(s,
+          Multimodal.resize(s,
             Multimodal.toPpm(Tables.documents(s, dir).filter(col("n_chars") >= 3)),
-            targetW = 32, targetH = 2))
+            Codec.Ppm, Bilinear(32, 2)))
         .toDF()
         .orderBy("doc_id")),
 
@@ -1718,10 +1719,10 @@ object SparkEntry {
     "q271_jpeg_resize" -> ((s, dir) =>
       landed( // q279's fixture-shape notes (repartition + landed-before-order)
         Multimodal.decodeJpegFeatures(s,
-            Multimodal.resizeJpeg(s,
+            Multimodal.resize(s,
               Multimodal.toJpeg(Tables.documents(s, dir).filter(col("n_chars") >= 64)
                 .spreadWide("doc_id")),
-              kx = 4))
+              Codec.Jpeg, Box(4)))
           .toDF()
           .drop("scan_bits", "recon_sum"))
         .orderBy("doc_id")),
@@ -1736,10 +1737,10 @@ object SparkEntry {
     "q270_bmp_resize" -> ((s, dir) =>
       landed( // q279's fixture-shape notes (repartition + landed-before-order)
         Multimodal.decodeBmpFeatures(s,
-            Multimodal.resizeBmp(s,
+            Multimodal.resize(s,
               Multimodal.toBmp(Tables.documents(s, dir)
                 .spreadWide("doc_id")),
-              kx = 4))
+              Codec.Bmp, Box(4)))
           .toDF())
         .orderBy("doc_id")),
 
@@ -1752,7 +1753,7 @@ object SparkEntry {
       // (ISO r20): the PPM chain is too cheap for the repartition+landed
       // overhead to pay for the double-eval it removes. Left as-is.
       Multimodal.decodePpmFeatures(s,
-          Multimodal.resizePpm(s, Multimodal.toPpm(Tables.documents(s, dir)), kx = 4))
+          Multimodal.resize(s, Multimodal.toPpm(Tables.documents(s, dir)), Codec.Ppm, Box(4)))
         .toDF()
         .orderBy("doc_id")),
 
@@ -1763,7 +1764,7 @@ object SparkEntry {
     // block) through resize, re-encode, AND re-decode in one hash.
     "q255_image_resize" -> ((s, dir) =>
       Multimodal.decodePgmFeatures(s,
-          Multimodal.resizePgm(s, Multimodal.toPgm(Tables.documents(s, dir)), kx = 4))
+          Multimodal.resize(s, Multimodal.toPgm(Tables.documents(s, dir)), Codec.Pgm, Box(4)))
         .toDF()
         .select(
           col("doc_id"), col("width"), col("height"), col("n_px"),
@@ -2590,10 +2591,10 @@ object SparkEntry {
       landed( // q279's fixture-shape notes (repartition + landed-before-order)
         Multimodal.videoFrameStats(
           Multimodal.decodeAviFrames(s,
-            Multimodal.resizeAvi(s,
+            Multimodal.resize(s,
               Multimodal.toAvi(Tables.documents(s, dir)
                 .spreadWide("doc_id")),
-              kx = 4))))
+              Codec.Avi, Box(4)))))
         .orderBy("doc_id", "frame_idx")),
 
     // IVF state REBUILD (VERDICT r17 #3 — the recovery the graph family

@@ -25,6 +25,11 @@ import org.apache.spark.sql.functions._
   * slices every `stride`-th frame with pure byte arithmetic, and the
   * sampled frames decode with the same [[PgmDecoder]].
   *
+  * Transforms are codec × kernel: [[resize]] decodes each payload
+  * through a [[Codec]] into a [[Raster]], applies one [[Kernel]]
+  * ([[Box]] or [[Bilinear]]) and re-encodes into the same format; the
+  * three transform routers iterate one codec table ([[codecs]]).
+  *
   * Scale: payloads never leave their partition (decode is `mapPartitions`,
   * no shuffle); metadata lives in a separate small struct column so
   * metadata-only queries prune the binary column at the parquet scan.
@@ -211,25 +216,20 @@ object Multimodal {
   }
 
   /** The QUARANTINED media TRANSFORM pass — [[mediaInventory]]'s
-    * contract extended from decode to transform (VERDICT r17 #4): a
-    * 100 TB transform sweep runs the real kernels ([[resizePgm]] /
-    * [[resampleWav]] / [[resizeAvi]]) over a mixed lake where a corrupt
+    * contract extended from decode to transform: a 100 TB transform
+    * sweep runs the [[Box]] kernel over a mixed lake where a corrupt
     * payload must become an inspectable `(ok=false, out_geom NULL)` row,
-    * never the task failure the bare transforms (correctly, for trusted
-    * input) raise. Routing is the SAME [[RouterClaims]] predicates as
-    * both routers, so the three can never drift on what claims what:
-    * payloads claiming a TRANSFORMABLE format (P5/P6 → resize, RIFF/WAVE →
-    * resample, RIFF/AVI → video resize) run transform-then-re-decode —
+    * never the task failure [[resize]] (correctly, for trusted input)
+    * raises. Every claim in [[codecs]] runs transform-then-re-decode:
     * `out_geom` is the re-decoded OUTPUT's geometry (resized pixels,
-    * resampled samples, total resized frame bytes; 0 when the input is
-    * smaller than one block and the transform emits nothing), so a
-    * transform that emitted an undecodable payload quarantines too.
-    * Every other payload (formats with no spatial/temporal transform
-    * here, and format-less raw bytes) passes through untouched:
+    * resampled samples, JPEG blocks, total resized frame bytes; 0 when
+    * the input is smaller than one block and the transform emits
+    * nothing), so a transform that emitted an undecodable payload
+    * quarantines too. Every other payload passes through untouched:
     * `kind='passthrough'`, `out_geom=-1` — the transform pass validates
     * ONLY what it transforms; decode-level triage over the rest is
-    * [[mediaInventory]]'s job. Same shape as both routers: narrow
-    * filtered passes, payloads never leave their partition, no shuffle.
+    * [[mediaInventory]]'s job. Narrow filtered passes, payloads never
+    * leave their partition, no shuffle.
     */
   def mediaTransformInventory(
       spark: SparkSession,
@@ -237,86 +237,88 @@ object Multimodal {
       kx: Int = 4,
       k: Int = 4): DataFrame = {
     import spark.implicits._
-    import RouterClaims._
-    def inv(claim: Column, kind: String)(outGeom: (Long, Array[Byte]) => Long): DataFrame =
-      media.filter(claim).select(col("doc_id"), col("payload"))
-        .as[(Long, Array[Byte])]
-        .mapPartitions(_.map { case (id, b) =>
-          try (id, kind, true, Option(outGeom(id, b)))
-          catch { case _: Exception => (id, kind, false, Option.empty[Long]) }
-        })
-        .toDF("doc_id", "kind", "ok", "out_geom")
-    val pass = media.filter(
-      not(isP5 || isP6 || isPng || isBmp || isJpeg || isRiff || isAvi)).select(
-      col("doc_id"), lit("passthrough").as("kind"),
-      lit(true).as("ok"), lit(-1L).as("out_geom"))
-    inv(isP5, "pgm") { (id, b) =>
-        val (w, h, maxVal, start) = parseNetpbmHeader(id, b, 0, '5')
-        require(start + w.toLong * h <= b.length, s"doc $id: truncated raster")
-        val ow = w / kx
-        if (ow < 1 || h < 1) 0L
-        else PgmDecoder.decode(
-          id, resizedPgm(id, b, start, w, maxVal, kx, 1, ow, h).next()._2).n_px
+    codecs
+      .map { case (kind, claim, codec) =>
+        val kernel = Box(if (kind == "wav") k else kx)
+        media.filter(claim).select(col("doc_id"), col("payload"))
+          .as[(Long, Array[Byte])]
+          .mapPartitions(_.map { case (id, b) =>
+            try (id, kind, true,
+              Option(codec.transform(id, b, kernel).fold(0L)(outGeometry(kind, id, _))))
+            catch { case _: Exception => (id, kind, false, Option.empty[Long]) }
+          })
+          .toDF("doc_id", "kind", "ok", "out_geom")
       }
-      .unionByName(inv(isP6, "ppm") { (id, b) =>
-        resizedPpmPayload(id, b, kx, 1)
-          .fold(0L)(out => PpmDecoder.decode(id, out).n_px)
-      })
-      .unionByName(inv(isPng, "png") { (id, b) =>
-        resizedPngPayload(id, b, kx, 1)
-          .fold(0L)(out => PngCodec.decode(id, out).n_px)
-      })
-      .unionByName(inv(isBmp, "bmp") { (id, b) =>
-        resizedBmpPayload(id, b, kx, 1)
-          .fold(0L)(out => BmpDecoder.decode(id, out).n_px)
-      })
-      .unionByName(inv(isJpeg, "jpeg") { (id, b) =>
-        resizedJpegPayload(id, b, kx, 1)
-          .fold(0L)(out => JpegCodec.decode(id, out).n_blocks)
-      })
-      .unionByName(inv(isRiff, "wav") { (id, b) =>
-        resampledWavPayload(id, b, k)
-          .fold(0L)(out => WavDecoder.decode(id, out).n_samples)
-      })
-      .unionByName(inv(isAvi, "avi") { (id, b) =>
-        AviDecoder.frames(id, resizedAviPayload(id, b, kx))
-          .iterator.map(_._2.length.toLong).sum
-      })
-      .unionByName(pass)
+      .reduce(_ unionByName _)
+      .unionByName(media.filter(not(RouterClaims.any)).select(
+        col("doc_id"), lit("passthrough").as("kind"),
+        lit(true).as("ok"), lit(-1L).as("out_geom")))
+  }
+
+  /** [[mediaTransformInventory]]'s re-decode of one transformed payload. */
+  private def outGeometry(kind: String, id: Long, out: Array[Byte]): Long = kind match {
+    case "pgm"  => PgmDecoder.decode(id, out).n_px
+    case "ppm"  => PpmDecoder.decode(id, out).n_px
+    case "png"  => PngCodec.decode(id, out).n_px
+    case "bmp"  => BmpDecoder.decode(id, out).n_px
+    case "jpeg" => JpegCodec.decode(id, out).n_blocks
+    case "wav"  => WavDecoder.decode(id, out).n_samples
+    case "avi"  => AviDecoder.frames(id, out).iterator.map(_._2.length.toLong).sum
   }
 
   /** The TRANSFORMED mixed lake — [[mediaTransformInventory]]'s payload
     * twin: where the inventory reports verdicts, this APPLIES the
     * transforms and returns the new lake (the write-back half of a
-    * corpus-scale media transform pass). Transformable claims map
-    * through the real kernels (P5 → [[resizePgm]], P6 → [[resizePpm]],
-    * PNG → [[resizePng]] — across the compression boundary,
-    * BMP → [[resizeBmp]], JPEG → [[resizeJpeg]] — across the LOSSY
-    * DCT/entropy boundary, RIFF/WAVE → [[resampleWav]],
-    * RIFF/AVI → [[resizeAvi]]); everything else
-    * passes through byte-identical. Sub-block images/streams DROP
-    * (their transforms emit nothing — the documented decimation
-    * contract), so the output lake can be strictly smaller than the
-    * input. Same [[RouterClaims]] predicates as every router, so the
-    * four can never drift; narrow filtered passes, no shuffle.
+    * corpus-scale media transform pass). Every claim in [[codecs]] maps
+    * through [[resize]] with the [[Box]] kernel (`kx` for rasters and
+    * video frames, `k` for audio); everything else passes through
+    * byte-identical. Sub-block images/streams DROP (the box kernel's
+    * decimation contract), so the output lake can be strictly smaller
+    * than the input. Narrow filtered passes, no shuffle.
     */
   def transformMedia(
       spark: SparkSession,
       media: DataFrame,
       kx: Int = 4,
-      k: Int = 4): DataFrame = {
-    import RouterClaims._
-    def pp(df: DataFrame) = df.select(col("doc_id"), col("payload"))
-    pp(resizePgm(spark, media.filter(isP5), kx))
-      .unionByName(pp(resizePpm(spark, media.filter(isP6), kx)))
-      .unionByName(pp(resizePng(spark, media.filter(isPng), kx)))
-      .unionByName(pp(resizeBmp(spark, media.filter(isBmp), kx)))
-      .unionByName(pp(resizeJpeg(spark, media.filter(isJpeg), kx)))
-      .unionByName(pp(resampleWav(spark, media.filter(isRiff), k)))
-      .unionByName(pp(resizeAvi(spark, media.filter(isAvi), kx)))
-      .unionByName(pp(media.filter(
-        not(isP5 || isP6 || isPng || isBmp || isJpeg || isRiff || isAvi))))
-  }
+      k: Int = 4): DataFrame =
+    resizeRouted(spark, media)(kind => Box(if (kind == "wav") k else kx))
+
+  /** The NORMALIZATION pass a multimodal training pipeline actually
+    * runs over a media lake: every decodable raster — PGM, PPM, BMP,
+    * PNG (across the compression boundary), JPEG (across the lossy
+    * boundary) — bilinear-resamples to ONE fixed targetW×targetH
+    * thumbnail through its own codec round trip, audio resamples to
+    * ONE fixed rate, and every VIDEO frame bilinear-resamples to the
+    * `targetW`-byte raster row under the container walk (frame count
+    * and µs/frame preserved); unclaimed payloads pass through
+    * byte-identical. Unlike [[transformMedia]], nothing drops for
+    * being small — bilinear maps any source geometry to the target
+    * (only empty rasters and audio shorter than one output sample
+    * drop; zero-length FRAMES stay zero-length chunks so avih keeps
+    * matching movi). Narrow filtered passes, zero shuffle.
+    */
+  def thumbnailMedia(
+      spark: SparkSession,
+      media: DataFrame,
+      targetW: Int = 24,
+      targetH: Int = 16,
+      targetRate: Int = 2000): DataFrame =
+    resizeRouted(spark, media) {
+      case "wav" => Bilinear(targetRate)
+      case "avi" => Bilinear(targetW)
+      case _     => Bilinear(targetW, targetH)
+    }
+
+  /** One [[resize]] per claim in [[codecs]], with the kernel chosen by
+    * kind, unioned with the unclaimed payloads passed through.
+    */
+  private def resizeRouted(spark: SparkSession, media: DataFrame)(
+      kernel: String => Kernel): DataFrame =
+    codecs
+      .map { case (kind, claim, codec) =>
+        resize(spark, media.filter(claim), codec, kernel(kind)) }
+      .reduce(_ unionByName _)
+      .unionByName(media.filter(not(RouterClaims.any)).select(col("doc_id"), col("payload")))
 
   /** Wrap each document as a REAL binary PGM image — a 1-row grayscale
     * strip whose pixels are the document's bytes — including a `#`
@@ -389,63 +391,101 @@ object Multimodal {
     (width, height, maxVal, i + 1)
   }
 
-  /** REAL image RESIZE — the multimodal op next to decode /
-    * feature-extract / frame-sample: stride-(kx, ky) box decimation of a
-    * binary PGM payload, RE-ENCODED as a binary PGM payload so the
-    * output composes with every PGM consumer (the decoder, dHash, the
-    * router). Each output pixel is the floor-mean of its kx×ky input
-    * block; tail columns/rows that don't fill a block are dropped (the
-    * standard decimation contract) — and a payload smaller than ONE
-    * block produces NO output row at all (the whole-image tail case;
-    * ADVICE r17: an SQL oracle's empty GROUP BY silently drops such a
-    * doc, so a throwing engine would diverge on any corpus with a
-    * sub-block image — use [[mediaTransformInventory]] when dropped or
-    * corrupt inputs must stay inspectable). Exact integer arithmetic end to end, so an
-    * SQL oracle replays every output byte from the input bytes.
-    * Payloads never leave their partition; zero shuffle.
+  // --- Media transforms: codec × kernel ---------------------------------
+
+  /** A decoded payload as the kernels see it: `w×h` samples of `ch`
+    * interleaved channels, row-major in image order (row 0 = top).
+    * Audio is an `n×1×1` raster; an AVI frame is a `len×1×1` raster.
     */
-  def resizePgm(
-      spark: SparkSession, media: DataFrame, kx: Int, ky: Int = 1): DataFrame = {
+  final case class Raster(w: Int, h: Int, ch: Int, px: Array[Int])
+
+  /** A resampling kernel over a [[Raster]]; channels never mix. `None`
+    * means the source is too small to yield one output sample.
+    * `outWidth` maps a width carried in a header the same way — an
+    * AVI's avih width, a WAV's sample rate.
+    */
+  sealed trait Kernel extends Serializable {
+    def apply(r: Raster): Option[Raster]
+    def outWidth(w: Long): Long
+  }
+
+  /** Stride-(kx, ky) box decimation: each output sample is the
+    * TRUNCATED mean of its kx×ky input block (Java `/` rounds toward
+    * zero exactly like DuckDB's `//` — `-7 // 2 = -3` — which matters
+    * for signed PCM amplitudes; floor division would diverge). Tail
+    * columns/rows that don't fill a block drop, and a source smaller
+    * than ONE block yields `None`, so [[resize]] emits no row: an SQL
+    * oracle's empty GROUP BY drops such a doc too, and a throwing
+    * engine would diverge on any corpus with a sub-block payload (use
+    * [[mediaTransformInventory]] when dropped or corrupt inputs must
+    * stay inspectable). Exact integer arithmetic end to end, so an
+    * oracle replays every output sample from the input bytes.
+    */
+  final case class Box(kx: Int, ky: Int = 1) extends Kernel {
     require(kx >= 1 && ky >= 1, s"factors must be positive: kx=$kx ky=$ky")
-    import spark.implicits._
-    media.select(col("doc_id"), col("payload")).as[(Long, Array[Byte])]
-      .mapPartitions(_.flatMap { case (id, b) =>
-        val (w, h, maxVal, start) = parseNetpbmHeader(id, b, 0, '5')
-        require(start + w.toLong * h <= b.length, s"doc $id: truncated raster")
-        val ow = w / kx
-        val oh = h / ky
-        if (ow < 1 || oh < 1) Iterator.empty else resizedPgm(id, b, start, w, maxVal, kx, ky, ow, oh)
-      })
-      .toDF("doc_id", "payload")
-  }
 
-  private def resizedPgm(
-      id: Long, b: Array[Byte], start: Int, w: Int, maxVal: Int,
-      kx: Int, ky: Int, ow: Int, oh: Int): Iterator[(Long, Array[Byte])] = {
-    val out = new Array[Byte](ow * oh)
-    val block = kx.toLong * ky
-    var oy = 0
-    while (oy < oh) {
-      var ox = 0
-      while (ox < ow) {
-        var sum = 0L
-        var dy = 0
-        while (dy < ky) {
-          val rowBase = start + (oy * ky + dy) * w + ox * kx
-          var dx = 0
-          while (dx < kx) { sum += b(rowBase + dx) & 0xff; dx += 1 }
-          dy += 1
+    def outWidth(w: Long): Long = w / kx
+
+    def apply(r: Raster): Option[Raster] = {
+      val ow = r.w / kx
+      val oh = r.h / ky
+      if (ow < 1 || oh < 1) None else Some {
+        val w = r.w; val ch = r.ch; val px = r.px
+        val out = new Array[Int](ch * ow * oh)
+        val block = kx.toLong * ky
+        var oy = 0
+        while (oy < oh) {
+          var ox = 0
+          while (ox < ow) {
+            var c = 0
+            while (c < ch) {
+              var sum = 0L
+              var dy = 0
+              while (dy < ky) {
+                val base = ch * ((oy * ky + dy) * w + ox * kx) + c
+                var dx = 0
+                while (dx < kx) { sum += px(base + ch * dx); dx += 1 }
+                dy += 1
+              }
+              out(ch * (oy * ow + ox) + c) = (sum / block).toInt
+              c += 1
+            }
+            ox += 1
+          }
+          oy += 1
         }
-        out(oy * ow + ox) = (sum / block).toByte
-        ox += 1
+        Raster(ow, oh, ch, out)
       }
-      oy += 1
     }
-    val header = s"P5\n$ow $oh\n$maxVal\n"
-      .getBytes(java.nio.charset.StandardCharsets.US_ASCII)
-    Iterator.single((id, header ++ out))
   }
 
+  /** Fixed-point bilinear resample to an EXPLICIT `w×h` target — the
+    * kernel a training pipeline actually runs ("resize everything to
+    * 224×224") — as [[bilinearPlane]] per channel. Non-integer scales,
+    * upscale and downscale alike; any non-empty source maps to the
+    * target, only an empty one yields `None`. For audio the target `w`
+    * is a sample RATE ([[Codec.Wav]]).
+    */
+  final case class Bilinear(w: Int, h: Int = 1) extends Kernel {
+    require(w >= 1 && h >= 1, s"degenerate target ${w}x$h")
+
+    def outWidth(srcW: Long): Long = w
+
+    def apply(r: Raster): Option[Raster] =
+      if (r.w < 1 || r.h < 1) None else Some {
+        val ch = r.ch; val px = r.px
+        val out = new Array[Int](ch * w * h)
+        var c = 0
+        while (c < ch) {
+          val plane = Array.tabulate(r.w * r.h)(i => px(ch * i + c))
+          val rp = bilinearPlane(plane, r.w, r.h, w, h)
+          var i = 0
+          while (i < rp.length) { out(ch * i + c) = rp(i); i += 1 }
+          c += 1
+        }
+        Raster(w, h, ch, out)
+      }
+  }
   /** Exact fixed-point BILINEAR plane resample to an EXPLICIT target
     * geometry — the kernel a training pipeline actually runs ("resize
     * everything to 224×224"), next to the integer-stride box family
@@ -499,57 +539,8 @@ object Multimodal {
       (colIdx, y) => y * ow + colIdx, (a, colIdx, y, v) => a(y * ow + colIdx) = v)
   }
 
-  /** BILINEAR resize of a PGM payload to an explicit targetW×targetH —
-    * [[bilinearPlane]] under the netpbm round trip; exact integers end
-    * to end, zero shuffle, no drop contract (bilinear maps any source
-    * geometry to any target).
-    */
-  def resizePgmTo(
-      spark: SparkSession, media: DataFrame, targetW: Int, targetH: Int): DataFrame = {
-    require(targetW >= 1 && targetH >= 1, s"degenerate target ${targetW}x$targetH")
-    import spark.implicits._
-    media.select(col("doc_id"), col("payload")).as[(Long, Array[Byte])]
-      .mapPartitions(_.flatMap { case (id, b) =>
-        pgmToTarget(id, b, targetW, targetH).map(out => (id, out)).iterator
-      })
-      .toDF("doc_id", "payload")
-  }
-
-  /** [[resizePgmTo]]'s COLOR twin: per-channel [[bilinearPlane]] over
-    * the de-interleaved R/G/B planes (channels never mix), re-encoded
-    * as a real PPM.
-    */
-  def resizePpmTo(
-      spark: SparkSession, media: DataFrame, targetW: Int, targetH: Int): DataFrame = {
-    require(targetW >= 1 && targetH >= 1, s"degenerate target ${targetW}x$targetH")
-    import spark.implicits._
-    media.select(col("doc_id"), col("payload")).as[(Long, Array[Byte])]
-      .mapPartitions(_.flatMap { case (id, b) =>
-        ppmToTarget(id, b, targetW, targetH).map(out => (id, out)).iterator
-      })
-      .toDF("doc_id", "payload")
-  }
-
-  /** Per-channel [[bilinearPlane]] over an interleaved RGB raster —
-    * channels never mix; shared by every color explicit-target resize.
-    */
-  private def bilinearRgb(
-      px: Array[Int], w: Int, h: Int, tw: Int, th: Int): Array[Int] = {
-    val out = new Array[Int](3 * tw * th)
-    var c = 0
-    while (c < 3) {
-      val plane = Array.tabulate(w * h)(i => px(3 * i + c))
-      val rp = bilinearPlane(plane, w, h, tw, th)
-      var i = 0
-      while (i < rp.length) { out(3 * i + c) = rp(i); i += 1 }
-      c += 1
-    }
-    out
-  }
-
-  /** [[resizeBmp]]'s encoder half, factored so the stride and
-    * explicit-target paths share one 54-byte-header/bottom-up/BGR/
-    * stride-padded writer.
+  /** The 24-bit BMP re-encode half of [[Codec.Bmp]]: canonical 54-byte
+    * header, bottom-up rows, BGR order, stride padding.
     */
   private def encodeBmp24(out: Array[Int], ow: Int, oh: Int): Array[Byte] = {
     val stride = ((ow * 3 + 3) / 4) * 4
@@ -580,88 +571,7 @@ object Multimodal {
     bb.array()
   }
 
-  /** Explicit-target bilinear kernels per payload format — the
-    * [[thumbnailMedia]] arms, one per decodable raster codec plus the
-    * audio rate resampler, each a decode → [[bilinearPlane]] →
-    * re-encode round trip through the format's own codec halves.
-    * None = degenerate source (empty raster / zero target samples),
-    * the explicit-target analog of the stride family's sub-block drop.
-    */
-  private def pgmToTarget(
-      id: Long, b: Array[Byte], tw: Int, th: Int): Option[Array[Byte]] = {
-    val (w, h, maxVal, start) = parseNetpbmHeader(id, b, 0, '5')
-    require(start + w.toLong * h <= b.length, s"doc $id: truncated raster")
-    if (w < 1 || h < 1) None else Some {
-      val pix = Array.tabulate(w * h)(i => b(start + i) & 0xff)
-      val out = bilinearPlane(pix, w, h, tw, th)
-      val header = s"P5\n$tw $th\n$maxVal\n"
-        .getBytes(java.nio.charset.StandardCharsets.US_ASCII)
-      header ++ out.map(_.toByte)
-    }
-  }
-
-  private def ppmToTarget(
-      id: Long, b: Array[Byte], tw: Int, th: Int): Option[Array[Byte]] = {
-    val (w, h, maxVal, start) = parseNetpbmHeader(id, b, 0, '6')
-    require(start + 3L * w * h <= b.length, s"doc $id: truncated RGB raster")
-    if (w < 1 || h < 1) None else Some {
-      val px = Array.tabulate(3 * w * h)(i => b(start + i) & 0xff)
-      val out = bilinearRgb(px, w, h, tw, th)
-      val header = s"P6\n$tw $th\n$maxVal\n"
-        .getBytes(java.nio.charset.StandardCharsets.US_ASCII)
-      header ++ out.map(_.toByte)
-    }
-  }
-
-  private def bmpToTarget(
-      id: Long, b: Array[Byte], tw: Int, th: Int): Option[Array[Byte]] = {
-    val (w, h, px) = BmpDecoder.pixels(id, b)
-    if (w < 1 || h < 1) None
-    else Some(encodeBmp24(bilinearRgb(px, w, h, tw, th), tw, th))
-  }
-
-  private def pngToTarget(
-      id: Long, b: Array[Byte], tw: Int, th: Int): Option[Array[Byte]] = {
-    val (w, h, px, _) = PngCodec.pixels(id, b)
-    if (w < 1 || h < 1) None
-    else Some(PngCodec.encodeRaster(
-      bilinearRgb(px, w, h, tw, th).map(_.toByte), tw, th))
-  }
-
-  private def jpegToTarget(
-      id: Long, b: Array[Byte], tw: Int, th: Int): Option[Array[Byte]] = {
-    if (JpegCodec.sofComponents(id, b) == 3) {
-      val (w, h, px) = JpegCodec.decodeRgbPixels(id, b)
-      if (w < 1 || h < 1) None
-      else Some(JpegCodec.encodeColor(tw, th, bilinearRgb(px, w, h, tw, th)))
-    } else {
-      val (w, h, pix) = JpegCodec.decodeGrayPixels(id, b)
-      if (w < 1 || h < 1) None
-      else Some(JpegCodec.encodeGray(tw, th, bilinearPlane(pix, w, h, tw, th)))
-    }
-  }
-
-  /** BILINEAR resize of a JPEG payload to an explicit targetW×targetH —
-    * [[resizePgmTo]]'s lossy twin and [[thumbnailMedia]]'s jpeg arm as
-    * a first-class op: full-raster decode, fixed-point bilinear, REAL
-    * forward-DCT/quantize/Huffman re-encode. The quantized-DC path
-    * stays exact-integer end to end, so gates pin the re-decoded DC
-    * stats through decode → bilinear → DCT → entropy round trip.
-    */
-  def resizeJpegTo(
-      spark: SparkSession, media: DataFrame, targetW: Int, targetH: Int): DataFrame = {
-    require(targetW >= 1 && targetH >= 1, s"degenerate target ${targetW}x$targetH")
-    import spark.implicits._
-    media.select(col("doc_id"), col("payload")).as[(Long, Array[Byte])]
-      .mapPartitions(_.flatMap { case (id, b) =>
-        jpegToTarget(id, b, targetW, targetH).map(out => (id, out)).iterator
-      })
-      .toDF("doc_id", "payload")
-  }
-
-  /** [[encodeWav16]] — the 16-bit mono PCM writer shared by the stride
-    * resampler and the explicit-rate path.
-    */
+  /** The 16-bit mono PCM writer [[Codec.Wav]] re-encodes with. */
   private def encodeWav16(out: Array[Int], rate: Int): Array[Byte] = {
     val dataLen = out.length * 2
     val bb = java.nio.ByteBuffer
@@ -682,363 +592,166 @@ object Multimodal {
     bb.array()
   }
 
-  private def wavToRate(
-      id: Long, b: Array[Byte], targetRate: Int): Option[Array[Byte]] = {
-    val f = WavDecoder.decode(id, b)
-    val s = WavDecoder.samples(id, b)
-    val outN = (s.length.toLong * targetRate / f.sample_rate).toInt
-    if (outN < 1) None
-    else Some(encodeWav16(bilinearPlane(s, s.length, 1, outN, 1), targetRate))
+  /** A payload format's codec as [[resize]] applies it: decode, one
+    * [[Kernel]], re-encode into the SAME format, so the output composes
+    * with every consumer of that format (its decoder, the routers).
+    * `None` = the kernel dropped the payload. Malformed input THROWS.
+    */
+  sealed abstract class Codec extends Serializable {
+    def transform(id: Long, b: Array[Byte], k: Kernel): Option[Array[Byte]]
   }
 
-  /** Linear-interpolation RESAMPLE to an EXPLICIT target rate —
-    * [[bilinearPlane]]'s 1-D audio twin (the stride [[resampleWav]]
-    * can only express integer rate divisions; a real pipeline
-    * normalizes everything to one fixed rate): output length
-    * `⌊n·target/srcRate⌋`, each output sample the fixed-point linear
-    * blend of its two source neighbors (half-sample centers, edge
-    * clamp). Value blends run TRUNCATING division on possibly-negative
-    * 16-bit amplitudes — the same Spark-`div`≡DuckDB-`//` convention
-    * q256's oracle already relies on. Re-encoded as 16-bit mono PCM at
-    * the target rate; sources shorter than one output sample drop.
+  /** A single-raster codec. `decode` also returns the one header value
+    * the re-encode carries through: netpbm maxval, WAV sample rate, 0
+    * where the format has none.
     */
-  def resampleWavTo(
-      spark: SparkSession, media: DataFrame, targetRate: Int): DataFrame = {
-    require(targetRate >= 1, s"degenerate target rate $targetRate")
-    import spark.implicits._
-    media.select(col("doc_id"), col("payload")).as[(Long, Array[Byte])]
-      .mapPartitions(_.flatMap { case (id, b) =>
-        wavToRate(id, b, targetRate).map(out => (id, out)).iterator
-      })
-      .toDF("doc_id", "payload")
+  sealed abstract class RasterCodec extends Codec {
+    def decode(id: Long, b: Array[Byte]): (Int, Raster)
+    def encode(hdr: Int, r: Raster): Array[Byte]
+
+    def transform(id: Long, b: Array[Byte], k: Kernel): Option[Array[Byte]] = {
+      val (hdr, r) = decode(id, b)
+      k(r).map(encode(hdr, _))
+    }
   }
 
-  /** The NORMALIZATION pass a multimodal training pipeline actually
-    * runs over a media lake: every decodable raster — PGM, PPM, BMP,
-    * PNG (across the compression boundary), JPEG (across the lossy
-    * boundary) — bilinear-resamples to ONE fixed targetW×targetH
-    * thumbnail through its own codec round trip, audio resamples to
-    * ONE fixed rate, and every VIDEO frame bilinear-resamples to the
-    * `targetW`-byte raster row under the container walk (frame count
-    * and µs/frame preserved — temporal subsampling stays
-    * [[sampleVideoFrames]]' job; r19 left AVI passing through
-    * untouched, the exact silent-pass-through pattern r18 flagged for
-    * JPEG — VERDICT r19 #3 closes it); unclaimed payloads pass through
-    * byte-identical. Same [[RouterClaims]] predicates as every router;
-    * narrow filtered passes, zero shuffle. Unlike the stride transform
-    * pass ([[transformMedia]]), nothing drops for being small —
-    * bilinear maps any source geometry to the target (only truly
-    * degenerate payloads — empty rasters, zero-sample audio — drop;
-    * zero-length FRAMES stay zero-length chunks so avih keeps matching
-    * movi).
+  object Codec {
+
+    /** Binary netpbm, P5 gray (`ch = 1`) or P6 RGB (`ch = 3`). */
+    final class Netpbm private[Codec] (magic: Char, ch: Int) extends RasterCodec {
+      def decode(id: Long, b: Array[Byte]): (Int, Raster) = {
+        val (w, h, maxVal, start) = parseNetpbmHeader(id, b, 0, magic)
+        require(start + ch.toLong * w * h <= b.length, s"doc $id: truncated raster")
+        (maxVal, Raster(w, h, ch, Array.tabulate(ch * w * h)(i => b(start + i) & 0xff)))
+      }
+
+      def encode(maxVal: Int, r: Raster): Array[Byte] =
+        s"P$magic\n${r.w} ${r.h}\n$maxVal\n".getBytes(java.nio.charset.StandardCharsets.US_ASCII) ++
+          r.px.map(_.toByte)
+    }
+
+    val Pgm = new Netpbm('5', 1)
+    val Ppm = new Netpbm('6', 3)
+
+    /** Truecolor PNG, across the compression boundary: inflate +
+      * un-filter ([[PngCodec.pixels]]), deflate + re-filter
+      * ([[PngCodec.encodeRaster]]). Pixels round-trip bit-exactly
+      * whatever the deflate encoder does, so gates hash geometry and
+      * pixel stats, never compressed bytes.
+      */
+    object Png extends RasterCodec {
+      def decode(id: Long, b: Array[Byte]): (Int, Raster) = {
+        val (w, h, px, _) = PngCodec.pixels(id, b)
+        (0, Raster(w, h, 3, px))
+      }
+
+      def encode(hdr: Int, r: Raster): Array[Byte] =
+        PngCodec.encodeRaster(r.px.map(_.toByte), r.w, r.h)
+    }
+
+    /** 24-bit BI_RGB BMP: the BGR swizzle, bottom-up rows and stride
+      * padding live in the codec halves ([[BmpDecoder.pixels]] /
+      * [[encodeBmp24]]), never in the kernels.
+      */
+    object Bmp extends RasterCodec {
+      def decode(id: Long, b: Array[Byte]): (Int, Raster) = {
+        val (w, h, px) = BmpDecoder.pixels(id, b)
+        (0, Raster(w, h, 3, px))
+      }
+
+      def encode(hdr: Int, r: Raster): Array[Byte] = encodeBmp24(r.px, r.w, r.h)
+    }
+
+    /** Baseline JPEG, across the LOSSY boundary: gray or YCbCr 4:2:0
+      * color by SOF0 component count, full-raster decode (flat blocks
+      * by the exact integer shortcut, AC blocks by the float IDCT), and
+      * a REAL forward-DCT / quantize / Huffman re-encode. Gates hash the
+      * re-decoded geometry and quantized-DC stats (exact integers an
+      * oracle replays), never AC reconstruction or compressed bytes.
+      */
+    object Jpeg extends RasterCodec {
+      def decode(id: Long, b: Array[Byte]): (Int, Raster) = {
+        val ch = if (JpegCodec.sofComponents(id, b) == 3) 3 else 1
+        val (w, h, px) =
+          if (ch == 3) JpegCodec.decodeRgbPixels(id, b) else JpegCodec.decodeGrayPixels(id, b)
+        (0, Raster(w, h, ch, px))
+      }
+
+      def encode(hdr: Int, r: Raster): Array[Byte] =
+        if (r.ch == 3) JpegCodec.encodeColor(r.w, r.h, r.px)
+        else JpegCodec.encodeGray(r.w, r.h, r.px)
+    }
+
+    /** WAV as an `n×1×1` raster — any input [[WavDecoder]] accepts
+      * (8/16-bit PCM, G.711 μ-law) — re-encoded as canonical 44-byte
+      * header 16-bit mono PCM. A [[Box]] divides the stream and its
+      * rate by `kx`. A [[Bilinear]] target `w` is the output RATE:
+      * `⌊n·w/srcRate⌋` linear-blend samples, so a stream shorter than
+      * one output sample drops.
+      */
+    object Wav extends RasterCodec {
+      def decode(id: Long, b: Array[Byte]): (Int, Raster) = {
+        val (rate, s) = WavDecoder.rateAndSamples(id, b)
+        (rate, Raster(s.length, 1, 1, s))
+      }
+
+      def encode(rate: Int, r: Raster): Array[Byte] = encodeWav16(r.px, rate)
+
+      override def transform(id: Long, b: Array[Byte], k: Kernel): Option[Array[Byte]] = {
+        val (rate, r) = decode(id, b)
+        val out = k match {
+          case Bilinear(toRate, _) =>
+            val n = (r.w.toLong * toRate / rate).toInt
+            if (n < 1) None else Bilinear(n)(r)
+          case box => box(r)
+        }
+        out.map(encode(k.outWidth(rate).toInt, _))
+      }
+    }
+
+    /** RIFF/AVI, a container: the kernel applies to every frame as a
+      * `len×1×1` raster ([[AviDecoder.headerAndFrames]] in,
+      * [[encodeAvi]] out) and the avih width maps through
+      * [[Kernel.outWidth]]. Frame count and µs/frame are preserved
+      * (temporal subsampling is [[sampleVideoFrames]]' job). A frame
+      * the kernel drops re-encodes as a ZERO-LENGTH chunk, never a
+      * dropped frame: the avih count must keep matching movi.
+      */
+    object Avi extends Codec {
+      def transform(id: Long, b: Array[Byte], k: Kernel): Option[Array[Byte]] = {
+        val (hdr, fs) = AviDecoder.headerAndFrames(id, b)
+        val frames = fs.map { case (_, f) =>
+          k(Raster(f.length, 1, 1, f.map(_ & 0xff))).fold(Array.emptyByteArray)(_.px.map(_.toByte))
+        }
+        Some(encodeAvi(hdr.copy(width = k.outWidth(hdr.width)), frames))
+      }
+    }
+  }
+
+  /** The transform routers' codec table: `(kind, claim, codec)` for
+    * every transformable format, the claims being [[RouterClaims]]'
+    * (shared with [[extractFeatures]] and [[mediaInventory]], so no
+    * router can drift on what claims what).
     */
-  def thumbnailMedia(
-      spark: SparkSession,
-      media: DataFrame,
-      targetW: Int = 24,
-      targetH: Int = 16,
-      targetRate: Int = 2000): DataFrame = {
-    import spark.implicits._
+  private def codecs: Seq[(String, Column, Codec)] = {
     import RouterClaims._
-    def arm(claim: Column)(f: (Long, Array[Byte]) => Option[Array[Byte]]): DataFrame =
-      media.filter(claim).select(col("doc_id"), col("payload"))
-        .as[(Long, Array[Byte])]
-        .mapPartitions(_.flatMap { case (id, b) => f(id, b).map(out => (id, out)).iterator })
-        .toDF("doc_id", "payload")
-    arm(isP5)(pgmToTarget(_, _, targetW, targetH))
-      .unionByName(arm(isP6)(ppmToTarget(_, _, targetW, targetH)))
-      .unionByName(arm(isBmp)(bmpToTarget(_, _, targetW, targetH)))
-      .unionByName(arm(isPng)(pngToTarget(_, _, targetW, targetH)))
-      .unionByName(arm(isJpeg)(jpegToTarget(_, _, targetW, targetH)))
-      .unionByName(arm(isRiff)(wavToRate(_, _, targetRate)))
-      .unionByName(arm(isAvi)((id, b) => Some(aviToTarget(id, b, targetW))))
-      .unionByName(media.filter(
-          not(isP5 || isP6 || isBmp || isPng || isJpeg || isRiff || isAvi))
-        .select(col("doc_id"), col("payload")))
+    Seq(
+      ("pgm", isP5, Codec.Pgm), ("ppm", isP6, Codec.Ppm), ("png", isPng, Codec.Png),
+      ("bmp", isBmp, Codec.Bmp), ("jpeg", isJpeg, Codec.Jpeg),
+      ("wav", isRiff, Codec.Wav), ("avi", isAvi, Codec.Avi))
   }
 
-  /** The LOSSY member of the raster-resize family — JPEG in, JPEG out,
-    * across the entropy/DCT boundary: [[JpegCodec.decodeGrayPixels]]
-    * reconstructs the full raster (flat blocks by the exact integer
-    * shortcut, AC blocks by the float IDCT), the shared stride-(kx, ky)
-    * floor-mean box kernel decimates, and [[JpegCodec.encodeGray]]
-    * re-encodes — forward DCT, quantization, zigzag run-length Huffman
-    * coding — into a real baseline stream the decoder round-trips.
-    * Same sub-block drop contract as every resize. Lossy by nature:
-    * gates hash the re-decoded GEOMETRY and quantized-DC stats (exact
-    * integers an SQL oracle replays from the pixel block sums), never
-    * AC-reconstruction values or compressed bytes, which the
-    * quantizer/compressor own — the q269 PNG convention extended to a
-    * lossy codec. Payloads never leave their partition; zero shuffle.
+  /** REAL media RESIZE — decode → `kernel` → re-encode of every payload
+    * through `codec`, one partition-local pass: payloads never leave
+    * their partition, zero shuffle. Rows the kernel drops (see [[Box]])
+    * emit nothing.
     */
-  def resizeJpeg(
-      spark: SparkSession, media: DataFrame, kx: Int, ky: Int = 1): DataFrame = {
-    require(kx >= 1 && ky >= 1, s"factors must be positive: kx=$kx ky=$ky")
+  def resize(spark: SparkSession, media: DataFrame, codec: Codec, kernel: Kernel): DataFrame = {
     import spark.implicits._
     media.select(col("doc_id"), col("payload")).as[(Long, Array[Byte])]
       .mapPartitions(_.flatMap { case (id, b) =>
-        resizedJpegPayload(id, b, kx, ky).map(out => (id, out)).iterator
-      })
+        codec.transform(id, b, kernel).map(out => (id, out)) })
       .toDF("doc_id", "payload")
-  }
-
-  /** Per-channel stride box decimation over an interleaved RGB raster —
-    * [[resizedPpmPayload]]'s kernel over decoded ints, shared by the
-    * color-JPEG stride path (channels never mix).
-    */
-  private def boxRgb(
-      px: Array[Int], w: Int, kx: Int, ky: Int, ow: Int, oh: Int): Array[Int] = {
-    val out = new Array[Int](3 * ow * oh)
-    val block = kx.toLong * ky
-    var oy = 0
-    while (oy < oh) {
-      var ox = 0
-      while (ox < ow) {
-        var c = 0
-        while (c < 3) {
-          var sum = 0L
-          var dy = 0
-          while (dy < ky) {
-            var dx = 0
-            while (dx < kx) {
-              sum += px(3 * ((oy * ky + dy) * w + ox * kx + dx) + c)
-              dx += 1
-            }
-            dy += 1
-          }
-          out(3 * (oy * ow + ox) + c) = (sum / block).toInt
-          c += 1
-        }
-        ox += 1
-      }
-      oy += 1
-    }
-    out
-  }
-
-  /** [[resizeJpeg]]'s per-payload kernel, shared with
-    * [[mediaTransformInventory]] and [[transformMedia]] so the strict
-    * and quarantined paths cannot drift. None = sub-block input.
-    * Color payloads route through the color codec halves: RGB decode →
-    * per-channel box → color re-encode (channels never mix).
-    */
-  private def resizedJpegPayload(
-      id: Long, b: Array[Byte], kx: Int, ky: Int): Option[Array[Byte]] = {
-    if (JpegCodec.sofComponents(id, b) == 3) {
-      val (w, h, px) = JpegCodec.decodeRgbPixels(id, b)
-      val cw = w / kx
-      val chh = h / ky
-      if (cw < 1 || chh < 1) None
-      else Some(JpegCodec.encodeColor(cw, chh, boxRgb(px, w, kx, ky, cw, chh)))
-    } else resizedGrayJpegPayload(id, b, kx, ky)
-  }
-
-  private def resizedGrayJpegPayload(
-      id: Long, b: Array[Byte], kx: Int, ky: Int): Option[Array[Byte]] = {
-    val (w, h, pix) = JpegCodec.decodeGrayPixels(id, b)
-    val ow = w / kx
-    val oh = h / ky
-    if (ow < 1 || oh < 1) None else Some {
-      val out = new Array[Int](ow * oh)
-      val block = kx.toLong * ky
-      var oy = 0
-      while (oy < oh) {
-        var ox = 0
-        while (ox < ow) {
-          var sum = 0L
-          var dy = 0
-          while (dy < ky) {
-            val rowBase = (oy * ky + dy) * w + ox * kx
-            var dx = 0
-            while (dx < kx) { sum += pix(rowBase + dx); dx += 1 }
-            dy += 1
-          }
-          out(oy * ow + ox) = (sum / block).toInt
-          ox += 1
-        }
-        oy += 1
-      }
-      JpegCodec.encodeGray(ow, oh, out)
-    }
-  }
-
-  /** [[resizePgm]]'s COLOR twin — stride-(kx, ky) per-CHANNEL box
-    * decimation of a binary PPM payload, re-encoded as a binary PPM so
-    * the output composes with every PPM consumer. Each output pixel's
-    * R/G/B is the truncated mean of its block's R/G/B respectively
-    * (channels never mix); the same sub-block drop contract as the
-    * grayscale op. Exact integer arithmetic; zero shuffle.
-    */
-  def resizePpm(
-      spark: SparkSession, media: DataFrame, kx: Int, ky: Int = 1): DataFrame = {
-    require(kx >= 1 && ky >= 1, s"factors must be positive: kx=$kx ky=$ky")
-    import spark.implicits._
-    media.select(col("doc_id"), col("payload")).as[(Long, Array[Byte])]
-      .mapPartitions(_.flatMap { case (id, b) =>
-        resizedPpmPayload(id, b, kx, ky).map(out => (id, out)).iterator
-      })
-      .toDF("doc_id", "payload")
-  }
-
-  /** [[resizePpm]]'s per-payload kernel, shared with
-    * [[mediaTransformInventory]] and [[transformMedia]] so the strict
-    * and quarantined paths cannot drift. None = sub-block input.
-    */
-  private def resizedPpmPayload(
-      id: Long, b: Array[Byte], kx: Int, ky: Int): Option[Array[Byte]] = {
-    val (w, h, maxVal, start) = parseNetpbmHeader(id, b, 0, '6')
-    require(start + 3L * w * h <= b.length, s"doc $id: truncated RGB raster")
-    val ow = w / kx
-    val oh = h / ky
-    if (ow < 1 || oh < 1) None else Some {
-      val out = new Array[Byte](3 * ow * oh)
-      val block = kx.toLong * ky
-      var oy = 0
-      while (oy < oh) {
-        var ox = 0
-        while (ox < ow) {
-          var c = 0
-          while (c < 3) {
-            var sum = 0L
-            var dy = 0
-            while (dy < ky) {
-              var dx = 0
-              while (dx < kx) {
-                sum += b(start + 3 * ((oy * ky + dy) * w + ox * kx + dx) + c) & 0xff
-                dx += 1
-              }
-              dy += 1
-            }
-            out(3 * (oy * ow + ox) + c) = (sum / block).toByte
-            c += 1
-          }
-          ox += 1
-        }
-        oy += 1
-      }
-      val header = s"P6\n$ow $oh\n$maxVal\n"
-        .getBytes(java.nio.charset.StandardCharsets.US_ASCII)
-      header ++ out
-    }
-  }
-
-  /** The first resize across a COMPRESSED format — the full
-    * decode → transform → re-encode arc: inflate + un-filter the PNG to
-    * image-order pixels ([[PngCodec.pixels]]), stride-(kx, ky)
-    * per-channel box decimation (the [[resizePpm]] kernel over the
-    * decoded raster), then deflate + re-filter back to a REAL truecolor
-    * PNG ([[PngCodec.encodeRaster]]) that every PNG consumer accepts.
-    * The PIXELS round-trip bit-exactly whatever the deflate encoder
-    * does (the codec's determinism note), so gates hash geometry and
-    * pixel stats, never compressed bytes. Same sub-block drop contract
-    * as the raw-raster resizes. Payloads never leave their partition.
-    */
-  def resizePng(
-      spark: SparkSession, media: DataFrame, kx: Int, ky: Int = 1): DataFrame = {
-    require(kx >= 1 && ky >= 1, s"factors must be positive: kx=$kx ky=$ky")
-    import spark.implicits._
-    media.select(col("doc_id"), col("payload")).as[(Long, Array[Byte])]
-      .mapPartitions(_.flatMap { case (id, b) =>
-        resizedPngPayload(id, b, kx, ky).map(out => (id, out)).iterator
-      })
-      .toDF("doc_id", "payload")
-  }
-
-  /** [[resizePng]]'s per-payload kernel, shared with
-    * [[mediaTransformInventory]] and [[transformMedia]]. None =
-    * sub-block input.
-    */
-  private def resizedPngPayload(
-      id: Long, b: Array[Byte], kx: Int, ky: Int): Option[Array[Byte]] = {
-    val (w, h, px, _) = PngCodec.pixels(id, b)
-    val ow = w / kx
-    val oh = h / ky
-    if (ow < 1 || oh < 1) None else Some {
-      val out = new Array[Byte](3 * ow * oh)
-      val block = kx.toLong * ky
-      var oy = 0
-      while (oy < oh) {
-        var ox = 0
-        while (ox < ow) {
-          var c = 0
-          while (c < 3) {
-            var sum = 0L
-            var dy = 0
-            while (dy < ky) {
-              var dx = 0
-              while (dx < kx) {
-                sum += px(3 * ((oy * ky + dy) * w + ox * kx + dx) + c)
-                dx += 1
-              }
-              dy += 1
-            }
-            out(3 * (oy * ow + ox) + c) = (sum / block).toByte
-            c += 1
-          }
-          ox += 1
-        }
-        oy += 1
-      }
-      PngCodec.encodeRaster(out, ow, oh)
-    }
-  }
-
-  /** [[resizePpm]]'s DIB sibling — per-channel box decimation of a
-    * 24-bit BI_RGB BMP, re-encoded as a real bottom-up BMP with proper
-    * row-stride padding ([[toBmp]]'s canonical 54-byte header), so the
-    * output composes with every BMP consumer. Same kernel and drop
-    * contract as the other raster resizes; the BGR↔RGB swizzle and the
-    * bottom-up row order live entirely inside the codec halves
-    * ([[BmpDecoder.pixels]] / the encoder here), never in the math.
-    */
-  def resizeBmp(
-      spark: SparkSession, media: DataFrame, kx: Int, ky: Int = 1): DataFrame = {
-    require(kx >= 1 && ky >= 1, s"factors must be positive: kx=$kx ky=$ky")
-    import spark.implicits._
-    media.select(col("doc_id"), col("payload")).as[(Long, Array[Byte])]
-      .mapPartitions(_.flatMap { case (id, b) =>
-        resizedBmpPayload(id, b, kx, ky).map(out => (id, out)).iterator
-      })
-      .toDF("doc_id", "payload")
-  }
-
-  /** [[resizeBmp]]'s per-payload kernel, shared with
-    * [[mediaTransformInventory]] and [[transformMedia]]. None =
-    * sub-block input.
-    */
-  private def resizedBmpPayload(
-      id: Long, b: Array[Byte], kx: Int, ky: Int): Option[Array[Byte]] = {
-    val (w, h, px) = BmpDecoder.pixels(id, b)
-    val ow = w / kx
-    val oh = h / ky
-    if (ow < 1 || oh < 1) None else Some {
-      val out = new Array[Int](3 * ow * oh)
-      val block = kx.toLong * ky
-      var oy = 0
-      while (oy < oh) {
-        var ox = 0
-        while (ox < ow) {
-          var c = 0
-          while (c < 3) {
-            var sum = 0L
-            var dy = 0
-            while (dy < ky) {
-              var dx = 0
-              while (dx < kx) {
-                sum += px(3 * ((oy * ky + dy) * w + ox * kx + dx) + c)
-                dx += 1
-              }
-              dy += 1
-            }
-            out(3 * (oy * ow + ox) + c) = (sum / block).toInt
-            c += 1
-          }
-          ox += 1
-        }
-        oy += 1
-      }
-      encodeBmp24(out, ow, oh)
-    }
   }
 
   object PgmDecoder {
@@ -1565,7 +1278,7 @@ object Multimodal {
       }
     }
 
-    /** The decode core shared by [[decode]] and [[resizeBmp]]: header
+    /** The decode core shared by [[decode]] and [[Codec.Bmp]]: header
       * validation (24-bit BI_RGB only), stride arithmetic, bottom-up /
       * top-down normalization, and the BGR→RGB swizzle — returns
       * `(width, height, pixels)` in IMAGE order (row 0 = top), RGB.
@@ -1699,8 +1412,13 @@ object Multimodal {
       * analysis path ([[Multimodal.audioAutocorr]] is the relational
       * half).
       */
-    def samples(docId: Long, b: Array[Byte]): Array[Int] = {
-      val (audioFormat, _, _, bits, off, len) = parse(docId, b)
+    def samples(docId: Long, b: Array[Byte]): Array[Int] = rateAndSamples(docId, b)._2
+
+    /** [[samples]] with the stream's sample rate — what a re-encode at
+      * a derived rate ([[Codec.Wav]]) needs.
+      */
+    def rateAndSamples(docId: Long, b: Array[Byte]): (Int, Array[Int]) = {
+      val (audioFormat, _, rate, bits, off, len) = parse(docId, b)
       val bytesPerSample = bits / 8
       val out = new Array[Int](len / bytesPerSample)
       var j = off
@@ -1710,7 +1428,7 @@ object Multimodal {
         j += bytesPerSample
         k += 1
       }
-      out
+      (rate, out)
     }
 
     def decode(docId: Long, b: Array[Byte]): WavFeatures = {
@@ -1798,56 +1516,6 @@ object Multimodal {
         max(col("v")).as("max_amp"))
   }
 
-  /** REAL audio RESAMPLE — the audio member of the transform triple
-    * (image [[resizePgm]], audio resample, video [[sampleVideoFrames]]):
-    * factor-`k` decimation of a decoded WAV stream with a box
-    * anti-aliasing filter — each output sample is the TRUNCATED mean
-    * (Java `/`, which rounds toward zero exactly like DuckDB's `//`:
-    * verified `-7 // 2 = -3`, so floor division would diverge on a
-    * negative non-divisible sum — ADVICE r17) of `k` consecutive input
-    * samples, the tail partial block dropped — and a stream shorter
-    * than one block produces NO output row at all (matching the empty
-    * GROUP BY of an SQL replay over zero blocks; a zero-sample WAV row
-    * here would be an engine-only extra). RE-ENCODED as a canonical
-    * 44-byte-header 16-bit PCM mono WAV at `rate / k`, so the output
-    * composes with every WAV consumer ([[WavDecoder]], the router,
-    * [[audioFrameStats]]). Accepts any input the decoder does (8/16-bit
-    * PCM, G.711 μ-law). Exact integer arithmetic; payloads never leave
-    * their partition; zero shuffle.
-    */
-  def resampleWav(spark: SparkSession, media: DataFrame, k: Int): DataFrame = {
-    require(k >= 1, s"factor k=$k must be positive")
-    import spark.implicits._
-    media.select(col("doc_id"), col("payload")).as[(Long, Array[Byte])]
-      .mapPartitions(_.flatMap { case (id, b) =>
-        resampledWavPayload(id, b, k).map(out => (id, out)).iterator
-      })
-      .toDF("doc_id", "payload")
-  }
-
-  /** [[resampleWav]]'s per-payload kernel — decode, box-decimate,
-    * re-encode — shared with [[mediaTransformInventory]] so the strict
-    * and quarantined transform paths cannot drift. None = the decoded
-    * stream is shorter than one block (no output row).
-    */
-  private def resampledWavPayload(
-      id: Long, b: Array[Byte], k: Int): Option[Array[Byte]] = {
-    val s = WavDecoder.samples(id, b)
-    val n = s.length / k
-    if (n == 0) None else Some {
-      val out = new Array[Int](n)
-      var j = 0
-      while (j < n) {
-        var sum = 0L
-        var d = 0
-        while (d < k) { sum += s(j * k + d); d += 1 }
-        out(j) = (sum / k).toInt
-        j += 1
-      }
-      encodeWav16(out, WavSampleRate / k)
-    }
-  }
-
   /** Wrap each document as a REAL RIFF/AVI container — the THIRD RIFF
     * family next to WAVE and the missing MODALITY next to image/audio:
     * video as an opaque binary column. Structure: `RIFF('AVI ')` holding
@@ -1918,7 +1586,7 @@ object Multimodal {
     * structural lie fails the document, never returns garbage frames.
     */
   /** The avih main-header fields a re-encode must carry through
-    * ([[resizeAvi]]): temporal rate, raster geometry.
+    * ([[Codec.Avi]]): temporal rate, raster geometry.
     */
   case class AviHeader(usPerFrame: Long, width: Long, height: Long)
 
@@ -2048,100 +1716,9 @@ object Multimodal {
         md5(col("frame")).as("frame_digest"))
   }
 
-  /** REAL video RESIZE — the video member of the transform triple
-    * ([[resizePgm]] / [[resampleWav]] / this; VERDICT r17 #2): stride-
-    * `kx` SPATIAL box decimation of every frame under the container
-    * walk, RE-ENCODED as a valid RIFF/AVI at the reduced geometry so
-    * the output composes with every AVI consumer ([[AviDecoder]],
-    * [[decodeAviSummary]], [[decodeAviFrames]] → [[videoFrameStats]],
-    * the router). Temporal structure is PRESERVED — frame count and
-    * µs/frame are untouched (temporal subsampling is
-    * [[sampleVideoFrames]]' job; composing the two gives the full
-    * decode → resize → frame-sample path) — and the avih geometry
-    * fields re-encode at `width/kx`. Each output byte is the truncated
-    * mean of `kx` consecutive frame bytes (bytes are unsigned, so
-    * truncation and floor agree — [[resizePgm]]'s kernel); a frame's
-    * ragged tail drops, and a frame shorter than one block re-encodes
-    * as a ZERO-LENGTH chunk (never a dropped frame: the avih count
-    * must keep matching movi, and absence-of-bytes is the honest
-    * transform of a sub-block frame). Exact integer arithmetic end to
-    * end — an SQL oracle replays every output byte. Payloads never
-    * leave their partition; zero shuffle.
-    */
-  def resizeAvi(spark: SparkSession, media: DataFrame, kx: Int): DataFrame = {
-    require(kx >= 1, s"factor kx=$kx must be positive")
-    import spark.implicits._
-    media.select(col("doc_id"), col("payload")).as[(Long, Array[Byte])]
-      .mapPartitions(_.map { case (id, b) => (id, resizedAviPayload(id, b, kx)) })
-      .toDF("doc_id", "payload")
-  }
-
-  /** [[resizeAvi]]'s EXPLICIT-TARGET twin (VERDICT r19 #3) — the video
-    * member of the bilinear family: every frame (a `len×1` 8-bit raster
-    * under [[toAvi]]'s framing) resamples through [[bilinearPlane]] to
-    * EXACTLY `targetBytes` bytes — non-integer per-frame scales
-    * included (the ragged last frame has its own ratio; down- AND
-    * up-scale under one kernel), where [[resizeAvi]]'s stride walk can
-    * only express integer decimations. Temporal structure is PRESERVED
-    * (frame count and µs/frame untouched — temporal subsampling stays
-    * [[sampleVideoFrames]]' job); the avih geometry re-encodes at
-    * `width = targetBytes`. A ZERO-length frame stays a zero-length
-    * chunk (bilinear needs ≥ 1 source sample; absence-of-bytes is the
-    * honest transform and the avih count must keep matching movi —
-    * [[resizeAvi]]'s convention). Exact fixed-point integers end to
-    * end, so an SQL oracle replays every output byte. Payloads never
-    * leave their partition; zero shuffle.
-    */
-  def resizeAviTo(
-      spark: SparkSession, media: DataFrame, targetBytes: Int): DataFrame = {
-    require(targetBytes >= 1, s"degenerate target frame size $targetBytes")
-    import spark.implicits._
-    media.select(col("doc_id"), col("payload")).as[(Long, Array[Byte])]
-      .mapPartitions(_.map { case (id, b) => (id, aviToTarget(id, b, targetBytes)) })
-      .toDF("doc_id", "payload")
-  }
-
-  /** [[resizeAviTo]]'s per-payload kernel — container walk, per-frame
-    * bilinear to the explicit target, re-encode — shared with the
-    * [[thumbnailMedia]] avi arm so the two cannot drift.
-    */
-  private def aviToTarget(id: Long, b: Array[Byte], targetBytes: Int): Array[Byte] = {
-    val (hdr, fs) = AviDecoder.headerAndFrames(id, b)
-    val outFrames = fs.map { case (_, f) =>
-      if (f.isEmpty) f
-      else {
-        val pix = Array.tabulate(f.length)(i => f(i) & 0xff)
-        bilinearPlane(pix, f.length, 1, targetBytes, 1).map(_.toByte)
-      }
-    }
-    encodeAvi(hdr.copy(width = targetBytes.toLong), outFrames)
-  }
-
-  /** [[resizeAvi]]'s per-payload kernel — container walk, per-frame box
-    * decimation, re-encode — shared with [[mediaTransformInventory]] so
-    * the strict and quarantined transform paths cannot drift.
-    */
-  private def resizedAviPayload(id: Long, b: Array[Byte], kx: Int): Array[Byte] = {
-    val (hdr, fs) = AviDecoder.headerAndFrames(id, b)
-    val outFrames = fs.map { case (_, f) =>
-      val n = f.length / kx
-      val out = new Array[Byte](n)
-      var j = 0
-      while (j < n) {
-        var s = 0L
-        var d = 0
-        while (d < kx) { s += f(j * kx + d) & 0xff; d += 1 }
-        out(j) = (s / kx).toByte
-        j += 1
-      }
-      out
-    }
-    encodeAvi(hdr.copy(width = hdr.width / kx), outFrames)
-  }
-
   /** Serialize frames into the canonical minimal RIFF/AVI layout
     * [[toAvi]] builds and [[AviDecoder]] validates — the JVM-side
-    * re-encode half of [[resizeAvi]] (the builder itself stays a
+    * re-encode half of [[Codec.Avi]] (the builder itself stays a
     * codegen'd expression; transforms already hold decoded frames in
     * the JVM, so they re-encode there).
     */
@@ -2431,7 +2008,7 @@ object Multimodal {
     /** Serialize an RGB raster (row-major, 3 bytes/pixel) as the codec's
       * canonical truecolor PNG — row 0 filter None, every later row
       * filter Sub (left-deltas, so inflate alone is NOT decode). The
-      * re-encode half of [[resizePng]]; [[encode]] is the 2-row
+      * re-encode half of [[Codec.Png]]; [[encode]] is the 2-row
       * text-raster special case.
       */
     def encodeRaster(rgb: Array[Byte], w: Int, h: Int): Array[Byte] = {
@@ -2485,7 +2062,7 @@ object Multimodal {
         topMean, idatLen, (h * (1 + 3 * w)).toLong)
     }
 
-    /** The decode core shared by [[decode]] and [[resizePng]]: chunk
+    /** The decode core shared by [[decode]] and [[Codec.Png]]: chunk
       * walk (CRCs verified), IHDR validation, multi-IDAT inflate, and
       * scanline UN-FILTERING into image-order pixel values. Returns
       * `(w, h, pixels, idat bytes)`.

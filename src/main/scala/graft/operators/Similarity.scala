@@ -417,15 +417,9 @@ object Similarity {
     * analog of [[centroidArray]]'s `vec_id < k` convention: codeword `c`
     * of subspace `s` is dims `[s·subDim, (s+1)·subDim)` of vector
     * `vec_id = c` (quantized longs). `cbs` is ordered (sub, code) so ADC
-    * can flat-index it. Swap in [[trainPqCodebooks]]' output via
-    * [[pqCodebookFrame]] for the learned variant — every downstream plan
-    * is identical.
+    * can flat-index it; [[pqCodebookFrame]] builds the same shape from
+    * [[trainPqCodebooks]]' learned codewords.
     */
-  def pqCodebookArray(embeddings: DataFrame, m: Int = 8, codes: Int = 16): DataFrame = {
-    val e = withQuantized(embeddings)
-    pqCodebookOf(e, m, codes)
-  }
-
   private def pqCodebookOf(e: DataFrame, m: Int, codes: Int): DataFrame =
     e.filter(col("vec_id") < codes)
       .select(col("vec_id").cast("int").as("code"), col("qe"))

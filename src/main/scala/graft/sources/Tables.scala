@@ -94,13 +94,6 @@ object Sinks {
       .partitionBy("dt")
       .parquet(path)
 
-  /** Generic partitioned-parquet sink for any engine output. */
-  def writePartitioned(df: DataFrame, path: String, partitionCols: Seq[String],
-      mode: String = "overwrite"): Unit = {
-    val w = df.write.mode(mode).option("compression", "snappy")
-    (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w).parquet(path)
-  }
-
   /** CSV sink/source pair (header + explicit schema on read — never infer
     * in production: inference costs an extra full scan and drifts).
     */

@@ -1621,21 +1621,6 @@ object StreamingOps {
     compactEpochs(spark, basePath, keepAfter, Seq("dig", "df"),
       df => graft.operators.Dedup.mergePassageCounts(Seq(df)).filter(col("df") > 0L))
 
-  /** [[compactEpochs]] for a [[rollingCountsSink]] directory — the state
-    * shape, merge, and positive clamp are the aligned variant's
-    * ([[compactPassageEpochs]]).
-    */
-  def compactRollingEpochs(spark: SparkSession, basePath: String, keepAfter: Long): Int =
-    compactEpochs(spark, basePath, keepAfter, Seq("dig", "df"),
-      df => graft.operators.Dedup.mergePassageCounts(Seq(df)).filter(col("df") > 0L))
-
-  /** [[compactEpochs]] for a [[cdcCountsSink]] directory (digest-wise
-    * sum + [[compactPassageEpochs]]' positive clamp).
-    */
-  def compactCdcEpochs(spark: SparkSession, basePath: String, keepAfter: Long): Int =
-    compactEpochs(spark, basePath, keepAfter, Seq("dig", "df"),
-      df => graft.operators.Dedup.mergePassageCounts(Seq(df)).filter(col("df") > 0L))
-
   /** [[compactEpochs]] for an [[exactSubstrCountsSink]] directory —
     * occurrence counts are additive, so the fold is the digest-wise sum
     * (the same merge [[mergedExactSubstrCounts]] applies at read time).

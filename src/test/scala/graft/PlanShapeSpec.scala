@@ -571,10 +571,10 @@ class PlanShapeSpec extends SparkSpec {
     // resize and resample are per-payload codec chains end to end — any
     // exchange means payloads started travelling.
     val resized = Multimodal.decodePgmFeatures(
-      spark, Multimodal.resizePgm(spark, Multimodal.toPgm(docs), kx = 4)).toDF()
+      spark, Multimodal.resize(spark, Multimodal.toPgm(docs), Multimodal.Codec.Pgm, Multimodal.Box(4))).toDF()
     assert(shuffles(resized) === 0, s"image resize grew a shuffle:\n${plan(resized)}")
     val resampled = Multimodal.decodeWavFeatures(
-      spark, Multimodal.resampleWav(spark, Multimodal.toWav16(docs), k = 4)).toDF()
+      spark, Multimodal.resize(spark, Multimodal.toWav16(docs), Multimodal.Codec.Wav, Multimodal.Box(4))).toDF()
     assert(shuffles(resampled) === 0, s"audio resample grew a shuffle:\n${plan(resampled)}")
     // The quarantined router: eight filtered passes, no shuffle, and no
     // exchange ever carries a payload.
@@ -584,7 +584,7 @@ class PlanShapeSpec extends SparkSpec {
     // r18: the video member of the transform triple, and the quarantined
     // transform pass — both stay per-payload codec chains.
     val vResized = Multimodal.decodeAviSummary(
-      spark, Multimodal.resizeAvi(spark, Multimodal.toAvi(docs), kx = 4)).toDF()
+      spark, Multimodal.resize(spark, Multimodal.toAvi(docs), Multimodal.Codec.Avi, Multimodal.Box(4))).toDF()
     assert(shuffles(vResized) === 0, s"video resize grew a shuffle:\n${plan(vResized)}")
     val tInv = Multimodal.mediaTransformInventory(
       spark, Multimodal.toPgm(docs).select("doc_id", "payload"))

@@ -83,6 +83,36 @@ class SinksSpec extends SparkSpec {
       .collect().head.getLong(0) === (0L until 10000L).map(_ * 2).sum)
   }
 
+  test("writeTrainingExamples: dt-partitioned snappy parquet that a dt filter prunes to one day") {
+    import org.apache.spark.sql.functions.col
+    val dir = Files.createTempDirectory("graft_training").toString
+    val days = Seq("2025-08-13", "2025-08-14", "2025-08-15")
+    val examples = days.flatMap(d => (1L to 4L).map(c => (d, c, Seq(c, c + 1))))
+      .toDF("dt", "customer_id", "history")
+    Sinks.writeTrainingExamples(examples, dir)
+    val parts = new java.io.File(dir).listFiles().filter(_.isDirectory).map(_.getName).sorted
+    assert(parts.toSeq === days.map(d => s"dt=$d"))
+    parts.foreach { p =>
+      val files = new java.io.File(dir, p).listFiles().map(_.getName).filter(_.endsWith(".parquet"))
+      assert(files.nonEmpty && files.forall(_.endsWith(".snappy.parquet")),
+        s"$p holds ${files.mkString(", ")}")
+    }
+    val day = spark.read.parquet(dir).filter(col("dt") === "2025-08-14")
+    val plan = day.queryExecution.executedPlan.toString
+    assert("PartitionFilters: \\[[^\\]]*dt".r.findFirstIn(plan).isDefined,
+      s"the dt filter is not a partition filter:\n$plan")
+    // `Dataset.inputFiles` lists the relation's whole file index whether
+    // or not the scan prunes, so read the scan's own file count instead.
+    assert(day.collect().length === 4)
+    val scan = day.queryExecution.executedPlan.collectFirst {
+      case f: org.apache.spark.sql.execution.FileSourceScanExec => f
+    }
+    assert(scan.isDefined, plan)
+    val dayFiles = new java.io.File(dir, "dt=2025-08-14").listFiles()
+      .count(_.getName.endsWith(".parquet"))
+    assert(scan.get.metrics("numFiles").value === dayFiles)
+  }
+
   test("orc roundtrip preserves schema, values, and filter pushdown") {
     val dir = Files.createTempDirectory("graft_orc").toString
     Sinks.writeOrc(actions, dir)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.TextAnalysis
 import graft.operators.Multimodal
+import graft.operators.Multimodal.{Bilinear, Box, Codec}
 
 class TextMultimodalSpec extends SparkSpec {
 
@@ -941,7 +942,7 @@ class TextMultimodalSpec extends SparkSpec {
     // floor((101..104)/4)=102; tail "ij" dropped.
     val d = Seq((1L, "abcdefghij", "en", "s", 10L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val resized = Multimodal.resizePgm(spark, Multimodal.toPgm(d), kx = 4)
+    val resized = Multimodal.resize(spark, Multimodal.toPgm(d), Codec.Pgm, Box(4))
     val f = Multimodal.decodePgmFeatures(spark, resized).collect().head
     assert(f.width === 2 && f.height === 1 && f.n_px === 2L)
     assert(f.min_px === Some(98) && f.max_px === Some(102))
@@ -951,7 +952,7 @@ class TextMultimodalSpec extends SparkSpec {
     val payload = "P5\n4 2\n255\n".getBytes("US-ASCII") ++ raster
     val media2 = Seq((2L, payload)).toDF("doc_id", "payload")
     val f2 = Multimodal.decodePgmFeatures(
-      spark, Multimodal.resizePgm(spark, media2, kx = 2, ky = 2)).collect().head
+      spark, Multimodal.resize(spark, media2, Codec.Pgm, Box(2, 2))).collect().head
     assert(f2.width === 2 && f2.height === 1)
     assert(f2.min_px === Some((10 + 20 + 50 + 60) / 4) &&
       f2.max_px === Some((30 + 40 + 70 + 80) / 4))
@@ -960,7 +961,7 @@ class TextMultimodalSpec extends SparkSpec {
     // degenerate raster and never a task failure.
     val tiny = Seq((3L, "abc", "en", "s", 3L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-    assert(Multimodal.resizePgm(spark, Multimodal.toPgm(tiny), kx = 4).collect().isEmpty)
+    assert(Multimodal.resize(spark, Multimodal.toPgm(tiny), Codec.Pgm, Box(4)).collect().isEmpty)
   }
 
   test("resampleWav: box decimation with floor-mean, mu-law input accepted, WAV round trip") {
@@ -970,7 +971,7 @@ class TextMultimodalSpec extends SparkSpec {
     //   block 1 = ((101+102+103+104)-512)*256 = (410-512)*256 = -26112 → /4 = -6528
     val d = Seq((1L, "abcdefgh", "en", "s", 8L)).toDF("doc_id", "text", "lang", "source", "n_chars")
     val f = Multimodal.decodeWavFeatures(
-      spark, Multimodal.resampleWav(spark, Multimodal.toWav16(d), k = 4)).collect().head
+      spark, Multimodal.resize(spark, Multimodal.toWav16(d), Codec.Wav, Box(4))).collect().head
     assert(f.n_channels === 1 && f.sample_rate === 2000 && f.bits_per_sample === 16)
     assert(f.n_samples === 2L)
     assert(f.min_amp === Some(-7552) && f.max_amp === Some(-6528))
@@ -978,7 +979,7 @@ class TextMultimodalSpec extends SparkSpec {
     // mu-law input accepted (decodes to values that don't divide evenly);
     // tail block dropped; resampled stream still a decodable WAV.
     val mu = Multimodal.decodeWavFeatures(
-      spark, Multimodal.resampleWav(spark, Multimodal.toWavMuLaw(d), k = 3)).collect().head
+      spark, Multimodal.resize(spark, Multimodal.toWavMuLaw(d), Codec.Wav, Box(3))).collect().head
     assert(mu.n_samples === 2L && mu.sample_rate === 2666)
     assert(mu.bits_per_sample === 16)
     // TRUNCATED mean on a negative non-divisible sum — DuckDB's // rounds
@@ -997,18 +998,18 @@ class TextMultimodalSpec extends SparkSpec {
     neg.foreach(bb.putShort)
     val negWav = Seq((9L, bb.array())).toDF("doc_id", "payload")
     val nf = Multimodal.decodeWavFeatures(
-      spark, Multimodal.resampleWav(spark, negWav, k = 3)).collect().head
+      spark, Multimodal.resize(spark, negWav, Codec.Wav, Box(3))).collect().head
     assert(nf.n_samples === 1L && nf.min_amp === Some(-2) && nf.max_amp === Some(-2))
     // A stream shorter than one block yields NO row (the oracle's empty
     // GROUP BY), not an n_samples=0 WAV.
-    assert(Multimodal.resampleWav(spark, negWav, k = 4).collect().isEmpty)
+    assert(Multimodal.resize(spark, negWav, Codec.Wav, Box(4)).collect().isEmpty)
   }
 
   test("resizeAvi: per-frame box decimation, header carried through, zero-length ragged output, real AVI round trip") {
     // 22 chars → frames of 16 + 6; kx=4 → 4 + 1 output bytes.
     val d = Seq((1L, "abcdefghijklmnopqrstuv", "en", "s", 22L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val resized = Multimodal.resizeAvi(spark, Multimodal.toAvi(d), kx = 4)
+    val resized = Multimodal.resize(spark, Multimodal.toAvi(d), Codec.Avi, Box(4))
     val sum = Multimodal.decodeAviSummary(spark, resized).collect().head
     assert(sum.n_frames === 2 && sum.n_frame_bytes === 5L)
     // f0 means: (97..100)/4=98, 102, 106, 110; f1: (113..116)/4=114.
@@ -1024,7 +1025,7 @@ class TextMultimodalSpec extends SparkSpec {
     val d2 = Seq((2L, "abcdefghijklmnopqr", "en", "s", 18L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
     val stats = Multimodal.videoFrameStats(
-        Multimodal.decodeAviFrames(spark, Multimodal.resizeAvi(spark, Multimodal.toAvi(d2), kx = 4)))
+        Multimodal.decodeAviFrames(spark, Multimodal.resize(spark, Multimodal.toAvi(d2), Codec.Avi, Box(4))))
       .orderBy("frame_idx").collect()
     assert(stats.length === 2)
     assert(stats(1).getAs[Long]("n_bytes") === 0L)
@@ -1078,7 +1079,7 @@ class TextMultimodalSpec extends SparkSpec {
     val d = Seq((1L, "abcdefghijklmnopqrstuvwx", "en", "s", 24L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
     val f = Multimodal.decodePpmFeatures(
-      spark, Multimodal.resizePpm(spark, Multimodal.toPpm(d), kx = 4)).collect().head
+      spark, Multimodal.resize(spark, Multimodal.toPpm(d), Codec.Ppm, Box(4))).collect().head
     assert(f.width === 2 && f.height === 1 && f.n_px === 2L)
     assert(f.r_mean === Some((101 + 113) / 2.0))
     assert(f.g_mean === Some((102 + 114) / 2.0))
@@ -1087,7 +1088,7 @@ class TextMultimodalSpec extends SparkSpec {
     // Sub-block input (fewer than 4 pixels) produces no output row.
     val tiny = Seq((2L, "abcdefghi", "en", "s", 9L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-    assert(Multimodal.resizePpm(spark, Multimodal.toPpm(tiny), kx = 4).collect().isEmpty)
+    assert(Multimodal.resize(spark, Multimodal.toPpm(tiny), Codec.Ppm, Box(4)).collect().isEmpty)
   }
 
   test("resizePng: decode through the compression boundary, per-channel decimation, real PNG round trip") {
@@ -1096,7 +1097,7 @@ class TextMultimodalSpec extends SparkSpec {
     val d = Seq((1L, "abcdefghijklmnopqrstuvwx", "en", "s", 24L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
     val f = Multimodal.decodePngFeatures(
-      spark, Multimodal.resizePng(spark, Multimodal.toPng(d), kx = 4)).collect().head
+      spark, Multimodal.resize(spark, Multimodal.toPng(d), Codec.Png, Box(4))).collect().head
     assert(f.width === 1 && f.height === 2 && f.n_px === 2L)
     assert(f.r_mean === Some((101 + 113) / 2.0))
     assert(f.g_mean === Some((102 + 114) / 2.0))
@@ -1105,15 +1106,15 @@ class TextMultimodalSpec extends SparkSpec {
     assert(f.top_row_mean === Some((101 + 102 + 103) / 3.0))
     // 2-D: ky=2 folds both rows into one; block = 2×2 pixels per channel.
     val f2 = Multimodal.decodePngFeatures(
-      spark, Multimodal.resizePng(spark, Multimodal.toPng(d), kx = 2, ky = 2)).collect().head
+      spark, Multimodal.resize(spark, Multimodal.toPng(d), Codec.Png, Box(2, 2))).collect().head
     assert(f2.width === 2 && f2.height === 1)
     assert(f2.min_px === Some((97 + 100 + 109 + 112) / 4))
     // Sub-block input drops; the router still claims the resized output.
     val tiny = Seq((2L, "abcdefghijklmnopqrst", "en", "s", 20L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-    assert(Multimodal.resizePng(spark, Multimodal.toPng(tiny), kx = 4).collect().isEmpty)
+    assert(Multimodal.resize(spark, Multimodal.toPng(tiny), Codec.Png, Box(4)).collect().isEmpty)
     val routed = Multimodal.extractFeatures(
-      spark, Multimodal.resizePng(spark, Multimodal.toPng(d), kx = 4)).collect().head
+      spark, Multimodal.resize(spark, Multimodal.toPng(d), Codec.Png, Box(4))).collect().head
     assert(routed.getAs[String]("kind") === "png")
   }
 
@@ -1124,7 +1125,7 @@ class TextMultimodalSpec extends SparkSpec {
     val d = Seq((1L, "abcdefghijklmnopqrstuvwx", "en", "s", 24L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
     val f = Multimodal.decodeBmpFeatures(
-      spark, Multimodal.resizeBmp(spark, Multimodal.toBmp(d), kx = 4)).collect().head
+      spark, Multimodal.resize(spark, Multimodal.toBmp(d), Codec.Bmp, Box(4))).collect().head
     assert(f.width === 1 && f.height === 2 && f.n_px === 2L && f.bit_count === 24)
     assert(f.r_mean === Some((101 + 113) / 2.0))
     assert(f.g_mean === Some((102 + 114) / 2.0))
@@ -1133,14 +1134,14 @@ class TextMultimodalSpec extends SparkSpec {
     assert(f.top_row_mean === Some((101 + 102 + 103) / 3.0))
     // ky=2: both rows fold — matches resizePng's 2-D case exactly.
     val f2 = Multimodal.decodeBmpFeatures(
-      spark, Multimodal.resizeBmp(spark, Multimodal.toBmp(d), kx = 2, ky = 2)).collect().head
+      spark, Multimodal.resize(spark, Multimodal.toBmp(d), Codec.Bmp, Box(2, 2))).collect().head
     assert(f2.width === 2 && f2.height === 1)
     assert(f2.min_px === Some((97 + 100 + 109 + 112) / 4))
     // Sub-block drops; output stride padding still decodes (width 1 →
     // 3-byte rows padded to 4).
     val tiny = Seq((2L, "abcdefghijklmnopqrst", "en", "s", 20L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-    assert(Multimodal.resizeBmp(spark, Multimodal.toBmp(tiny), kx = 4).collect().isEmpty)
+    assert(Multimodal.resize(spark, Multimodal.toBmp(tiny), Codec.Bmp, Box(4)).collect().isEmpty)
   }
 
   test("mediaInventory: corrupt payloads quarantine as rows; claim survival decides the route") {
@@ -1927,7 +1928,7 @@ class TextMultimodalSpec extends SparkSpec {
       .withColumn("lang", lit("en")).withColumn("source", lit("t"))
       .withColumn("n_chars", length(col("text")).cast("long"))
     val pg = Multimodal.decodePgmFeatures(spark,
-        Multimodal.resizePgmTo(spark, Multimodal.toPgm(docs), 48, 1))
+        Multimodal.resize(spark, Multimodal.toPgm(docs), Codec.Pgm, Bilinear(48, 1)))
       .collect().map(f => f.doc_id -> f).toMap
     assert(pg.size === 3)
     docs.select("doc_id", "text").as[(Long, String)].collect().foreach { case (id, t) =>
@@ -1952,7 +1953,7 @@ class TextMultimodalSpec extends SparkSpec {
       .withColumn("lang", lit("en")).withColumn("source", lit("t"))
       .withColumn("n_chars", length(col("text")).cast("long"))
     val pp = Multimodal.decodePpmFeatures(spark,
-        Multimodal.resizePpmTo(spark, Multimodal.toPpm(cdocs), 32, 2))
+        Multimodal.resize(spark, Multimodal.toPpm(cdocs), Codec.Ppm, Bilinear(32, 2)))
       .collect().head
     assert(pp.width === 32 && pp.height === 2 && pp.n_px === 64L)
     assert(pp.r_mean.get === 'a'.toInt.toDouble && pp.g_mean.get === 'b'.toInt.toDouble &&
@@ -1970,7 +1971,7 @@ class TextMultimodalSpec extends SparkSpec {
       .withColumn("lang", lit("en")).withColumn("source", lit("t"))
       .withColumn("n_chars", length(col("text")).cast("long"))
     val got = Multimodal.decodeWavFeatures(spark,
-        Multimodal.resampleWavTo(spark, Multimodal.toWav16(docs), targetRate = 3000))
+        Multimodal.resize(spark, Multimodal.toWav16(docs), Codec.Wav, Bilinear(3000)))
       .collect().map(f => f.doc_id -> f).toMap
     assert(got.keySet === Set(1L, 3L), "sub-sample doc must drop")
     docs.filter(col("doc_id") =!= 2L).select("doc_id", "text").as[(Long, String)]
@@ -2051,7 +2052,7 @@ class TextMultimodalSpec extends SparkSpec {
     // downscale) and 6→12 (upscale) under one kernel.
     val d = Seq((1L, "abcdefghijklmnopqrstuv", "en", "s", 22L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val resized = Multimodal.resizeAviTo(spark, Multimodal.toAvi(d), targetBytes = 12)
+    val resized = Multimodal.resize(spark, Multimodal.toAvi(d), Codec.Avi, Bilinear(12))
     val payload = resized.select("payload").collect().head.getAs[Array[Byte]](0)
     val (hdr, fs) = Multimodal.AviDecoder.headerAndFrames(1L, payload)
     assert(hdr === Multimodal.AviHeader(40000L, 12L, 1L))
@@ -2066,11 +2067,11 @@ class TextMultimodalSpec extends SparkSpec {
     assert(fs(1)._2.toSeq === f1)
     // A zero-length frame (producible by the stride resize) stays a
     // zero-length chunk: the avih count keeps matching movi.
-    val zeroFrame = Multimodal.resizeAviTo(spark,
-      Multimodal.resizeAvi(spark, Multimodal.toAvi(
+    val zeroFrame = Multimodal.resize(spark,
+      Multimodal.resize(spark, Multimodal.toAvi(
         Seq((2L, "abcdefghijklmnopqr", "en", "s", 18L))
-          .toDF("doc_id", "text", "lang", "source", "n_chars")), kx = 4),
-      targetBytes = 5)
+          .toDF("doc_id", "text", "lang", "source", "n_chars")), Codec.Avi, Box(4)),
+      Codec.Avi, Bilinear(5))
     val (h2, fs2) = Multimodal.AviDecoder.headerAndFrames(
       2L, zeroFrame.select("payload").collect().head.getAs[Array[Byte]](0))
     assert(h2.width === 5L)
@@ -2148,11 +2149,11 @@ class TextMultimodalSpec extends SparkSpec {
     assert(f0.width === 48 && f0.height === 16 && f0.n_mcus === 3L)
     // Stride 4×4: 48×16 → 12×4, still color.
     val fr = Multimodal.decodeJpegColorFeatures(spark,
-      Multimodal.resizeJpeg(spark, media, kx = 4, ky = 4)).collect().head
+      Multimodal.resize(spark, media, Codec.Jpeg, Box(4, 4))).collect().head
     assert(fr.width === 12 && fr.height === 4 && fr.n_mcus === 1L)
     // Explicit-target 24×16 thumbnail, still color.
     val ft = Multimodal.decodeJpegColorFeatures(spark,
-      Multimodal.resizeJpegTo(spark, media, targetW = 24, targetH = 16)).collect().head
+      Multimodal.resize(spark, media, Codec.Jpeg, Bilinear(24, 16))).collect().head
     assert(ft.width === 24 && ft.height === 16 && ft.n_mcus === 2L)
     // The router's jpeg arm decodes color instead of throwing.
     val routed = Multimodal.extractFeatures(spark, media).collect().head
@@ -2243,7 +2244,7 @@ class TextMultimodalSpec extends SparkSpec {
       .withColumn("lang", lit("en")).withColumn("source", lit("t"))
       .withColumn("n_chars", length(col("text")).cast("long"))
     val got = Multimodal.decodeJpegFeatures(spark,
-        Multimodal.resizeJpeg(spark, Multimodal.toJpeg(docs), kx = 4))
+        Multimodal.resize(spark, Multimodal.toJpeg(docs), Codec.Jpeg, Box(4)))
       .collect().map(f => f.doc_id -> f).toMap
     texts.foreach { case (id, t) =>
       val nb = t.length / 64
@@ -2262,5 +2263,54 @@ class TextMultimodalSpec extends SparkSpec {
       assert(f.dc_sum === dcs.sum && f.dc_min === dcs.min && f.dc_max === dcs.max,
         s"doc $id resized dc stats")
     }
+  }
+
+  test("resize box on WAV labels the output at the decoded source rate / k") {
+    // An 8 kHz fixture resampled to 44.1 kHz, then box-decimated by 4:
+    // the output rate is 44100 / 4, not the fixture constant 8000 / 4.
+    val t = "the quick brown fox jumps over the lazy dog"
+    val d = Seq((1L, t, "en", "s", t.length.toLong))
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+    val at44k = Multimodal.resize(spark, Multimodal.toWav16(d), Codec.Wav, Bilinear(44100))
+    assert(Multimodal.decodeWavFeatures(spark, at44k).collect().head.sample_rate === 44100)
+    val f = Multimodal.decodeWavFeatures(
+      spark, Multimodal.resize(spark, at44k, Codec.Wav, Box(4))).collect().head
+    assert(f.sample_rate === 11025)
+    assert(f.n_samples === (t.length * 44100L / 8000) / 4)
+  }
+
+  test("transformMedia and thumbnailMedia emit exactly what resize does, per codec") {
+    type DF = org.apache.spark.sql.DataFrame
+    def docs(id: Long, t: String): DF = Seq((id, t, "en", "s", t.length.toLong))
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+    def pp(df: DF): DF = df.select(col("doc_id"), col("payload"))
+    val long = "the quick brown fox jumps over the lazy dog and more text here!" * 2
+    // (codec, the kernel thumbnailMedia applies to it by default, its
+    // payloads) — transformMedia applies Box(4) to every codec. Docs 2
+    // and 9 are sub-block under Box(4); doc 9 is also shorter than one
+    // output sample at 2 kHz.
+    val perCodec: Seq[(Multimodal.Codec, Multimodal.Kernel, DF)] = Seq(
+      (Codec.Pgm, Bilinear(24, 16), pp(Multimodal.toPgm(docs(1L, long).unionByName(docs(2L, "abc"))))),
+      (Codec.Ppm, Bilinear(24, 16), pp(Multimodal.toPpm(docs(3L, long)))),
+      (Codec.Png, Bilinear(24, 16), pp(Multimodal.toPng(docs(4L, long)))),
+      (Codec.Bmp, Bilinear(24, 16), pp(Multimodal.toBmp(docs(5L, long)))),
+      (Codec.Jpeg, Bilinear(24, 16), pp(Multimodal.toJpeg(docs(6L, long)))
+        .unionByName(pp(Multimodal.toJpegColor(docs(7L, "abcdefghij"))))),
+      (Codec.Wav, Bilinear(2000), pp(Multimodal.toWav16(docs(8L, long).unionByName(docs(9L, "abc"))))),
+      (Codec.Avi, Bilinear(24), pp(Multimodal.toAvi(docs(10L, long)))))
+    def rows(df: DF): Seq[(Long, Seq[Byte])] = df.select("doc_id", "payload").collect()
+      .map(r => (r.getLong(0), r.getAs[Array[Byte]](1).toSeq)).sortBy(_._1).toSeq
+    val lake = perCodec.map(_._3).reduce(_ unionByName _)
+    val boxed = rows(Multimodal.transformMedia(spark, lake))
+    val thumbs = rows(Multimodal.thumbnailMedia(spark, lake))
+    perCodec.foreach { case (codec, bilinear, payloads) =>
+      val ids = payloads.select("doc_id").collect().map(_.getLong(0)).toSet
+      assert(boxed.filter(r => ids(r._1)) ===
+        rows(Multimodal.resize(spark, payloads, codec, Box(4))), s"$codec box")
+      assert(thumbs.filter(r => ids(r._1)) ===
+        rows(Multimodal.resize(spark, payloads, codec, bilinear)), s"$codec bilinear")
+    }
+    assert(!boxed.exists(r => r._1 == 2L || r._1 == 9L), "sub-block payloads must drop")
+    assert(thumbs.exists(_._1 == 2L) && !thumbs.exists(_._1 == 9L))
   }
 }
