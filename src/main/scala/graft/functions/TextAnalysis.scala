@@ -1656,9 +1656,10 @@ object TextAnalysis {
       perDoc.withColumn("doc_rank", row_number().over(w.orderBy(col("doc_id"))))
     } else {
       val qs = (1 until 32).map(i => i.toDouble / 32)
-      val bounds: Seq[Long] = perDoc
+      // approx_percentile over no rows is null: an empty corpus gets no bounds.
+      val bounds: Seq[Long] = Option(perDoc
         .agg(expr(s"approx_percentile(doc_id, array(${qs.mkString(", ")}), 10000)"))
-        .collect()(0).getSeq[Long](0)
+        .collect()(0).getSeq[Long](0)).getOrElse(Nil)
       val pid =
         if (bounds.isEmpty) lit(0)
         else size(filter(typedLit(bounds), b => col("doc_id") >= b))

@@ -1,6 +1,14 @@
 package graft.operators
 
+import org.apache.spark.TaskContext
+import org.apache.spark.network.util.JavaUtils
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Expression, Generator, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.catalyst.optimizer.BuildRight
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.joins.{BaseJoinExec, HashJoin, SortMergeJoinExec}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -16,21 +24,24 @@ import org.apache.spark.sql.types._
   *     history-less customers despite the documented all-zero-padding
   *     semantics at README.md:21-22 / tests:110-113). Here the documented
   *     semantics hold: no-history impressions survive with all-zero arrays.
-  *  2. Windows carry total orderings (`action_time DESC, item_id,
+  *  2. Histories carry a total ordering (`action_time DESC, item_id,
   *     action_type` — reference orders by `action_time` alone,
   *     pipeline.py:169, which is non-deterministic on timestamp ties).
-  *  3. Grouping uses the real key columns including `impression_item_id`
-  *     (the reference's string surrogate key at pipeline.py:164-167 omits it
-  *     and can interleave rank sequences of duplicate carousel rows).
+  *  3. Each exploded impression row is its own history key (a row id), so
+  *     duplicate carousel rows each get one row with their own history (the
+  *     reference's string surrogate key at pipeline.py:164-167 omits
+  *     `impression_item_id` and can interleave duplicates' rank sequences).
   *
-  * Scale design: the single wide shuffle is the impressions×actions join on
-  * `customer_id`; the subsequent window + aggregation share one
-  * hash-partitioning on the impression key, so Catalyst plans exactly two
-  * exchanges. `repartitionNum` optionally pins the join parallelism
-  * (reference hard-codes 200 at pipeline.py:153-156); default leaves AQE in
-  * charge. For repeated daily runs prefer [[customerHistoryBeforeDt]]
-  * (the reference's recommended-but-unimplemented precompute,
-  * pipeline.py:99-115, README.md:69-72).
+  * Scale design: the only data exchange is the exploded impressions —
+  * compact rows, hash-partitioned on `customer_id` to an explicit width AQE
+  * does not coalesce: the session's `spark.sql.shuffle.partitions`, capped
+  * at `defaultParallelism` (one task per core; wider sessions would get
+  * that many uncoalesced tasks and output files).
+  * The actions join each row there (broadcast when small), and each row's
+  * history is folded where the join emits it ([[HistoryFold]]): no second
+  * exchange, window or aggregate. For repeated daily runs prefer
+  * [[customerHistoryBeforeDt]] (the reference's recommended-but-
+  * unimplemented precompute, pipeline.py:99-115, README.md:69-72).
   */
 object TrainingPipeline {
 
@@ -88,9 +99,10 @@ object TrainingPipeline {
         col("imp.item_id").cast(LongType).as("impression_item_id"),
         when(col("imp.is_order") === true, 1).otherwise(0).cast(IntegerType).as("label"))
 
-  /** Fixed-length most-recent-first array assembly shared by O3/O4:
-    * `hist` is a sorted array of struct(rn, item_id, action_type); emit the
-    * two parallel arrays truncated/zero-padded to exactly `maxHistory`.
+  /** Fixed-length most-recent-first array assembly shared by O3 and its
+    * streaming twin: `hist` is a sorted array of struct(neg_us, item_id,
+    * action_type); emit the two parallel arrays truncated/zero-padded to
+    * exactly `maxHistory`.
     * Pure array expressions — stays inside whole-stage codegen.
     */
   private[graft] def paddedArrays(maxHistory: Int): Seq[org.apache.spark.sql.Column] = Seq(
@@ -209,59 +221,43 @@ object TrainingPipeline {
       addToCarts: DataFrame,
       orders: DataFrame,
       maxHistory: Int = DefaultMaxHistory,
-      repartitionNum: Option[Int] = None,
-      saltBuckets: Option[Int] = None,
-      persistActions: Boolean = false): DataFrame = {
-    val actions0 = normalizeActions(clicks, addToCarts, orders)
-    // README.md:64 advice (persist all_actions across multi-day runs) as a
-    // real flag. NOTE: the cached frame is method-local, so repeated
-    // persistActions=true invocations each cache a fresh copy — for daily
-    // reruns prefer persisting normalizeActions' output yourself and
-    // calling [[produceTrainingExamplesFromActions]].
-    val actions =
-      if (persistActions)
-        actions0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else actions0
+      saltBuckets: Option[Int] = None): DataFrame =
     produceTrainingExamplesFromActions(
-      impressions, actions, maxHistory, repartitionNum, saltBuckets)
-  }
+      impressions, normalizeActions(clicks, addToCarts, orders), maxHistory, saltBuckets)
 
-  /** O4 from a pre-normalized (and possibly caller-persisted) actions
-    * table — the entry point for repeated daily runs where `all_actions`
-    * lives across invocations (README.md:64).
+  /** O4 from a pre-normalized (and possibly caller-persisted) actions table
+    * (non-null `item_id`/`action_type`, as [[normalizeActions]] emits) — the
+    * entry point for repeated daily runs where `all_actions` lives across
+    * invocations (README.md:64).
+    *
+    * [[HistoryFold]] needs all matches of one exploded row to arrive
+    * consecutively: the left-outer join streams the impression side and
+    * builds the actions side (broadcast or sort-merge).
+    * [[requireStreamsImpressions]] fails fast on any plan that could build
+    * the impression side instead.
     */
   def produceTrainingExamplesFromActions(
       impressions: DataFrame,
       actions: DataFrame,
       maxHistory: Int = DefaultMaxHistory,
-      repartitionNum: Option[Int] = None,
       saltBuckets: Option[Int] = None,
       saltOnlyCustomers: Option[Seq[Long]] = None): DataFrame = {
+    val spark = impressions.sparkSession
+    val width = math.min(spark.conf.get("spark.sql.shuffle.partitions").toInt,
+      spark.sparkContext.defaultParallelism)
     val ex = explodeImpressions(impressions)
+      .withColumn("_row", monotonically_increasing_id())
       .withColumn("cutoff_ts", to_timestamp(concat(col("dt"), lit(" 00:00:00"))))
-
-    // Optional explicit co-location on the join key (reference hard-codes
-    // repartition(200) at pipeline.py:153-156); by default the join's own
-    // hash exchange + AQE handle sizing.
-    val (exP0, actP0) = repartitionNum match {
-      case Some(n) => (
-        ex.repartition(n, col("customer_id")),
-        actions.repartition(n, col("customer_id")))
-      case None => (ex, actions)
-    }
 
     // Hot-customer skew salting (README.md:70's "split hot customers" as a
     // real mechanism): actions spread deterministically over N sub-keys,
-    // impressions replicated over all N, join key becomes (customer, salt).
-    // Null-extension still works per (impression, salt) row; empty-bucket
-    // nulls are dropped by the conditional collect below.
-    //
-    // `saltOnlyCustomers` narrows the mechanism to a known hot-key set
-    // (from [[detectHotCustomers]] or ops knowledge): everyone else keeps
-    // salt 0 and is NOT replicated, so the ×N replication cost is paid only
-    // where the skew is — the form that survives 100 TB, where replicating
-    // every impression N× would N× the dominant shuffle.
-    val (exP, actP, joinKeyExtra) = saltBuckets match {
+    // impression rows replicated over all N, join key becomes (customer,
+    // salt); each (row, salt) folds to a partial top-K and a second fold
+    // merges a row's ≤ N partials. `saltOnlyCustomers` narrows this to a
+    // known hot-key set (from [[detectHotCustomers]]): everyone else keeps
+    // salt 0 and is NOT replicated, so the ×N cost is paid only where the
+    // skew is.
+    val (exS, actS, keys) = saltBuckets match {
       case Some(n) =>
         val allSalts = sequence(lit(0), lit(n - 1))
         val actSalt = pmod(hash(col("item_id"), col("action_time")), lit(n))
@@ -272,60 +268,54 @@ object TrainingPipeline {
               when(isHot, actSalt).otherwise(lit(0)))
           case None => (allSalts, actSalt)
         }
-        (
-          exP0.withColumn("_salt", explode(exSalts)),
-          actP0.withColumn("_salt", actSaltCol),
-          Some(col("ex._salt") === col("act._salt")))
-      case None => (exP0, actP0, None)
+        (ex.withColumn("_salt", explode(exSalts)), actions.withColumn("_salt", actSaltCol),
+          Seq("customer_id", "_salt"))
+      case None => (ex, actions, Seq("customer_id"))
     }
 
     // Anti-leakage predicate in the ON clause (fix #1): null-extended rows
     // for history-less customers survive the left join.
-    val baseCond = col("ex.customer_id") === col("act.customer_id") &&
+    val cond = keys.map(k => col(s"ex.$k") === col(s"act.$k")).reduce(_ && _) &&
       col("act.action_time") < col("ex.cutoff_ts")
-    val joined = exP.alias("ex")
-      .join(
-        actP.alias("act"),
-        joinKeyExtra.map(baseCond && _).getOrElse(baseCond),
-        "left_outer")
-      .select(
-        col("ex.dt").as("dt"),
-        col("ex.ranking_id").as("ranking_id"),
-        col("ex.customer_id").as("customer_id"),
-        col("ex.impression_pos").as("impression_pos"),
-        col("ex.impression_item_id").as("impression_item_id"),
-        col("ex.label").as("label"),
-        col("act.item_id").as("item_id"),
-        col("act.action_type").as("action_type"),
-        col("act.action_time").as("action_time"))
+    val joined = exS.repartition(width, keys.map(col): _*).alias("ex")
+      .join(actS.alias("act"), cond, "left_outer")
+      .select((HistoryFold.Keys :+ "_row").map(k => col(s"ex.$k")) ++ Seq(
+        unix_micros(col("act.action_time")).as("_us"),
+        col("act.item_id").cast(LongType).as("_item"),
+        col("act.action_type").cast(IntegerType).as("_type")): _*)
+    requireStreamsImpressions(joined)
+    if (saltBuckets.isEmpty) HistoryFold(joined, maxHistory, partial = false)
+    else HistoryFold(
+      HistoryFold(joined, maxHistory, partial = true)
+        .repartition(width, col("_row")).sortWithinPartitions(col("_row")),
+      maxHistory, partial = false)
+  }
 
-    // Real multi-column impression key (fix #3) + total ordering (fix #2).
-    val w = Window
-      .partitionBy(
-        col("dt"), col("ranking_id"), col("customer_id"),
-        col("impression_pos"), col("impression_item_id"))
-      .orderBy(col("action_time").desc, col("item_id"), col("action_type"))
-
-    val ranked = joined
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= maxHistory)
-
-    // Conditional collect: the null action row of a history-less impression
-    // contributes nothing (collect_list drops nulls) → clean empty array.
-    val agg = ranked
-      .groupBy(
-        col("dt"), col("ranking_id"), col("customer_id"),
-        col("impression_pos"), col("impression_item_id"), col("label"))
-      .agg(sort_array(collect_list(when(
-        col("action_time").isNotNull,
-        struct(col("rn"), col("item_id"), col("action_type")))))
-        .as("hist"))
-
-    agg.select(
-      Seq(
-        col("dt"), col("ranking_id"), col("customer_id"),
-        col("impression_pos"), col("impression_item_id"), col("label")) ++
-        paddedArrays(maxHistory): _*)
+  /** Fails unless the impression-actions join streams the impression side,
+    * the contiguity [[HistoryFold]] relies on: a sort-merge join, or a hash
+    * join building the actions side. Checked on the planned join (so a
+    * shuffled-hash join from `spark.sql.join.preferSortMergeJoin=false` or a
+    * hint is caught), and AQE's runtime switch to shuffled-hash joins
+    * (`spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold` > 0), which
+    * may build either side, is refused up front.
+    */
+  private def requireStreamsImpressions(joined: DataFrame): Unit = {
+    val plan = joined.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.inputPlan
+      case p => p
+    }
+    val join = plan.collectFirst { case j: BaseJoinExec => j }
+    require(join.exists {
+      case _: SortMergeJoinExec => true
+      case h: HashJoin => h.buildSide == BuildRight
+      case _ => false
+    }, "produceTrainingExamples needs a join that streams the impression side " +
+      s"(sort-merge, or a hash join building the actions side); planned: ${join.map(_.nodeName)}")
+    val conf = joined.sparkSession.conf
+    require(!conf.get("spark.sql.adaptive.enabled").toBoolean || JavaUtils.byteStringAsBytes(
+      conf.get("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold")) == 0,
+      "produceTrainingExamples cannot run with AQE shuffled-hash joins " +
+        "(spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold > 0): they may build the impression side")
   }
 
   /** Deterministic hash-based negative sampling — the ranking-training
@@ -438,4 +428,143 @@ object TrainingPipeline {
         coalesce(col("actions"), array_repeat(lit(0L), maxHistory)).as("actions"),
         coalesce(col("action_types"), array_repeat(lit(0), maxHistory)).as("action_types"))
   }
+}
+
+/** The per-row history fold of
+  * [[TrainingPipeline.produceTrainingExamplesFromActions]], a generator over
+  * the join output [[HistoryFold.Columns]] whose rows with one `_row` arrive
+  * consecutively. It keeps that row's best `maxHistory` matches in a bounded
+  * heap under the total order (`_us` DESC, `_item`, `_type`) — a hot
+  * customer costs O(maxHistory), never O(actions) — and when `_row` changes
+  * or the partition ends emits either one row `(keys…, actions,
+  * action_types)`, most recent first and zero-padded to `maxHistory`, or
+  * (`partial`) the kept matches in the input's shape (one null-action row if
+  * none) for a second fold to merge. The null-extended row adds nothing.
+  * The output depends on input order, so the fold is not deterministic.
+  * State belongs to the task that opened the run: a run left open by a task
+  * that stopped before `terminate` is dropped, never carried into another
+  * partition. `CodegenFallback` keeps GenerateExec on the interpreted path,
+  * the one that calls `terminate`.
+  */
+private[graft] case class HistoryFold(children: Seq[Expression], maxHistory: Int, partial: Boolean)
+    extends Generator with CodegenFallback {
+
+  private val nKeys = HistoryFold.Keys.length
+
+  override def prettyName: String = "graft_history_fold"
+
+  override lazy val deterministic: Boolean = false
+
+  override def elementSchema: StructType = {
+    val in = children.zip(HistoryFold.Columns).map { case (c, n) => StructField(n, c.dataType, c.nullable) }
+    if (partial) StructType(in)
+    else StructType(in.take(nKeys) ++ Seq(
+      StructField("actions", ArrayType(LongType, containsNull = true), nullable = false),
+      StructField("action_types", ArrayType(IntegerType, containsNull = true), nullable = false)))
+  }
+
+  @transient private lazy val in = children.toIndexedSeq
+  // A heap of ≤ maxHistory entries plus one slot for the entry being offered.
+  @transient private lazy val us = new Array[Long](maxHistory + 1)
+  @transient private lazy val item = new Array[Long](maxHistory + 1)
+  @transient private lazy val tpe = new Array[Int](maxHistory + 1)
+  private var n = 0
+  /** The open run's keys and `_row`; null before its first row. */
+  private var run: Array[Any] = null
+  /** The task that opened the run. */
+  @transient private var task: TaskContext = null
+
+  override def eval(input: InternalRow): IterableOnce[InternalRow] = {
+    dropStale()
+    val id = in(nKeys).eval(input)
+    val out = if (run != null && run(nKeys) != id) emit() else Nil
+    if (run == null) {
+      run = in.take(nKeys + 1).map(c => InternalRow.copyValue(c.eval(input))).toArray
+      task = TaskContext.get()
+    }
+    val u = in(nKeys + 1).eval(input)
+    if (u != null) {
+      val i = in(nKeys + 2).eval(input)
+      val t = in(nKeys + 3).eval(input)
+      if (i == null || t == null) throw new IllegalArgumentException(
+        "training-example actions need non-null item_id and action_type (see normalizeActions)")
+      offer(u.asInstanceOf[Long], i.asInstanceOf[Long], t.asInstanceOf[Int])
+    }
+    out
+  }
+
+  override def terminate(): IterableOnce[InternalRow] = { dropStale(); if (run == null) Nil else emit() }
+
+  private def dropStale(): Unit = if (run != null && (task ne TaskContext.get())) { run = null; n = 0 }
+
+  private def emit(): Seq[InternalRow] = {
+    val keys = run.toSeq
+    val rows =
+      if (partial) {
+        if (n == 0) Seq(InternalRow.fromSeq(keys ++ Seq(null, null, null)))
+        else (0 until n).map(j => InternalRow.fromSeq(keys ++ Seq[Any](us(j), item(j), tpe(j))))
+      } else {
+        var m = n // heap sort: each round moves the worst kept entry to the end
+        while (m > 1) { m -= 1; swap(0, m); siftDown(m) }
+        val a = new Array[Long](maxHistory)
+        val b = new Array[Int](maxHistory)
+        System.arraycopy(item, 0, a, 0, n)
+        System.arraycopy(tpe, 0, b, 0, n)
+        Seq(InternalRow.fromSeq(keys.take(nKeys) ++
+          Seq(UnsafeArrayData.fromPrimitiveArray(a), UnsafeArrayData.fromPrimitiveArray(b))))
+      }
+    run = null
+    n = 0
+    rows
+  }
+
+  /** Entry a ranks after entry b: older, or tied and a larger item/type. */
+  private def after(a: Int, b: Int): Boolean =
+    us(a) < us(b) || us(a) == us(b) && (item(a) > item(b) || item(a) == item(b) && tpe(a) > tpe(b))
+
+  private def set(a: Int, u: Long, i: Long, t: Int): Unit = { us(a) = u; item(a) = i; tpe(a) = t }
+
+  private def swap(a: Int, b: Int): Unit = {
+    val u = us(a); val i = item(a); val t = tpe(a)
+    set(a, us(b), item(b), tpe(b))
+    set(b, u, i, t)
+  }
+
+  /** Max-heap on "ranks after" (the root is the worst kept entry): push,
+    * then drop the root once the heap holds more than `maxHistory`.
+    */
+  private def offer(u: Long, i: Long, t: Int): Unit = {
+    set(n, u, i, t)
+    var c = n
+    n += 1
+    while (c > 0 && after(c, (c - 1) / 2)) { swap(c, (c - 1) / 2); c = (c - 1) / 2 }
+    if (n > maxHistory) { n -= 1; swap(0, n); siftDown(n) }
+  }
+
+  /** Restores the heap over entries [0, m) after its root changed. */
+  private def siftDown(m: Int): Unit = {
+    var p = 0
+    var l = 1
+    while (l < m) {
+      val c = if (l + 1 < m && after(l + 1, l)) l + 1 else l
+      if (after(c, p)) { swap(c, p); p = c; l = 2 * p + 1 } else l = m
+    }
+  }
+
+  override protected def withNewChildrenInternal(newChildren: IndexedSeq[Expression]): HistoryFold =
+    copy(children = newChildren)
+}
+
+private[graft] object HistoryFold {
+
+  /** The impression columns every training example carries. */
+  val Keys: Seq[String] =
+    Seq("dt", "ranking_id", "customer_id", "impression_pos", "impression_item_id", "label")
+
+  /** The fold's input: the keys, the row id, then one action. */
+  val Columns: Seq[String] = Keys ++ Seq("_row", "_us", "_item", "_type")
+
+  def apply(df: DataFrame, maxHistory: Int, partial: Boolean): DataFrame =
+    df.select(org.apache.spark.sql.graft.bridge.column(HistoryFold(
+      Columns.map(c => org.apache.spark.sql.graft.bridge.expression(col(c))), maxHistory, partial)))
 }

@@ -1,6 +1,10 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeLike}
 
 import graft.operators.{Dedup, Similarity, TrainingPipeline}
 import graft.sources.EventFixtures
@@ -40,18 +44,38 @@ class PlanShapeSpec extends SparkSpec {
     assert(p.contains("PushedFilters: [IsNotNull"), "scan pushdown lost")
   }
 
-  test("flagship pipeline: join + window + aggregate plan with pushdown") {
+  test("flagship: one fixed-width exchange, build-right join, no window") {
+    // Impressions are materialized first: the fixture derives them from
+    // events through its own aggregate exchange, which is not the pipeline's.
     val df = TrainingPipeline.produceTrainingExamples(
-      EventFixtures.impressions(spark, dir),
+      EventFixtures.impressions(spark, dir).localCheckpoint(),
       EventFixtures.clicks(spark, dir),
       EventFixtures.addToCarts(spark, dir),
       EventFixtures.orders(spark, dir),
       maxHistory = 8)
     val p = plan(df)
-    // One exchange pair for the customer join (both sides) + one for the
-    // impression-key window/agg; the window and its aggregate share
-    // partitioning, so 4 is the ceiling.
-    assert(shuffles(df) <= 4, s"flagship pipeline grew a shuffle:\n$p")
+    // The only data exchange is the compact exploded-impression side, at
+    // the session's shuffle width capped at the core count, a user-fixed
+    // count AQE must not coalesce; actions broadcast, and each row's history
+    // is folded where the left-outer join streams it (the join must build
+    // the right side). This session is wider than its cores, so the cap shows.
+    assert(shuffles(df) === 1, s"flagship pipeline grew a shuffle:\n$p")
+    val sessionWidth = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val cores = spark.sparkContext.defaultParallelism
+    assert(sessionWidth > cores)
+    val width = cores
+    val physical = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case other => other
+    }
+    val exchanges = physical.collect { case e: ShuffleExchangeLike => e }
+    assert(exchanges.map(e => (e.numPartitions, e.shuffleOrigin)) === Seq((width, REPARTITION_BY_NUM)),
+      s"impression exchange lost its fixed width:\n$p")
+    assert(exchanges.head.outputPartitioning.asInstanceOf[HashPartitioning].expressions
+      .map(_.asInstanceOf[Attribute].name) === Seq("customer_id"), p)
+    assert(!p.contains("Window"), s"window reappeared:\n$p")
+    assert(!p.contains("ObjectHashAggregate"), s"aggregate reappeared:\n$p")
+    assert(p.contains("LeftOuter, BuildRight"), s"left-outer join no longer builds right:\n$p")
     assert(p.contains("PushedFilters: [IsNotNull"), "scan pushdown lost")
   }
 

@@ -1606,6 +1606,28 @@ class TextMultimodalSpec extends SparkSpec {
     assert(out.toSeq === Seq((0L, 2L, 4L, 3L, 3L), (1L, 2L, 9L, 2L, 5L)))
   }
 
+  test("vocabularyGrowth: distributed rank branch equals the single-window branch, empty too") {
+    // The branch is chosen by the scan's partition count against
+    // defaultParallelism: one partition takes the single rank window, at
+    // least defaultParallelism partitions the prefix-count path.
+    val wide = spark.sparkContext.defaultParallelism * 2
+    val text = concat_ws(" ", Seq(5, 11, 3).map(m => concat(lit("w"), (col("id") % m).cast("string"))): _*)
+    val docs = spark.range(1, 41).select(
+      col("id").as("doc_id"), text.as("text"), lit("en").as("lang"), lit("s").as("source"),
+      length(text).cast("long").as("n_chars"))
+    for (input <- Seq(docs, docs.filter(col("doc_id") > 1000))) {
+      def curve(df: org.apache.spark.sql.DataFrame) =
+        TextAnalysis.vocabularyGrowth(df, buckets = 4).orderBy("bucket").collect().toSeq
+      val narrow = input.coalesce(1)
+      val spread = input.repartition(wide)
+      assert(narrow.rdd.getNumPartitions === 1)
+      assert(spread.rdd.getNumPartitions >= spark.sparkContext.defaultParallelism)
+      val got = curve(spread)
+      assert(got === curve(narrow))
+      assert(got.length === (if (input eq docs) 4 else 0))
+    }
+  }
+
   test("tokenizerScorecard: totals, distinct pieces used, exact chars-per-piece ppm") {
     // 3 word occurrences, 8 chars, 5 pieces over 3 distinct pieces:
     // cpp = 8/5 -> 1600000 ppm exactly.

@@ -130,6 +130,89 @@ class TrainingPipelineSpec extends SparkSpec {
     assert(pre.exceptAll(direct).count() === 0)
   }
 
+  test("duplicated carousel rows each keep one row with their own history") {
+    val dup = Impression("2025-08-14", "r1", 1L, Seq(ImpressionItem(100L, is_order = false)))
+    val impressions = Seq(dup, dup).toDF()
+    val clicks = Seq(
+      Click("2025-08-13", 1L, 10L, ts("2025-08-13 12:00:00")),
+      Click("2025-08-12", 1L, 11L, ts("2025-08-12 12:00:00"))).toDF()
+    val carts = Seq.empty[CartAdd].toDF()
+    val orders = Seq.empty[OrderEvent].toDF()
+    val direct = TrainingPipeline
+      .produceTrainingExamples(impressions, clicks, carts, orders, maxHistory = 5)
+    val rows = direct.collect()
+    assert(rows.length === 2)
+    rows.foreach { r =>
+      assert(r.getAs[Seq[Long]]("actions") === Seq(10L, 11L, 0L, 0L, 0L))
+      assert(r.getAs[Seq[Int]]("action_types") === Seq(1, 1, 0, 0, 0))
+    }
+    val hist = TrainingPipeline.customerHistoryBeforeDt(
+      TrainingPipeline.normalizeActions(clicks, carts, orders),
+      impressions.select("dt").distinct(), maxHistory = 5)
+    val pre = TrainingPipeline.produceTrainingExamplesPrecomputed(impressions, hist, 5)
+    assert(direct.exceptAll(pre).count() === 0)
+    assert(pre.exceptAll(direct).count() === 0)
+  }
+
+  test("null customer_id impressions keep their row with all-zero arrays") {
+    val (impressions0, clicks, carts, orders) = basicFixture
+    val impressions = impressions0.withColumn("customer_id",
+      when(col("ranking_id") === "r2", lit(null)).otherwise(col("customer_id")))
+    val out = TrainingPipeline
+      .produceTrainingExamples(impressions, clicks, carts, orders, maxHistory = 5)
+      .collect()
+    assert(out.length === 3)
+    val nullRow = out.filter(_.isNullAt(out.head.fieldIndex("customer_id")))
+    assert(nullRow.length === 1)
+    assert(nullRow.head.getAs[Seq[Long]]("actions") === Seq.fill(5)(0L))
+    assert(nullRow.head.getAs[Seq[Int]]("action_types") === Seq.fill(5)(0))
+  }
+
+  test("a matched action with a null item_id or action_type fails the run") {
+    val (impressions, _, _, _) = basicFixture
+    for ((item, tpe) <- Seq((None, Some(1)), (Some(10L), None))) {
+      val actions = Seq((1L, item, ts("2025-08-13 12:00:00"), tpe))
+        .toDF("customer_id", "item_id", "action_time", "action_type")
+      val e = intercept[Exception] {
+        TrainingPipeline.produceTrainingExamplesFromActions(impressions, actions, maxHistory = 5).collect()
+      }
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(t => String.valueOf(t.getMessage).contains("non-null item_id and action_type")), e)
+    }
+  }
+
+  /** Runs `body` with the given session confs, restoring the previous values. */
+  private def withConfs[T](confs: (String, String)*)(body: => T): T = {
+    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  test("a join that could build the impression side is refused up front") {
+    val (impressions, _, _, _) = basicFixture
+    // Far bigger than the impressions and than the broadcast threshold, so
+    // without preferSortMergeJoin the planner builds the impression side.
+    val actions = spark.range(200000).select(
+      (col("id") % 3).as("customer_id"), col("id").as("item_id"),
+      lit(ts("2025-08-13 12:00:00")).as("action_time"), lit(1).as("action_type"))
+    def run() = TrainingPipeline.produceTrainingExamplesFromActions(impressions, actions, maxHistory = 5)
+    val shj = intercept[IllegalArgumentException] {
+      withConfs("spark.sql.join.preferSortMergeJoin" -> "false",
+        "spark.sql.autoBroadcastJoinThreshold" -> "10240")(run())
+    }
+    assert(shj.getMessage.contains("ShuffledHashJoin"), shj.getMessage)
+    val aqe = intercept[IllegalArgumentException] {
+      withConfs("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold" -> "1m")(run())
+    }
+    assert(aqe.getMessage.contains("maxShuffledHashJoinLocalMapThreshold"), aqe.getMessage)
+    // Sort-merge under the same sizes still runs, and agrees with broadcast.
+    val smj = withConfs("spark.sql.autoBroadcastJoinThreshold" -> "10240")(run().collect())
+    assert(smj.map(_.toString).sorted === run().collect().map(_.toString).sorted)
+  }
+
   test("invariants: fixed length, parallel zero positions, label domain") {
     val (impressions, clicks, carts, orders) = basicFixture
     for (k <- Seq(1, 2, 5, 16)) {
