@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Per-run decomposition for the sweep's WATCH set (VERDICT r19 #2):
   * q139 has run ~5× slower under the driver's sweep than on the same
@@ -137,31 +136,8 @@ private object BenchWatch {
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // Whole-stage-codegen compile cache, sized for a SUITE instead of a
-      // single query (r21, VERDICT r20 #1): Spark's default of 100 entries
-      // thrashes under q240/q243's ~316 generated classes per run — every
-      // min-of-3 run re-compiles (and re-JITs) ALL of them even though the
-      // generated source is identical run to run (watch rows: cg_n ≈ 316,
-      // jit ≈ 4 s on EVERY run). This is a JVM-level compile-artifact
-      // cache, not a data-scale knob: a production driver/executor running
-      // a heterogeneous query fleet wants the same headroom at any data
-      // size, and the cost is bounded (cached GeneratedClass objects;
-      // ~tens of MB at 4096 entries). Static conf — must be set before the
-      // first session; env-overridable for A/Bs.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE_ENTRIES", "4096"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // JVM/codegen warm-up so startup cost isn't attributed to whichever
-    // query happens to run first.
-    spark.range(1000).selectExpr("sum(id)").collect()
+    val cpus = GraftSession.cpus
+    val spark = GraftSession(cpus)
     // Deeper warm-up, still untimed and uniform: drive one events-path
     // and one TPC-H-join-path query through the noop sink so parquet
     // footer reading, whole-stage codegen compilation, broadcast and
@@ -179,7 +155,7 @@ object Bench {
     // BOTH the min-of-N vector (the stable, round-comparable headline)
     // and the first-run single-pass vector (what a cold sweep would see)
     // are recorded, so a per-query swing can be attributed to noise vs
-    // code without a separate IsoBench session.
+    // code from the sweep itself.
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt.max(1)
     // Targeted local iteration: SPARK_GRAFT_BENCH_ONLY=q187,q216 times just
     // those queries (full sweep when unset — the driver never sets it).
@@ -250,12 +226,17 @@ object Bench {
       .map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
     val total = if (results.nonEmpty) results.values.sum else 0.0
     val totalFirst = if (firstRun.nonEmpty) firstRun.values.sum else 0.0
+    // Queries with at least one failed run, listed in both summary lines
+    // (a poisoned min alone only shows up as an absurd total).
+    val failed = samples.collect { case (n, ts) if ts.contains(Double.MaxValue) => n }
+      .sorted.map(n => "\"" + n + "\"").mkString("[", ",", "]")
     val watchJson = watchRuns.map { case (n, ds) =>
       s"\"$n\":${BenchWatch.compactJson(ds)}" }.mkString("{", ",", "}")
     val full =
       s"""{"metric":"total","value":$total,"unit":"sec","queries":${vec(results)},""" +
         s""""runs_per_query":$runs,"single_pass_total":$totalFirst,""" +
-        s""""queries_single_pass":${vec(firstRun)},"watch":$watchJson,"sf":"$sfDir"}"""
+        s""""queries_single_pass":${vec(firstRun)},"watch":$watchJson,"sf":"$sfDir",""" +
+        s""""failed":$failed}"""
     println(full)
     // Full per-run watch decomposition (every run, all fields, top
     // stages) next to bench_results.json — the judge-readable artifact.
@@ -286,13 +267,8 @@ object Bench {
     // env override) stay exactly as before for driver compatibility.
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_results.json")
     persist(outPath, full)
-    def cpuSuffixed(p: String): String = {
-      val dot = p.lastIndexOf('.')
-      if (dot > 0) s"${p.substring(0, dot)}_c$cpus${p.substring(dot)}"
-      else s"${p}_c$cpus"
-    }
-    persist(cpuSuffixed(outPath), full)
-    persist(cpuSuffixed(watchPath), detail)
+    persist(cpuSuffixed(outPath, cpus), full)
+    persist(cpuSuffixed(watchPath, cpus), detail)
     // The harness that collects this output keeps only a bounded tail of
     // stdout; with ~80 queries the full line above outgrows that window and
     // its leading {"metric":... gets truncated away. Emit a compact,
@@ -302,7 +278,19 @@ object Bench {
       .map { case (k, v) => s"\"" + k + "\":" + f"$v%.3f" }
       .mkString("{", ",", "}")
     println(
-      s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"queries":$slowest,"watch":$watchJson,"sf":"$sfDir"}""")
+      s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"queries":$slowest,"watch":$watchJson,"sf":"$sfDir","failed":$failed}""")
     spark.stop()
+  }
+
+  /** `path` with `_c<cpus>` spliced before the file name's extension
+    * (`bench_results.json` → `bench_results_c4.json`), or appended when
+    * the last path segment has none — a dot in a directory name is not
+    * an extension (`out.d/results` → `out.d/results_c4`).
+    */
+  private[graft] def cpuSuffixed(path: String, cpus: Int): String = {
+    val dot = path.lastIndexOf('.')
+    if (dot > path.lastIndexOf('/') + 1)
+      s"${path.substring(0, dot)}_c$cpus${path.substring(dot)}"
+    else s"${path}_c$cpus"
   }
 }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Dump `.explain("formatted")` for named gate queries to files — the
@@ -18,14 +17,7 @@ object PlanDump {
     val Array(outDir, suffix, namesCsv) = args
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val names = namesCsv.split(",").map(_.trim).filter(_.nonEmpty).toSet
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     // Dump the PRE-landed plan for landed/landedSwept gates (VERDICT r20
     // #4): without this the eager landed() evaluation happens before the

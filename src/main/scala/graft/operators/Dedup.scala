@@ -963,11 +963,11 @@ object Dedup {
     * Scale: digests shuffle (never text); the df table and rank window
     * are digest-/doc-keyed aggregates; the candidate join runs on the
     * PREFIX table (≈ (1−t) of the digest volume, and rare-first keys
-    * mean near-singleton join groups); verification counts matching
-    * (pair, digest) rows against the cached digest table — the
-    * pair-bounded candidate side broadcasts, so digests never ship as
-    * per-pair arrays. The size filter
-    * (`pct·nₐ ≤ 100·n_b` both ways) prunes before dedup. Cache
+    * mean near-singleton join groups); verification ([[prefixVerify]])
+    * intersects per-doc sorted digest arrays over the candidate pairs —
+    * the pair set is small after prefix filtering, so the array bytes
+    * that ship through the two pair joins stay pair-bounded. The size
+    * filter (`pct·nₐ ≤ 100·n_b` both ways) prunes before dedup. Cache
     * lifecycle: the digest table this call builds stays persisted — the
     * result plan reads it three times (df, prefix, verify sets) — and
     * is owned by the caller's evaluation of the result, like
@@ -994,57 +994,31 @@ object Dedup {
     try f(result) finally cached.unpersist()
   }
 
-  /** Two interchangeable exact-verification strategies for the
-    * prefix-filter family — same answer, different physical shape:
-    *
-    *  - `verifyByCounts = false` (default): per-doc sorted digest ARRAY
-    *    aggregate, candidate pairs join both arrays, `array_intersect`
-    *    counts the overlap. One digest-scale shuffle (the groupBy);
-    *    array bytes ship through the pair joins. MEASURED FASTER at
-    *    sf0.1 on this host (IsoBench q139 2.9 vs 4.5 s) — the pair set
-    *    is small after prefix filtering, so the array traffic is noise
-    *    while the count strategy's second digest-scale shuffle is not.
-    *  - `verifyByCounts = true`: count matching (pair, digest) rows
-    *    against the cached digest table — no arrays anywhere, but the
-    *    (doc_b, shh) join re-shuffles the digest table. The shape that
-    *    wins when candidate pairs × doc size outgrows executor memory
-    *    (huge near-dup clusters), since no row ever carries a whole
-    *    document's digest set.
-    *
-    * Both are exact; ISO_r19 records the measurements behind the
-    * default.
+  /** Exact verification for the prefix-filter family: a per-doc sorted
+    * digest ARRAY aggregate (one digest-scale shuffle), both arrays
+    * joined onto each candidate pair, and `array_intersect` counts the
+    * overlap. Emits `(aCol, bCol, n_common, n_a, n_b)`. ISO_r19 measured
+    * this against a digest-count join (count matching (pair, digest)
+    * rows, a second digest-scale shuffle) at sf0.1: 1.84 vs 6.20 s.
     */
   private def prefixVerify(
       shAll: DataFrame,
       cand: DataFrame, // (doc_a, doc_b) — left < right or src/dst roles
       aCol: String,
-      bCol: String,
-      verifyByCounts: Boolean): DataFrame = {
-    if (verifyByCounts) {
-      val counts = shAll.groupBy(col("doc_id")).agg(count(lit(1)).as("n_sh"))
-      shAll.select(col("doc_id").as(aCol), col("shh"))
-        .join(cand, Seq(aCol))
-        .join(shAll.select(col("doc_id").as(bCol), col("shh")), Seq(bCol, "shh"))
-        .groupBy(col(aCol), col(bCol))
-        .agg(count(lit(1)).as("n_common"))
-        .join(counts.select(col("doc_id").as(aCol), col("n_sh").as("n_a")), Seq(aCol))
-        .join(counts.select(col("doc_id").as(bCol), col("n_sh").as("n_b")), Seq(bCol))
-    } else {
-      val sets = shAll.groupBy(col("doc_id"))
-        .agg(sort_array(collect_list(col("shh"))).as("set"), count(lit(1)).as("n_sh"))
-      cand
-        .join(sets.select(col("doc_id").as(aCol), col("set").as("set_a"), col("n_sh").as("n_a")), Seq(aCol))
-        .join(sets.select(col("doc_id").as(bCol), col("set").as("set_b"), col("n_sh").as("n_b")), Seq(bCol))
-        .withColumn("n_common", size(array_intersect(col("set_a"), col("set_b"))).cast("long"))
-        .select(col(aCol), col(bCol), col("n_common"), col("n_a"), col("n_b"))
-    }
+      bCol: String): DataFrame = {
+    val sets = shAll.groupBy(col("doc_id"))
+      .agg(sort_array(collect_list(col("shh"))).as("set"), count(lit(1)).as("n_sh"))
+    cand
+      .join(sets.select(col("doc_id").as(aCol), col("set").as("set_a"), col("n_sh").as("n_a")), Seq(aCol))
+      .join(sets.select(col("doc_id").as(bCol), col("set").as("set_b"), col("n_sh").as("n_b")), Seq(bCol))
+      .withColumn("n_common", size(array_intersect(col("set_a"), col("set_b"))).cast("long"))
+      .select(col(aCol), col(bCol), col("n_common"), col("n_a"), col("n_b"))
   }
 
   private[graft] def prefixFilterPairsPlan(
       docs: DataFrame,
       k: Int,
-      minJaccardPct: Int,
-      verifyByCounts: Boolean = false): (DataFrame, DataFrame) = {
+      minJaccardPct: Int): (DataFrame, DataFrame) = {
     require(minJaccardPct >= 1 && minJaccardPct <= 100,
       s"minJaccardPct=$minJaccardPct outside [1, 100]")
     val pct = minJaccardPct.toLong
@@ -1059,7 +1033,7 @@ object Dedup {
         col("pn_b") * pct <= col("pn_a") * 100L)
       .select(col("doc_a"), col("doc_b"))
       .distinct()
-    val verified = prefixVerify(shAll, cand, "doc_a", "doc_b", verifyByCounts)
+    val verified = prefixVerify(shAll, cand, "doc_a", "doc_b")
       .filter(lit(100L) * col("n_common") >= lit(pct) * (col("n_a") + col("n_b") - col("n_common")))
       .withColumn(
         "jaccard",
@@ -1084,12 +1058,12 @@ object Dedup {
     * Scale: the candidate join is (source-prefix × full digest table) —
     * digest-keyed, text never shuffles; the size filter
     * (`pct·n_src ≤ 100·n_dst`) prunes before dedup, and verification
-    * counts matching (pair, digest) rows against the cached digest
-    * table. Cache lifecycle:
-    * the digest table this call builds stays persisted — the result
-    * plan reads it four times (source prefix, candidate dst side, both
-    * verify sets) — and is owned by the caller's evaluation of the
-    * result; one-shot callers should use [[withContainmentPairs]],
+    * intersects per-doc sorted digest arrays over the candidate pairs
+    * ([[prefixVerify]]). Cache lifecycle: the digest table this call
+    * builds stays persisted — the result plan reads it four times
+    * (source prefix, candidate dst side, size counts, verify sets) — and
+    * is owned by the caller's evaluation of the result; one-shot
+    * callers should use [[withContainmentPairs]],
     * which unpersists it after the action.
     */
   def containmentPairs(
@@ -1115,8 +1089,7 @@ object Dedup {
   private[graft] def containmentPairsPlan(
       docs: DataFrame,
       k: Int,
-      minContainmentPct: Int,
-      verifyByCounts: Boolean = false): (DataFrame, DataFrame) = {
+      minContainmentPct: Int): (DataFrame, DataFrame) = {
     require(minContainmentPct >= 1 && minContainmentPct <= 100,
       s"minContainmentPct=$minContainmentPct outside [1, 100]")
     val pct = minContainmentPct.toLong
@@ -1136,10 +1109,10 @@ object Dedup {
       .filter(col("pn_src") * pct <= col("n_dst") * 100L)
       .select(col("src_doc"), col("dst_doc"))
       .distinct()
-    // Same dual-strategy verification as [[prefixFilterPairs]] (see
+    // Same array-intersect verification as [[prefixFilterPairs]] (see
     // [[prefixVerify]]): every candidate shares >= 1 prefix digest, so
-    // neither strategy loses a pair.
-    val verified = prefixVerify(shAll, cand, "src_doc", "dst_doc", verifyByCounts)
+    // no pair is lost.
+    val verified = prefixVerify(shAll, cand, "src_doc", "dst_doc")
       .withColumnRenamed("n_a", "n_src")
       .withColumnRenamed("n_b", "n_dst")
       .filter(lit(100L) * col("n_common") >= lit(pct) * col("n_src"))

@@ -35,7 +35,8 @@ object Graphs {
     */
   private[graft] def withRoundWidth[T](
       df: DataFrame, roundRows: Long)(body: => T): T = {
-    // Measurement-only kill switch for A/Bs (IsoBench control runs).
+    // Measurement-only kill switch for A/Bs: `off` runs every loop at
+    // session width (the control arm).
     if (sys.env.get("SPARK_GRAFT_ROUND_WIDTH").contains("off")) return body
     val spark = df.sparkSession
     val prev = spark.conf.get("spark.sql.shuffle.partitions")

@@ -26,8 +26,16 @@ object Tables {
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
     spark.read.parquet(s"$dir/$name.parquet")
 
+  /** Session conf the ns-long `ts` path needs; every `graft.GraftSession`
+    * sets it. The loader checks it instead of setting it, so reading a
+    * table never changes session state.
+    */
+  private[graft] val NanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
+
   def events(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    require(spark.conf.get(NanosAsLong).toBoolean,
+      s"events: the session must set $NanosAsLong=true (graft.GraftSession does), " +
+        "or TIMESTAMP(NANOS) parquet fails to read")
     val raw = table(spark, dir, "events")
     // Only ts is normalized: the loader TRANSFORMS that column, so its
     // handling must be vintage-adaptive. The other five columns are

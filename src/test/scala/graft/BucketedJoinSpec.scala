@@ -1,33 +1,19 @@
 package graft
 
-import java.nio.file.Files
-
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.Sinks
 
 /** Pins the bucketing scale pattern: two tables bucketed on the join key
   * join WITHOUT any Exchange in the physical plan — at 100 TB this removes
   * the dominant shuffle of the daily impressions×actions join.
-  *
-  * Own SparkSession (not SparkSpec's): bucketed tables need a catalog with
-  * a throwaway warehouse dir.
   */
-class BucketedJoinSpec extends AnyFunSuite {
+class BucketedJoinSpec extends SparkSpec {
 
   test("bucketed-by-key tables join with zero exchanges") {
-    val wh = Files.createTempDirectory("graft_wh").toString
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .appName("BucketedJoinSpec")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir", wh)
-      .config("spark.sql.autoBroadcastJoinThreshold", -1) // force non-broadcast
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "-1") // force non-broadcast
     try {
       import spark.implicits._
       val actions = (1 to 1000)
@@ -52,7 +38,10 @@ class BucketedJoinSpec extends AnyFunSuite {
     } finally {
       spark.sql("DROP TABLE IF EXISTS acts_b")
       spark.sql("DROP TABLE IF EXISTS imps_b")
-      spark.stop()
+      prev match {
+        case Some(v) => spark.conf.set(key, v)
+        case None => spark.conf.unset(key)
+      }
     }
   }
 }

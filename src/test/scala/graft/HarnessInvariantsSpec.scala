@@ -3,6 +3,8 @@ package graft
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins the documentation to the code so the query count cannot drift
@@ -100,6 +102,30 @@ class HarnessInvariantsSpec extends AnyFunSuite {
       assert(cited.forall(_ == newest.get),
         s"$doc cites ${cited.distinct.mkString(", ")} but the newest tracked artifact is ${newest.get}")
     }
+  }
+
+  test("only GraftSession builds a SparkSession (one way to build a session)") {
+    // Every entrypoint and spec must run on GraftSession's conf, so a plan
+    // dump, a probe or a spec describes the session the bench times. The
+    // needle is split so this file does not match itself.
+    val needle = "SparkSession" + ".builder"
+    val offenders = {
+      val files = Files.walk(Paths.get("src"))
+      try files.iterator().asScala
+        .filter(p => p.toString.endsWith(".scala") &&
+          p.getFileName.toString != "GraftSession.scala")
+        .filter(p => read(p.toString).contains(needle))
+        .map(_.toString).toSeq.sorted
+      finally files.close()
+    }
+    assert(offenders.isEmpty, s"build the session with graft.GraftSession instead: $offenders")
+  }
+
+  test("Bench.cpuSuffixed splices the core count before the file extension only") {
+    assert(Bench.cpuSuffixed("bench_results.json", 4) === "bench_results_c4.json")
+    assert(Bench.cpuSuffixed("out.d/results", 4) === "out.d/results_c4")
+    assert(Bench.cpuSuffixed("./results", 4) === "./results_c4")
+    assert(Bench.cpuSuffixed("a/b.c/d.json", 32) === "a/b.c/d_c32.json")
   }
 
   test("query ids are dense q01..qNN with no duplicates or gaps") {

@@ -9,13 +9,13 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .appName(getClass.getSimpleName)
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = {
+    val s = GraftSession(2)
+    // Wider than the cores: PlanShapeSpec pins plans of a session whose
+    // shuffle width exceeds its parallelism.
+    s.conf.set("spark.sql.shuffle.partitions", 4L)
+    s
+  }
 
   override def afterAll(): Unit = {
     // Session is shared across suites in one JVM; don't stop it here.

@@ -102,6 +102,21 @@ class TablesSpec extends SparkSpec {
     assert(loaded.schema("value").dataType === org.apache.spark.sql.types.FloatType)
   }
 
+  test("events loader requires nanosAsLong instead of setting it on the session") {
+    // The loader must not write session-global conf: a session without
+    // the conf gets a clear error naming it, and stays unset afterwards.
+    val dir = Files.createTempDirectory("tables-spec-conf").toFile
+    dir.deleteOnExit()
+    spark.range(1).select(col("id").as("event_id"), lit(1735689600000000000L).as("ts"))
+      .write.mode("overwrite").parquet(s"$dir/events.parquet")
+    val cloned = spark.newSession()
+    cloned.conf.unset(Tables.NanosAsLong)
+    val ex = intercept[IllegalArgumentException](Tables.events(cloned, dir.toString))
+    assert(ex.getMessage.contains(Tables.NanosAsLong))
+    assert(cloned.conf.get(Tables.NanosAsLong) === "false")
+    assert(spark.conf.get(Tables.NanosAsLong) === "true")
+  }
+
   test("events loader reads the driver-generated sf0.001 table (current vintage)") {
     // Deliberately vintage-agnostic: only the POST-dispatch contract is
     // asserted (Tables.events always yields TimestampType ts), never which
