@@ -14,6 +14,8 @@ object Verify {
     new java.io.File(outDir).mkdirs()
     val failed = SparkEntry.queries.toSeq.filter { case (name, _) => selected(name) }
       .flatMap { case (name, fn) =>
+        // Tags the Spark log that follows (warnings name no query).
+        System.err.println(s"[verify] start $name")
         try {
           fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
           None

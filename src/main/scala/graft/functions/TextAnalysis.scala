@@ -1630,6 +1630,12 @@ object TextAnalysis {
     * curve. The doc-rank window is doc-count-, never token-, sized; a
     * corpus where even that overflows one task swaps in the q102
     * literal-boundary prefix-count machinery.
+    *
+    * Cache contract: the per-document token counts (one row per
+    * document) stay persisted on return, because the returned plan
+    * reads them three times. Like [[graft.operators.Graphs.pageRank]],
+    * the returned frame owns that one remaining cache and the caller
+    * releases it (the q199 gate does, through `landedSwept`).
     */
   def vocabularyGrowth(docs: DataFrame, buckets: Int = 10): DataFrame = {
     require(buckets >= 2 && buckets <= 1000, s"buckets=$buckets out of range [2, 1000]")

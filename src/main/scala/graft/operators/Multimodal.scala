@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BinaryType, StructField, StructType}
 
 /** Multimodal-column plumbing: opaque `binary` payloads with typed
   * metadata, decoded/feature-extracted in distributed batches.
@@ -55,6 +56,34 @@ object Multimodal {
         length(encode(col("text"), "UTF-8")).cast("long").as("n_bytes"),
         ceil(length(encode(col("text"), "UTF-8")) / lit(FrameBytes.toDouble))
           .cast("int").as("n_frames")).as("meta"))
+
+  /** The one synthesis pass behind every byte-built payload builder:
+    * each row's UTF-8 text bytes go through `kernel` — a codec's own
+    * byte encoder over a raster cut from those bytes — in one
+    * partition-local pass, no shuffle. `meta` carries `format`, the
+    * payload's byte length and `nFrames` (evaluated over the input
+    * row). Null text gives a null payload and a null `n_bytes`; the
+    * kernel never sees it. `doc_id` keeps the input's nullability; the
+    * kernel's `Long` is the doc id, for error messages.
+    */
+  private def synthesize(docs: DataFrame, format: String, nFrames: Column = lit(1))(
+      kernel: (Long, Array[Byte]) => Array[Byte]): DataFrame = {
+    val in = docs.select(
+      col("doc_id"), encode(col("text"), "UTF-8").as("bytes"), nFrames.as("n_frames"))
+    val out = StructType(Seq(
+      in.schema("doc_id"), StructField("payload", BinaryType), in.schema("n_frames")))
+    in.mapPartitions(_.map { r =>
+        val b = r.getAs[Array[Byte]](1)
+        Row(r.get(0), if (b == null) null else kernel(r.getAs[Long](0), b), r.get(2))
+      })(Encoders.row(out))
+      .select(
+        col("doc_id"),
+        col("payload"),
+        struct(
+          lit(format).as("format"),
+          length(col("payload")).cast("long").as("n_bytes"),
+          col("n_frames")).as("meta"))
+  }
 
   /** STUB (not a decoder): 16-bin byte histogram normalized to [0,1] — a
     * byte-DISTRIBUTION feature over the undecoded payload. Real media
@@ -571,26 +600,40 @@ object Multimodal {
     bb.array()
   }
 
-  /** The 16-bit mono PCM writer [[Codec.Wav]] re-encodes with. */
-  private def encodeWav16(out: Array[Int], rate: Int): Array[Byte] = {
-    val dataLen = out.length * 2
+  /** The mono RIFF/WAVE writer: canonical 44-byte header (fmt + data
+    * chunks) for `n` samples of `bits` bits under format tag `fmtTag`
+    * (1 = PCM, 7 = G.711 μ-law), then `data` puts the samples. An odd
+    * data chunk carries one trailing pad byte (RIFF word alignment:
+    * outside the chunk's size field, inside the RIFF size) — a strict
+    * consumer walking past `data` would otherwise misparse by one byte.
+    */
+  private def encodeWav(fmtTag: Int, bits: Int, rate: Int, n: Int)(
+      data: java.nio.ByteBuffer => Unit): Array[Byte] = {
+    val dataLen = n * (bits / 8)
+    val pad = dataLen & 1
     val bb = java.nio.ByteBuffer
-      .allocate(44 + dataLen)
+      .allocate(44 + dataLen + pad)
       .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    bb.put("RIFF".getBytes("US-ASCII")).putInt(36 + dataLen)
+    bb.put("RIFF".getBytes("US-ASCII")).putInt(36 + dataLen + pad)
       .put("WAVE".getBytes("US-ASCII"))
       .put("fmt ".getBytes("US-ASCII")).putInt(16)
-      .putShort(1.toShort)            // PCM
+      .putShort(fmtTag.toShort)
       .putShort(1.toShort)            // mono
       .putInt(rate)
-      .putInt(rate * 2)               // byte rate (2 bytes/sample)
-      .putShort(2.toShort)            // block align
-      .putShort(16.toShort)           // bits per sample
+      .putInt(rate * (bits / 8))      // byte rate
+      .putShort((bits / 8).toShort)   // block align
+      .putShort(bits.toShort)
       .put("data".getBytes("US-ASCII")).putInt(dataLen)
-    var i = 0
-    while (i < out.length) { bb.putShort(out(i).toShort); i += 1 }
+    data(bb)
     bb.array()
   }
+
+  /** The 16-bit mono PCM writer [[Codec.Wav]] re-encodes with. */
+  private def encodeWav16(out: Array[Int], rate: Int): Array[Byte] =
+    encodeWav(1, 16, rate, out.length) { bb =>
+      var i = 0
+      while (i < out.length) { bb.putShort(out(i).toShort); i += 1 }
+    }
 
   /** A payload format's codec as [[resize]] applies it: decode, one
     * [[Kernel]], re-encode into the SAME format, so the output composes
@@ -1004,110 +1047,44 @@ object Multimodal {
   // --- WAV/PCM: the audio codec family ---------------------------------
 
   /** Canonical [[toWav]] format constants: 8-bit unsigned mono PCM at
-    * 8 kHz — one text byte per sample, so the expression-only builder
-    * stays exact and the oracle can reproduce sample moments in SQL.
+    * 8 kHz — one text byte per sample, so the oracle can reproduce
+    * sample moments in SQL.
     */
   val WavSampleRate = 8000
 
-  /** Little-endian integer field as a hex string, `bytes` wide — the
-    * RIFF builder's workhorse: `unhex` of the concatenated fields yields
-    * the binary header without any UDF.
-    */
-  private def leHex(c: Column, bytes: Int): Column =
-    concat((0 until bytes).map(i =>
-      lpad(lower(hex(shiftright(c.cast("long"), 8 * i) % 256)), 2, "0")): _*)
-
-  private def asciiHex(s: String): String =
-    s.getBytes(java.nio.charset.StandardCharsets.US_ASCII).map("%02x".format(_)).mkString
-
   /** Wrap each document as a REAL RIFF/WAVE file — canonical 44-byte
     * PCM header (fmt + data chunks) followed by the text bytes as 8-bit
-    * unsigned mono samples at [[WavSampleRate]] Hz. Codegen'd
-    * expressions only: the little-endian size/format fields are built as
-    * hex strings and `unhex`ed into binary — never a UDF.
+    * unsigned mono samples at [[WavSampleRate]] Hz, written by the WAV
+    * codec's own encoder ([[encodeWav]]) in one [[synthesize]] pass.
+    * Odd data chunks carry the RIFF pad byte.
     */
-  def toWav(docs: DataFrame): DataFrame = {
-    val bytes = encode(col("text"), "UTF-8")
-    val n = length(bytes).cast("long")
-    // RIFF word alignment: an odd-sized chunk carries one trailing pad
-    // byte (outside the chunk's size field, inside the RIFF size) — a
-    // strict consumer walking past `data` would otherwise misparse by
-    // one byte.
-    val pad = n % 2L
-    val header = unhex(concat(
-      lit(asciiHex("RIFF")), leHex(n + 36L + pad, 4),
-      lit(asciiHex("WAVE")),
-      lit(asciiHex("fmt ")), leHex(lit(16L), 4),
-      leHex(lit(1L), 2),                   // audio format: PCM
-      leHex(lit(1L), 2),                   // channels: mono
-      leHex(lit(WavSampleRate.toLong), 4), // sample rate
-      leHex(lit(WavSampleRate.toLong), 4), // byte rate (1 byte/sample)
-      leHex(lit(1L), 2),                   // block align
-      leHex(lit(8L), 2),                   // bits per sample
-      lit(asciiHex("data")), leHex(n, 4)))
-    docs.select(
-      col("doc_id"),
-      concat(header, bytes,
-        when(pad === 1L, unhex(lit("00"))).otherwise(unhex(lit("")))).as("payload"),
-      struct(
-        lit("audio/wav").as("format"),
-        (n + 44L + pad).as("n_bytes"),
-        lit(1).as("n_frames")).as("meta"))
-  }
+  def toWav(docs: DataFrame): DataFrame =
+    synthesize(docs, "audio/wav") { (_, b) =>
+      encodeWav(1, 8, WavSampleRate, b.length)(_.put(b))
+    }
 
   /** 16-bit variant of [[toWav]]: each UTF-8 text byte `b` becomes ONE
     * SIGNED 16-bit little-endian PCM sample `(b - 128) * 256` (as a
     * signed byte-centered value — always negative for ASCII input, so
     * the decoder's signed 16-bit path ([[WavDecoder]]'s
     * `le16(...).toShort`) is genuinely exercised, not just the unsigned
-    * 8-bit one). The sample's LE bytes are `(0x00, (b + 0x80) & 0xff)`:
-    * low byte constant zero, high byte the original byte with the top
-    * bit FLIPPED — which on the hex string is the first nibble bumped by
-    * 8 mod 16, a full-wrap `translate` over `0-f → 8-f0-7`, total over
-    * every byte value (non-ASCII UTF-8 bytes ≥ 0x80 center to positive
-    * samples rather than silently mis-encoding). Built entirely from
-    * codegen'd string/binary expressions (hex → split into pairs →
-    * per-pair rewrite → unhex), never a UDF. The data chunk is `2n`
-    * bytes — always even, so no RIFF pad byte exists on this path.
+    * 8-bit one). The sample's LE bytes are `(0x00, (b + 0x80) & 0xff)`,
+    * total over every byte value (non-ASCII UTF-8 bytes ≥ 0x80 center
+    * to positive samples rather than silently mis-encoding). Synthesis
+    * is text bytes → [[encodeWav16]], the encoder [[Codec.Wav]]
+    * re-encodes with. The data chunk is `2n` bytes — always even, so no
+    * RIFF pad byte exists on this path.
     */
-  def toWav16(docs: DataFrame): DataFrame = {
-    val bytes = encode(col("text"), "UTF-8")
-    val n = length(bytes).cast("long")
-    val h = lower(hex(bytes))
-    // \G-anchored lookbehind splits the hex string into 2-char pairs;
-    // a trailing empty element (if the regex engine emits one) is dropped.
-    val pairs = filter(split(h, "(?<=\\G..)"), p => length(p) === 2)
-    val dataHex = array_join(
-      transform(pairs, p => concat(
-        lit("00"),
-        translate(substring(p, 1, 1), "0123456789abcdef", "89abcdef01234567"),
-        substring(p, 2, 1))), "")
-    val dataLen = n * 2L
-    val header = unhex(concat(
-      lit(asciiHex("RIFF")), leHex(dataLen + 36L, 4),
-      lit(asciiHex("WAVE")),
-      lit(asciiHex("fmt ")), leHex(lit(16L), 4),
-      leHex(lit(1L), 2),                       // audio format: PCM
-      leHex(lit(1L), 2),                       // channels: mono
-      leHex(lit(WavSampleRate.toLong), 4),     // sample rate
-      leHex(lit(WavSampleRate * 2L), 4),       // byte rate (2 bytes/sample)
-      leHex(lit(2L), 2),                       // block align
-      leHex(lit(16L), 2),                      // bits per sample
-      lit(asciiHex("data")), leHex(dataLen, 4)))
-    docs.select(
-      col("doc_id"),
-      concat(header, unhex(dataHex)).as("payload"),
-      struct(
-        lit("audio/wav").as("format"),
-        (dataLen + 44L).as("n_bytes"),
-        lit(1).as("n_frames")).as("meta"))
-  }
+  def toWav16(docs: DataFrame): DataFrame =
+    synthesize(docs, "audio/wav") { (_, b) =>
+      encodeWav16(Array.tabulate(b.length)(i => ((b(i) & 0xff) - 128) * 256), WavSampleRate)
+    }
 
   /** G.711 μ-law compress one signed 16-bit linear sample to its 8-bit
     * code (CCITT encode: clip at 32635, +132 bias, 3-bit exponent from
     * the magnitude's bit length, 4-bit mantissa, ones-complement). Pure
     * and total — used at PLAN BUILD time to compile the 256-entry
-    * byte→code table [[toWavMuLaw]] embeds as a literal, and by tests.
+    * byte→code table [[toWavMuLaw]] applies per byte, and by tests.
     */
   private[graft] def muLawEncodeSample(s: Int): Int = {
     val clip = 32635
@@ -1136,43 +1113,17 @@ object Multimodal {
     * [[toWav16]] mapping) μ-law-compressed to ONE byte, 2:1 on the wire
     * vs the 16-bit linear file carrying the same signal. The 256-entry
     * byte→code table is compiled at plan build from [[muLawEncodeSample]]
-    * (a literal array — the projectionSigns convention) and applied per
-    * hex pair with codegen'd expressions (`conv` + `element_at` +
-    * `unhex`) — never a UDF. Odd data chunks carry the RIFF pad byte,
-    * like [[toWav]].
+    * and applied per byte inside [[encodeWav]]. Odd data chunks carry
+    * the RIFF pad byte, like [[toWav]].
     */
   def toWavMuLaw(docs: DataFrame): DataFrame = {
-    val encLut: Seq[String] =
-      (0 until 256).map(b => f"${muLawEncodeSample((b - 128) * 256)}%02x")
-    val bytes = encode(col("text"), "UTF-8")
-    val n = length(bytes).cast("long")
-    val pad = n % 2L
-    val h = lower(hex(bytes))
-    val pairs = filter(split(h, "(?<=\\G..)"), p => length(p) === 2)
-    val dataHex = array_join(
-      transform(
-        pairs,
-        p => element_at(typedLit(encLut), conv(p, 16, 10).cast("int") + 1)),
-      "")
-    val header = unhex(concat(
-      lit(asciiHex("RIFF")), leHex(n + 36L + pad, 4),
-      lit(asciiHex("WAVE")),
-      lit(asciiHex("fmt ")), leHex(lit(16L), 4),
-      leHex(lit(7L), 2),                   // audio format: G.711 mu-law
-      leHex(lit(1L), 2),                   // channels: mono
-      leHex(lit(WavSampleRate.toLong), 4), // sample rate
-      leHex(lit(WavSampleRate.toLong), 4), // byte rate (1 byte/sample)
-      leHex(lit(1L), 2),                   // block align
-      leHex(lit(8L), 2),                   // bits per sample
-      lit(asciiHex("data")), leHex(n, 4)))
-    docs.select(
-      col("doc_id"),
-      concat(header, unhex(dataHex),
-        when(pad === 1L, unhex(lit("00"))).otherwise(unhex(lit("")))).as("payload"),
-      struct(
-        lit("audio/basic").as("format"),
-        (n + 44L + pad).as("n_bytes"),
-        lit(1).as("n_frames")).as("meta"))
+    val lut = Array.tabulate(256)(b => muLawEncodeSample((b - 128) * 256).toByte)
+    synthesize(docs, "audio/basic") { (_, b) =>
+      encodeWav(7, 8, WavSampleRate, b.length) { bb =>
+        var i = 0
+        while (i < b.length) { bb.put(lut(b(i) & 0xff)); i += 1 }
+      }
+    }
   }
 
   /** Wrap each document as a REAL 24-bit BI_RGB Windows BMP — the third
@@ -1180,63 +1131,17 @@ object Multimodal {
     * wire format exercises TWO quirks the others don't: rows are stored
     * BOTTOM-UP (positive height) and padded to 4-byte boundaries. The
     * image is 2 rows × ⌊bytes/6⌋ pixels; consecutive text byte TRIPLES
-    * are (R, G, B) in reading order (top row first), and the builder
-    * writes them the way BMP actually stores them — bottom row first,
-    * channels reordered to B, G, R, stride-padded. Codegen'd
-    * expressions only (hex-pair `transform` + `unhex`), never a UDF;
-    * trailing bytes that don't fill the 2×w raster are dropped.
+    * are (R, G, B) in reading order (top row first). Synthesis is text
+    * bytes → [[encodeBmp24]], the encoder [[Codec.Bmp]] re-encodes
+    * with, so the bottom-up row order, the B, G, R swizzle and the
+    * stride padding live in the codec alone; trailing bytes that don't
+    * fill the 2×w raster are dropped.
     */
-  def toBmp(docs: DataFrame): DataFrame = {
-    // The hex-pair array and width are materialized as REAL columns
-    // first: a lambda that captures the unevaluated split(...) Column
-    // would re-run the whole split at every element access site —
-    // O(text²) per document (measured: 161 s for this query's sf0.1
-    // sweep slot vs ~1 s with the attribute reference).
-    val prepared = docs.select(
-      col("doc_id"),
-      encode(col("text"), "UTF-8").as("_bytes"))
-      .withColumn(
-        "_pairs",
-        filter(split(lower(hex(col("_bytes"))), "(?<=\\G..)"), p => length(p) === 2))
-      .withColumn("_w", floor(length(col("_bytes")).cast("long") / 6L).cast("long"))
-    val w = col("_w")
-    val rowBytes = w * 3L
-    val pad = pmod(lit(4L) - pmod(rowBytes, lit(4L)), lit(4L))
-    val stride = rowBytes + pad
-    val imageSize = stride * 2L
-    // Row r (0 = top) as on-wire hex: each pixel's 3 byte-pairs sliced
-    // out and reversed — R,G,B becomes B,G,R in O(1) per pixel.
-    def rowHex(r: Column): Column =
-      when(w > 0L, array_join(
-        transform(
-          sequence(lit(0L), w - 1L),
-          i => array_join(
-            reverse(slice(col("_pairs"), ((r * w + i) * 3L + 1L).cast("int"), lit(3))),
-            "")), "")).otherwise(lit(""))
-    val padHex = repeat(lit("00"), pad.cast("int"))
-    val header = concat(
-      lit(asciiHex("BM")), leHex(imageSize + 54L, 4),
-      lit("00000000"),                 // reserved
-      leHex(lit(54L), 4),              // pixel-array offset
-      leHex(lit(40L), 4),              // BITMAPINFOHEADER size
-      leHex(w, 4),                     // width
-      leHex(lit(2L), 4),               // height (positive = bottom-up)
-      leHex(lit(1L), 2),               // planes
-      leHex(lit(24L), 2),              // bits per pixel
-      leHex(lit(0L), 4),               // compression: BI_RGB
-      leHex(imageSize, 4),
-      leHex(lit(2835L), 4), leHex(lit(2835L), 4), // 72 DPI in px/m
-      leHex(lit(0L), 4), leHex(lit(0L), 4))       // palette sizes
-    prepared.select(
-      col("doc_id"),
-      // Bottom-up: row 1 (the image's BOTTOM row) is stored first.
-      unhex(concat(header, rowHex(lit(1L)), padHex, rowHex(lit(0L)), padHex))
-        .as("payload"),
-      struct(
-        lit("image/bmp").as("format"),
-        (imageSize + 54L).as("n_bytes"),
-        lit(1).as("n_frames")).as("meta"))
-  }
+  def toBmp(docs: DataFrame): DataFrame =
+    synthesize(docs, "image/bmp") { (_, b) =>
+      val w = b.length / 6
+      encodeBmp24(Array.tabulate(6 * w)(b(_) & 0xff), w, 2)
+    }
 
   case class BmpFeatures(
       doc_id: Long, width: Int, height: Int, bit_count: Int, n_px: Long,
@@ -1527,54 +1432,17 @@ object Multimodal {
     * word-alignment pads odd chunks). This is the structural minimum
     * [[AviDecoder]] validates; production files add `strl`/`idx1`
     * chunks, which the walker SKIPS by design (unknown chunks are the
-    * normal case in RIFF). Codegen'd string/binary expressions only —
-    * hex fields concatenated and `unhex`ed, frames cut by the anchored
-    * lookbehind split — never a UDF.
+    * normal case in RIFF). Synthesis is text bytes → [[encodeAvi]], the
+    * encoder [[Codec.Avi]] re-encodes with (25 fps, a `frameBytes`×1
+    * raster per frame); `meta.n_frames` is the frame count.
     */
   def toAvi(docs: DataFrame, frameBytes: Int = 16): DataFrame = {
     require(frameBytes >= 2 && frameBytes % 2 == 0,
       s"frameBytes=$frameBytes must be positive and even (RIFF word alignment)")
-    val bytes = encode(col("text"), "UTF-8")
-    val d = length(bytes).cast("long")
-    val nFrames = ((d + frameBytes - 1) / frameBytes).cast("long")
-    // Only the ragged last frame can be odd-sized (frameBytes is even).
-    val pad = when(pmod(pmod(d, lit(frameBytes.toLong)), lit(2L)) === 1L, 1L).otherwise(0L)
-    val moviSize = lit(4L) + lit(8L) * nFrames + d + pad
-    val riffSize = lit(4L) + lit(8L + 68L) + lit(8L) + moviSize
-    val avih = concat(
-      leHex(lit(40000L), 4),       // µs per frame (25 fps)
-      leHex(lit(0L), 4),           // max bytes/sec
-      leHex(lit(0L), 4),           // padding granularity
-      leHex(lit(0L), 4),           // flags
-      leHex(nFrames, 4),           // total frames
-      leHex(lit(0L), 4),           // initial frames
-      leHex(lit(1L), 4),           // streams
-      leHex(lit(0L), 4),           // suggested buffer
-      leHex(lit(frameBytes.toLong), 4), // width
-      leHex(lit(1L), 4),           // height
-      leHex(lit(0L), 4), leHex(lit(0L), 4), leHex(lit(0L), 4), leHex(lit(0L), 4))
-    val hdrl = concat(
-      lit(asciiHex("LIST")), leHex(lit(68L), 4), lit(asciiHex("hdrl")),
-      lit(asciiHex("avih")), leHex(lit(56L), 4), avih)
-    val h = lower(hex(bytes))
-    val pieces = filter(split(h, s"(?<=\\G.{${frameBytes * 2}})"), p => length(p) > 0)
-    val framesHex = array_join(
-      transform(pieces, p => concat(
-        lit(asciiHex("00db")),
-        leHex((length(p) / 2).cast("long"), 4),
-        p,
-        when(pmod(length(p), lit(4)) === 2, lit("00")).otherwise(lit("")))), "")
-    docs.select(
-      col("doc_id"),
-      unhex(concat(
-        lit(asciiHex("RIFF")), leHex(riffSize, 4), lit(asciiHex("AVI ")),
-        hdrl,
-        lit(asciiHex("LIST")), leHex(moviSize, 4), lit(asciiHex("movi")),
-        framesHex)).as("payload"),
-      struct(
-        lit("video/avi").as("format"),
-        (riffSize + 8L).as("n_bytes"),
-        nFrames.cast("int").as("n_frames")).as("meta"))
+    val n = length(encode(col("text"), "UTF-8"))
+    synthesize(docs, "video/avi", ((n + (frameBytes - 1)) / frameBytes).cast("int")) { (_, b) =>
+      encodeAvi(AviHeader(40000L, frameBytes.toLong, 1L), b.grouped(frameBytes).toSeq)
+    }
   }
 
   /** RIFF/AVI container walker — the video twin of [[WavDecoder]]:
@@ -1717,10 +1585,8 @@ object Multimodal {
   }
 
   /** Serialize frames into the canonical minimal RIFF/AVI layout
-    * [[toAvi]] builds and [[AviDecoder]] validates — the JVM-side
-    * re-encode half of [[Codec.Avi]] (the builder itself stays a
-    * codegen'd expression; transforms already hold decoded frames in
-    * the JVM, so they re-encode there).
+    * [[AviDecoder]] validates — the encode half of [[Codec.Avi]], and
+    * the encoder [[toAvi]] synthesizes its payloads with.
     */
   private def encodeAvi(hdr: AviHeader, frames: Seq[Array[Byte]]): Array[Byte] = {
     val ascii = java.nio.charset.StandardCharsets.US_ASCII
@@ -1941,10 +1807,9 @@ object Multimodal {
     * the q137 layout) rides an RFC-1950 zlib stream inside IDAT, rows
     * carry real scanline filters (row 0 None, row 1 Sub — so the decoder
     * must actually UN-filter, not just inflate), and every chunk carries
-    * its real CRC-32. Built with `java.util.zip.Deflater` in
-    * `mapPartitions` — compression is inherently imperative (the one
-    * place the family's codegen-expression rule yields; payloads still
-    * never leave their partition).
+    * its real CRC-32. Synthesis is text bytes → [[PngCodec.encode]]
+    * (`java.util.zip.Deflater`) in one [[synthesize]] pass; payloads
+    * never leave their partition.
     *
     * Determinism note: the PIXELS round-trip bit-exactly whatever the
     * deflate encoder does, so every gated feature is independent of the
@@ -1952,22 +1817,8 @@ object Multimodal {
     * engine-side assertions only and is deliberately absent from the
     * oracle-gated q156 projection.
     */
-  def toPng(docs: DataFrame): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs
-      .select(col("doc_id"), encode(col("text"), "UTF-8").as("bytes"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions(_.map { case (id, bytes) => (id, PngCodec.encode(bytes)) })
-      .toDF("doc_id", "payload")
-      .select(
-        col("doc_id"),
-        col("payload"),
-        struct(
-          lit("image/png").as("format"),
-          length(col("payload")).cast("long").as("n_bytes"),
-          lit(1).as("n_frames")).as("meta"))
-  }
+  def toPng(docs: DataFrame): DataFrame =
+    synthesize(docs, "image/png")((_, b) => PngCodec.encode(b))
 
   case class PngFeatures(
       doc_id: Long, width: Int, height: Int, bit_depth: Int, color_type: Int,
@@ -2157,22 +2008,8 @@ object Multimodal {
     * the same trick `toPng` plays with filter choice). Requires ≥ 64
     * chars; callers filter.
     */
-  def toJpeg(docs: DataFrame): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs
-      .select(col("doc_id"), encode(col("text"), "UTF-8").as("bytes"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions(_.map { case (id, bytes) => (id, JpegCodec.encode(bytes)) })
-      .toDF("doc_id", "payload")
-      .select(
-        col("doc_id"),
-        col("payload"),
-        struct(
-          lit("image/jpeg").as("format"),
-          length(col("payload")).cast("long").as("n_bytes"),
-          lit(1).as("n_frames")).as("meta"))
-  }
+  def toJpeg(docs: DataFrame): DataFrame =
+    synthesize(docs, "image/jpeg")((_, b) => JpegCodec.encode(b))
 
   case class JpegFeatures(
       doc_id: Long, width: Int, height: Int, n_blocks: Long,
@@ -2218,49 +2055,35 @@ object Multimodal {
     * replay in SQL through the exact-integer forward transform (the
     * [[toJpeg]] trick in color). Requires ≥ 3 chars; callers filter.
     */
-  def toJpegColor(docs: DataFrame): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs
-      .select(col("doc_id"), encode(col("text"), "UTF-8").as("bytes"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions(_.map { case (id, bytes) =>
-        val nm = bytes.length / 3
-        require(nm >= 1, s"doc $id too short for a color MCU: ${bytes.length} bytes")
-        // SOF0 carries width as 16 bits (16·nm ≤ 65535) — reject at
-        // encode time rather than wrapping into a corrupt payload.
-        require(nm <= 4095, s"doc $id too large for one MCU row: $nm MCUs > 4095")
-        val w = 16 * nm
-        val h = 16
-        val rgb = new Array[Int](3 * w * h)
-        var m = 0
-        while (m < nm) {
-          val r = bytes(3 * m) & 0xff
-          val g = bytes(3 * m + 1) & 0xff
-          val b = bytes(3 * m + 2) & 0xff
-          var yy = 0
-          while (yy < h) {
-            var xx = 0
-            while (xx < 16) {
-              val i = 3 * (yy * w + 16 * m + xx)
-              rgb(i) = r; rgb(i + 1) = g; rgb(i + 2) = b
-              xx += 1
-            }
-            yy += 1
+  def toJpegColor(docs: DataFrame): DataFrame =
+    synthesize(docs, "image/jpeg") { (id, bytes) =>
+      val nm = bytes.length / 3
+      require(nm >= 1, s"doc $id too short for a color MCU: ${bytes.length} bytes")
+      // SOF0 carries width as 16 bits (16·nm ≤ 65535) — reject at
+      // encode time rather than wrapping into a corrupt payload.
+      require(nm <= 4095, s"doc $id too large for one MCU row: $nm MCUs > 4095")
+      val w = 16 * nm
+      val h = 16
+      val rgb = new Array[Int](3 * w * h)
+      var m = 0
+      while (m < nm) {
+        val r = bytes(3 * m) & 0xff
+        val g = bytes(3 * m + 1) & 0xff
+        val b = bytes(3 * m + 2) & 0xff
+        var yy = 0
+        while (yy < h) {
+          var xx = 0
+          while (xx < 16) {
+            val i = 3 * (yy * w + 16 * m + xx)
+            rgb(i) = r; rgb(i + 1) = g; rgb(i + 2) = b
+            xx += 1
           }
-          m += 1
+          yy += 1
         }
-        (id, JpegCodec.encodeColor(w, h, rgb))
-      })
-      .toDF("doc_id", "payload")
-      .select(
-        col("doc_id"),
-        col("payload"),
-        struct(
-          lit("image/jpeg").as("format"),
-          length(col("payload")).cast("long").as("n_bytes"),
-          lit(1).as("n_frames")).as("meta"))
-  }
+        m += 1
+      }
+      JpegCodec.encodeColor(w, h, rgb)
+    }
 
   case class JpegQuarantineRow(
       doc_id: Long, ok: Boolean, err_kind: String,
@@ -2369,6 +2192,10 @@ object Multimodal {
       out.toMap
     }
 
+    // The encoders' constant code tables, built once per JVM.
+    private val DcCodes = canonicalCodes(DcBits, DcVals)
+    private val AcCodes = canonicalCodes(AcBits, AcVals)
+
     private class BitWriter {
       private val buf = new scala.collection.mutable.ArrayBuffer[Byte](256)
       private var acc = 0
@@ -2432,9 +2259,7 @@ object Multimodal {
         while (i < 64) { s += (textBytes(64 * b + i) & 0xff); i += 1 }
         ((s - 64L * 128L + 64L) / (8L * QDc)).toInt
       }
-      val dcCodes = canonicalCodes(DcBits, DcVals)
-      val acCodes = canonicalCodes(AcBits, AcVals)
-      val eob = acCodes(0x00)
+      val eob = AcCodes(0x00)
       val bw = new BitWriter
       var pred = 0
       var sinceRestart = 0
@@ -2450,7 +2275,7 @@ object Multimodal {
         val diff = dc - pred
         pred = dc
         val cat = if (diff == 0) 0 else 32 - Integer.numberOfLeadingZeros(math.abs(diff))
-        val (c, l) = dcCodes(cat)
+        val (c, l) = DcCodes(cat)
         bw.put(c, l)
         if (cat > 0) {
           val mag = if (diff >= 0) diff else diff + (1 << cat) - 1
@@ -2910,15 +2735,13 @@ object Multimodal {
       require(pix.length == w * h, s"raster length ${pix.length} != ${w}x$h")
       val bxN = (w + 7) / 8
       val byN = (h + 7) / 8
-      val dcCodes = canonicalCodes(DcBits, DcVals)
-      val acCodes = canonicalCodes(AcBits, AcVals)
       val bw = new BitWriter
       var pred = 0
       var by = 0
       while (by < byN) {
         var bx = 0
         while (bx < bxN) {
-          pred = encodePlaneBlock(bw, pix, w, h, bx, by, pred, dcCodes, acCodes)
+          pred = encodePlaneBlock(bw, pix, w, h, bx, by, pred, DcCodes, AcCodes)
           bx += 1
         }
         by += 1
@@ -2963,6 +2786,8 @@ object Multimodal {
       0xc8, 0xc9, 0xca, 0xd2, 0xd3, 0xd4, 0xd5, 0xd6, 0xd7, 0xd8, 0xd9,
       0xda, 0xe2, 0xe3, 0xe4, 0xe5, 0xe6, 0xe7, 0xe8, 0xe9, 0xea, 0xf2,
       0xf3, 0xf4, 0xf5, 0xf6, 0xf7, 0xf8, 0xf9, 0xfa)
+    private val DcCodesC = canonicalCodes(DcBitsC, DcValsC)
+    private val AcCodesC = canonicalCodes(AcBitsC, AcValsC)
 
     private def clamp8(v: Int): Int = math.max(0, math.min(255, v))
 
@@ -3056,10 +2881,6 @@ object Multimodal {
         }
         cy += 1
       }
-      val dcY = canonicalCodes(DcBits, DcVals)
-      val acY = canonicalCodes(AcBits, AcVals)
-      val dcC = canonicalCodes(DcBitsC, DcValsC)
-      val acC = canonicalCodes(AcBitsC, AcValsC)
       val bw = new BitWriter
       var predY = 0
       var predCb = 0
@@ -3082,13 +2903,13 @@ object Multimodal {
             var dx = 0
             while (dx < 2) {
               predY = encodePlaneBlock(
-                bw, yP, pw, ph, 2 * mx + dx, 2 * my + dy, predY, dcY, acY)
+                bw, yP, pw, ph, 2 * mx + dx, 2 * my + dy, predY, DcCodes, AcCodes)
               dx += 1
             }
             dy += 1
           }
-          predCb = encodePlaneBlock(bw, cbP, cw, ch, mx, my, predCb, dcC, acC)
-          predCr = encodePlaneBlock(bw, crP, cw, ch, mx, my, predCr, dcC, acC)
+          predCb = encodePlaneBlock(bw, cbP, cw, ch, mx, my, predCb, DcCodesC, AcCodesC)
+          predCr = encodePlaneBlock(bw, crP, cw, ch, mx, my, predCr, DcCodesC, AcCodesC)
           mx += 1
         }
         my += 1

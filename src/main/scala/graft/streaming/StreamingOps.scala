@@ -1036,9 +1036,13 @@ object StreamingOps {
       degree: Int = 6,
       numPlanes: Int = graft.operators.Similarity.DefaultNumPlanes,
       probeBits: Int = 1,
-      dim: Int = 64): (DataFrame, Long) => Unit =
+      dim: Int = 64): (DataFrame, Long) => Unit = {
+    // Once per sink instance: a restart over an existing state directory
+    // checks the landed degree before its first epoch writes anything.
+    lazy val degreeLanded: Unit = landSinkDegree(spark, basePath, degree)
     (batch: DataFrame, batchId: Long) => {
       import graft.operators.Similarity
+      degreeLanded
       // A replayed epoch at or below the compaction watermark is a
       // write-side NO-OP (the admission-sink rule): its deltas are final
       // inside the three base partitions, and recomputing would read its
@@ -1069,6 +1073,29 @@ object StreamingOps {
       newB.unpersist()
       }
     }
+  }
+
+  /** Land the sink's prune degree with its state, ONCE per state
+    * directory: the degree is part of the state's meaning (read-time
+    * selection must not exceed it — see [[graphAnnEdgeSink]]), so the
+    * merged read ENFORCES the bound instead of silently under-selecting.
+    * The committed (`_SUCCESS`) marker is the idempotence authority.
+    * Over an existing directory the landed degree must equal `degree`:
+    * epochs pruned at two degrees would mix bounds under one meta row,
+    * so a mismatch fails fast — re-provisioning the degree is
+    * [[rebuildGraphAnnState]]'s job.
+    */
+  private def landSinkDegree(spark: SparkSession, basePath: String, degree: Int): Unit = {
+    val meta = s"$basePath/sink_meta"
+    val success = new org.apache.hadoop.fs.Path(s"$meta/_SUCCESS")
+    if (success.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(success)) {
+      val landed = spark.read.parquet(meta).collect()(0).getAs[Int]("degree")
+      require(landed == degree,
+        s"graph-ANN state at $basePath was pruned at degree $landed, but this sink " +
+          s"prunes at degree $degree — rebuild it at the new degree with rebuildGraphAnnState")
+    } else
+      spark.range(1).select(lit(degree).as("degree")).write.mode("overwrite").parquet(meta)
+  }
 
   /** The delta computation + landing shared by [[graphAnnEdgeSink]]
     * (prior = the live accumulated state) and [[rebuildGraphAnnState]]
@@ -1130,20 +1157,6 @@ object StreamingOps {
       farNew.unionByName(farNew.select(col("nb").as("src"), col("src").as("nb")))
         .distinct()
         .write.mode("overwrite").parquet(s"$basePath/far/batch_id=$batchId")
-      // The prune degree is part of the state's meaning (read-time
-      // selection must not exceed it — see the scaladoc); land it with
-      // the state so the merged read can ENFORCE the bound instead of
-      // silently under-selecting. One row, written ONCE per state
-      // directory (r21): the degree is a constant of the sink closure,
-      // so re-writing an identical 1-row parquet every epoch spent a
-      // Spark job per micro-batch for no information — the committed
-      // (_SUCCESS) marker is the idempotence authority, and a crash
-      // between meta and vecs replays the epoch into the same value.
-      val metaSuccess = new org.apache.hadoop.fs.Path(s"$basePath/sink_meta/_SUCCESS")
-      val metaFs = metaSuccess.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!metaFs.exists(metaSuccess))
-        spark.range(1).select(lit(degree).as("degree"))
-          .write.mode("overwrite").parquet(s"$basePath/sink_meta")
       // Vectors land LAST: a crash mid-epoch leaves at worst edge dirs
       // without their vecs dir, and the replay overwrites all three.
       newB.write.mode("overwrite").parquet(s"$basePath/vecs/batch_id=$batchId")
@@ -1178,8 +1191,11 @@ object StreamingOps {
         compactedStateView(spark, s"$basePath/vecs", Seq("vec_id", "qe", "bucket")),
         deletesPath, "vec_id")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try landGraphAnnEpoch(
-      spark, newPath, 0L, survivors, survivors.limit(0), degree, numPlanes, probeBits)
+    try {
+      landSinkDegree(spark, newPath, degree)
+      landGraphAnnEpoch(
+        spark, newPath, 0L, survivors, survivors.limit(0), degree, numPlanes, probeBits)
+    }
     finally { survivors.unpersist(); () }
   }
 

@@ -615,6 +615,27 @@ class PlanShapeSpec extends SparkSpec {
     assert(shuffles(tInv) === 0, s"transform inventory grew a shuffle:\n${plan(tInv)}")
   }
 
+  test("payload builders synthesize through codec encoders: no interpreted lambda in the plan") {
+    import graft.operators.Multimodal
+    import org.apache.spark.sql.catalyst.expressions.HigherOrderFunction
+    val docs = spark.read.parquet(s"$dir/documents.parquet")
+    // Array lambdas (transform/filter over hex pairs) evaluate through
+    // CodegenFallback inside the generated projection; payload synthesis
+    // must stay text bytes → codec encoder.
+    val builders = Seq[(String, DataFrame => DataFrame)](
+      "toBmp" -> Multimodal.toBmp, "toWav16" -> Multimodal.toWav16,
+      "toWavMuLaw" -> Multimodal.toWavMuLaw, "toAvi" -> (Multimodal.toAvi(_)),
+      "toPng" -> Multimodal.toPng, "toJpeg" -> Multimodal.toJpeg,
+      "toJpegColor" -> Multimodal.toJpegColor)
+    for ((name, build) <- builders) {
+      val optimized = build(docs).queryExecution.optimizedPlan
+      val lambdas = optimized.flatMap(_.expressions.flatMap(_.collect {
+        case h: HigherOrderFunction => h
+      }))
+      assert(lambdas.isEmpty, s"$name plans an interpreted lambda:\n$optimized")
+    }
+  }
+
   test("contaminated-examples compose: contamination side broadcasts, no cross product") {
     val df = SparkEntry.queries("q246_contaminated_examples")(spark, dir)
     val p = plan(df)

@@ -754,6 +754,24 @@ class StreamingOpsSpec extends SparkSpec {
     assert(spark.read.parquet(s"$fresh/sink_meta").collect()(0).getAs[Int]("degree") === 6)
   }
 
+  test("graph-ANN sink: a restart at a different prune degree fails fast, naming both degrees") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(37)
+    val emb = (0L until 12L).map { id =>
+      (id, Array.fill(64)(rnd.nextFloat() * 2f - 1f).toSeq, "l" + (id % 3))
+    }.toDF("vec_id", "embedding", "label")
+    val dir = java.nio.file.Files.createTempDirectory("graft_gann_degree").toString
+    StreamingOps.graphAnnEdgeSink(spark, dir, degree = 4)(emb.filter($"vec_id" < 6L), 0L)
+    val err = intercept[IllegalArgumentException] {
+      StreamingOps.graphAnnEdgeSink(spark, dir, degree = 5)(emb.filter($"vec_id" >= 6L), 1L)
+    }
+    assert(err.getMessage.contains("degree 4") && err.getMessage.contains("degree 5"), err.getMessage)
+    // Nothing of the rejected epoch landed; the same degree resumes.
+    assert(!new java.io.File(s"$dir/vecs/batch_id=1").exists())
+    StreamingOps.graphAnnEdgeSink(spark, dir, degree = 4)(emb.filter($"vec_id" >= 6L), 1L)
+    assert(spark.read.parquet(s"$dir/sink_meta").collect()(0).getAs[Int]("degree") === 4)
+  }
+
   test("near-dup index deletion: signatureIndexWithout equals the from-scratch index over survivors") {
     import graft.operators.Dedup
     import spark.implicits._

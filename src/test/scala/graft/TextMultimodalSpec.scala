@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.functions.TextAnalysis
 import graft.operators.Multimodal
@@ -2334,5 +2336,87 @@ class TextMultimodalSpec extends SparkSpec {
     }
     assert(!boxed.exists(r => r._1 == 2L || r._1 == 9L), "sub-block payloads must drop")
     assert(thumbs.exists(_._1 == 2L) && !thumbs.exists(_._1 == 9L))
+  }
+
+  test("payload builders: golden payload md5 and meta per builder, null text included") {
+    // Recorded from the builders' earlier interpreted hex-string pipelines:
+    // synthesis through the codecs' own encoders must stay byte-identical.
+    // Texts: empty and 3 bytes (a width-0 BMP), 17 bytes (WAV pad byte,
+    // ragged odd AVI frame), 76 bytes of 1- to 4-byte UTF-8 (the JPEG
+    // minimum), null.
+    val texts = Seq[(Long, String)](
+      0L -> "", 1L -> "abc", 2L -> "odd-length text!!", 3L -> ("Grüße 你好 🌍" * 4), 4L -> null)
+    def golden(build: DataFrame => DataFrame, ids: Long*): Seq[String] =
+      build(texts.filter(t => ids.contains(t._1)).toDF("doc_id", "text"))
+        .select(col("doc_id"), md5(col("payload")), col("meta.*")).orderBy("doc_id")
+        .collect().map(_.mkString("|")).toSeq
+    val all = Seq(0L, 1L, 2L, 3L, 4L)
+    assert(golden(Multimodal.toWav, all: _*) === Seq(
+      "0|343a38895580ae4c65c3e585d12ff9ba|audio/wav|44|1",
+      "1|8b4155ec3741def2877cb1debc8938ad|audio/wav|48|1",
+      "2|2ab5af6b230a09e6d1ffb098a200c867|audio/wav|62|1",
+      "3|9cc017f2483c2cfcb291e4e280a17695|audio/wav|120|1",
+      "4|null|audio/wav|null|1"))
+    assert(golden(Multimodal.toBmp, all: _*) === Seq(
+      "0|76fbda3ef51ab78dea3483a55d5bf226|image/bmp|54|1",
+      "1|76fbda3ef51ab78dea3483a55d5bf226|image/bmp|54|1",
+      "2|3e87edbdaf79092ea8300170d29054d4|image/bmp|70|1",
+      "3|3cd73a7dbcb468280812f75a431df44c|image/bmp|126|1",
+      "4|null|image/bmp|null|1"))
+    assert(golden(Multimodal.toWav16, all: _*) === Seq(
+      "0|d9f5c6a48bfefddab36ca46559aaa670|audio/wav|44|1",
+      "1|9dd28e780b29b07606818f63b8525c82|audio/wav|50|1",
+      "2|6eba6116a3d3ade2e23469cee79b3918|audio/wav|78|1",
+      "3|26f1d0621f68b5ab5328c7e801f97035|audio/wav|196|1",
+      "4|null|audio/wav|null|1"))
+    assert(golden(Multimodal.toWavMuLaw, all: _*) === Seq(
+      "0|92da09d74b290b96f75d2ab825600c5c|audio/basic|44|1",
+      "1|16e209315f19ece0bd0e9d8d70033d1b|audio/basic|48|1",
+      "2|110c7b69206e3aa799d3ea6b7e020494|audio/basic|62|1",
+      "3|18dac390ddcb48373a513911b04f90e6|audio/basic|120|1",
+      "4|null|audio/basic|null|1"))
+    assert(golden(Multimodal.toAvi(_, 4), all: _*) === Seq(
+      "0|5dd3df52afeb86d3519c5f2d944e423b|video/avi|100|0",
+      "1|19d52817cfbe852b50b35bb2c03034c7|video/avi|112|1",
+      "2|75e3b8e0ba016045d161361549704aae|video/avi|158|5",
+      "3|677514db288d48cd768750052f1f9440|video/avi|328|19",
+      "4|null|video/avi|null|null"))
+    assert(golden(Multimodal.toAvi(_, 16), all: _*) === Seq(
+      "0|562e2d90f3c89de500b27c742e723815|video/avi|100|0",
+      "1|67443c2e1065cbb59fc2ab3154309ff4|video/avi|112|1",
+      "2|5b2ddf1e79830dd3d60648253fb84476|video/avi|134|2",
+      "3|10650705c8ee0c92ea20648156a75ef5|video/avi|216|5",
+      "4|null|video/avi|null|null"))
+    // The compressed codecs reject texts below their raster minimum; a
+    // null text gives a null payload like the builders above.
+    assert(golden(Multimodal.toPng, 2L, 3L, 4L) === Seq(
+      "2|9f9b6b866dc5cee5adb7d7d1b034d8ee|image/png|79|1",
+      "3|e2f71f770102b58073407663db6c3957|image/png|113|1",
+      "4|null|image/png|null|1"))
+    assert(golden(Multimodal.toJpeg, 3L, 4L) === Seq(
+      "3|2e2da46f523e4f24861a525052a3732d|image/jpeg|310|1",
+      "4|null|image/jpeg|null|1"))
+    assert(golden(Multimodal.toJpegColor, 1L, 2L, 3L, 4L) === Seq(
+      "1|119c39725416b06ed962e100826ed319|image/jpeg|596|1",
+      "2|675b44396f161fcc812ad40aebff8e7c|image/jpeg|621|1",
+      "3|856bbea86e4d03a9beadc7085d5c06cb|image/jpeg|756|1",
+      "4|null|image/jpeg|null|1"))
+    // Schema: doc_id keeps the input's nullability; n_frames is nullable
+    // only where it is computed from the text (AVI's frame count).
+    def nullability(df: DataFrame): Seq[(String, Boolean)] = {
+      val meta = df.schema("meta").dataType.asInstanceOf[StructType]
+      assert(meta.simpleString === "struct<format:string,n_bytes:bigint,n_frames:int>")
+      df.schema.map(f => f.name -> f.nullable) ++ meta.map(f => s"meta.${f.name}" -> f.nullable)
+    }
+    val fx = texts.toDF("doc_id", "text")
+    def expected(framesNullable: Boolean) = Seq(
+      "doc_id" -> false, "payload" -> true, "meta" -> false,
+      "meta.format" -> false, "meta.n_bytes" -> true, "meta.n_frames" -> framesNullable)
+    assert(nullability(Multimodal.toAvi(fx)) === expected(framesNullable = true))
+    Seq[DataFrame => DataFrame](Multimodal.toWav, Multimodal.toBmp, Multimodal.toWav16,
+      Multimodal.toWavMuLaw, Multimodal.toPng, Multimodal.toJpeg, Multimodal.toJpegColor)
+      .foreach(b => assert(nullability(b(fx)) === expected(framesNullable = false)))
+    assert(Multimodal.toBmp(fx.withColumn("doc_id", lit(null).cast("long")))
+      .schema("doc_id").nullable)
   }
 }
