@@ -1,7 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BooleanType, LongType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
 import graft.functions.TextAnalysis
@@ -220,63 +223,75 @@ object Dedup {
     * [[jaccardPairs]]: transitive near-dups (A≈B, B≈C) must collapse to
     * ONE kept document even when A and C never co-occurred in a bucket.
     *
-    * Algorithm: hash-min label propagation with pointer doubling. Every
-    * doc starts labeled with itself; each round takes the min of its own
-    * and its neighbors' labels (one equi-join + one map-side-combined min
-    * aggregate), then COMPRESSES paths by following the label one more
-    * hop — `label(v) ← label(label(v))` — via a second self-join on the
-    * freshly-propagated labels. Doubling makes the propagation distance
-    * grow geometrically, so rounds needed = O(log diameter) instead of
-    * O(diameter): a 1000-link chain of borderline near-dups (the
-    * pathological shape for plain min-propagation) converges in ~10
-    * rounds, not ~1000. No driver-side graph state; labels are the only
-    * iterated data, and convergence is detected with a limit-1 probe, not
-    * a full count. A component whose diameter outruns even the doubled
-    * schedule would leave labels mid-propagation — silently splitting one
-    * true cluster — so non-convergence THROWS rather than returning
-    * partial clusters.
-    *
     * Output: (doc_id, canonical_id, cluster_size, is_canonical) for every
-    * doc that appears in some pair — `is_canonical` rows are the keep
-    * set, sized for survivor joins.
+    * doc that appears in some pair, where `canonical_id` is the least id
+    * of the doc's component in Spark's order for the id type (the order
+    * `min`/`least` use; for strings that is UTF-8 byte order, which
+    * differs from `String.compareTo` above U+FFFF). `is_canonical` rows
+    * are the keep set, sized for survivor joins. Ids must be non-null.
     *
-    * Hub skew: a giant component concentrates its hub vertex's key in
-    * the per-round label-lookup join (every edge into the hub lands in
-    * one `dst` partition) and, late in convergence, the shared canonical
-    * label in the doubling self-join and the sizes join. AQE's
-    * `OptimizeSkewedJoin` does NOT rescue these joins: the lookup side's
-    * upstream partitioning (the label aggregate's hash on `src` ≡
-    * `doc_id`, or the cached frame's layout) already satisfies the join
-    * requirement after the rename, so that side has no fresh
+    * The pairs are symmetrized once into a cached edges frame, and one
+    * map-side-combined degree aggregate over it counts the symmetrized
+    * edges |Eₛ| exactly. That count picks one of two paths:
+    *
+    * Below `hotKeyThreshold` (4M by default): union-find on the driver.
+    * One collect ships the cached edges in one direction (`src <= dst`:
+    * |Eₛ|/2 < 2M pairs, a self-loop pair in both copies) as copied
+    * Catalyst values. Every id is replaced by its rank among the
+    * distinct ids sorted in Spark's order, and the union-find always
+    * links toward the smaller rank, so each root is its component's
+    * minimum; cluster sizes come from one pass over the roots. The
+    * executors emit the result from `range(|V|)` and one broadcast of
+    * (ids, roots, sizes), so it reads no cache. No per-round jobs: the
+    * count and one collect, however long the components' diameter.
+    * On 4 local cores with Long ids in 9-id clusters, this path ran
+    * about 4–12× faster than the loop at every measured size below the gate
+    * (|Eₛ| = 0.4M, 2M, 3.9M), and at 3.9M it completed in a 1 GB heap:
+    * the gate is where driver memory, not speed, hands over to the loop.
+    *
+    * At or above the threshold: hash-min label propagation with pointer
+    * doubling. Every doc starts labeled with the min of itself and its
+    * neighbors; each round takes the min of its own and its neighbors'
+    * labels (one equi-join + one map-side-combined min aggregate), then
+    * compresses paths by following the label one more hop — `label(v) ←
+    * label(label(v))` — via a second self-join. Doubling makes the
+    * propagation distance grow geometrically, so rounds needed =
+    * O(log diameter): a 256-link chain converges in under a dozen rounds,
+    * not ~128. Labels are the only iterated data, and convergence is
+    * detected with a limit-1 probe, not a full count. A component whose
+    * diameter outruns `maxIters` rounds would leave labels
+    * mid-propagation — silently splitting one true cluster — so
+    * non-convergence THROWS rather than returning partial clusters.
+    *
+    * Hub skew on the loop: a giant component concentrates its hub
+    * vertex's key in the per-round label-lookup join (every edge into
+    * the hub lands in one `dst` partition) and, late in convergence, the
+    * shared canonical label in the doubling self-join and the sizes
+    * join. AQE's `OptimizeSkewedJoin` does NOT rescue these joins: the
+    * lookup side's upstream partitioning (the label aggregate's hash on
+    * `src` ≡ `doc_id`, or the cached frame's layout) already satisfies
+    * the join requirement after the rename, so that side has no fresh
     * `ENSURE_REQUIREMENTS` shuffle stage — and the rule only fires when
-    * BOTH children are sort-over-shuffle-stage (verified empirically:
-    * the star-graph plan shows `AQEShuffleRead coalesced`, never
-    * `skew=true`). So the skew is bounded explicitly: keys whose row
-    * count reaches `hotKeyThreshold` — vertex degree for the edge join
-    * (static, computed once), per-round label counts for the doubling
-    * join (from a map-side-combined agg whose shuffle volume is
-    * #distinct (partition, label) pairs), and the already-computed
+    * BOTH children are sort-over-shuffle-stage (the star-graph plan shows
+    * `AQEShuffleRead coalesced`, never `skew=true`). So the skew is
+    * bounded explicitly: keys whose row count reaches `hotKeyThreshold`
+    * — vertex degree for the edge join (static, from the gate's degree
+    * aggregate), per-round label counts for the doubling join, and the
     * cluster sizes for the final join — are routed through a broadcast
     * join whose build side is tiny by construction (≤ 2|E|/threshold
     * keys, one lookup row each), while the cold remainder takes the
-    * normal sort-merge path and is skew-free by definition. The min
-    * aggregates themselves are map-side-combined, so no reduce task
-    * ever sees a component's full membership. A blanket salt would
-    * replicate the |V|-sized lookup table ×S every round; the hot/cold
-    * split ships only the hot keys' single-row lookups.
-    *
-    * The split only engages when it can matter: every key's row count in
-    * all three guarded joins is bounded by the symmetrized edge count
-    * (degree ≤ |Eₛ|; label multiplicity ≤ |V| ≤ |Eₛ| since every vertex
-    * heads at least one symmetrized row; cluster size ≤ |V|), so when
-    * one `count()` of the already-persisted edges frame comes back below
-    * the threshold, no hot key can exist and the loop runs the plain
-    * sort-merge joins with zero added plan nodes or per-round detection
-    * aggregates — the small-input fast path is exact, not heuristic.
-    * DedupSkewSpec pins the behavior with task metrics on a star graph:
+    * sort-merge path at session width and is skew-free by definition. A
+    * blanket salt would replicate the |V|-sized lookup table ×S every
+    * round; the hot/cold split ships only the hot keys' single-row
+    * lookups. DedupSkewSpec pins it with task metrics on a star graph:
     * with the threshold at test scale no task's shuffle read comes near
-    * the hub degree; the default-threshold control (hot set empty)
-    * shows the full-degree concentration the split exists to avoid.
+    * the hub degree.
+    *
+    * The gate is exact, not heuristic: every key's row count in the
+    * three guarded joins is bounded by |Eₛ| (degree ≤ |Eₛ|; label
+    * multiplicity ≤ |V| ≤ |Eₛ|; cluster size ≤ |V|), so below the
+    * threshold no hot key can exist — and a graph that small is a
+    * driver-sized array.
     */
   def dedupClusters(pairs: DataFrame, maxIters: Int = 20): DataFrame =
     dedupClustersWithIters(pairs, maxIters)._1
@@ -308,13 +323,14 @@ object Dedup {
     hot.unionByName(cold)
   }
 
-  /** [[dedupClusters]] plus the number of rounds the label loop ran —
-    * exposed so convergence-rate claims (the O(log d) doubling schedule)
-    * are testable instead of asserted. `hotKeyThreshold` is the per-key
-    * row count at which a join key is routed through the broadcast hot
-    * path (see the skew note on [[dedupClusters]]); the default keeps a
-    * hot key's worst-case single-task slice at ~100 MB of join input
-    * while bounding the broadcast side at ≤ 2|E|/4M keys.
+  /** [[dedupClusters]] plus the number of rounds the label loop ran (0
+    * on the driver path) — exposed so convergence-rate claims (the
+    * O(log d) doubling schedule) are testable instead of asserted.
+    * `hotKeyThreshold` is both the driver-path gate on |Eₛ| and the
+    * per-key row count at which the loop routes a join key through the
+    * broadcast hot path (see [[dedupClusters]]); the default keeps a hot
+    * key's worst-case single-task slice at ~100 MB of join input while
+    * bounding the broadcast side at ≤ 2|E|/4M keys.
     */
   private[graft] def dedupClustersWithIters(
       pairs: DataFrame, maxIters: Int = 20,
@@ -327,19 +343,23 @@ object Dedup {
         struct(col("doc_b").as("src"), col("doc_a").as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    // Exact skew gate (see the scaladoc): any key of the three guarded
-    // joins repeats at most |Eₛ| times, so a below-threshold edge count
-    // proves the hot sets empty. ONE materialization pass serves both
-    // the gate and the static hot-vertex set: the symmetric-degree
-    // aggregate is map-side combined (shuffles ≤ |V| rows), its sum IS
-    // the symmetrized edge count, and the hot filter over it is free —
-    // a standalone edges.count() would pay a second full pass over the
-    // cached edges for a number the degrees already carry.
+    // Exact gate (see the scaladoc): ONE materialization pass fills the
+    // edges cache and yields both |Eₛ| and the static hot-vertex set. The
+    // symmetric-degree aggregate is map-side combined (shuffles ≤ |V|
+    // rows) and its sum IS the symmetrized edge count; every pair end is
+    // some edge's `dst`, so the null group is the null-id check.
     val degrees = edges.groupBy(col("dst")).agg(count(lit(1)).as("_deg"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val edgeCount = Option(degrees.agg(sum(col("_deg"))).first().get(0))
-      .map(_.asInstanceOf[Long]).getOrElse(0L)
-    val splitNeeded = edgeCount >= hotKeyThreshold
+    val gate = degrees.agg(sum(col("_deg")), count(when(col("dst").isNull, 1))).first()
+    val edgeCount = if (gate.isNullAt(0)) 0L else gate.getLong(0)
+    // A null id fails here, whichever side of the gate, with both caches released.
+    if (gate.getLong(1) > 0L || edgeCount < hotKeyThreshold) {
+      degrees.unpersist()
+      try {
+        require(gate.getLong(1) == 0L, "dedupClusters: a pair has a null doc id")
+        return (driverClusters(edges), 0)
+      } finally edges.unpersist()
+    }
     // Static hot-vertex set for the per-round edge⋈labels join: symmetric
     // degree is the exact per-key row count of that join's streamed side
     // and never changes across rounds. ≤ 2|E|/threshold rows — always
@@ -347,15 +367,10 @@ object Dedup {
     // degree table before the loop starts: pinning degrees across up to
     // maxIters rounds would hold |V|-scale cache hostage for a lookup
     // of at most a handful of rows.
-    val hotV =
-      if (!splitNeeded) { degrees.unpersist(); None }
-      else {
-        val hv = degrees.filter(col("_deg") >= hotKeyThreshold).select(col("dst"))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        hv.count()
-        degrees.unpersist()
-        Some(hv)
-      }
+    val hotV = degrees.filter(col("_deg") >= hotKeyThreshold).select(col("dst"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    hotV.count()
+    degrees.unpersist()
     // Initialization IS the first propagation round: label₀(v) =
     // min(v, neighbors(v)) from the same aggregation that enumerates the
     // vertex set — one groupBy instead of distinct + a full loop
@@ -367,23 +382,13 @@ object Dedup {
     var prevCache: Option[DataFrame] = None
     var converged = false
     var it = 0
-    // Scoped round width (r21, the Graphs-loop standard): each round's
-    // label join flows ≤ |Eₛ| rows (already counted above for the skew
-    // gate) — cluster-width exchanges on fixture-sized graphs are pure
-    // task-scheduling overhead; the width returns to session scale at
-    // ≥ 64k·parallelism edge rows. When the EXACT SKEW GATE is armed
-    // (splitNeeded), the loop keeps the full session width regardless:
-    // skew mitigation needs width to spread the cold remainder, and the
-    // per-task read bound DedupSkewSpec pins is a width-dependent
-    // guarantee (narrowing would re-concentrate uniform keys into
-    // hub-degree-sized tasks at exactly the scales the split protects).
-    Graphs.withRoundWidth(edges, if (splitNeeded) Long.MaxValue / 2 else edgeCount) {
+    // The loop runs at session width: skew mitigation needs width to
+    // spread the cold remainder, and the per-task read bound
+    // DedupSkewSpec pins is a width-dependent guarantee.
     while (!converged && it < maxIters) {
       val roundStart = System.nanoTime()
       val dstLabels = labels.select(col("doc_id").as("dst"), col("label"))
-      val nbrMin = hotV
-        .map(hv => hotColdJoin(edges, dstLabels, "dst", hv, "inner"))
-        .getOrElse(edges.join(dstLabels, Seq("dst")))
+      val nbrMin = hotColdJoin(edges, dstLabels, "dst", hotV, "inner")
         .groupBy(col("src"))
         .agg(min(col("label")).as("nbr_min"))
       // Neighbor-min hop, cached: the doubling join below reads it twice
@@ -405,12 +410,10 @@ object Dedup {
       // map-side-combined over the cached `prop`, shuffling only
       // #distinct (partition, label) pairs.
       val glLookup = prop.select(col("doc_id").as("label"), col("label").as("_gl"))
-      val next = (if (splitNeeded) {
-          val hotL = prop.groupBy(col("label")).agg(count(lit(1)).as("_c"))
-            .filter(col("_c") >= hotKeyThreshold)
-            .select(col("label"))
-          hotColdJoin(prop, glLookup, "label", hotL, "left_outer")
-        } else prop.join(glLookup, Seq("label"), "left_outer"))
+      val hotL = prop.groupBy(col("label")).agg(count(lit(1)).as("_c"))
+        .filter(col("_c") >= hotKeyThreshold)
+        .select(col("label"))
+      val next = hotColdJoin(prop, glLookup, "label", hotL, "left_outer")
         .select(
           col("doc_id"),
           col("_old"),
@@ -436,14 +439,13 @@ object Dedup {
       // numbers, and at 100 TB an unbounded round count IS the bottleneck.
       log.info(f"dedupClusters round $it: ${(System.nanoTime() - roundStart) / 1e9}%.2fs converged=$converged")
     }
-    }
-    log.info(s"dedupClusters: rounds=$it edges=$edgeCount skewSplit=$splitNeeded maxIters=$maxIters")
+    log.info(s"dedupClusters: rounds=$it edges=$edgeCount maxIters=$maxIters")
     // edges is only read inside the loop; lineage survives unpersist, so
     // dropping the blocks now is safe (and keeps long-lived sessions from
     // accumulating storage). The final labels cache stays — the returned
     // plan reads it twice (labels + sizes) — and is one small row per doc.
     edges.unpersist()
-    hotV.foreach(_.unpersist())
+    hotV.unpersist()
     if (!converged) {
       prevCache.foreach(_.unpersist())
       throw new IllegalStateException(
@@ -454,18 +456,74 @@ object Dedup {
     val sz = labels.groupBy(col("label")).agg(count(lit(1)).as("cluster_size"))
     // The sizes themselves are the hot detector here — a giant component
     // IS a hot `label` key in this join, and sz already counted it.
-    val out = (if (splitNeeded)
-        hotColdJoin(
-          labels, sz, "label",
-          sz.filter(col("cluster_size") >= hotKeyThreshold).select(col("label")),
-          "inner")
-      else labels.join(sz, Seq("label")))
+    val out = hotColdJoin(
+        labels, sz, "label",
+        sz.filter(col("cluster_size") >= hotKeyThreshold).select(col("label")),
+        "inner")
       .select(
         col("doc_id"),
         col("label").as("canonical_id"),
         col("cluster_size"),
         (col("doc_id") === col("label")).as("is_canonical"))
     (out, it)
+  }
+
+  /** [[dedupClustersWithIters]] below its gate: connected components of
+    * the cached symmetrized `edges` by union-find on the driver, emitted
+    * by the executors with the loop's output schema (see
+    * [[dedupClusters]]).
+    */
+  private def driverClusters(edges: DataFrame): DataFrame = {
+    val StructField(_, idType, nullable, _) = edges.schema("src")
+    val ord = TypeUtils.getInterpretedOrdering(idType)
+    // Every endpoint as a copied Catalyst value, (src, dst) interleaved.
+    val ends = edges.filter(col("src") <= col("dst")).queryExecution.toRdd
+      .mapPartitions { rows =>
+        val b = Array.newBuilder[AnyRef]
+        rows.foreach { r =>
+          b += InternalRow.copyValue(r.get(0, idType)).asInstanceOf[AnyRef]
+          b += InternalRow.copyValue(r.get(1, idType)).asInstanceOf[AnyRef]
+        }
+        Iterator.single(b.result())
+      }.collect().flatten
+    // Distinct ids in Spark's order for the type (the order `min` uses);
+    // an id's rank is its index here.
+    val ids = ends.clone()
+    java.util.Arrays.sort(ids, ord)
+    var n = 0
+    for (i <- ids.indices) if (n == 0 || !ord.equiv(ids(n - 1), ids(i))) { ids(n) = ids(i); n += 1 }
+    val parent = Array.tabulate(n)(identity)
+    def find(v: Int): Int = {
+      var x = v
+      while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
+      x
+    }
+    var e = 0
+    while (e < ends.length) {
+      val a = find(java.util.Arrays.binarySearch(ids, 0, n, ends(e), ord))
+      val b = find(java.util.Arrays.binarySearch(ids, 0, n, ends(e + 1), ord))
+      if (a < b) parent(b) = a else if (b < a) parent(a) = b
+      e += 2
+    }
+    val root = Array.tabulate(n)(find)
+    val size = new Array[Int](n)
+    root.foreach(r => size(r) += 1)
+    val toScala = CatalystTypeConverters.createToScalaConverter(idType)
+    val labels = edges.sparkSession.sparkContext.broadcast(
+      (Array.tabulate(n)(i => toScala(ids(i))), root, size))
+    val schema = StructType(Seq(
+      StructField("doc_id", idType, nullable),
+      StructField("canonical_id", idType, nullable),
+      StructField("cluster_size", LongType, nullable = false),
+      StructField("is_canonical", BooleanType, nullable)))
+    edges.sparkSession.range(n).mapPartitions { ranks =>
+      val (id, root, size) = labels.value
+      ranks.map { rank =>
+        val v = rank.intValue
+        val r = root(v)
+        Row(id(v), id(r), size(r).toLong, v == r)
+      }
+    }(Encoders.row(schema))
   }
 
   /** Per-document signature-PLUS-digest index

@@ -61,27 +61,31 @@ object Multimodal {
     * each row's UTF-8 text bytes go through `kernel` — a codec's own
     * byte encoder over a raster cut from those bytes — in one
     * partition-local pass, no shuffle. `meta` carries `format`, the
-    * payload's byte length and `nFrames` (evaluated over the input
-    * row). Null text gives a null payload and a null `n_bytes`; the
-    * kernel never sees it. `doc_id` keeps the input's nullability; the
-    * kernel's `Long` is the doc id, for error messages.
+    * payload's byte length (or `nBytes`, when given) and `nFrames`;
+    * `nFrames` and `nBytes` are evaluated over the input row. Null text
+    * gives a null payload; the kernel never sees it. `doc_id` keeps the
+    * input's nullability; the kernel's `Long` is the doc id, for error
+    * messages.
     */
-  private def synthesize(docs: DataFrame, format: String, nFrames: Column = lit(1))(
+  private def synthesize(
+      docs: DataFrame, format: String, nFrames: Column = lit(1), nBytes: Option[Column] = None)(
       kernel: (Long, Array[Byte]) => Array[Byte]): DataFrame = {
     val in = docs.select(
-      col("doc_id"), encode(col("text"), "UTF-8").as("bytes"), nFrames.as("n_frames"))
-    val out = StructType(Seq(
-      in.schema("doc_id"), StructField("payload", BinaryType), in.schema("n_frames")))
+      Seq(col("doc_id"), encode(col("text"), "UTF-8").as("bytes"), nFrames.as("n_frames")) ++
+        nBytes.map(_.cast("long").as("n_bytes")): _*)
+    val out = StructType(in.schema.fields.updated(1, StructField("payload", BinaryType)))
     in.mapPartitions(_.map { r =>
+        val cells = Array.tabulate(r.length)(r.get)
         val b = r.getAs[Array[Byte]](1)
-        Row(r.get(0), if (b == null) null else kernel(r.getAs[Long](0), b), r.get(2))
+        if (b != null) cells(1) = kernel(r.getAs[Long](0), b)
+        Row(cells: _*)
       })(Encoders.row(out))
       .select(
         col("doc_id"),
         col("payload"),
         struct(
           lit(format).as("format"),
-          length(col("payload")).cast("long").as("n_bytes"),
+          nBytes.fold(length(col("payload")).cast("long"))(_ => col("n_bytes")).as("n_bytes"),
           col("n_frames")).as("meta"))
   }
 
@@ -944,30 +948,40 @@ object Multimodal {
     * [[AnimFrameTotalBytes]] on the wire — which is what lets
     * [[sampleFrames]] cut real decodable frames with pure byte
     * arithmetic, no decode. ASCII-text contract (the testdata corpus is
-    * ASCII; bytes ≡ chars keeps the expression-only build exact).
-    * Codegen'd expressions only: per-frame strings via `transform` over
-    * `sequence`, folded with `aggregate` — never a UDF.
+    * ASCII). Beyond ASCII the frames follow one fixed rule:
+    * `n_frames` is the text's UTF-8 byte length / 64, rounded up, while
+    * frame i is the UTF-8 of CHARACTERS [64i, 64i + 64) space-padded to
+    * 64 characters — so a frame can run past 64 bytes, and frames past
+    * the last character are all spaces. `meta.n_bytes` is the text's
+    * byte length; null text gives an empty payload. Synthesis is text
+    * bytes → [[encodeAnimatedPgm]] through [[synthesize]].
     */
   def toAnimatedPgm(docs: DataFrame): DataFrame = {
-    val nf = ceil(length(encode(col("text"), "UTF-8")) / lit(AnimFrameRaster.toDouble))
-      .cast("int")
-    val frames = transform(
-      sequence(lit(0), nf - 1),
-      i => concat(
-        lit(AnimFrameHeader),
-        rpad(
-          col("text").substr(i * AnimFrameRaster + 1, lit(AnimFrameRaster)),
-          AnimFrameRaster, " ")))
-    docs.select(
-      col("doc_id"),
-      encode(
-        when(nf > 0, aggregate(frames, lit(""), (acc, x) => concat(acc, x)))
-          .otherwise(lit("")),
-        "UTF-8").as("payload"),
-      struct(
-        lit("video/x-graft-anim-pgm").as("format"),
-        length(encode(col("text"), "UTF-8")).cast("long").as("n_bytes"),
-        nf.as("n_frames")).as("meta"))
+    val n = length(encode(col("text"), "UTF-8"))
+    synthesize(
+        docs.select(col("doc_id"), coalesce(col("text"), lit("")).as("text"), n.as("n")),
+        "video/x-graft-anim-pgm",
+        ceil(col("n") / lit(AnimFrameRaster.toDouble)).cast("int"),
+        Some(col("n"))) { (_, b) => encodeAnimatedPgm(b) }
+  }
+
+  /** [[toAnimatedPgm]]'s frame encoder over a text's UTF-8 bytes: ⌈|b|/64⌉
+    * frames, each the P5 header plus 64 space-padded characters.
+    */
+  private def encodeAnimatedPgm(b: Array[Byte]): Array[Byte] = {
+    val utf8 = java.nio.charset.StandardCharsets.UTF_8
+    val header = AnimFrameHeader.getBytes(java.nio.charset.StandardCharsets.US_ASCII)
+    val cps = new String(b, utf8).codePoints().toArray
+    val nf = (b.length + AnimFrameRaster - 1) / AnimFrameRaster
+    val out = new java.io.ByteArrayOutputStream(nf * AnimFrameTotalBytes)
+    for (i <- 0 until nf) {
+      val from = math.min(i * AnimFrameRaster, cps.length)
+      val to = math.min(from + AnimFrameRaster, cps.length)
+      out.write(header)
+      out.write(new String(cps, from, to - from).getBytes(utf8))
+      out.write(Array.fill[Byte](AnimFrameRaster - (to - from))(' '))
+    }
+    out.toByteArray
   }
 
   case class DHashRow(doc_id: Long, n_px: Long, dhash: Long)

@@ -41,4 +41,15 @@ class CacheLifecycleSpec extends SparkSpec {
       s"${leaks.size} gate entries left persisted plans in the CacheManager " +
         s"(bracket + land them — BASELINE.md sweep-JVM convention):\n  ${leaks.mkString("\n  ")}")
   }
+
+  test("dedupClusters below its gate returns a frame that reads no cache") {
+    import spark.implicits._
+    spark.catalog.clearCache()
+    val pairs = Seq((1L, 2L), (2L, 3L), (7L, 8L)).toDF("doc_a", "doc_b").persist()
+    val (out, rounds) = graft.operators.Dedup.dedupClustersWithIters(pairs)
+    assert(rounds === 0, "three pairs sit below the edge-count gate")
+    pairs.unpersist()
+    assert(!bridge.anyPlanCached(spark), "the driver path left a persisted plan behind")
+    assert(out.count() === 5L)
+  }
 }

@@ -402,15 +402,17 @@ class DedupSimilaritySpec extends SparkSpec {
     // the min label crawls one hop per round (≈128 rounds from the
     // halved-start initialization). Pointer doubling must close it well
     // inside the default maxIters=20 budget — and in ≈log₂(d) rounds.
+    // The threshold sits below the chain's 512 symmetrized edges, so the
+    // loop runs instead of the below-gate driver union-find.
     val n = 256
     val chain = (0 until n).map(i => (i.toLong, (i + 1).toLong)).toDF("doc_a", "doc_b")
-    val (out, iters) = Dedup.dedupClustersWithIters(chain, maxIters = 20)
+    val (out, iters) = Dedup.dedupClustersWithIters(chain, maxIters = 20, hotKeyThreshold = 256L)
     val rows = out.collect()
     assert(rows.length === n + 1)
     assert(rows.forall(_.getAs[Long]("canonical_id") == 0L),
       "every chain vertex must collapse to the component minimum")
     assert(rows.forall(_.getAs[Long]("cluster_size") == (n + 1).toLong))
-    assert(iters <= 12, s"doubling should converge a $n-chain in ~log₂ rounds, took $iters")
+    assert(iters > 0 && iters <= 12, s"doubling should converge a $n-chain in ~log₂ rounds, took $iters")
   }
 
   test("incremental near-dup dedup drops snapshot rewordings of the kept corpus") {

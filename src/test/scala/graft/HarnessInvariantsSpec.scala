@@ -121,6 +121,14 @@ class HarnessInvariantsSpec extends AnyFunSuite {
     assert(offenders.isEmpty, s"build the session with graft.GraftSession instead: $offenders")
   }
 
+  test("dedupClusters writes no session conf (no round-width bracket, no conf.set)") {
+    // A conf write on the shared session changes the width of every query
+    // planned on it meanwhile; the operator's width is its plan's.
+    val src = read("src/main/scala/graft/operators/Dedup.scala")
+    for (needle <- Seq("withRoundWidth", "conf.set"))
+      assert(!src.contains(needle), s"operators/Dedup.scala contains `$needle`")
+  }
+
   test("Bench.cpuSuffixed splices the core count before the file extension only") {
     assert(Bench.cpuSuffixed("bench_results.json", 4) === "bench_results_c4.json")
     assert(Bench.cpuSuffixed("out.d/results", 4) === "out.d/results_c4")

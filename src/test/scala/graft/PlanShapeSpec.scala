@@ -626,7 +626,7 @@ class PlanShapeSpec extends SparkSpec {
       "toBmp" -> Multimodal.toBmp, "toWav16" -> Multimodal.toWav16,
       "toWavMuLaw" -> Multimodal.toWavMuLaw, "toAvi" -> (Multimodal.toAvi(_)),
       "toPng" -> Multimodal.toPng, "toJpeg" -> Multimodal.toJpeg,
-      "toJpegColor" -> Multimodal.toJpegColor)
+      "toJpegColor" -> Multimodal.toJpegColor, "toAnimatedPgm" -> Multimodal.toAnimatedPgm)
     for ((name, build) <- builders) {
       val optimized = build(docs).queryExecution.optimizedPlan
       val lambdas = optimized.flatMap(_.expressions.flatMap(_.collect {

@@ -2387,6 +2387,15 @@ class TextMultimodalSpec extends SparkSpec {
       "2|5b2ddf1e79830dd3d60648253fb84476|video/avi|134|2",
       "3|10650705c8ee0c92ea20648156a75ef5|video/avi|216|5",
       "4|null|video/avi|null|null"))
+    // Frames are 64-character slices, n_frames the UTF-8 byte length / 64
+    // (text 3: 40 characters in 76 bytes, so its 2nd frame is all spaces);
+    // n_bytes is the text's length and null text an empty payload.
+    assert(golden(Multimodal.toAnimatedPgm, all: _*) === Seq(
+      "0|d41d8cd98f00b204e9800998ecf8427e|video/x-graft-anim-pgm|0|0",
+      "1|f321b097b8a99a2e82f6a5a6213ab211|video/x-graft-anim-pgm|3|1",
+      "2|a38bd99bf0a2537ef409e9566ba91943|video/x-graft-anim-pgm|17|1",
+      "3|05045758273d446651b8ab940fa6b7e2|video/x-graft-anim-pgm|76|2",
+      "4|d41d8cd98f00b204e9800998ecf8427e|video/x-graft-anim-pgm|null|null"))
     // The compressed codecs reject texts below their raster minimum; a
     // null text gives a null payload like the builders above.
     assert(golden(Multimodal.toPng, 2L, 3L, 4L) === Seq(
@@ -2402,7 +2411,8 @@ class TextMultimodalSpec extends SparkSpec {
       "3|856bbea86e4d03a9beadc7085d5c06cb|image/jpeg|756|1",
       "4|null|image/jpeg|null|1"))
     // Schema: doc_id keeps the input's nullability; n_frames is nullable
-    // only where it is computed from the text (AVI's frame count).
+    // only where it is computed from the text (AVI's and the animated
+    // PGM's frame counts).
     def nullability(df: DataFrame): Seq[(String, Boolean)] = {
       val meta = df.schema("meta").dataType.asInstanceOf[StructType]
       assert(meta.simpleString === "struct<format:string,n_bytes:bigint,n_frames:int>")
@@ -2413,6 +2423,7 @@ class TextMultimodalSpec extends SparkSpec {
       "doc_id" -> false, "payload" -> true, "meta" -> false,
       "meta.format" -> false, "meta.n_bytes" -> true, "meta.n_frames" -> framesNullable)
     assert(nullability(Multimodal.toAvi(fx)) === expected(framesNullable = true))
+    assert(nullability(Multimodal.toAnimatedPgm(fx)) === expected(framesNullable = true))
     Seq[DataFrame => DataFrame](Multimodal.toWav, Multimodal.toBmp, Multimodal.toWav16,
       Multimodal.toWavMuLaw, Multimodal.toPng, Multimodal.toJpeg, Multimodal.toJpegColor)
       .foreach(b => assert(nullability(b(fx)) === expected(framesNullable = false)))
