@@ -9,6 +9,7 @@ import graft.functions.{Stats, TextAnalysis}
 import graft.operators.{Association, Curation, Dedup, Graphs, Joins, Multimodal, Similarity, Timeseries, TrainingPipeline}
 import graft.operators.Multimodal.{Bilinear, Box, Codec}
 import graft.sources.{EventFixtures, Tables}
+import graft.streaming.{EpochState, StreamingOps}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -1334,7 +1335,7 @@ object SparkEntry {
     "q240_streaming_graph_ann" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
       val path = exitCleanedTempDir("graft_q240_gann")
-      graft.streaming.StreamingOps.streamShards(s, emb, "vec_id", 3,
+      StreamingOps.streamShards(s, emb, "vec_id", 3,
           stageKey = Some(s"q240_streaming_graph_ann:$dir"),
           // Micro-batch width 2: the measured winner at gate scale
           // (ISO_r20: sp8 11.44 s / sp4 10.50 / sp2 10.04 fresh-JVM
@@ -1342,12 +1343,12 @@ object SparkEntry {
           // at wider widths). Results are partition-count-invariant;
           // the oracle re-pins them.
           shufflePartitions = Some(2))(
-        graft.streaming.StreamingOps.graphAnnEdgeSink(s, path))
+        StreamingOps.graphAnnEdgeSink(s, path))
       // Search over a COMPACTED state (epochs 0-1 folded through the
       // sink-degree prune into the base, epoch 2 live): the fold must be
       // invisible to the merged read — same oracle, hash-pinned.
-      graft.streaming.StreamingOps.compactGraphAnnEpochs(s, path, keepAfter = 1L)
-      val (vecs, edges) = graft.streaming.StreamingOps.mergedGraphAnnState(s, path)
+      StreamingOps.compactGraphAnnEpochs(s, path, keepAfter = 1L)
+      val (vecs, edges) = StreamingOps.mergedGraphAnnState(s, path)
       val v = vecs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val entry = v.agg(min(col("vec_id"))).collect()(0).getLong(0)
       val out = Similarity.graphAnnSearchOverEdges(v, edges, entry)
@@ -1365,7 +1366,7 @@ object SparkEntry {
       import s.implicits._
       val emb = Tables.embeddings(s, dir)
       val path = exitCleanedTempDir("graft_q243_gann")
-      graft.streaming.StreamingOps.streamShards(s, emb, "vec_id", 3,
+      StreamingOps.streamShards(s, emb, "vec_id", 3,
           stageKey = Some(s"q240_streaming_graph_ann:$dir"),
           // Micro-batch width 2: the measured winner at gate scale
           // (ISO_r20: sp8 11.44 s / sp4 10.50 / sp2 10.04 fresh-JVM
@@ -1373,10 +1374,10 @@ object SparkEntry {
           // at wider widths). Results are partition-count-invariant;
           // the oracle re-pins them.
           shufflePartitions = Some(2))(
-        graft.streaming.StreamingOps.graphAnnEdgeSink(s, path, degree = 8))
+        StreamingOps.graphAnnEdgeSink(s, path, degree = 8))
       val dels = exitCleanedTempDir("graft_q243_dels")
-      graft.streaming.StreamingOps.tombstoneSink(dels)(Seq(17L, 23L).toDF("vec_id"), 0L)
-      val (vecs, edges) = graft.streaming.StreamingOps.mergedGraphAnnState(
+      StreamingOps.sink(EpochState.Tombstones(), dels)(Seq(17L, 23L).toDF("vec_id"), 0L)
+      val (vecs, edges) = StreamingOps.mergedGraphAnnState(
         s, path, degree = 6, deletesPath = Some(dels))
       val v = vecs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val entry = v.agg(min(col("vec_id"))).collect()(0).getLong(0)
@@ -2187,7 +2188,7 @@ object SparkEntry {
     // themselves scale-probe at full corpus via q89/ScaleProbe.
     "q116_streaming_admission" -> ((s, dir) => {
       val docs = Tables.documents(s, dir).filter(col("doc_id") < 500)
-      graft.streaming.StreamingOps.admitViaFileStream(
+      StreamingOps.admitViaFileStream(
           s, docs.filter(col("doc_id") >= 50), docs.filter(col("doc_id") < 50),
           stageKey = Some(s"q116_streaming_admission:$dir"))
         .select(col("doc_id"), col("batch_id").cast("int").as("batch_id"))
@@ -2278,15 +2279,15 @@ object SparkEntry {
     "q120_streaming_count_min" -> ((s, dir) => {
       val docs = Tables.documents(s, dir).filter(col("doc_id") < 500)
       val path = exitCleanedTempDir("graft_q120_cms")
-      graft.streaming.StreamingOps.streamShards(s, docs, "doc_id", 3, stageKey = Some(s"q120_streaming_count_min:$dir"), shufflePartitions = Some(2)) { (batch, id) =>
-        graft.streaming.StreamingOps.countMinSink("source", "tok", path)(
+      StreamingOps.streamShards(s, docs, "doc_id", 3, stageKey = Some(s"q120_streaming_count_min:$dir"), shufflePartitions = Some(2)) { (batch, id) =>
+        StreamingOps.sink(EpochState.CountMin("source", "tok"), path)(
           batch.select(col("source"), explode(TextAnalysis.wordsCol).as("tok")), id)
       }
       val exact = docs
         .select(col("source").as("grp"), explode(TextAnalysis.wordsCol).as("item"))
         .groupBy(col("grp"), col("item")).agg(count(lit(1)).as("exact_cnt"))
       graft.functions.Sketches.probeCountMin(
-          graft.streaming.StreamingOps.mergedCountMinCells(s, path), exact)
+          StreamingOps.merged(s, EpochState.CountMin("source", "tok"), path), exact)
         .withColumn("overcount", col("cms_est") - col("exact_cnt"))
         .orderBy("grp", "item")
     }),
@@ -2296,9 +2297,10 @@ object SparkEntry {
     // merged estimate must equal q76's whole-corpus construction.
     "q121_streaming_hll" -> ((s, dir) => {
       val path = exitCleanedTempDir("graft_q121_hll")
-      graft.streaming.StreamingOps.streamShards(s, Tables.events(s, dir), "event_id", 3, stageKey = Some(s"q121_streaming_hll:$dir"))(
-        graft.streaming.StreamingOps.hllSink("event_type", "user_id", path))
-      graft.streaming.StreamingOps.mergedHllDistinct(s, path)
+      val hll = EpochState.Hll("event_type", "user_id")
+      StreamingOps.streamShards(s, Tables.events(s, dir), "event_id", 3, stageKey = Some(s"q121_streaming_hll:$dir"))(
+        StreamingOps.sink(hll, path))
+      graft.functions.Sketches.hllEstimate(StreamingOps.merged(s, hll, path), "grp", hll.p)
         .withColumnRenamed("grp", "event_type")
         .orderBy("event_type")
     }),
@@ -2311,11 +2313,11 @@ object SparkEntry {
     "q214_streaming_heavy_hitters" -> ((s, dir) => {
       val docs = Tables.documents(s, dir)
       val path = exitCleanedTempDir("graft_q214_mg")
-      graft.streaming.StreamingOps.streamShards(s, docs, "doc_id", 3, stageKey = Some(s"q214_streaming_heavy_hitters:$dir"), shufflePartitions = Some(2)) { (batch, id) =>
-        graft.streaming.StreamingOps.mgSink("source", "tok", path, k = 24)(
+      StreamingOps.streamShards(s, docs, "doc_id", 3, stageKey = Some(s"q214_streaming_heavy_hitters:$dir"), shufflePartitions = Some(2)) { (batch, id) =>
+        StreamingOps.sink(EpochState.MisraGries("source", "tok", k = 24), path)(
           batch.select(col("source"), explode(TextAnalysis.wordsCol).as("tok")), id)
       }
-      graft.streaming.StreamingOps.mergedHeavyHittersChecked(
+      StreamingOps.mergedHeavyHittersChecked(
           docs.select(col("source"), explode(TextAnalysis.wordsCol).as("tok")),
           "source", "tok", s, path, k = 24)
         .orderBy("grp", "item")
@@ -2328,10 +2330,10 @@ object SparkEntry {
     "q122_streaming_passage_state" -> ((s, dir) => {
       val docs = Tables.documents(s, dir)
       val path = exitCleanedTempDir("graft_q122_pc")
-      graft.streaming.StreamingOps.streamShards(s, docs, "doc_id", 3, stageKey = Some(s"q122_streaming_passage_state:$dir"), shufflePartitions = Some(2))(
-        graft.streaming.StreamingOps.passageCountsSink(path))
+      StreamingOps.streamShards(s, docs, "doc_id", 3, stageKey = Some(s"q122_streaming_passage_state:$dir"), shufflePartitions = Some(2))(
+        StreamingOps.sink(EpochState.PassageCounts(), path))
       Dedup.passageDedupAgainst(
-          docs, graft.streaming.StreamingOps.mergedPassageCounts(s, path))
+          docs, StreamingOps.merged(s, EpochState.PassageCounts(), path))
         .orderBy("doc_id")
     }),
 
@@ -2447,10 +2449,10 @@ object SparkEntry {
     "q223_streaming_cdc_state" -> ((s, dir) => {
       val docs = Tables.documents(s, dir)
       val path = exitCleanedTempDir("graft_q223_cdc")
-      graft.streaming.StreamingOps.streamShards(s, docs, "doc_id", 3, stageKey = Some(s"q223_streaming_cdc_state:$dir"), shufflePartitions = Some(2))(
-        graft.streaming.StreamingOps.cdcCountsSink(path))
+      StreamingOps.streamShards(s, docs, "doc_id", 3, stageKey = Some(s"q223_streaming_cdc_state:$dir"), shufflePartitions = Some(2))(
+        StreamingOps.sink(EpochState.CdcCounts(), path))
       Dedup.cdcDedupAgainst(
-          docs, graft.streaming.StreamingOps.mergedCdcCounts(s, path))
+          docs, StreamingOps.merged(s, EpochState.CdcCounts(), path))
         .orderBy("doc_id")
     }),
 
@@ -2461,10 +2463,10 @@ object SparkEntry {
     "q231_streaming_exact_substr" -> ((s, dir) => {
       val docs = Tables.documents(s, dir)
       val path = exitCleanedTempDir("graft_q231_es")
-      graft.streaming.StreamingOps.streamShards(s, docs, "doc_id", 3, stageKey = Some(s"q231_streaming_exact_substr:$dir"), shufflePartitions = Some(2))(
-        graft.streaming.StreamingOps.exactSubstrCountsSink(path))
+      StreamingOps.streamShards(s, docs, "doc_id", 3, stageKey = Some(s"q231_streaming_exact_substr:$dir"), shufflePartitions = Some(2))(
+        StreamingOps.sink(EpochState.ExactSubstrCounts(), path))
       Dedup.exactSubstrDedupAgainst(
-          docs, graft.streaming.StreamingOps.mergedExactSubstrCounts(s, path))
+          docs, StreamingOps.merged(s, EpochState.ExactSubstrCounts(), path))
         .orderBy("doc_id")
     }),
 
@@ -2481,15 +2483,15 @@ object SparkEntry {
       val docs = Tables.documents(s, dir)
       val kept = docs.filter(col("doc_id") < 250)
       val path = exitCleanedTempDir("graft_q274_sig")
-      graft.streaming.StreamingOps.streamShards(s, kept, "doc_id", 3,
+      StreamingOps.streamShards(s, kept, "doc_id", 3,
           stageKey = Some(s"q274_streaming_signature_index:$dir"),
           // ISO_r20: 3.28 -> 3.15 s with the micro-batch width pinned
           // to the shard volume instead of inheriting the session's 32.
           shufflePartitions = Some(2))(
-        graft.streaming.StreamingOps.signatureIndexSink(path))
-      graft.streaming.StreamingOps.compactSignatureIndexEpochs(s, path, keepAfter = 1L)
+        StreamingOps.sink(EpochState.SignatureIndex(), path))
+      StreamingOps.compact(s, EpochState.SignatureIndex(), path, keepAfter = 1L)
       Dedup.withNearDupAgainst(kept, docs.filter(col("doc_id") >= 250),
-          keptSignatures = Some(graft.streaming.StreamingOps.mergedSignatureIndex(s, path))) {
+          keptSignatures = Some(StreamingOps.merged(s, EpochState.SignatureIndex(), path))) {
         surv => landed(surv.orderBy("doc_id"))
       }
     }),
@@ -2504,14 +2506,14 @@ object SparkEntry {
       val emb = Tables.embeddings(s, dir)
       val cents = Similarity.placeholderCentroids(emb)
       val path = exitCleanedTempDir("graft_q228_ivf")
-      graft.streaming.StreamingOps.streamShards(s, emb, "vec_id", 3, stageKey = Some(s"q228_streaming_ivf_postings:$dir"), shufflePartitions = Some(2))(
-        graft.streaming.StreamingOps.ivfPostingsSink(cents, path))
+      StreamingOps.streamShards(s, emb, "vec_id", 3, stageKey = Some(s"q228_streaming_ivf_postings:$dir"), shufflePartitions = Some(2))(
+        StreamingOps.sink(EpochState.IvfPostings(cents), path))
       // The gate searches over a COMPACTED state (epochs 0-1 folded into
       // the base partition, epoch 2 live) — compaction must be invisible
       // to the merged view, and this hash-pins it against the same oracle.
-      graft.streaming.StreamingOps.compactIvfEpochs(s, path, keepAfter = 1L)
+      StreamingOps.compact(s, EpochState.IvfPostings(cents), path, keepAfter = 1L)
       Similarity.ivfSearchOverPostings(
-          graft.streaming.StreamingOps.mergedIvfPostings(s, path), emb, cents)
+          StreamingOps.merged(s, EpochState.IvfPostings(cents), path), emb, cents)
         .orderBy("query_id", "rnk")
     }),
 
@@ -2531,14 +2533,14 @@ object SparkEntry {
       // Same frame/shardKey/numBatches as q228 → same staged shards
       // (the stage-dir memoization contract), so the corpus copy is paid
       // once across both gates.
-      graft.streaming.StreamingOps.streamShards(s, emb, "vec_id", 3, stageKey = Some(s"q228_streaming_ivf_postings:$dir"), shufflePartitions = Some(2))(
-        graft.streaming.StreamingOps.ivfPostingsSink(cents, path))
+      StreamingOps.streamShards(s, emb, "vec_id", 3, stageKey = Some(s"q228_streaming_ivf_postings:$dir"), shufflePartitions = Some(2))(
+        StreamingOps.sink(EpochState.IvfPostings(cents), path))
       val dels = exitCleanedTempDir("graft_q242_dels")
-      val tomb = graft.streaming.StreamingOps.tombstoneSink(dels)
+      val tomb = StreamingOps.sink(EpochState.Tombstones(), dels)
       tomb(Seq(17L).toDF("vec_id"), 0L)
       tomb(Seq(23L).toDF("vec_id"), 1L)
       Similarity.ivfSearchOverPostings(
-          graft.streaming.StreamingOps.mergedIvfPostings(s, path, deletesPath = Some(dels)),
+          StreamingOps.merged(s, EpochState.IvfPostings(cents), path, deletesPath = Some(dels)),
           emb, cents)
         .orderBy("query_id", "rnk")
     }),
@@ -2609,12 +2611,12 @@ object SparkEntry {
       val emb = Tables.embeddings(s, dir)
       val cents0 = Similarity.placeholderCentroids(emb)
       val path = exitCleanedTempDir("graft_q258_ivf")
-      graft.streaming.StreamingOps.streamShards(s, emb, "vec_id", 3, stageKey = Some(s"q228_streaming_ivf_postings:$dir"), shufflePartitions = Some(2))(
-        graft.streaming.StreamingOps.ivfPostingsSink(cents0, path))
+      StreamingOps.streamShards(s, emb, "vec_id", 3, stageKey = Some(s"q228_streaming_ivf_postings:$dir"), shufflePartitions = Some(2))(
+        StreamingOps.sink(EpochState.IvfPostings(cents0), path))
       val rebuilt = exitCleanedTempDir("graft_q258_ivf_rebuilt")
-      val cents = graft.streaming.StreamingOps.rebuildIvfState(s, path, rebuilt)
+      val cents = StreamingOps.rebuildIvfState(s, path, rebuilt)
       Similarity.ivfSearchOverPostings(
-          graft.streaming.StreamingOps.mergedIvfPostings(s, rebuilt), emb, cents)
+          StreamingOps.merged(s, EpochState.IvfPostings(cents), rebuilt), emb, cents)
         .orderBy("query_id", "rnk")
     }),
 
@@ -2640,14 +2642,14 @@ object SparkEntry {
     "q260_exact_substr_takedown" -> ((s, dir) => {
       val docs = Tables.documents(s, dir)
       val path = exitCleanedTempDir("graft_q260_es")
-      graft.streaming.StreamingOps.streamShards(s, docs, "doc_id", 3, stageKey = Some(s"q231_streaming_exact_substr:$dir"), shufflePartitions = Some(2))(
-        graft.streaming.StreamingOps.exactSubstrCountsSink(path))
-      graft.streaming.StreamingOps.exactSubstrDeleteSink(path)(
+      StreamingOps.streamShards(s, docs, "doc_id", 3, stageKey = Some(s"q231_streaming_exact_substr:$dir"), shufflePartitions = Some(2))(
+        StreamingOps.sink(EpochState.ExactSubstrCounts(), path))
+      StreamingOps.retractSink(EpochState.ExactSubstrCounts(), path)(
         docs.filter(pmod(col("doc_id"), lit(7L)) === 3L), 3L)
-      graft.streaming.StreamingOps.compactExactSubstrEpochs(s, path, keepAfter = 3L)
+      StreamingOps.compact(s, EpochState.ExactSubstrCounts(), path, keepAfter = 3L)
       Dedup.exactSubstrDedupAgainst(
           docs.filter(pmod(col("doc_id"), lit(7L)) =!= 3L),
-          graft.streaming.StreamingOps.mergedExactSubstrCounts(s, path))
+          StreamingOps.merged(s, EpochState.ExactSubstrCounts(), path))
         .orderBy("doc_id")
     }),
 
@@ -2658,13 +2660,13 @@ object SparkEntry {
     "q261_rolling_takedown" -> ((s, dir) => {
       val shifted = shiftedBoilerplateCorpus(s, dir)
       val path = exitCleanedTempDir("graft_q261_rc")
-      graft.streaming.StreamingOps.streamShards(s, shifted, "doc_id", 3, stageKey = Some(s"q123_streaming_rolling_state:$dir"), shufflePartitions = Some(2))(
-        graft.streaming.StreamingOps.rollingCountsSink(path))
-      graft.streaming.StreamingOps.rollingCountsDeleteSink(path)(
+      StreamingOps.streamShards(s, shifted, "doc_id", 3, stageKey = Some(s"q123_streaming_rolling_state:$dir"), shufflePartitions = Some(2))(
+        StreamingOps.sink(EpochState.RollingCounts(), path))
+      StreamingOps.retractSink(EpochState.RollingCounts(), path)(
         shifted.filter(pmod(col("doc_id"), lit(7L)) === 3L), 3L)
       Dedup.rollingPassageDedupAgainst(
           shifted.filter(pmod(col("doc_id"), lit(7L)) =!= 3L),
-          graft.streaming.StreamingOps.mergedRollingCounts(s, path))
+          StreamingOps.merged(s, EpochState.RollingCounts(), path))
         .orderBy("doc_id")
     }),
 
@@ -2675,13 +2677,13 @@ object SparkEntry {
     "q262_passage_takedown" -> ((s, dir) => {
       val docs = Tables.documents(s, dir)
       val path = exitCleanedTempDir("graft_q262_pc")
-      graft.streaming.StreamingOps.streamShards(s, docs, "doc_id", 3, stageKey = Some(s"q122_streaming_passage_state:$dir"), shufflePartitions = Some(2))(
-        graft.streaming.StreamingOps.passageCountsSink(path))
-      graft.streaming.StreamingOps.passageCountsDeleteSink(path)(
+      StreamingOps.streamShards(s, docs, "doc_id", 3, stageKey = Some(s"q122_streaming_passage_state:$dir"), shufflePartitions = Some(2))(
+        StreamingOps.sink(EpochState.PassageCounts(), path))
+      StreamingOps.retractSink(EpochState.PassageCounts(), path)(
         docs.filter(pmod(col("doc_id"), lit(7L)) === 3L), 3L)
       Dedup.passageDedupAgainst(
           docs.filter(pmod(col("doc_id"), lit(7L)) =!= 3L),
-          graft.streaming.StreamingOps.mergedPassageCounts(s, path))
+          StreamingOps.merged(s, EpochState.PassageCounts(), path))
         .orderBy("doc_id")
     }),
 
@@ -2694,11 +2696,11 @@ object SparkEntry {
     "q268_cms_takedown" -> ((s, dir) => {
       val docs = Tables.documents(s, dir).filter(col("doc_id") < 500)
       val path = exitCleanedTempDir("graft_q268_cms")
-      graft.streaming.StreamingOps.streamShards(s, docs, "doc_id", 3, stageKey = Some(s"q120_streaming_count_min:$dir"), shufflePartitions = Some(2)) { (batch, id) =>
-        graft.streaming.StreamingOps.countMinSink("source", "tok", path)(
+      StreamingOps.streamShards(s, docs, "doc_id", 3, stageKey = Some(s"q120_streaming_count_min:$dir"), shufflePartitions = Some(2)) { (batch, id) =>
+        StreamingOps.sink(EpochState.CountMin("source", "tok"), path)(
           batch.select(col("source"), explode(TextAnalysis.wordsCol).as("tok")), id)
       }
-      graft.streaming.StreamingOps.countMinDeleteSink("source", "tok", path)(
+      StreamingOps.retractSink(EpochState.CountMin("source", "tok"), path)(
         docs.filter(pmod(col("doc_id"), lit(7L)) === 3L)
           .select(col("source"), explode(TextAnalysis.wordsCol).as("tok")), 3L)
       val survivors = docs.filter(pmod(col("doc_id"), lit(7L)) =!= 3L)
@@ -2706,7 +2708,7 @@ object SparkEntry {
         .select(col("source").as("grp"), explode(TextAnalysis.wordsCol).as("item"))
         .groupBy(col("grp"), col("item")).agg(count(lit(1)).as("exact_cnt"))
       graft.functions.Sketches.probeCountMin(
-          graft.streaming.StreamingOps.mergedCountMinCells(s, path), exact)
+          StreamingOps.merged(s, EpochState.CountMin("source", "tok"), path), exact)
         .withColumn("overcount", col("cms_est") - col("exact_cnt"))
         .orderBy("grp", "item")
     }),
@@ -2723,16 +2725,16 @@ object SparkEntry {
     "q267_streaming_video_dups" -> ((s, dir) => landedSwept({
       val media = Multimodal.toAvi(Tables.documents(s, dir)).select("doc_id", "payload")
       val path = exitCleanedTempDir("graft_q267_vfp")
-      graft.streaming.StreamingOps.streamShards(s, media, "doc_id", 3, stageKey = Some(s"q267_streaming_video_dups:$dir"))(
-        graft.streaming.StreamingOps.videoFingerprintsSink(path))
+      StreamingOps.streamShards(s, media, "doc_id", 3, stageKey = Some(s"q267_streaming_video_dups:$dir"))(
+        StreamingOps.sink(EpochState.VideoFingerprints(), path))
       val dels = exitCleanedTempDir("graft_q267_dels")
-      graft.streaming.StreamingOps.tombstoneSink(dels, idCol = "doc_id")(
+      StreamingOps.sink(EpochState.Tombstones("doc_id"), dels)(
         Tables.documents(s, dir)
           .filter(pmod(col("doc_id"), lit(7L)) === 3L).select("doc_id"), 0L)
-      graft.streaming.StreamingOps.compactVideoFingerprintEpochs(
-        s, path, keepAfter = 1L, deletesPath = Some(dels))
-      val fp = graft.streaming.StreamingOps.mergedVideoFingerprints(
-        s, path, deletesPath = Some(dels))
+      StreamingOps.compact(
+        s, EpochState.VideoFingerprints(), path, keepAfter = 1L, deletesPath = Some(dels))
+      val fp = StreamingOps.merged(
+        s, EpochState.VideoFingerprints(), path, deletesPath = Some(dels))
       val byFp = Window.partitionBy("video_fp")
       val pairs = fp
         .withColumn("rep", min(col("doc_id")).over(byFp))
@@ -2747,13 +2749,13 @@ object SparkEntry {
     "q263_cdc_takedown" -> ((s, dir) => {
       val docs = Tables.documents(s, dir)
       val path = exitCleanedTempDir("graft_q263_cdc")
-      graft.streaming.StreamingOps.streamShards(s, docs, "doc_id", 3, stageKey = Some(s"q223_streaming_cdc_state:$dir"), shufflePartitions = Some(2))(
-        graft.streaming.StreamingOps.cdcCountsSink(path))
-      graft.streaming.StreamingOps.cdcCountsDeleteSink(path)(
+      StreamingOps.streamShards(s, docs, "doc_id", 3, stageKey = Some(s"q223_streaming_cdc_state:$dir"), shufflePartitions = Some(2))(
+        StreamingOps.sink(EpochState.CdcCounts(), path))
+      StreamingOps.retractSink(EpochState.CdcCounts(), path)(
         docs.filter(pmod(col("doc_id"), lit(7L)) === 3L), 3L)
       Dedup.cdcDedupAgainst(
           docs.filter(pmod(col("doc_id"), lit(7L)) =!= 3L),
-          graft.streaming.StreamingOps.mergedCdcCounts(s, path))
+          StreamingOps.merged(s, EpochState.CdcCounts(), path))
         .orderBy("doc_id")
     }),
 
@@ -2768,17 +2770,17 @@ object SparkEntry {
       val emb = Tables.embeddings(s, dir)
       val cents0 = Similarity.placeholderCentroids(emb)
       val path = exitCleanedTempDir("graft_q264_ivf")
-      graft.streaming.StreamingOps.streamShards(s, emb, "vec_id", 3, stageKey = Some(s"q228_streaming_ivf_postings:$dir"), shufflePartitions = Some(2))(
-        graft.streaming.StreamingOps.ivfPostingsSink(cents0, path))
+      StreamingOps.streamShards(s, emb, "vec_id", 3, stageKey = Some(s"q228_streaming_ivf_postings:$dir"), shufflePartitions = Some(2))(
+        StreamingOps.sink(EpochState.IvfPostings(cents0), path))
       val dels = exitCleanedTempDir("graft_q264_dels")
-      val tomb = graft.streaming.StreamingOps.tombstoneSink(dels)
+      val tomb = StreamingOps.sink(EpochState.Tombstones(), dels)
       tomb(Seq(17L).toDF("vec_id"), 0L)
       tomb(Seq(23L).toDF("vec_id"), 1L)
       val rebuilt = exitCleanedTempDir("graft_q264_ivf_rebuilt")
-      val cents = graft.streaming.StreamingOps.rebuildIvfState(
+      val cents = StreamingOps.rebuildIvfState(
         s, path, rebuilt, deletesPath = Some(dels))
       Similarity.ivfSearchOverPostings(
-          graft.streaming.StreamingOps.mergedIvfPostings(s, rebuilt), emb, cents)
+          StreamingOps.merged(s, EpochState.IvfPostings(cents), rebuilt), emb, cents)
         .orderBy("query_id", "rnk")
     }),
 
@@ -3161,13 +3163,13 @@ object SparkEntry {
         .withColumn("slice", expr("((unix_micros(ts) - lo) * 3) div (hi - lo + 1)"))
         .select(col("user_id"), col("ts"), col("slice"))
       val outDir = exitCleanedTempDir("graft_sess_out")
-      graft.streaming.StreamingOps.streamShardsThrough(
+      StreamingOps.streamShardsThrough(
           s, sliced, "slice", 3, outputMode = "update",
           stageKey = Some(s"q157_streaming_sessions:$dir"),
           shufflePartitions = Some(8))(
-          st => graft.streaming.StreamingOps
+          st => StreamingOps
             .sessionize(s, st, watermarkDelay = "3650 days").toDF())(
-          graft.streaming.StreamingOps.idempotentParquetSink(outDir))
+          StreamingOps.sink(EpochState.Rows, outDir))
       val ups = s.read.parquet(outDir)
       // A session's updates only grow: the max-n_events row is its final
       // state (timeout re-emits are exact duplicates; the tie-break just
@@ -3346,10 +3348,10 @@ object SparkEntry {
     "q123_streaming_rolling_state" -> ((s, dir) => {
       val shifted = shiftedBoilerplateCorpus(s, dir)
       val path = exitCleanedTempDir("graft_q123_rc")
-      graft.streaming.StreamingOps.streamShards(s, shifted, "doc_id", 3, stageKey = Some(s"q123_streaming_rolling_state:$dir"), shufflePartitions = Some(2))(
-        graft.streaming.StreamingOps.rollingCountsSink(path))
+      StreamingOps.streamShards(s, shifted, "doc_id", 3, stageKey = Some(s"q123_streaming_rolling_state:$dir"), shufflePartitions = Some(2))(
+        StreamingOps.sink(EpochState.RollingCounts(), path))
       Dedup.rollingPassageDedupAgainst(
-          shifted, graft.streaming.StreamingOps.mergedRollingCounts(s, path))
+          shifted, StreamingOps.merged(s, EpochState.RollingCounts(), path))
         .orderBy("doc_id")
     }),
 

@@ -65,7 +65,7 @@ object Sketches {
   }
 
   /** The estimate step over a minima table (built or merged). */
-  def kmvEstimate(minima: DataFrame, groupCol: String, k: Int): DataFrame =
+  private def kmvEstimate(minima: DataFrame, groupCol: String, k: Int): DataFrame =
     minima
       .groupBy(col(groupCol))
       .agg(max(col("h")).as("kth"), count(lit(1)).as("k_actual"))

@@ -96,7 +96,7 @@ object TextAnalysis {
     */
   // Guard inside shinglesOf: Spark's sequence(0, n) generates a DESCENDING
   // sequence when n < 0, so short documents need an explicit empty array.
-  def shinglesCol(k: Int): Column = shinglesOf(wordsCol, k)
+  private def shinglesCol(k: Int): Column = shinglesOf(wordsCol, k)
 
   /** One row per distinct (doc_id, shingle). The words array is projected
     * once (CSE across the k slices per shingle), then shingled.
@@ -107,7 +107,7 @@ object TextAnalysis {
       .select(col("doc_id"), explode(array_distinct(shinglesOf(col("words"), k))).as("sh"))
 
   /** k-shingles of a pre-computed words array column. */
-  def shinglesOf(words: Column, k: Int): Column =
+  private def shinglesOf(words: Column, k: Int): Column =
     when(
       size(words) >= k,
       transform(
@@ -398,7 +398,7 @@ object TextAnalysis {
     * [[graft.expressions.BpeEncode]] replay) applies unchanged.
     * Narrow: one regexp extract + posexplode + a codegen'd remap.
     */
-  def bytePretokenize(docs: DataFrame): DataFrame = {
+  private def bytePretokenize(docs: DataFrame): DataFrame = {
     val bridge = org.apache.spark.sql.graft.bridge
     spread(docs)
       .select(col("doc_id"),
@@ -640,7 +640,7 @@ object TextAnalysis {
   /** Final per-piece Viterbi costs for a trained unigram vocabulary —
     * what [[unigramEncodeWords]] replays: `bits(Σcnt) − bits(cnt)`.
     */
-  def unigramCosts(vocab: Seq[(String, Long)]): Seq[(String, Long)] = {
+  private def unigramCosts(vocab: Seq[(String, Long)]): Seq[(String, Long)] = {
     val total = vocab.map(_._2).sum
     vocab.map { case (p, c) => (p, bitsOf(total) - bitsOf(c)) }
   }

@@ -111,7 +111,7 @@ object Curation {
     * only literal character classes, which Java and RE2 interpret
     * identically. Narrow — no shuffle.
     */
-  def normalizedTextCol(c: Column): Column =
+  private def normalizedTextCol(c: Column): Column =
     trim(regexp_replace(regexp_replace(lower(c), "[^a-z0-9 ]", " "), " +", " "))
 
   /** Incremental cross-corpus dedup: drop incoming documents whose
@@ -131,7 +131,7 @@ object Curation {
     * of re-hashing the full kept text per round — the exact-dedup twin
     * of [[Dedup.signatureDigestIndex]]. 16 bytes per kept document.
     */
-  def contentHashIndex(reference: DataFrame, dedupe: Boolean = true): DataFrame = {
+  private def contentHashIndex(reference: DataFrame, dedupe: Boolean = true): DataFrame = {
     val hashes = TextAnalysis.spread(reference)
       .select(md5(normalizedTextCol(col("text"))).as("content_hash"))
     // `dedupe = false` skips the distinct's shuffle — correct wherever
@@ -184,7 +184,7 @@ object Curation {
     * corpus never re-hashes (only `incoming` is scanned). Duplicate
     * digests in `referenceHashes` are tolerated (anti-join semantics).
     */
-  def dedupAgainstHashes(incoming: DataFrame, referenceHashes: DataFrame): DataFrame =
+  private def dedupAgainstHashes(incoming: DataFrame, referenceHashes: DataFrame): DataFrame =
     TextAnalysis.spread(incoming)
       .withColumn("content_hash", md5(normalizedTextCol(col("text"))))
       .join(referenceHashes.select("content_hash"), Seq("content_hash"), "left_anti")

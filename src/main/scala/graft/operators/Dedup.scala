@@ -69,7 +69,7 @@ object Dedup {
     * doc, 8-byte longs), and what [[nearDupAgainst]]'s `keptSignatures`
     * expects.
     */
-  def signatureArrays(docs: DataFrame, k: Int = 3, numHashes: Int = 8): DataFrame = {
+  private def signatureArrays(docs: DataFrame, k: Int = 3, numHashes: Int = 8): DataFrame = {
     val bridge = org.apache.spark.sql.graft.bridge
     TextAnalysis.spread(docs)
       .select(
@@ -558,7 +558,7 @@ object Dedup {
     * corpus — the index is per-document, so unlike the graph-ANN edge
     * state there is no cross-document selection to repair and no slack
     * bound to respect. `tombstones` carries `doc_id` (extra columns
-    * ignored) — a [[graft.streaming.StreamingOps.mergedTombstones]]
+    * ignored) — a merged [[graft.streaming.EpochState.Tombstones]]
     * frame with its `vec_id` renamed.
     */
   def signatureIndexWithout(index: DataFrame, tombstones: DataFrame): DataFrame =
@@ -1475,7 +1475,7 @@ object Dedup {
   /** [[exactSubstrDedup]] plus the release handle for the digest cache
     * the call persists — the bracket form long-lived sessions want
     * (call the second element once the returned frame is consumed; the
-    * [[graft.streaming.StreamingOps.corpusAdmissionSinkOwned]]
+    * [[graft.streaming.StreamingOps.corpusAdmissionSink]]
     * convention). The plain wrapper leaves the cache to LRU eviction,
     * acceptable for bounded runs (bench/verify clear caches per block).
     *
@@ -1503,7 +1503,7 @@ object Dedup {
     * OCCURRENCE counts (not document frequencies — self-repeats must
     * count, see [[exactSubstrDedup]]). Additive over doc-disjoint
     * slices, so per-epoch streaming state merges by digest-wise sum
-    * ([[graft.streaming.StreamingOps.exactSubstrCountsSink]]).
+    * ([[graft.streaming.EpochState.ExactSubstrCounts]]).
     */
   def rollingOccurrenceCounts(docs: DataFrame, windowLen: Int = 8): DataFrame =
     occurrenceCountsOf(rollingDigests(docs, windowLen))

@@ -401,7 +401,7 @@ object Similarity {
   /** One-row broadcastable centroid frame (the [[centroidArray]] shape)
     * from driver-side centroid vectors — k × dim longs, metadata-sized.
     */
-  def centroidFrame(spark: SparkSession, cents: Seq[(Long, Seq[Long])]): DataFrame = {
+  private def centroidFrame(spark: SparkSession, cents: Seq[(Long, Seq[Long])]): DataFrame = {
     val structs = cents.sortBy(_._1).map { case (id, v) =>
       struct(
         lit(id).as("cent_id"),

@@ -153,22 +153,214 @@ object StreamingOps {
       .drop(keys.map(r(_)).head, keys.map(r(_)).tail: _*)
   }
 
-  /** Exactly-once parquet sink for `writeStream.foreachBatch`: each
-    * micro-batch lands in a `batch_id=<epoch>` subdirectory with
-    * overwrite semantics, so a batch REPLAYED after a failure (Structured
-    * Streaming's at-least-once foreachBatch contract) rewrites its own
-    * directory instead of appending duplicates — idempotence comes from
-    * the deterministic (path, batchId) mapping, not a transaction log.
-    * Readers see the union via partition discovery on `basePath` and can
-    * prune by `batch_id`.
+  // --- Per-epoch state: one table of kinds, four generic operations ---
+
+  /** Replay-idempotent `foreachBatch` sink for a state kind: each
+    * micro-batch's state (the kind's per-batch build) lands in its own
+    * `batch_id=<epoch>` directory with overwrite semantics, so a batch
+    * REPLAYED after a failure (Structured Streaming's at-least-once
+    * foreachBatch contract) rewrites its own directory instead of
+    * appending duplicates — idempotence comes from the deterministic
+    * (path, batchId) mapping, not a transaction log. The live state is
+    * the kind's merge over all epochs at READ time ([[merged]]), and
+    * [[compact]] folds old epochs with the same merge.
+    * [[EpochState.Rows]] lands each batch as-is.
     *
     * {{{
-    * stream.writeStream.foreachBatch(StreamingOps.idempotentParquetSink(path)).start()
+    * val cms = EpochState.CountMin("grp", "item")
+    * tokens.writeStream.foreachBatch(StreamingOps.sink(cms, path)).start()
+    * // any time later, on any session:
+    * val est = Sketches.probeCountMin(StreamingOps.merged(spark, cms, path), probes)
     * }}}
     */
-  def idempotentParquetSink(basePath: String): (DataFrame, Long) => Unit =
-    (batch: DataFrame, batchId: Long) =>
-      batch.write.mode("overwrite").parquet(s"$basePath/batch_id=$batchId")
+  def sink(kind: EpochState, basePath: String): (DataFrame, Long) => Unit = {
+    val e = entry(kind)
+    (batch: DataFrame, batchId: Long) => land(e.build(batch), basePath, batchId)
+  }
+
+  /** TAKEDOWN (subtraction) epochs for an additive kind: the epoch lands
+    * the removed rows' state with its count NEGATED, in the same
+    * directory and layout, so the merge — the plain key-wise sum —
+    * cancels their contribution exactly and [[merged]] equals the build
+    * over the surviving input. Contract: feed a retraction epoch the
+    * SAME rows its add epochs ingested, once each; over-deletion drives
+    * counts negative, which the merge's `count > 0` filter clamps rather
+    * than propagates. Replays overwrite like any epoch, and add and
+    * retraction epochs share one `batch_id=` namespace.
+    *
+    * Refused with an IllegalArgumentException when the sink is built for
+    * any other kind: per-document kinds delete by tombstones (land the
+    * ids with `sink(EpochState.Tombstones(idCol), deletesPath)` and pass
+    * `deletesPath` to [[merged]] and [[compact]]), and the rest have no
+    * inverse — their takedown is a rebuild from the surviving input.
+    */
+  def retractSink(kind: EpochState, basePath: String): (DataFrame, Long) => Unit =
+    entry(kind) match {
+      case Entry(build, cols, _, Negate(n)) =>
+        (batch: DataFrame, batchId: Long) =>
+          land(build(batch).select(cols.map(c => if (c == n) (-col(c)).as(c) else col(c)): _*),
+            basePath, batchId)
+      case Entry(_, _, _, Tombstoned(_)) =>
+        throw new IllegalArgumentException(s"${kind.productPrefix} is per-document state: " +
+          "delete its rows with an EpochState.Tombstones sink and read with deletesPath")
+      case _ =>
+        throw new IllegalArgumentException(
+          s"${kind.productPrefix} state has no inverse: rebuild it from the surviving input")
+    }
+
+  /** The live state of a kind's directory: the kind's merge over every
+    * live epoch (compaction-aware — see [[compactedStateView]]). For an
+    * additive kind the merge's `count > 0` filter is the read half of
+    * [[retractSink]]'s contract: a key whose every count came from
+    * removed rows VANISHES, exactly as in the build over the survivors.
+    * `deletesPath` names an [[EpochState.Tombstones]] directory (never
+    * the state's own — its partition discovery owns the root): a
+    * per-document kind anti-joins the removed ids at read time, which
+    * makes replays, double deletes and deletes of never-ingested ids
+    * no-ops; the other kinds refuse it.
+    */
+  def merged(
+      spark: SparkSession,
+      kind: EpochState,
+      basePath: String,
+      deletesPath: Option[String] = None): DataFrame = {
+    val e = entry(kind)
+    e.merge(withoutDeleted(spark, kind, compactedStateView(spark, basePath, e.cols), deletesPath))
+  }
+
+  /** Fold every epoch `≤ keepAfter` of a kind's directory into one base
+    * partition with the kind's merge — the function [[merged]] applies,
+    * so the merged view is unchanged ([[foldToBase]] has the layout
+    * and crash-safety contract). With `deletesPath` the fold ALSO applies
+    * the tombstones PHYSICALLY: removed ids leave the disk, not just the
+    * view; keep reading with the same `deletesPath`, since live epochs
+    * above the watermark still carry their rows. Returns the number of
+    * directories removed.
+    */
+  def compact(
+      spark: SparkSession,
+      kind: EpochState,
+      basePath: String,
+      keepAfter: Long,
+      deletesPath: Option[String] = None): Int = {
+    val e = entry(kind)
+    foldToBase(spark, basePath, keepAfter, e.cols,
+      df => e.merge(withoutDeleted(spark, kind, df, deletesPath)))
+  }
+
+  /** How a kind's state takes a deletion. */
+  private sealed trait Delete
+  /** Additive state: a retraction epoch lands the build with `count` negated. */
+  private final case class Negate(count: String) extends Delete
+  /** Per-document state: tombstoned ids anti-join out on each of `ids`. */
+  private final case class Tombstoned(ids: Seq[String]) extends Delete
+  private case object NoInverse extends Delete
+
+  /** One row of the state table: the per-batch build, the state columns
+    * (empty = whole rows), the merge that reads and compaction both
+    * apply, and the delete rule.
+    */
+  private final case class Entry(
+      build: DataFrame => DataFrame,
+      cols: Seq[String],
+      merge: DataFrame => DataFrame,
+      delete: Delete)
+
+  private def additive(build: DataFrame => DataFrame, keys: Seq[String], count: String): Entry =
+    Entry(build, keys :+ count,
+      _.groupBy(keys.map(col): _*).agg(sum(col(count)).as(count)).filter(col(count) > 0L),
+      Negate(count))
+
+  private def perDocument(build: DataFrame => DataFrame, cols: Seq[String], ids: String*): Entry =
+    Entry(build, cols, identity, Tombstoned(ids))
+
+  /** The state table. */
+  private def entry(kind: EpochState): Entry = {
+    import EpochState._
+    import graft.functions.Sketches
+    import graft.operators.{Dedup, Multimodal, Similarity}
+    kind match {
+      // Cells are cell-wise additive; a cell that reads absent probes as 0, as in the batch sketch.
+      case CountMin(g, i, d, w) =>
+        additive(Sketches.countMinCells(_, g, i, d, w), Seq("grp", "row", "bucket"), "c")
+      // Doc frequencies sum because micro-batches are doc-disjoint.
+      case PassageCounts(len) => additive(Dedup.passageDigestCounts(_, len), Seq("dig"), "df")
+      // Dense windows: catches boilerplate at any token offset, unlike the aligned grid.
+      case RollingCounts(len) => additive(Dedup.rollingDigestCounts(_, len), Seq("dig"), "df")
+      // Content-defined chunks: a shared span strips whole at any byte offset.
+      case CdcCounts(m) => additive(Dedup.chunkDigestCounts(_, m), Seq("dig"), "df")
+      // Occurrences, not doc frequencies: a removed doc's self-repeats subtract too.
+      case ExactSubstrCounts(len) =>
+        additive(Dedup.rollingOccurrenceCounts(_, len), Seq("dig"), "occ")
+      // Only 16-byte digests land; the frames die inside the epoch's decode scan.
+      case VideoFingerprints(every) =>
+        perDocument(b => Multimodal.videoFingerprints(Multimodal.sampleVideoFrames(
+            Multimodal.decodeAviFrames(b.sparkSession, b), every)),
+          Seq("doc_id", "n_sampled", "video_fp"), "doc_id")
+      // Text is shingled once, at admission; nearDupAgainst reads the merged index.
+      case SignatureIndex(k, n) =>
+        perDocument(Dedup.signatureDigestIndex(_, k, n), Seq("doc_id", "sigs", "shl", "n_sh"),
+          "doc_id")
+      // The quantizer is frozen: re-training per batch would invalidate prior postings.
+      case IvfPostings(cents) =>
+        perDocument(b => {
+            require(cents.nonEmpty, "an IVF postings sink needs the frozen quantizer")
+            Similarity.ivfAssignWith(b, cents)
+          }, Seq("vec_id", "qe", "n2", "cell"), "vec_id")
+      // HLL registers max-merge, so there is no inverse (and a cross-epoch duplicate counts once).
+      case Hll(g, v, p) =>
+        Entry(Sketches.hllRegisters(_, g, v, p).withColumnRenamed(g, "grp"),
+          Seq("grp", "reg", "r"), df => Sketches.mergeHllRegisters("grp", Seq(df)), NoInverse)
+      // Misra–Gries trims on merge, so there is no inverse; the item-NULL row sums the group total.
+      case MisraGries(g, i, k) =>
+        Entry(b => {
+            val sk = Sketches.heavyHitters(b, g, i, k)
+            sk.select(col("grp"), explode(col("mg")).as(Seq("item", "est")))
+              .unionByName(
+                sk.select(col("grp"), lit(null).cast("string").as("item"), col("n").as("est")))
+          }, Seq("grp", "item", "est"), mergeMgRows(_, k), NoInverse)
+      // Deletion by anti-join is idempotent, so tombstones are permanent until rewritten.
+      case Tombstones(idCol) =>
+        Entry(_.select(col(idCol).cast("long").as("vec_id")).distinct(), Seq("vec_id"),
+          _.distinct(), NoInverse)
+      // Admission already made the epochs disjoint, so whole rows concatenate.
+      case Rows => Entry(identity, Nil, identity, NoInverse)
+      // Per-src top-K is a semilattice under (dp DESC, nb), so the sink-degree prune folds.
+      case GraphAnnCand(degree) =>
+        val prune = (df: DataFrame) => Similarity.topDegreeCandidates(df.distinct(), degree)
+        Entry(prune, Seq("src", "nb", "dp"), prune, Tombstoned(Seq("src", "nb")))
+      case GraphAnnFar =>
+        Entry(_.distinct(), Seq("src", "nb"), _.distinct(), Tombstoned(Seq("src", "nb")))
+      // Graph-ANN vecs fold last as the replay authority (see compactGraphAnnEpochs).
+      case GraphAnnVecs => perDocument(identity, Seq("vec_id", "qe", "bucket"), "vec_id")
+    }
+  }
+
+  private def land(state: DataFrame, basePath: String, batchId: Long): Unit =
+    state.write.mode("overwrite").parquet(s"$basePath/batch_id=$batchId")
+
+  private def withoutDeleted(
+      spark: SparkSession,
+      kind: EpochState,
+      df: DataFrame,
+      deletesPath: Option[String]): DataFrame = entry(kind).delete match {
+    case Tombstoned(ids) => antiTombstone(spark, df, deletesPath, ids: _*)
+    case _ =>
+      require(deletesPath.isEmpty,
+        s"${kind.productPrefix} state has no tombstone rule; deletesPath does not apply")
+      df
+  }
+
+  private def antiTombstone(
+      spark: SparkSession,
+      df: DataFrame,
+      deletesPath: Option[String],
+      idCols: String*): DataFrame =
+    deletesPath.fold(df) { p =>
+      val dead = merged(spark, EpochState.Tombstones(), p)
+      idCols.foldLeft(df)((d, c) =>
+        d.join(dead.select(col("vec_id").as(c)), Seq(c), "left_anti"))
+    }
 
   /** End-to-end incremental curation: a `foreachBatch` sink that admits
     * each micro-batch of candidate documents into a continuously-growing
@@ -188,45 +380,27 @@ object StreamingOps {
     * batch-computed sequential admission (pinned by spec).
     *
     * The kept REPRESENTATION is incremental: the closure carries ONE
-    * persisted combined index per delta — signatures, shingle digests
-    * and content hash from a single text scan
-    * ([[graft.operators.Curation.admissionIndex]]) — across
-    * micro-batches, appending each batch's admitted delta (read back
-    * from the batch's own committed directory: replay authority AND
-    * lineage truncation — see the sink body). Kept TEXT is
-    * re-read only when the carried index cannot serve the batch —
-    * first batch of a driver lifetime, or a non-consecutive/replayed
-    * epoch after restart, where the index rebuilds from `keptInit` +
-    * the sink's `batch_id < b` partitions. This is the 100 TB shape:
-    * steady-state per-batch cost is the candidate batch's own
-    * admission shuffles, never a kept-corpus rescan. A production
-    * stream admitting unboundedly many epochs should rebase the index
-    * at compaction points ([[compactAdmissionEpochs]]) so the carried
-    * union stays shallow.
+    * persisted combined index per delta (signatures, shingle digests
+    * and content hash from a single text scan —
+    * [[graft.operators.Curation.admissionIndex]]), appending each
+    * batch's admitted delta read back from its committed directory
+    * (replay authority AND lineage truncation — see the sink body).
+    * Kept TEXT is re-read only when the carried index cannot serve the
+    * batch (first batch of a driver lifetime, or a replayed epoch after
+    * restart), so steady-state per-batch cost is the candidate batch's
+    * own admission shuffles, never a kept-corpus rescan. Compaction
+    * points (`compact(spark, EpochState.Rows, path, w)`) rebase it.
     *
-    * The carried indexes are session caches owned by the closure; use
-    * [[corpusAdmissionSinkOwned]] to get the paired release handle (the
-    * plain overload leaves them to LRU eviction, acceptable for
-    * bounded runs).
+    * Returns the sink and the release handle for the carried index
+    * caches — call the second element after the stream stops.
     *
     * {{{
-    * candidates.writeStream
-    *   .foreachBatch(StreamingOps.corpusAdmissionSink(spark, kept, path))
-    *   .start()
+    * val (sink, release) = StreamingOps.corpusAdmissionSink(spark, kept, path)
+    * try candidates.writeStream.foreachBatch(sink).start().awaitTermination()
+    * finally release()
     * }}}
     */
   def corpusAdmissionSink(
-      spark: SparkSession,
-      keptInit: DataFrame,
-      basePath: String,
-      minJaccard: Double = 0.75): (DataFrame, Long) => Unit =
-    corpusAdmissionSinkOwned(spark, keptInit, basePath, minJaccard)._1
-
-  /** [[corpusAdmissionSink]] plus the release handle for the carried
-    * kept-index caches — call the second element after the stream
-    * stops (the bracket form long-lived drivers want).
-    */
-  def corpusAdmissionSinkOwned(
       spark: SparkSession,
       keptInit: DataFrame,
       basePath: String,
@@ -286,7 +460,7 @@ object StreamingOps {
             keptInit, batch, minJaccard,
             keptSignatures = state.sigs, keptHashes = state.hashes,
             snapshotBounded = true) { admitted =>
-          admitted.write.mode("overwrite").parquet(s"$basePath/batch_id=$batchId")
+          land(admitted, basePath, batchId)
         }
         // Extend the carried index with this batch's committed output —
         // read back from the sink. The read-back is load-bearing TWICE:
@@ -365,7 +539,7 @@ object StreamingOps {
     val sinkDir = java.nio.file.Files.createTempDirectory("graft_admit_sink").toString
     // Shard-sized micro-batches: width the admission shuffles to the
     // batch, not the cluster default (AQE cannot do it — see the sink).
-    val (sink, release) = corpusAdmissionSinkOwned(
+    val (sink, release) = corpusAdmissionSink(
       spark, keptInit, sinkDir, minJaccard, batchShufflePartitions = Some(8))
     try streamShards(spark, candidates, "doc_id", numBatches, stageKey)(sink)
     finally release()
@@ -489,7 +663,7 @@ object StreamingOps {
     // width must be sized STATICALLY for the trigger volume — a shard-
     // sized batch at a cluster-wide partition count pays pure task and
     // state-store-provider overhead on every exchange of every batch
-    // (the corpusAdmissionSinkOwned lesson, applied at the stream level:
+    // (the corpusAdmissionSink lesson, applied at the stream level:
     // the conf at query start is what the cloned session inherits).
     // SCOPE CAVEAT (ADVICE r16): the override narrows the SHARED
     // session conf for the stream's duration — a concurrent batch job
@@ -542,406 +716,10 @@ object StreamingOps {
     f.delete(): Unit
   }
 
-  /** Replay-idempotent streaming Count-Min maintenance: each micro-batch's
-    * cell table ([[graft.functions.Sketches.countMinCells]]) lands in its
-    * own `batch_id=<epoch>` directory — a batch REPLAYED under
-    * foreachBatch's at-least-once contract overwrites its own cells
-    * instead of double-counting them — and the live sketch is the
-    * cell-wise merge over all epochs at READ time
-    * ([[mergedCountMinCells]]). CMS cells are summable, so the merged
-    * view equals the sketch of every event ingested exactly once, with
-    * no transaction log and bounded per-epoch state
-    * (groups × depth × width cells).
-    *
-    * {{{
-    * tokens.writeStream
-    *   .foreachBatch(StreamingOps.countMinSink("grp", "item", path))
-    *   .start()
-    * // any time later, on any session:
-    * val est = Sketches.probeCountMin(
-    *   StreamingOps.mergedCountMinCells(spark, path), probes)
-    * }}}
-    */
-  def countMinSink(
-      groupCol: String,
-      itemCol: String,
-      basePath: String,
-      depth: Int = 4,
-      width: Int = 64): (DataFrame, Long) => Unit =
-    (batch: DataFrame, batchId: Long) =>
-      graft.functions.Sketches.countMinCells(batch, groupCol, itemCol, depth, width)
-        .write.mode("overwrite").parquet(s"$basePath/batch_id=$batchId")
 
-  /** The live sketch over a [[countMinSink]] directory: cell-wise sum of
-    * every epoch's cells. The post-sum `c > 0` filter is the CMS arm of
-    * the subtraction-epoch contract ([[countMinDeleteSink]]): a cell
-    * whose every count came from since-removed docs reads as ABSENT,
-    * which under [[graft.functions.Sketches.probeCountMin]]'s
-    * dense-matrix semantics (absent = 0) makes the merged sketch
-    * cell-equivalent to the batch sketch over the survivors; with no
-    * delete epochs the filter is a no-op (cells sum to ≥ 1).
-    */
-  def mergedCountMinCells(spark: SparkSession, basePath: String): DataFrame =
-    graft.functions.Sketches.mergeCountMinCells(Seq(
-      compactedStateView(spark, basePath, Seq("grp", "row", "bucket", "c"))))
-      .filter(col("c") > 0L)
-
-  /** [[passageCountsDeleteSink]]'s CMS arm — Count-Min cells are
-    * cell-wise ADDITIVE, so a delete epoch landing the removed rows'
-    * cells NEGATED cancels their contribution exactly under the plain
-    * cell sum (same exactly-once delete contract). This is the ONLY
-    * sketch family with an exact inverse: HLL registers are max-merged
-    * and Misra–Gries summaries trim — neither is invertible, so their
-    * takedown path is a rebuild from the surviving source, not a
-    * subtraction epoch (documented here so nobody reaches for one).
-    */
-  def countMinDeleteSink(
-      groupCol: String,
-      itemCol: String,
-      basePath: String,
-      depth: Int = 4,
-      width: Int = 64): (DataFrame, Long) => Unit =
-    (batch: DataFrame, batchId: Long) =>
-      graft.functions.Sketches.countMinCells(batch, groupCol, itemCol, depth, width)
-        .select(col("grp"), col("row"), col("bucket"), (-col("c")).as("c"))
-        .write.mode("overwrite").parquet(s"$basePath/batch_id=$batchId")
-
-  /** Streaming HLL distinct-count maintenance, same epoch layout as
-    * [[countMinSink]]. HLL is even friendlier to at-least-once delivery
-    * than CMS: register merge is an idempotent MAX, so replays are
-    * harmless BOTH through the per-epoch overwrite and through the merge
-    * itself — an event delivered in two different epochs (not just a
-    * replayed epoch) still counts once.
-    */
-  def hllSink(
-      groupCol: String,
-      valueCol: String,
-      basePath: String,
-      p: Int = 6): (DataFrame, Long) => Unit =
-    (batch: DataFrame, batchId: Long) =>
-      graft.functions.Sketches.hllRegisters(batch, groupCol, valueCol, p)
-        .withColumnRenamed(groupCol, "grp")
-        .write.mode("overwrite").parquet(s"$basePath/batch_id=$batchId")
-
-  /** Live per-group distinct-count estimates over a [[hllSink]] directory. */
-  def mergedHllDistinct(spark: SparkSession, basePath: String, p: Int = 6): DataFrame =
-    graft.functions.Sketches.hllEstimate(
-      graft.functions.Sketches.mergeHllRegisters("grp", Seq(
-        compactedStateView(spark, basePath, Seq("grp", "reg", "r")))),
-      "grp", p)
-
-  /** Streaming boilerplate-state maintenance: each micro-batch's passage
-    * digest-frequency table ([[graft.operators.Dedup.passageDigestCounts]])
-    * lands per-epoch (same replay-idempotent layout as [[countMinSink]]);
-    * the global state is the digest-wise sum at read time. Micro-batches
-    * are doc-disjoint by construction — exactly
-    * [[graft.operators.Dedup.mergePassageCounts]]'s precondition — so
-    * `Dedup.passageDedupAgainst(todaysBatch, mergedPassageCounts(...))`
-    * cleans today's documents against every passage ever ingested
-    * without re-chunking yesterday's corpus.
-    */
-  def passageCountsSink(
-      basePath: String,
-      passageLen: Int = 8): (DataFrame, Long) => Unit =
-    (batch: DataFrame, batchId: Long) =>
-      graft.operators.Dedup.passageDigestCounts(batch, passageLen)
-        .write.mode("overwrite").parquet(s"$basePath/batch_id=$batchId")
-
-  /** The merged global digest-frequency state over a
-    * [[passageCountsSink]] directory. The post-sum `df > 0` filter is
-    * the read half of the SUBTRACTION-epoch contract
-    * ([[passageCountsDeleteSink]]): a digest whose every occurrence
-    * came from since-removed docs must VANISH from the state, exactly
-    * as in the batch build over the survivors; with no delete epochs
-    * the filter is a no-op (add epochs only ever sum to ≥ 1).
-    */
-  def mergedPassageCounts(spark: SparkSession, basePath: String): DataFrame =
-    graft.operators.Dedup.mergePassageCounts(Seq(
-      compactedStateView(spark, basePath, Seq("dig", "df"))))
-      .filter(col("df") > 0L)
-
-  /** TAKEDOWN (subtraction) epochs for the additive occurrence/frequency
-    * states — the retraction path the tombstone family
-    * ([[tombstoneSink]]) cannot provide here, because these states keep
-    * no per-doc rows to anti-join: a removed document's contribution is
-    * already summed into digest counts. Counts are ADDITIVE, so the
-    * inverse is exact: a delete epoch lands the removed docs' digest
-    * counts NEGATED in the same directory and layout, the merge stays
-    * the plain digest-wise sum, and a delete epoch that mirrors docs
-    * ingested exactly once cancels their contribution exactly — the
-    * merged state then equals the batch build over the surviving corpus
-    * (the q260/q261/q262 gates). Contract: feed a delete epoch the SAME
-    * doc frames (same `doc_id`+`text`) its add epochs ingested, once
-    * each — over-deletion drives counts negative, which read
-    * ([[mergedPassageCounts]]'s `> 0` filter) and compaction (the
-    * positive-clamp fold) clamp rather than propagate. Replay
-    * idempotence is inherited: an epoch overwrites its own dir, so
-    * re-delivery of a delete epoch is a no-op, and epoch ids must be
-    * unique across add AND delete epochs of one directory (they share
-    * the `batch_id=` namespace).
-    */
-  def passageCountsDeleteSink(
-      basePath: String,
-      passageLen: Int = 8): (DataFrame, Long) => Unit =
-    (batch: DataFrame, batchId: Long) =>
-      graft.operators.Dedup.passageDigestCounts(batch, passageLen)
-        .select(col("dig"), (-col("df")).as("df"))
-        .write.mode("overwrite").parquet(s"$basePath/batch_id=$batchId")
-
-  /** [[passageCountsSink]]'s offset-robust twin: per-epoch DENSE-window
-    * digest counts ([[graft.operators.Dedup.rollingDigestCounts]]), so
-    * `Dedup.rollingPassageDedupAgainst(todaysBatch,
-    * mergedRollingCounts(...))` strips boilerplate that entered past
-    * batches at ANY token offset — the aligned sink only catches spans
-    * that landed on the same passage grid in both corpora. Same
-    * replay-idempotent epoch layout, same `(dig, df)` state shape, same
-    * doc-disjointness precondition for the df sum.
-    */
-  def rollingCountsSink(
-      basePath: String,
-      windowLen: Int = 8): (DataFrame, Long) => Unit =
-    (batch: DataFrame, batchId: Long) =>
-      graft.operators.Dedup.rollingDigestCounts(batch, windowLen)
-        .write.mode("overwrite").parquet(s"$basePath/batch_id=$batchId")
-
-  /** The merged global dense-window frequency state over a
-    * [[rollingCountsSink]] directory ([[mergedPassageCounts]]'s
-    * subtraction-aware `> 0` read filter applies identically).
-    */
-  def mergedRollingCounts(spark: SparkSession, basePath: String): DataFrame =
-    graft.operators.Dedup.mergePassageCounts(Seq(
-      compactedStateView(spark, basePath, Seq("dig", "df"))))
-      .filter(col("df") > 0L)
-
-  /** [[passageCountsDeleteSink]] for the dense-window (rolling) state —
-    * same negate-and-land contract over
-    * [[graft.operators.Dedup.rollingDigestCounts]].
-    */
-  def rollingCountsDeleteSink(
-      basePath: String,
-      windowLen: Int = 8): (DataFrame, Long) => Unit =
-    (batch: DataFrame, batchId: Long) =>
-      graft.operators.Dedup.rollingDigestCounts(batch, windowLen)
-        .select(col("dig"), (-col("df")).as("df"))
-        .write.mode("overwrite").parquet(s"$basePath/batch_id=$batchId")
-
-  /** The passage family's content-defined third member: per-epoch
-    * CDC chunk-digest frequencies ([[graft.operators.Dedup.chunkDigestCounts]])
-    * in the same replay-idempotent layout, so
-    * `Dedup.cdcDedupAgainst(todaysBatch, mergedCdcCounts(...))` strips
-    * whole shared chunks that entered past batches at ANY offset —
-    * variable chunks where [[passageCountsSink]] is grid-aligned and
-    * [[rollingCountsSink]] pays a digest per token.
-    */
-  def cdcCountsSink(
-      basePath: String,
-      modulus: Int = 8): (DataFrame, Long) => Unit =
-    (batch: DataFrame, batchId: Long) =>
-      graft.operators.Dedup.chunkDigestCounts(batch, modulus)
-        .write.mode("overwrite").parquet(s"$basePath/batch_id=$batchId")
-
-  /** The merged global chunk-frequency state over a [[cdcCountsSink]]
-    * directory ([[mergedPassageCounts]]'s subtraction-aware `> 0` read
-    * filter applies identically).
-    */
-  def mergedCdcCounts(spark: SparkSession, basePath: String): DataFrame =
-    graft.operators.Dedup.mergePassageCounts(Seq(
-      compactedStateView(spark, basePath, Seq("dig", "df"))))
-      .filter(col("df") > 0L)
-
-  /** [[passageCountsDeleteSink]] for the CDC chunk state — same
-    * negate-and-land contract over
-    * [[graft.operators.Dedup.chunkDigestCounts]].
-    */
-  def cdcCountsDeleteSink(
-      basePath: String,
-      modulus: Int = 8): (DataFrame, Long) => Unit =
-    (batch: DataFrame, batchId: Long) =>
-      graft.operators.Dedup.chunkDigestCounts(batch, modulus)
-        .select(col("dig"), (-col("df")).as("df"))
-        .write.mode("overwrite").parquet(s"$basePath/batch_id=$batchId")
-
-  /** ExactSubstr (Lee et al. 2022) under streaming state: per-epoch
-    * window-digest OCCURRENCE counts
-    * ([[graft.operators.Dedup.rollingOccurrenceCounts]] — occurrences,
-    * not doc frequencies, because self-repeats count). Occurrences are
-    * additive over doc-disjoint micro-batches, so
-    * `Dedup.exactSubstrDedupAgainst(today, mergedExactSubstrCounts(...))`
-    * strips every ≥L-token span duplicated ANYWHERE in the ingested
-    * history — cross-batch, cross-doc, or within one document.
-    */
-  def exactSubstrCountsSink(
-      basePath: String,
-      windowLen: Int = 8): (DataFrame, Long) => Unit =
-    (batch: DataFrame, batchId: Long) =>
-      graft.operators.Dedup.rollingOccurrenceCounts(batch, windowLen)
-        .write.mode("overwrite").parquet(s"$basePath/batch_id=$batchId")
-
-  /** The merged global occurrence state over an [[exactSubstrCountsSink]]
-    * directory (digest-wise sum — the additive merge;
-    * [[mergedPassageCounts]]'s subtraction-aware `> 0` read filter
-    * applies identically).
-    */
-  def mergedExactSubstrCounts(spark: SparkSession, basePath: String): DataFrame =
-    compactedStateView(spark, basePath, Seq("dig", "occ"))
-      .groupBy(col("dig"))
-      .agg(sum(col("occ")).as("occ"))
-      .filter(col("occ") > 0L)
-
-  /** [[passageCountsDeleteSink]] for the ExactSubstr occurrence state —
-    * same negate-and-land contract over
-    * [[graft.operators.Dedup.rollingOccurrenceCounts]] (occurrences,
-    * not doc frequencies: a removed doc's SELF-repeats subtract too,
-    * exactly as they added).
-    */
-  def exactSubstrDeleteSink(
-      basePath: String,
-      windowLen: Int = 8): (DataFrame, Long) => Unit =
-    (batch: DataFrame, batchId: Long) =>
-      graft.operators.Dedup.rollingOccurrenceCounts(batch, windowLen)
-        .select(col("dig"), (-col("occ")).as("occ"))
-        .write.mode("overwrite").parquet(s"$basePath/batch_id=$batchId")
-
-  /** Streaming VIDEO-fingerprint state — the third modality under the
-    * per-epoch replay-idempotent layout: each micro-batch of AVI
-    * payloads decodes, temporally subsamples, and lands one
-    * `(doc_id, n_sampled, video_fp)` row per document
-    * ([[graft.operators.Multimodal.videoFingerprints]] — the md5 over
-    * ordered sampled-frame digests), so cross-batch video duplicates
-    * surface from fingerprint collisions over the merged state without
-    * ever re-decoding past epochs. Unlike the occurrence states, rows
-    * are PER-DOCUMENT — so takedown is the tombstone anti-join
-    * ([[tombstoneSink]] with `idCol = "doc_id"`), not subtraction
-    * epochs: [[mergedVideoFingerprints]] masks removed docs exactly,
-    * and compaction ([[compactVideoFingerprintEpochs]]) applies them
-    * physically. Only 16-byte digests ever land or shuffle; frames die
-    * inside the epoch's decode scan.
-    */
-  def videoFingerprintsSink(
-      basePath: String,
-      every: Int = 4): (DataFrame, Long) => Unit =
-    (batch: DataFrame, batchId: Long) =>
-      graft.operators.Multimodal.videoFingerprints(
-          graft.operators.Multimodal.sampleVideoFrames(
-            graft.operators.Multimodal.decodeAviFrames(batch.sparkSession, batch), every))
-        .write.mode("overwrite").parquet(s"$basePath/batch_id=$batchId")
-
-  /** The live fingerprint state over a [[videoFingerprintsSink]]
-    * directory; `deletesPath` names a [[tombstoneSink]] directory of
-    * removed doc ids (anti-joined at read time — per-doc rows need no
-    * subtraction arithmetic).
-    */
-  def mergedVideoFingerprints(
-      spark: SparkSession,
-      basePath: String,
-      deletesPath: Option[String] = None): DataFrame =
-    antiTombstone(
-      spark,
-      compactedStateView(spark, basePath, Seq("doc_id", "n_sampled", "video_fp")),
-      deletesPath, "doc_id")
-
-  /** [[compactEpochs]] for a [[videoFingerprintsSink]] directory:
-    * doc-disjoint epochs concatenate (the IVF-postings fold), and
-    * tombstones apply PHYSICALLY when `deletesPath` is given.
-    */
-  def compactVideoFingerprintEpochs(
-      spark: SparkSession,
-      basePath: String,
-      keepAfter: Long,
-      deletesPath: Option[String] = None): Int =
-    compactEpochs(spark, basePath, keepAfter, Seq("doc_id", "n_sampled", "video_fp"),
-      df => antiTombstone(spark, df, deletesPath, "doc_id"))
-
-  /** Streaming MINHASH SIGNATURE-INDEX state — the kept-corpus near-dup
-    * index ([[graft.operators.Dedup.signatureDigestIndex]]: one
-    * `(doc_id, sigs, shl, n_sh)` row per admitted document from the
-    * fused one-md5-per-shingle pass) maintained incrementally instead
-    * of re-derived per admission batch (VERDICT r18 gap #3: the q44
-    * index was rebuilt from kept TEXT on every call). Each micro-batch
-    * of admitted documents lands its own replay-idempotent epoch;
-    * because rows are per-document and batches are doc-disjoint, the
-    * live index is the plain union of epochs, takedown is the tombstone
-    * anti-join (the [[videoFingerprintsSink]] convention — no
-    * subtraction arithmetic), and
-    * [[graft.operators.Dedup.nearDupAgainst]]`(keptSignatures = ...)`
-    * consumes the merged view directly: text is scanned once at
-    * admission time and never again. Only signatures and 60-bit digest
-    * sets land or shuffle.
-    */
-  def signatureIndexSink(
-      basePath: String,
-      k: Int = 3,
-      numHashes: Int = 8): (DataFrame, Long) => Unit =
-    (batch: DataFrame, batchId: Long) =>
-      graft.operators.Dedup.signatureDigestIndex(batch, k, numHashes)
-        .write.mode("overwrite").parquet(s"$basePath/batch_id=$batchId")
-
-  /** The live signature index over a [[signatureIndexSink]] directory
-    * (compaction-aware); `deletesPath` names a [[tombstoneSink]]
-    * directory of taken-down doc ids, anti-joined at read time so a
-    * removed document stops suppressing near-duplicates immediately.
-    */
-  def mergedSignatureIndex(
-      spark: SparkSession,
-      basePath: String,
-      deletesPath: Option[String] = None): DataFrame =
-    antiTombstone(
-      spark,
-      compactedStateView(spark, basePath, Seq("doc_id", "sigs", "shl", "n_sh")),
-      deletesPath, "doc_id")
-
-  /** [[compactEpochs]] for a [[signatureIndexSink]] directory:
-    * doc-disjoint epochs concatenate, and tombstones apply PHYSICALLY
-    * when `deletesPath` is given (the taken-down document's signatures
-    * leave the state files, not just the view).
-    */
-  def compactSignatureIndexEpochs(
-      spark: SparkSession,
-      basePath: String,
-      keepAfter: Long,
-      deletesPath: Option[String] = None): Int =
-    compactEpochs(spark, basePath, keepAfter, Seq("doc_id", "sigs", "shl", "n_sh"),
-      df => antiTombstone(spark, df, deletesPath, "doc_id"))
-
-  /** Streaming ANN (IVF) index maintenance — the FIFTH batch family put
-    * under the per-epoch replay-idempotent state layout: the coarse
-    * quantizer is trained once and FROZEN (standard ANN practice —
-    * re-training would invalidate every prior posting), each micro-batch
-    * assigns its vectors with the narrow broadcast-argmax
-    * ([[graft.operators.Similarity.ivfAssignWith]], zero shuffle) and
-    * lands its postings `(vec_id, qe, n2, cell)` in its own epoch dir.
-    * Vectors are batch-disjoint by construction, so the live index is
-    * the plain union of epochs — and a search over the merged postings
-    * must equal the one-shot batch search, which is the gate.
-    */
-  def ivfPostingsSink(
-      centroids: Seq[(Long, Seq[Long])],
-      basePath: String): (DataFrame, Long) => Unit =
-    (batch: DataFrame, batchId: Long) =>
-      graft.operators.Similarity.ivfAssignWith(batch, centroids)
-        .write.mode("overwrite").parquet(s"$basePath/batch_id=$batchId")
-
-  /** The live IVF postings over an [[ivfPostingsSink]] directory
-    * (compaction-aware). `deletesPath` names a [[tombstoneSink]]
-    * directory: tombstoned vectors anti-join out of the postings at
-    * read time, so a search over the merged view equals the one-shot
-    * batch search over the SURVIVING corpus EXACTLY — postings are
-    * per-vector (nothing pruned at sink time, unlike the graph-ANN
-    * candidate deltas), so IVF deletion parity needs no slack. The
-    * q242 gate pins it against q39's oracle over the survivors.
-    */
-  def mergedIvfPostings(
-      spark: SparkSession,
-      basePath: String,
-      deletesPath: Option[String] = None): DataFrame = {
-    val postings = compactedStateView(spark, basePath, Seq("vec_id", "qe", "n2", "cell"))
-    deletesPath.fold(postings)(p =>
-      postings.join(mergedTombstones(spark, p), Seq("vec_id"), "left_anti"))
-  }
-
-  /** Rebuild the streamed IVF state into a fresh directory with a
-    * RE-TRAINED coarse quantizer — the recovery the graph family got in
-    * r17 ([[rebuildGraphAnnState]]) and the IVF family lacked: the sink's
+  /** Rebuild the streamed IVF state ([[EpochState.IvfPostings]]) into a
+    * fresh directory with a RE-TRAINED coarse quantizer — the recovery
+    * the graph family has in [[rebuildGraphAnnState]]: the sink's
     * quantizer is frozen at stream start (correctly — re-training
     * per-batch would invalidate prior postings), so as the streamed
     * corpus drifts away from it, cell skew grows and recall decays with
@@ -958,12 +736,8 @@ object StreamingOps {
     * `deletesPath = None` until new deletions arrive). Returns the
     * trained centroids — the frozen quantizer for `newPath`'s onward
     * sink AND for search probes, which must use the SAME quantizer the
-    * postings were assigned under.
-    *
-    * Scale: the train is sample-bounded (≤ `sampleSize` vectors cached,
-    * centroid-row aggregates per iteration), the re-assign one narrow
-    * scan of the postings, the land one write — no all-pairs step, no
-    * driver collect beyond k×dim centroid rows.
+    * postings were assigned under. Scale: a sample-bounded train, one
+    * narrow re-assign scan, one write; no all-pairs step.
     */
   def rebuildIvfState(
       spark: SparkSession,
@@ -974,29 +748,24 @@ object StreamingOps {
       sampleSize: Int = 4096,
       deletesPath: Option[String] = None): Seq[(Long, Seq[Long])] = {
     import graft.operators.Similarity
-    val survivors = antiTombstone(
-        spark,
-        compactedStateView(spark, basePath, Seq("vec_id", "qe", "n2", "cell")),
-        deletesPath, "vec_id")
+    val survivors = merged(spark, EpochState.IvfPostings(), basePath, deletesPath)
       .select(col("vec_id"), col("qe"), col("n2"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val cents = Similarity.trainIvfCentroidsQuantized(
         survivors, numCentroids, iters, sampleSize)
-      Similarity.ivfAssignWithQuantized(survivors, cents)
-        .write.mode("overwrite").parquet(s"$newPath/batch_id=0")
+      land(Similarity.ivfAssignWithQuantized(survivors, cents), newPath, 0L)
       cents
     } finally { survivors.unpersist(); () }
   }
 
-  /** Streaming graph-ANN edge-state maintenance — the SIXTH index family
-    * under the per-epoch replay-idempotent layout (after CMS, HLL,
-    * passage, MG, IVF): the kNN graph no longer rebuilds from scratch
-    * when the corpus grows. Frozen, like the IVF quantizer: the LSH
-    * planes ([[graft.operators.Similarity.hyperplanes]]) and the probe
-    * radius — a vector's bucket never changes, so co-bucket candidacy is
-    * decided pairwise and each pair `(a, b)` is emitted exactly once, at
-    * `max(epoch(a), epoch(b))`:
+  /** Streaming graph-ANN edge-state maintenance under the per-epoch
+    * replay-idempotent layout: the kNN graph no longer rebuilds from
+    * scratch when the corpus grows. Frozen, like the IVF quantizer: the
+    * LSH planes ([[graft.operators.Similarity.hyperplanes]]) and the
+    * probe radius — a vector's bucket never changes, so co-bucket
+    * candidacy is decided pairwise and each pair `(a, b)` is emitted
+    * exactly once, at `max(epoch(a), epoch(b))`:
     *
     *  - epoch `b` buckets its vectors narrowly and lands them in
     *    `vecs/batch_id=b`;
@@ -1021,14 +790,12 @@ object StreamingOps {
     * dirs — same rows, no duplication; after [[compactGraphAnnEpochs]]
     * a replay of a folded epoch is a write-side no-op (its deltas are
     * final inside the base partitions). Deletions are tombstone epochs
-    * ([[tombstoneSink]]) anti-joined at read time — see
+    * ([[EpochState.Tombstones]]) anti-joined at read time — see
     * [[mergedGraphAnnState]] for the prune-slack parity bound.
     *
-    * Scale: the per-epoch cost is the new probes' bucket join against
-    * the accumulated state (an incremental index update — never a
-    * rebuild) plus one id equi-join for the long links; nothing
-    * all-pairs, nothing corpus-rescanned at read time but the bounded
-    * top-degree window per touched src.
+    * Scale: per epoch, the new probes' bucket join against the
+    * accumulated state plus one id equi-join for the long links —
+    * an incremental update, never a rebuild, and nothing all-pairs.
     */
   def graphAnnEdgeSink(
       spark: SparkSession,
@@ -1089,13 +856,16 @@ object StreamingOps {
     val meta = s"$basePath/sink_meta"
     val success = new org.apache.hadoop.fs.Path(s"$meta/_SUCCESS")
     if (success.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(success)) {
-      val landed = spark.read.parquet(meta).collect()(0).getAs[Int]("degree")
+      val landed = sinkDegreeOf(spark, basePath)
       require(landed == degree,
         s"graph-ANN state at $basePath was pruned at degree $landed, but this sink " +
           s"prunes at degree $degree — rebuild it at the new degree with rebuildGraphAnnState")
     } else
       spark.range(1).select(lit(degree).as("degree")).write.mode("overwrite").parquet(meta)
   }
+
+  private def sinkDegreeOf(spark: SparkSession, basePath: String): Int =
+    spark.read.parquet(s"$basePath/sink_meta").collect()(0).getAs[Int]("degree")
 
   /** The delta computation + landing shared by [[graphAnnEdgeSink]]
     * (prior = the live accumulated state) and [[rebuildGraphAnnState]]
@@ -1132,12 +902,9 @@ object StreamingOps {
       // would keep. This is what bounds the state: O(srcs · degree) rows
       // per epoch instead of O(co-bucket pairs). Read-time selection
       // must therefore use a degree ≤ this sink's.
-      graft.operators.Similarity.topDegreeCandidates(
-          pairs.unionByName(
-            pairs.select(col("nb").as("src"), col("src").as("nb"), col("dp")))
-            .distinct(),
-          degree)
-        .write.mode("overwrite").parquet(s"$basePath/cand/batch_id=$batchId")
+      sink(EpochState.GraphAnnCand(degree), s"$basePath/cand")(
+        pairs.unionByName(pairs.select(col("nb").as("src"), col("src").as("nb"), col("dp"))),
+        batchId)
       // Long links: a one-scalar job for the running max id bounds the
       // XOR bit width (capture-time coverage argued in the scaladoc).
       // Null max = no vectors seen yet (an empty epoch over an empty
@@ -1154,12 +921,11 @@ object StreamingOps {
                   else array(farTargets: _*)).as("nb"))
         .join(all.select(col("vec_id").as("nb")), Seq("nb")) // only existing ids
         .select(col("src"), col("nb"))
-      farNew.unionByName(farNew.select(col("nb").as("src"), col("src").as("nb")))
-        .distinct()
-        .write.mode("overwrite").parquet(s"$basePath/far/batch_id=$batchId")
+      sink(EpochState.GraphAnnFar, s"$basePath/far")(
+        farNew.unionByName(farNew.select(col("nb").as("src"), col("src").as("nb"))), batchId)
       // Vectors land LAST: a crash mid-epoch leaves at worst edge dirs
       // without their vecs dir, and the replay overwrites all three.
-      newB.write.mode("overwrite").parquet(s"$basePath/vecs/batch_id=$batchId")
+      sink(EpochState.GraphAnnVecs, s"$basePath/vecs")(newB, batchId)
       all.unpersist()
   }
 
@@ -1186,10 +952,7 @@ object StreamingOps {
       numPlanes: Int = graft.operators.Similarity.DefaultNumPlanes,
       probeBits: Int = 1,
       deletesPath: Option[String] = None): Unit = {
-    val survivors = antiTombstone(
-        spark,
-        compactedStateView(spark, s"$basePath/vecs", Seq("vec_id", "qe", "bucket")),
-        deletesPath, "vec_id")
+    val survivors = merged(spark, EpochState.GraphAnnVecs, s"$basePath/vecs", deletesPath)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       landSinkDegree(spark, newPath, degree)
@@ -1207,10 +970,10 @@ object StreamingOps {
     * Compaction-aware on all three subdirectories (the
     * [[compactedStateView]] base-partition contract).
     *
-    * `deletesPath` names a [[tombstoneSink]] directory of removed
-    * vector ids: tombstoned vectors leave the vector side AND both
-    * endpoints of the edge state — critically, the candidate rows are
-    * anti-joined BEFORE the top-`degree` selection, so a deleted
+    * `deletesPath` names an [[EpochState.Tombstones]] directory of
+    * removed vector ids: tombstoned vectors leave the vector side AND
+    * both endpoints of the edge state — critically, the candidate rows
+    * are anti-joined BEFORE the top-`degree` selection, so a deleted
     * neighbor never occupies a rank a surviving candidate should hold.
     * The read then equals the batch build over the surviving corpus
     * PROVIDED the sink's prune left enough slack: the per-(src, epoch)
@@ -1227,23 +990,16 @@ object StreamingOps {
       degree: Int = 6,
       deletesPath: Option[String] = None): (DataFrame, DataFrame) = {
     import graft.operators.Similarity
-    val sinkDegree = spark.read.parquet(s"$basePath/sink_meta")
-      .collect()(0).getAs[Int]("degree")
+    val sinkDegree = sinkDegreeOf(spark, basePath)
     require(degree <= sinkDegree,
       s"read degree $degree exceeds the sink's prune degree $sinkDegree — " +
         "the state only retains the sink's top-degree rows per (src, epoch), " +
         "so a wider read would silently diverge from the batch build")
-    val dead = deletesPath.map(p => mergedTombstones(spark, p))
-    def alive(df: DataFrame, idCols: String*): DataFrame =
-      dead.fold(df)(t => idCols.foldLeft(df)((d, c) =>
-        d.join(t.select(col("vec_id").as(c)), Seq(c), "left_anti")))
-    val vecs = alive(
-      compactedStateView(spark, s"$basePath/vecs", Seq("vec_id", "qe")), "vec_id")
-    val cand = alive(
-      compactedStateView(spark, s"$basePath/cand", Seq("src", "nb", "dp")).distinct(),
-      "src", "nb")
-    val far = alive(
-      compactedStateView(spark, s"$basePath/far", Seq("src", "nb")), "src", "nb")
+    def view(sub: String, cols: String*) = compactedStateView(spark, s"$basePath/$sub", cols)
+    def alive(df: DataFrame, idCols: String*) = antiTombstone(spark, df, deletesPath, idCols: _*)
+    val vecs = alive(view("vecs", "vec_id", "qe"), "vec_id")
+    val cand = alive(view("cand", "src", "nb", "dp").distinct(), "src", "nb")
+    val far = alive(view("far", "src", "nb"), "src", "nb")
     // No distinct on the union (the graphAnnSearch argument): the beam
     // search dedups its expansion per hop, so duplicate edge rows are
     // harmless — and one fewer exchange is one fewer sequential AQE
@@ -1253,79 +1009,15 @@ object StreamingOps {
     (vecs, edges)
   }
 
-  /** Tombstone epochs — the deletion path for the incremental index
-    * state families ([[ivfPostingsSink]], [[graphAnnEdgeSink]],
-    * [[graft.operators.Dedup.nearDupAgainst]]'s signature index): each
-    * micro-batch of removals (takedowns, PII redactions, dedup
-    * retractions) lands its distinct ids in its own replay-idempotent
-    * `batch_id=<epoch>` directory, and readers anti-join the merged
-    * tombstone set at read time — a deleted vector stops being a search
-    * answer WITHOUT rebuilding the append-only index. Deletion is
-    * idempotent by construction (anti-join), so replays, double-deletes
-    * and deletes of never-ingested ids are all no-ops. Tombstones are
-    * PERMANENT by default: re-ingesting a tombstoned id stays masked
-    * until its tombstone is retired (rewrite the deletes state, or
-    * rebuild — [[rebuildGraphAnnState]] — and start a fresh deletes
-    * dir). MUST be a separate directory from the postings (the
-    * postings' partition discovery owns its root).
-    */
-  def tombstoneSink(basePath: String, idCol: String = "vec_id"): (DataFrame, Long) => Unit =
-    (batch: DataFrame, batchId: Long) =>
-      batch.select(col(idCol).cast("long").as("vec_id")).distinct()
-        .write.mode("overwrite").parquet(s"$basePath/batch_id=$batchId")
-
-  /** The merged tombstone id set over a [[tombstoneSink]] directory. */
-  def mergedTombstones(spark: SparkSession, basePath: String): DataFrame =
-    compactedStateView(spark, basePath, Seq("vec_id")).distinct()
-
-  /** [[compactEpochs]] for a [[tombstoneSink]] directory (distinct ids). */
-  def compactTombstoneEpochs(spark: SparkSession, basePath: String, keepAfter: Long): Int =
-    compactEpochs(spark, basePath, keepAfter, Seq("vec_id"), _.distinct())
-
-  /** [[compactEpochs]] for an [[ivfPostingsSink]] directory: postings
-    * are vec-disjoint across epochs, so the fold is plain concatenation
-    * (the admission-sink convention) — the base stays O(corpus) rows
-    * and the read side stops listing one directory per historical
-    * micro-batch.
-    *
-    * With `deletesPath`, compaction ALSO applies the tombstones
-    * PHYSICALLY: folded rows anti-join the merged tombstone set before
-    * landing in the base, so a deleted vector leaves the DISK (the
-    * takedown/PII-redaction requirement), not just the merged view. The
-    * view is unchanged either way — the read-time anti-join is
-    * idempotent over already-removed rows — so keep reading with the
-    * same `deletesPath` (live epochs above the watermark still carry
-    * their rows until the next fold catches them).
-    */
-  def compactIvfEpochs(
-      spark: SparkSession,
-      basePath: String,
-      keepAfter: Long,
-      deletesPath: Option[String] = None): Int =
-    compactEpochs(spark, basePath, keepAfter, Seq("vec_id", "qe", "n2", "cell"),
-      df => antiTombstone(spark, df, deletesPath, "vec_id"))
-
-  private def antiTombstone(
-      spark: SparkSession,
-      df: DataFrame,
-      deletesPath: Option[String],
-      idCols: String*): DataFrame =
-    deletesPath.fold(df) { p =>
-      val dead = mergedTombstones(spark, p)
-      idCols.foldLeft(df)((d, c) =>
-        d.join(dead.select(col("vec_id").as(c)), Seq(c), "left_anti"))
-    }
-
-  /** [[compactEpochs]] for a [[graphAnnEdgeSink]] trio: the candidate
-    * deltas fold through the SINK-degree prune (top-K selection is a
-    * semilattice under the total order (dp DESC, nb):
-    * `top_D(A ∪ B) = top_D(top_D(A) ∪ top_D(B))` per src — so the base
-    * stays O(srcs · sinkDegree) and read-time selection at any degree ≤
-    * sinkDegree is unchanged); long links dedup (set semantics); vectors
-    * concatenate (vec-disjoint). Vecs fold LAST: their watermark is the
-    * sink's replay-skip authority, so a crash mid-compaction leaves the
-    * guard conservative — the sink keeps replaying epochs whose edge
-    * dirs may not have folded yet, never skips one that did not.
+  /** [[compact]] for a [[graphAnnEdgeSink]] trio: three table folds —
+    * candidates through the SINK-degree prune (`top_D(A ∪ B) =
+    * top_D(top_D(A) ∪ top_D(B))` per src, so the base stays
+    * O(srcs · sinkDegree) and read-time selection at any degree ≤
+    * sinkDegree is unchanged), long links by set union, vectors by
+    * concatenation. Vecs fold LAST: their watermark is the sink's
+    * replay-skip authority, so a crash mid-compaction leaves the guard
+    * conservative — the sink keeps replaying epochs whose edge dirs may
+    * not have folded yet, never skips one that did not.
     *
     * With `deletesPath`, the fold applies the tombstones PHYSICALLY
     * (vectors by id, candidates and long links by either endpoint,
@@ -1334,65 +1026,36 @@ object StreamingOps {
     * prune-slack parity bound of [[mergedGraphAnnState]] is consumed
     * ONCE, at fold time, for the folded rows). Deleted vectors leave
     * the disk; a deletion budget breached beyond the slack means an
-    * index REBUILD — re-run the sink over the surviving corpus into a
-    * fresh directory at a re-provisioned degree.
+    * index rebuild ([[rebuildGraphAnnState]]).
     */
   def compactGraphAnnEpochs(
       spark: SparkSession,
       basePath: String,
       keepAfter: Long,
       deletesPath: Option[String] = None): Int = {
-    val sinkDegree = spark.read.parquet(s"$basePath/sink_meta")
-      .collect()(0).getAs[Int]("degree")
-    val nCand = compactEpochs(spark, s"$basePath/cand", keepAfter, Seq("src", "nb", "dp"),
-      df => graft.operators.Similarity.topDegreeCandidates(
-        antiTombstone(spark, df.distinct(), deletesPath, "src", "nb"), sinkDegree))
-    val nFar = compactEpochs(spark, s"$basePath/far", keepAfter, Seq("src", "nb"),
-      df => antiTombstone(spark, df.distinct(), deletesPath, "src", "nb"))
-    val nVecs = compactEpochs(spark, s"$basePath/vecs", keepAfter,
-      Seq("vec_id", "qe", "bucket"),
-      df => antiTombstone(spark, df, deletesPath, "vec_id"))
-    nCand + nFar + nVecs
+    val folds = Seq(
+      "cand" -> EpochState.GraphAnnCand(sinkDegreeOf(spark, basePath)),
+      "far" -> EpochState.GraphAnnFar,
+      "vecs" -> EpochState.GraphAnnVecs)
+    folds.map { case (sub, kind) =>
+      compact(spark, kind, s"$basePath/$sub", keepAfter, deletesPath)
+    }.sum
   }
 
-  /** Streaming Misra–Gries heavy-hitter maintenance, same epoch layout
-    * as [[countMinSink]] — the fourth (and last) batch sketch family
-    * put under streaming state. Each micro-batch's per-group MG summary
-    * ([[graft.functions.Sketches.heavyHitters]]) lands as exploded
-    * `(grp, item, est)` counter rows plus one `item IS NULL` row
-    * carrying the batch's group total `n` (additive, so totals survive
-    * compaction without a side table). The live summary is the PODS'12
-    * mergeable-summaries rule at read time ([[mergeMgRows]]).
-    */
-  def mgSink(
-      groupCol: String,
-      itemCol: String,
-      basePath: String,
-      k: Int = 24): (DataFrame, Long) => Unit =
-    (batch: DataFrame, batchId: Long) => {
-      val sk = graft.functions.Sketches.heavyHitters(batch, groupCol, itemCol, k)
-      sk.select(col("grp"), explode(col("mg")).as(Seq("item", "est")))
-        .unionByName(
-          sk.select(col("grp"), lit(null).cast("string").as("item"), col("n").as("est")))
-        .write.mode("overwrite").parquet(s"$basePath/batch_id=$batchId")
-    }
-
   /** The PODS'12 (Agarwal et al., "Mergeable Summaries") Misra–Gries
-    * merge over exploded counter rows: sum counters item-wise, then
-    * subtract the (k+1)-th largest summed counter from every survivor
-    * and drop non-positives — at most k counters remain per group and
-    * the merged summary keeps the full n/(k+1) guarantee. The proof
-    * telescopes over any number of inputs: each input satisfies
-    * `(k+1)·undercount ≤ nᵢ − Cᵢ`, and the trim's extra `d` satisfies
-    * `(k+1)·d ≤ C − C'` because at least k+1 counters shed ≥ d… so the
-    * total undercount stays ≤ n/(k+1). `item IS NULL` total rows sum
-    * straight through.
-    *
-    * Scale: counters entering the merge are ≤ k per (group, live
-    * epoch); the per-group window and the broadcast (k+1)-th-value
-    * table are both group-count-sized.
+    * merge over exploded counter rows ([[EpochState.MisraGries]]): sum
+    * counters item-wise, then subtract the (k+1)-th largest summed
+    * counter from every survivor and drop non-positives — at most k
+    * counters remain per group and the merged summary keeps the full
+    * n/(k+1) guarantee. The proof telescopes over any number of inputs:
+    * each input satisfies `(k+1)·undercount ≤ nᵢ − Cᵢ`, and the trim's
+    * extra `d` satisfies `(k+1)·d ≤ C − C'` because at least k+1
+    * counters shed ≥ d… so the total undercount stays ≤ n/(k+1).
+    * `item IS NULL` total rows sum straight through — which is also
+    * why compaction may fold with this same merge. Scale: ≤ k counters
+    * per (group, live epoch) enter; the window and broadcast are group-sized.
     */
-  def mergeMgRows(rows: DataFrame, k: Int): DataFrame = {
+  private[graft] def mergeMgRows(rows: DataFrame, k: Int): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("grp")).orderBy(col("c").desc, col("item"))
     val totals = rows.filter(col("item").isNull)
@@ -1411,19 +1074,13 @@ object StreamingOps {
       .unionByName(totals)
   }
 
-  /** The live merged MG summary over an [[mgSink]] directory:
-    * `(grp, item, est)` counter rows (≤ k per group) plus the
-    * `item IS NULL` group-total rows.
-    */
-  def mergedHeavyHitters(spark: SparkSession, basePath: String, k: Int = 24): DataFrame =
-    mergeMgRows(compactedStateView(spark, basePath, Seq("grp", "item", "est")), k)
-
   /** [[graft.functions.Sketches.heavyHittersChecked]] against the MERGED
-    * streaming state: for every item whose EXACT count over `df` clears
-    * the n/(k+1) guarantee threshold, report presence in the merged
-    * summary and the error bound as exact integer booleans — the same
-    * deterministic, theory-defined row set as the batch q80 gate, so the
-    * streaming path faces the identical oracle.
+    * streaming state of an [[EpochState.MisraGries]] directory: for
+    * every item whose EXACT count over `df` clears the n/(k+1) guarantee
+    * threshold, report presence in the merged summary and the error
+    * bound as exact integer booleans — the same deterministic,
+    * theory-defined row set as the batch q80 gate, so the streaming
+    * path faces the identical oracle.
     */
   def mergedHeavyHittersChecked(
       df: DataFrame,
@@ -1432,7 +1089,7 @@ object StreamingOps {
       spark: SparkSession,
       basePath: String,
       k: Int = 24): DataFrame = {
-    val sk = mergedHeavyHitters(spark, basePath, k)
+    val sk = merged(spark, EpochState.MisraGries(groupCol, itemCol, k), basePath)
     val counters = sk.filter(col("item").isNotNull)
       .select(col("grp"), col("item"), col("est"))
     val totals = sk.filter(col("item").isNull).select(col("grp"), col("est").as("n"))
@@ -1447,16 +1104,15 @@ object StreamingOps {
         ((col("cnt") - coalesce(col("est"), lit(0L))) * (k + 1) <= col("n")).as("bound_ok"))
   }
 
-  // ---------------------------------------------------------------------
-  // Epoch compaction for the per-epoch sketch/state sinks
-  // ---------------------------------------------------------------------
+  // --- Epoch compaction for the per-epoch state directories ---
 
   /** The live (compaction-aware) view of a `batch_id=<epoch>` state
-    * directory: every sink above pairs with a `merged*` reader that
-    * unions all epochs at read time — after 10⁵ micro-batches that union
-    * is itself a scale problem (10⁵ directories listed and scanned per
-    * read). [[compactEpochs]] folds old epochs into ONE base partition;
-    * this reader resolves which partitions are live.
+    * directory, projected on `stateCols` (empty: every state column,
+    * `batch_id` dropped). [[merged]] unions all epochs at read time —
+    * after 10⁵ micro-batches that union is itself a scale problem (10⁵
+    * directories listed and scanned per read). [[foldToBase]] folds
+    * old epochs into ONE base partition; this reader resolves which
+    * partitions are live.
     *
     * Layout contract: a base partition's id encodes the compaction
     * watermark as `batch_id = -(W + 1)` — "contains every epoch ≤ W".
@@ -1469,17 +1125,19 @@ object StreamingOps {
     * likewise excluded (its content is a subset of the newest base), so
     * a compact that dies between write and cleanup is still read-safe.
     */
-  def compactedStateView(
+  private def compactedStateView(
       spark: SparkSession,
       basePath: String,
-      stateCols: Seq[String]): DataFrame =
-    liveStateRows(spark, basePath).select(stateCols.map(col): _*)
+      stateCols: Seq[String]): DataFrame = {
+    val live = liveStateRows(spark, basePath)
+    if (stateCols.isEmpty) live.drop("batch_id") else live.select(stateCols.map(col): _*)
+  }
 
   /** The live rows of a `batch_id=<epoch>` state directory WITH their
     * `batch_id` — [[compactedStateView]] minus the projection, for
     * sinks whose incremental update reads its own prior state filtered
     * by epoch (the graph-ANN edge sink). Partition ids come from ONE
-    * file listing (the same one [[compactEpochs]] plans from), not a
+    * file listing (the same one [[foldToBase]] plans from), not a
     * Spark distinct() job — at the 10⁵-epoch scale that motivates
     * compaction, a pre-read job touching every state file would double
     * the cost the feature exists to bound.
@@ -1499,7 +1157,7 @@ object StreamingOps {
     * A base directory left by a crashed compaction — no `_SUCCESS`
     * marker from Spark's job commit — is invisible here: readers and
     * the admission sink must keep trusting the previous layout, and
-    * [[compactEpochs]] treats it as stale garbage to replace. (Epoch
+    * [[foldToBase]] treats it as stale garbage to replace. (Epoch
     * directories need no such check: a crashed epoch write is replayed
     * by the streaming engine itself.)
     */
@@ -1515,25 +1173,6 @@ object StreamingOps {
         .map(_._2).minOption
     }.toOption.flatten
 
-  /** Fold every epoch `≤ keepAfter` of a per-epoch state directory into
-    * one base partition `batch_id = -(keepAfter + 1)`, using the state's
-    * own merge (cell-sum for CMS, register-max for HLL, digest-sum for
-    * passage counts). Epochs `> keepAfter` stay as-is and keep their
-    * per-epoch replay-overwrite semantics; replays of epochs
-    * `≤ keepAfter` become read-side no-ops (see [[compactedStateView]]).
-    *
-    * Crash safety: the new base is WRITTEN (job-committed, `_SUCCESS`)
-    * before anything is deleted, and authority is carried only by a
-    * committed base — a half-written base from a crashed run counts for
-    * nothing anywhere (not the watermark, not the readers, not the
-    * admission sink) and re-running the SAME compactEpochs call replaces
-    * it and finishes the cleanup: rerun IS the recovery procedure.
-    *
-    * Returns the number of directories removed. No-op (returns 0) when
-    * `keepAfter` does not advance the existing valid watermark —
-    * re-compacting the same watermark would overwrite the base FROM
-    * itself mid-scan.
-    */
   /** The compaction watermark of a state directory: W when a COMMITTED
     * base partition `batch_id = -(W+1)` exists (every epoch ≤ W lives in
     * it), None when the directory is uncompacted or absent. A file
@@ -1542,7 +1181,7 @@ object StreamingOps {
     * skip replays and exclude the still-authoritative old layout on the
     * strength of a directory with no data in it.
     */
-  def epochWatermark(spark: SparkSession, basePath: String): Option[Long] =
+  private[graft] def epochWatermark(spark: SparkSession, basePath: String): Option[Long] =
     newestValidBase(spark, basePath).map(b => -b - 1)
 
   private def listEpochDirs(
@@ -1555,7 +1194,26 @@ object StreamingOps {
       .map(s => s.getPath -> s.getPath.getName.stripPrefix("batch_id=").toLong)
   }
 
-  def compactEpochs(
+  /** Fold every epoch `≤ keepAfter` of a per-epoch state directory into
+    * one base partition `batch_id = -(keepAfter + 1)`, using the state's
+    * own merge (the kind's, via [[compact]]). Epochs `> keepAfter` stay
+    * as-is and keep their per-epoch replay-overwrite semantics; replays
+    * of epochs `≤ keepAfter` become read-side no-ops (see
+    * [[compactedStateView]]).
+    *
+    * Crash safety: the new base is WRITTEN (job-committed, `_SUCCESS`)
+    * before anything is deleted, and authority is carried only by a
+    * committed base — a half-written base from a crashed run counts for
+    * nothing anywhere (not the watermark, not the readers, not the
+    * admission sink) and re-running the SAME foldToBase call replaces
+    * it and finishes the cleanup: rerun IS the recovery procedure.
+    *
+    * Returns the number of directories removed. No-op (returns 0) when
+    * `keepAfter` does not advance the existing valid watermark —
+    * re-compacting the same watermark would overwrite the base FROM
+    * itself mid-scan.
+    */
+  private def foldToBase(
       spark: SparkSession,
       basePath: String,
       keepAfter: Long,
@@ -1570,7 +1228,7 @@ object StreamingOps {
     // toward the watermark (else this very keepAfter would "already be
     // compacted" and the layout could never be repaired), must not be a
     // fold INPUT, and must be deleted with the other stale dirs — which
-    // makes re-running the same compactEpochs call after a crash the
+    // makes re-running the same foldToBase call after a crash the
     // recovery procedure.
     val validBase = newestValidBase(spark, basePath)
     val curWatermark = validBase.map(b => -b - 1)
@@ -1610,63 +1268,6 @@ object StreamingOps {
     doomed.foreach { case (p, _) => fs.delete(p, true) }
     doomed.size
   }
-
-  /** [[compactEpochs]] for a [[countMinSink]] directory (cell-wise sum
-    * + [[compactPassageEpochs]]' positive clamp — fully-cancelled cells
-    * leave the base, matching the dense-matrix absent-reads-as-0 rule).
-    */
-  def compactCountMinEpochs(spark: SparkSession, basePath: String, keepAfter: Long): Int =
-    compactEpochs(spark, basePath, keepAfter, Seq("grp", "row", "bucket", "c"),
-      df => graft.functions.Sketches.mergeCountMinCells(Seq(df)).filter(col("c") > 0L))
-
-  /** [[compactEpochs]] for an [[hllSink]] directory (register-wise max). */
-  def compactHllEpochs(spark: SparkSession, basePath: String, keepAfter: Long): Int =
-    compactEpochs(spark, basePath, keepAfter, Seq("grp", "reg", "r"),
-      df => graft.functions.Sketches.mergeHllRegisters("grp", Seq(df)))
-
-  /** [[compactEpochs]] for a [[passageCountsSink]] directory: digest-wise
-    * sum, then the POSITIVE CLAMP (`df > 0` rows only) — folding a
-    * subtraction epoch ([[passageCountsDeleteSink]]) whose digests fully
-    * cancel must not store zero rows in the base, and the drop is exact:
-    * a later add epoch re-sums from the digest's true remaining count
-    * (0) either way. Under the exactly-once delete contract counts
-    * never go negative; a violated contract clamps here instead of
-    * carrying a phantom debt into future adds.
-    */
-  def compactPassageEpochs(spark: SparkSession, basePath: String, keepAfter: Long): Int =
-    compactEpochs(spark, basePath, keepAfter, Seq("dig", "df"),
-      df => graft.operators.Dedup.mergePassageCounts(Seq(df)).filter(col("df") > 0L))
-
-  /** [[compactEpochs]] for an [[exactSubstrCountsSink]] directory —
-    * occurrence counts are additive, so the fold is the digest-wise sum
-    * (the same merge [[mergedExactSubstrCounts]] applies at read time).
-    * This was the one epoch family without a wrapper (r17).
-    */
-  def compactExactSubstrEpochs(spark: SparkSession, basePath: String, keepAfter: Long): Int =
-    compactEpochs(spark, basePath, keepAfter, Seq("dig", "occ"),
-      df => df.groupBy(col("dig")).agg(sum(col("occ")).as("occ"))
-        .filter(col("occ") > 0L))
-
-  /** [[compactEpochs]] for an [[mgSink]] directory: the PODS'12
-    * sum-then-trim merge keeps the base at ≤ k counters per group while
-    * preserving the n/(k+1) guarantee for every later read-time merge
-    * (trimmed summaries stay mergeable — the [[mergeMgRows]] telescoping
-    * argument); NULL-item totals sum additively through the fold.
-    */
-  def compactMgEpochs(
-      spark: SparkSession, basePath: String, keepAfter: Long, k: Int = 24): Int =
-    compactEpochs(spark, basePath, keepAfter, Seq("grp", "item", "est"),
-      df => mergeMgRows(df, k))
-
-  /** [[compactEpochs]] for a [[corpusAdmissionSink]] directory. Admitted
-    * rows are the state itself — the "merge" is plain concatenation
-    * (admission already guaranteed cross-epoch disjointness). After
-    * compaction the sink SKIPS replays of folded epochs (their admission
-    * is final inside the base) and live batches read the base + live
-    * epochs as their kept corpus.
-    */
-  def compactAdmissionEpochs(spark: SparkSession, basePath: String, keepAfter: Long): Int =
-    compactEpochs(spark, basePath, keepAfter, Seq.empty, identity)
 
   case class SessionState(sessionId: Int, firstUs: Long, lastUs: Long, nEvents: Long)
 
@@ -1748,4 +1349,48 @@ object StreamingOps {
           }
       }
   }
+}
+
+/** A kind of replay-idempotent `batch_id=<epoch>` streaming state, with
+  * the parameters of its per-batch build. Build the kind once and pass
+  * the same value to [[StreamingOps.sink]], [[StreamingOps.retractSink]],
+  * [[StreamingOps.merged]] and [[StreamingOps.compact]]; the state table
+  * in [[StreamingOps]] gives each kind's columns, merge and delete rule.
+  * Additive kinds (count-min, passage, rolling, CDC, ExactSubstr) retract
+  * by negated epochs; per-document kinds (video fingerprints, signature
+  * index, IVF postings) delete by [[EpochState.Tombstones]]; the rest
+  * cannot be retracted.
+  */
+sealed trait EpochState extends Product with Serializable
+
+object EpochState {
+  /** Count-Min cells `(grp, row, bucket, c)` ([[graft.functions.Sketches.countMinCells]]). */
+  final case class CountMin(groupCol: String, itemCol: String, depth: Int = 4, width: Int = 64)
+      extends EpochState
+  /** HLL registers `(grp, reg, r)`; estimate with [[graft.functions.Sketches.hllEstimate]]. */
+  final case class Hll(groupCol: String, valueCol: String, p: Int = 6) extends EpochState
+  /** Misra–Gries counters `(grp, item, est)` plus one `item IS NULL` group-total row. */
+  final case class MisraGries(groupCol: String, itemCol: String, k: Int = 24) extends EpochState
+  /** Aligned passage digest frequencies `(dig, df)` ([[graft.operators.Dedup.passageDigestCounts]]). */
+  final case class PassageCounts(passageLen: Int = 8) extends EpochState
+  /** Dense-window digest frequencies `(dig, df)` ([[graft.operators.Dedup.rollingDigestCounts]]). */
+  final case class RollingCounts(windowLen: Int = 8) extends EpochState
+  /** CDC chunk digest frequencies `(dig, df)` ([[graft.operators.Dedup.chunkDigestCounts]]). */
+  final case class CdcCounts(modulus: Int = 8) extends EpochState
+  /** ExactSubstr window occurrences `(dig, occ)` ([[graft.operators.Dedup.rollingOccurrenceCounts]]). */
+  final case class ExactSubstrCounts(windowLen: Int = 8) extends EpochState
+  /** One `(doc_id, n_sampled, video_fp)` row per AVI payload ([[graft.operators.Multimodal.videoFingerprints]]). */
+  final case class VideoFingerprints(every: Int = 4) extends EpochState
+  /** One `(doc_id, sigs, shl, n_sh)` row per document ([[graft.operators.Dedup.signatureDigestIndex]]). */
+  final case class SignatureIndex(k: Int = 3, numHashes: Int = 8) extends EpochState
+  /** IVF postings `(vec_id, qe, n2, cell)` under a frozen quantizer; reads need none. */
+  final case class IvfPostings(centroids: Seq[(Long, Seq[Long])] = Nil) extends EpochState
+  /** Removed ids, landed as a long `vec_id` from `idCol`, in a directory of their own. */
+  final case class Tombstones(idCol: String = "vec_id") extends EpochState
+  /** Whole rows as landed: the plain idempotent sink, and the admission sink's corpus. */
+  case object Rows extends EpochState
+  /** The three subdirectories of [[StreamingOps.graphAnnEdgeSink]]'s state. */
+  private[graft] final case class GraphAnnCand(degree: Int) extends EpochState
+  private[graft] case object GraphAnnFar extends EpochState
+  private[graft] case object GraphAnnVecs extends EpochState
 }

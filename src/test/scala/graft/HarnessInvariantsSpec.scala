@@ -129,6 +129,22 @@ class HarnessInvariantsSpec extends AnyFunSuite {
       assert(!src.contains(needle), s"operators/Dedup.scala contains `$needle`")
   }
 
+  test("StreamingOps keeps one table of state kinds (no per-kind delete sink, compaction or merged read)") {
+    // Per-kind state goes through EpochState and the four generic operations
+    // (sink, retractSink, merged, compact); only the named arms keep their own.
+    val defs = """\bdef (\w+)""".r
+      .findAllMatchIn(read("src/main/scala/graft/streaming/StreamingOps.scala"))
+      .map(_.group(1)).toSeq
+    assert(defs.contains("merged") && defs.contains("compact"), "the generic operations moved")
+    val deleteSinks = defs.filter(_.endsWith("DeleteSink"))
+    assert(deleteSinks.isEmpty, s"per-kind delete sinks: $deleteSinks")
+    val compactions = defs.filter(d => d.endsWith("Epochs") && d != "compactGraphAnnEpochs")
+    assert(compactions.isEmpty, s"per-kind compactions: $compactions")
+    val reads = defs.filter(d => "merged[A-Z]".r.findPrefixOf(d).isDefined &&
+      !Set("mergedGraphAnnState", "mergedHeavyHittersChecked")(d))
+    assert(reads.isEmpty, s"per-kind merged reads: $reads")
+  }
+
   test("Bench.cpuSuffixed splices the core count before the file extension only") {
     assert(Bench.cpuSuffixed("bench_results.json", 4) === "bench_results_c4.json")
     assert(Bench.cpuSuffixed("out.d/results", 4) === "out.d/results_c4")

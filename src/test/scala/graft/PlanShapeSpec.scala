@@ -646,13 +646,13 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("tombstoned index reads: anti-joins stay hash/broadcast, never nested-loop") {
-    import graft.streaming.StreamingOps
+    import graft.streaming.{EpochState, StreamingOps}
     import spark.implicits._
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")
     val gdir = java.nio.file.Files.createTempDirectory("graft_plan_gann").toString
     StreamingOps.graphAnnEdgeSink(spark, gdir, degree = 8)(emb, 0L)
     val ddir = java.nio.file.Files.createTempDirectory("graft_plan_tombs").toString
-    StreamingOps.tombstoneSink(ddir)(Seq(17L, 23L).toDF("vec_id"), 0L)
+    StreamingOps.sink(EpochState.Tombstones(), ddir)(Seq(17L, 23L).toDF("vec_id"), 0L)
     val (vecs, edges) = StreamingOps.mergedGraphAnnState(spark, gdir, 6, Some(ddir))
     for ((name, df) <- Seq("vecs" -> vecs, "edges" -> edges)) {
       val p = plan(df)

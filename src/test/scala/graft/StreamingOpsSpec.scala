@@ -4,11 +4,18 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 
-import graft.streaming.StreamingOps
+import graft.streaming.{EpochState, StreamingOps}
 
 class StreamingOpsSpec extends SparkSpec {
 
   import spark.implicits._
+
+  // Kinds several tests share; a read needs only the kind, not its build's data.
+  private val cms = EpochState.CountMin("grp", "item")
+  private val hll = EpochState.Hll("grp", "v")
+  private def hllDistinct(dir: String): Double =
+    graft.functions.Sketches.hllEstimate(StreamingOps.merged(spark, hll, dir), "grp", hll.p)
+      .collect().head.getAs[Double]("est_distinct")
 
   test("windowed action counts aggregate a watermarked stream") {
     implicit val sqlCtx = spark.sqlContext
@@ -254,7 +261,7 @@ class StreamingOpsSpec extends SparkSpec {
   test("idempotent foreachBatch sink deduplicates replayed micro-batches") {
     implicit val sqlCtx = spark.sqlContext
     val dir = java.nio.file.Files.createTempDirectory("graft_epoch_sink").toString
-    val sink = StreamingOps.idempotentParquetSink(dir)
+    val sink = StreamingOps.sink(EpochState.Rows, dir)
     import spark.implicits._
     // Batch 0 delivered, then REPLAYED (the at-least-once failure case),
     // then batch 1.
@@ -267,7 +274,7 @@ class StreamingOpsSpec extends SparkSpec {
     // And it wires into a real streaming query.
     val in = MemoryStream[(Long, String)]
     val q = in.toDF().toDF("id", "v").writeStream
-      .foreachBatch(StreamingOps.idempotentParquetSink(dir + "_live"))
+      .foreachBatch(StreamingOps.sink(EpochState.Rows, dir + "_live"))
       .start()
     in.addData((9L, "z"))
     q.processAllAvailable()
@@ -279,14 +286,14 @@ class StreamingOpsSpec extends SparkSpec {
     import graft.functions.Sketches
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft_cms_sink").toString
-    val sink = StreamingOps.countMinSink("grp", "item", dir)
+    val sink = StreamingOps.sink(cms, dir)
     val b0 = (0 until 300).map(i => ("g", s"tok${i % 11}")).toDF("grp", "item")
     val b1 = (0 until 200).map(i => ("g", s"tok${i % 7}")).toDF("grp", "item")
     // Batch 0 delivered, then REPLAYED (at-least-once), then batch 1.
     sink(b0, 0L)
     sink(b0, 0L)
     sink(b1, 1L)
-    val merged = StreamingOps.mergedCountMinCells(spark, dir).collect()
+    val merged = StreamingOps.merged(spark, cms, dir).collect()
       .map(r => (r.getInt(1), r.getLong(2)) -> r.getLong(3)).toMap
     val whole = Sketches.countMinCells(b0.unionByName(b1), "grp", "item").collect()
       .map(r => (r.getInt(1), r.getLong(2)) -> r.getLong(3)).toMap
@@ -294,7 +301,7 @@ class StreamingOpsSpec extends SparkSpec {
     // Probing the merged state answers the union-corpus estimate.
     val probes = Seq(("g", "tok0")).toDF("grp", "item")
     val est = Sketches.probeCountMin(
-      StreamingOps.mergedCountMinCells(spark, dir), probes)
+      StreamingOps.merged(spark, cms, dir), probes)
       .collect().head.getAs[Long]("cms_est")
     val exact = 300 / 11 + 1 + 200 / 7 + 1 // tok0 occurrences in b0 + b1
     assert(est >= exact)
@@ -304,14 +311,13 @@ class StreamingOpsSpec extends SparkSpec {
     import graft.functions.Sketches
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft_hll_sink").toString
-    val sink = StreamingOps.hllSink("grp", "v", dir)
+    val sink = StreamingOps.sink(hll, dir)
     val b0 = (0 until 400).map(i => ("g", i.toLong)).toDF("grp", "v")
     val b1 = (200 until 600).map(i => ("g", i.toLong)).toDF("grp", "v") // overlaps b0
     sink(b0, 0L)
     sink(b0, 0L) // replay
     sink(b1, 1L)
-    val est = StreamingOps.mergedHllDistinct(spark, dir)
-      .collect().head.getAs[Double]("est_distinct")
+    val est = hllDistinct(dir)
     // True distinct = 600 (200..399 delivered in BOTH epochs — max is
     // idempotent, so neither the replay nor the overlap inflates).
     val batch = Sketches.hllDistinct(
@@ -330,19 +336,20 @@ class StreamingOpsSpec extends SparkSpec {
     val b1 = Seq(d(10L, s"$boiler epsilon zeta eta theta"))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
     val dir = java.nio.file.Files.createTempDirectory("graft_passage_sink").toString
-    val sink = StreamingOps.passageCountsSink(dir, passageLen = 4)
+    val pc = EpochState.PassageCounts(passageLen = 4)
+    val sink = StreamingOps.sink(pc, dir)
     sink(b0, 0L)
     sink(b0, 0L) // replay must not double-count the boilerplate's df
     sink(b1, 1L)
     val cleaned = Dedup.passageDedupAgainst(
-      b1, StreamingOps.mergedPassageCounts(spark, dir), passageLen = 4)
+      b1, StreamingOps.merged(spark, pc, dir), passageLen = 4)
       .collect().head
     // df(boilerplate) = 2 across epochs → stripped from the new batch;
     // a replay-inflated df=3 would give the same drop here, so ALSO pin
     // the state itself: the boilerplate digest's merged df must be 2.
     assert(cleaned.getAs[String]("clean_text") === "epsilon zeta eta theta")
     assert(cleaned.getAs[Long]("n_dropped") === 1L)
-    val maxDf = StreamingOps.mergedPassageCounts(spark, dir)
+    val maxDf = StreamingOps.merged(spark, pc, dir)
       .agg(org.apache.spark.sql.functions.max("df")).collect().head.getLong(0)
     assert(maxDf === 2L, s"replay inflated the merged df to $maxDf")
   }
@@ -361,26 +368,28 @@ class StreamingOpsSpec extends SparkSpec {
     val b1 = Seq(d(10L, s"pre amble $boiler epsilon zeta"))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
     val dir = java.nio.file.Files.createTempDirectory("graft_rolling_sink").toString
-    val sink = StreamingOps.rollingCountsSink(dir, windowLen = 4)
+    val rc = EpochState.RollingCounts(windowLen = 4)
+    val sink = StreamingOps.sink(rc, dir)
     sink(b0, 0L)
     sink(b0, 0L) // replay must not double-count
     sink(b1, 1L)
     val cleaned = Dedup.rollingPassageDedupAgainst(
-      b1, StreamingOps.mergedRollingCounts(spark, dir), windowLen = 4)
+      b1, StreamingOps.merged(spark, rc, dir), windowLen = 4)
       .collect().head
     assert(cleaned.getAs[String]("clean_text") === "pre amble epsilon zeta")
     assert(cleaned.getAs[Long]("n_dropped") === 4L)
-    val maxDf = StreamingOps.mergedRollingCounts(spark, dir)
+    val maxDf = StreamingOps.merged(spark, rc, dir)
       .agg(org.apache.spark.sql.functions.max("df")).collect().head.getLong(0)
     assert(maxDf === 2L, s"replay inflated the merged df to $maxDf")
     // Control: the ALIGNED state over the same two batches leaves batch
     // 1 untouched (the shifted span never lands on its passage grid) —
     // the rolling sink exists precisely for this case.
     val adir = java.nio.file.Files.createTempDirectory("graft_aligned_ctrl").toString
-    val asink = StreamingOps.passageCountsSink(adir, passageLen = 4)
+    val pc = EpochState.PassageCounts(passageLen = 4)
+    val asink = StreamingOps.sink(pc, adir)
     asink(b0, 0L); asink(b1, 1L)
     val alignedCleaned = Dedup.passageDedupAgainst(
-      b1, StreamingOps.mergedPassageCounts(spark, adir), passageLen = 4)
+      b1, StreamingOps.merged(spark, pc, adir), passageLen = 4)
       .collect().head
     assert(alignedCleaned.getAs[Long]("n_dropped") === 0L,
       "aligned control unexpectedly caught the shifted boilerplate — fixture no longer shifted?")
@@ -396,20 +405,21 @@ class StreamingOpsSpec extends SparkSpec {
     val b1 = Seq(d(10L, s"pre amble text here $boiler tail"))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
     val dir = java.nio.file.Files.createTempDirectory("graft_cdc_sink").toString
-    val sink = StreamingOps.cdcCountsSink(dir, modulus = 4)
+    val cdc = EpochState.CdcCounts(modulus = 4)
+    val sink = StreamingOps.sink(cdc, dir)
     sink(b0, 0L)
     sink(b0, 0L) // replay must not double-count
     sink(b1, 1L)
     val whole = Dedup.cdcDedup(b0.unionByName(b1), modulus = 4)
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getString(3))).toMap
     val merged = Dedup.cdcDedupAgainst(
-      b0.unionByName(b1), StreamingOps.mergedCdcCounts(spark, dir), modulus = 4)
+      b0.unionByName(b1), StreamingOps.merged(spark, cdc, dir), modulus = 4)
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getString(3))).toMap
     assert(merged === whole, "merged per-epoch state must equal the one-shot batch pass")
     assert(whole(0L)._2 > 0L && whole(10L)._2 > 0L,
       "the shifted boiler must actually be caught in both docs")
     // Replay must not inflate any digest's df.
-    val maxDf = StreamingOps.mergedCdcCounts(spark, dir)
+    val maxDf = StreamingOps.merged(spark, cdc, dir)
       .agg(org.apache.spark.sql.functions.max("df")).collect().head.getLong(0)
     assert(maxDf === 2L, s"replay inflated the merged df to $maxDf")
   }
@@ -424,14 +434,14 @@ class StreamingOpsSpec extends SparkSpec {
     val b0 = Seq(d(0L, s"a b $shared c d $shared e f")).toDF("doc_id", "text", "lang", "source", "n_chars")
     val b1 = Seq(d(10L, s"x y z $shared w v")).toDF("doc_id", "text", "lang", "source", "n_chars")
     val dir = java.nio.file.Files.createTempDirectory("graft_es_sink").toString
-    val sink = StreamingOps.exactSubstrCountsSink(dir)
+    val sink = StreamingOps.sink(EpochState.ExactSubstrCounts(), dir)
     sink(b0, 0L)
     sink(b0, 0L) // replay must not double-count occurrences
     sink(b1, 1L)
     val whole = Dedup.exactSubstrDedup(b0.unionByName(b1))
       .collect().map(r => r.getLong(0) -> (r.getLong(2), r.getString(5))).toMap
     val merged = Dedup.exactSubstrDedupAgainst(
-        b0.unionByName(b1), StreamingOps.mergedExactSubstrCounts(spark, dir))
+        b0.unionByName(b1), StreamingOps.merged(spark, EpochState.ExactSubstrCounts(), dir))
       .collect().map(r => r.getLong(0) -> (r.getLong(2), r.getString(5))).toMap
     assert(merged === whole, "merged occurrence state must equal the one-shot batch pass")
     assert(whole(0L)._1 > 0L && whole(10L)._1 > 0L,
@@ -439,7 +449,7 @@ class StreamingOpsSpec extends SparkSpec {
     // A replayed epoch must not inflate occ: the shared span occurs
     // twice in b0 (self-repeat) + once in b1 = 3; a double-counted b0
     // epoch would read 5.
-    val occ1 = StreamingOps.mergedExactSubstrCounts(spark, dir)
+    val occ1 = StreamingOps.merged(spark, EpochState.ExactSubstrCounts(), dir)
       .agg(org.apache.spark.sql.functions.max("occ")).collect().head.getLong(0)
     assert(occ1 === 3L, s"replay inflated merged occurrence counts to $occ1")
   }
@@ -519,13 +529,13 @@ class StreamingOpsSpec extends SparkSpec {
     }.toDF("vec_id", "embedding", "label")
     val cents = Similarity.placeholderCentroids(emb)
     val dir = java.nio.file.Files.createTempDirectory("graft_ivf_sink").toString
-    val sink = StreamingOps.ivfPostingsSink(cents, dir)
+    val sink = StreamingOps.sink(EpochState.IvfPostings(cents), dir)
     val b0 = emb.filter($"vec_id" % 2 === 0)
     val b1 = emb.filter($"vec_id" % 2 === 1)
     sink(b0, 0L)
     sink(b0, 0L) // replay must not duplicate postings
     sink(b1, 1L)
-    val postings = StreamingOps.mergedIvfPostings(spark, dir)
+    val postings = StreamingOps.merged(spark, EpochState.IvfPostings(), dir)
     assert(postings.count() === 40L, "replayed epoch must overwrite, not append")
     val got = Similarity.ivfSearchOverPostings(postings, emb, cents)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
@@ -537,15 +547,16 @@ class StreamingOpsSpec extends SparkSpec {
 
   test("ExactSubstr occurrence-state compaction: additive fold, view unchanged, dirs bounded") {
     import spark.implicits._
+    val es = EpochState.ExactSubstrCounts(windowLen = 3)
     val dir = java.nio.file.Files.createTempDirectory("graft_es_compact").toString
-    val sink = StreamingOps.exactSubstrCountsSink(dir, windowLen = 3)
+    val sink = StreamingOps.sink(es, dir)
     val mk = (ids: Seq[Long]) => ids.map(i =>
       (i, s"shared span alpha beta gamma delta tail$i unique$i")).toDF("doc_id", "text")
     sink(mk(Seq(1L)), 0L); sink(mk(Seq(2L)), 1L); sink(mk(Seq(3L)), 2L)
-    def occs() = StreamingOps.mergedExactSubstrCounts(spark, dir)
+    def occs() = StreamingOps.merged(spark, es, dir)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val before = occs()
-    assert(StreamingOps.compactExactSubstrEpochs(spark, dir, keepAfter = 1L) === 2)
+    assert(StreamingOps.compact(spark, es, dir, keepAfter = 1L) === 2)
     assert(occs() === before, "compaction changed the merged occurrence state")
     assert(new java.io.File(dir).listFiles()
       .count(_.getName.startsWith("batch_id=")) === 2)
@@ -563,15 +574,15 @@ class StreamingOpsSpec extends SparkSpec {
     }.toDF("vec_id", "embedding", "label")
     val cents = Similarity.placeholderCentroids(emb)
     val dir = java.nio.file.Files.createTempDirectory("graft_ivf_compact").toString
-    val sink = StreamingOps.ivfPostingsSink(cents, dir)
+    val sink = StreamingOps.sink(EpochState.IvfPostings(cents), dir)
     val batches = (0 to 2).map(b => emb.filter($"vec_id" % 3 === b))
     batches.zipWithIndex.foreach { case (b, i) => sink(b, i.toLong) }
-    def view() = StreamingOps.mergedIvfPostings(spark, dir)
+    def view() = StreamingOps.merged(spark, EpochState.IvfPostings(), dir)
       .collect().map(r => (r.getLong(0), r.getLong(3))).toSet
     def dirs() = new java.io.File(dir).listFiles().count(_.getName.startsWith("batch_id="))
     val before = view()
     // 1. The merged view is unchanged by compaction.
-    val removed = StreamingOps.compactIvfEpochs(spark, dir, keepAfter = 1L)
+    val removed = StreamingOps.compact(spark, EpochState.IvfPostings(), dir, keepAfter = 1L)
     assert(removed === 2, "epochs 0 and 1 fold into the base")
     assert(view() === before, "compaction changed the merged postings")
     // 2. Dir count is bounded: one base + the live epoch.
@@ -588,12 +599,12 @@ class StreamingOpsSpec extends SparkSpec {
     // quantizer and query panel unchanged) makes the merged search equal
     // the one-shot batch search over the SURVIVORS, exactly.
     val ddir = java.nio.file.Files.createTempDirectory("graft_ivf_tombs").toString
-    val tomb = StreamingOps.tombstoneSink(ddir)
+    val tomb = StreamingOps.sink(EpochState.Tombstones(), ddir)
     tomb(Seq(17L).toDF("vec_id"), 0L)
     tomb(Seq(17L).toDF("vec_id"), 0L) // replayed delete epoch: no-op
     tomb(Seq(23L).toDF("vec_id"), 1L)
     val got = Similarity.ivfSearchOverPostings(
-        StreamingOps.mergedIvfPostings(spark, dir, deletesPath = Some(ddir)), emb, cents)
+        StreamingOps.merged(spark, EpochState.IvfPostings(), dir, deletesPath = Some(ddir)), emb, cents)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     val survivors = emb.filter(!$"vec_id".isin(17L, 23L))
     val batch = Similarity.ivfSearch(survivors)
@@ -601,9 +612,9 @@ class StreamingOpsSpec extends SparkSpec {
     assert(got === batch, "post-deletion merged search must equal the batch build on survivors")
     assert(got.nonEmpty)
     // Tombstone epochs compact like any other state dir.
-    assert(StreamingOps.compactTombstoneEpochs(spark, ddir, keepAfter = 1L) === 2)
+    assert(StreamingOps.compact(spark, EpochState.Tombstones(), ddir, keepAfter = 1L) === 2)
     val got2 = Similarity.ivfSearchOverPostings(
-        StreamingOps.mergedIvfPostings(spark, dir, deletesPath = Some(ddir)), emb, cents)
+        StreamingOps.merged(spark, EpochState.IvfPostings(), dir, deletesPath = Some(ddir)), emb, cents)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     assert(got2 === batch, "tombstone compaction changed the deletion set")
   }
@@ -654,7 +665,7 @@ class StreamingOpsSpec extends SparkSpec {
     // tombstoning ids 17, 23 (not the entry, not a query) makes the
     // merged search equal the batch build over the SURVIVING corpus.
     val ddir = java.nio.file.Files.createTempDirectory("graft_gann_tombs").toString
-    StreamingOps.tombstoneSink(ddir)(Seq(17L, 23L).toDF("vec_id"), 0L)
+    StreamingOps.sink(EpochState.Tombstones(), ddir)(Seq(17L, 23L).toDF("vec_id"), 0L)
     val gotDel = search(Some(ddir))
     val batchDel = Similarity.graphAnnSearch(emb.filter(!$"vec_id".isin(17L, 23L)))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
@@ -677,7 +688,7 @@ class StreamingOpsSpec extends SparkSpec {
     val gsink = StreamingOps.graphAnnEdgeSink(spark, gdir, degree = 8)
     (0 to 2).foreach(b => gsink(emb.filter($"vec_id" % 3 === b), b.toLong))
     val gdels = java.nio.file.Files.createTempDirectory("graft_gann_phys_t").toString
-    StreamingOps.tombstoneSink(gdels)(Seq(17L, 23L).toDF("vec_id"), 0L)
+    StreamingOps.sink(EpochState.Tombstones(), gdels)(Seq(17L, 23L).toDF("vec_id"), 0L)
     val batchDel = Similarity.graphAnnSearch(emb.filter(!$"vec_id".isin(17L, 23L)))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     assert(StreamingOps.compactGraphAnnEpochs(
@@ -705,14 +716,14 @@ class StreamingOpsSpec extends SparkSpec {
     // --- IVF: same physical guarantee ---
     val cents = Similarity.placeholderCentroids(emb)
     val idir = java.nio.file.Files.createTempDirectory("graft_ivf_phys").toString
-    val isink = StreamingOps.ivfPostingsSink(cents, idir)
+    val isink = StreamingOps.sink(EpochState.IvfPostings(cents), idir)
     (0 to 2).foreach(b => isink(emb.filter($"vec_id" % 3 === b), b.toLong))
-    assert(StreamingOps.compactIvfEpochs(
-      spark, idir, keepAfter = 2L, deletesPath = Some(gdels)) === 3)
+    assert(StreamingOps.compact(
+      spark, EpochState.IvfPostings(), idir, keepAfter = 2L, deletesPath = Some(gdels)) === 3)
     assert(spark.read.parquet(idir).filter(col("vec_id").isin(17L, 23L)).count() === 0L,
       "postings still carry a tombstoned vector on disk")
     val got = Similarity.ivfSearchOverPostings(
-        StreamingOps.mergedIvfPostings(spark, idir), emb, cents)
+        StreamingOps.merged(spark, EpochState.IvfPostings(), idir), emb, cents)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     val batchIvf = Similarity.ivfSearch(emb.filter(!$"vec_id".isin(17L, 23L)))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
@@ -733,7 +744,7 @@ class StreamingOpsSpec extends SparkSpec {
     // FOUR deletions: past the 8 − 6 = 2 slack, so the read-time mask's
     // parity bound no longer holds — the rebuild is the recovery path.
     val dels = java.nio.file.Files.createTempDirectory("graft_gann_rebuild_t").toString
-    StreamingOps.tombstoneSink(dels)(Seq(14L, 17L, 23L, 29L).toDF("vec_id"), 0L)
+    StreamingOps.sink(EpochState.Tombstones(), dels)(Seq(14L, 17L, 23L, 29L).toDF("vec_id"), 0L)
     val fresh = java.nio.file.Files.createTempDirectory("graft_gann_rebuild_new").toString
     StreamingOps.rebuildGraphAnnState(spark, dir, fresh, degree = 6, deletesPath = Some(dels))
     // The rebuilt index carries no deleted vectors and needs no mask:
@@ -820,7 +831,8 @@ class StreamingOpsSpec extends SparkSpec {
     // state must satisfy the q80 contract (presence + bound) for every
     // exact-heavy item.
     val dir = java.nio.file.Files.createTempDirectory("graft_mg_sink").toString
-    val sink = StreamingOps.mgSink("grp", "item", dir, k = 4)
+    val mg = EpochState.MisraGries("grp", "item", k = 4)
+    val sink = StreamingOps.sink(mg, dir)
     def batch(seed: Int, hot: Int) =
       ((0 until hot).map(_ => ("g", "hot")) ++
         (0 until 120).map(i => ("g", s"t${(i * 7 + seed) % 40}")))
@@ -837,17 +849,17 @@ class StreamingOpsSpec extends SparkSpec {
       assert(r.getAs[Boolean]("bound_ok"), s"${r.getAs[String]("item")} out of bound")
     }
     // n in the merged state equals the exact token total (replay-safe).
-    val nMerged = StreamingOps.mergedHeavyHitters(spark, dir, k = 4)
+    val nMerged = StreamingOps.merged(spark, mg, dir)
       .filter(col("item").isNull).collect().head.getLong(2)
     assert(nMerged === all.count())
     // Compaction applies the same sum-then-trim merge: the checked
     // contract still holds and the per-group counter count is ≤ k.
-    StreamingOps.compactMgEpochs(spark, dir, keepAfter = 1L, k = 4)
+    StreamingOps.compact(spark, mg, dir, keepAfter = 1L)
     val postCompact = StreamingOps.mergedHeavyHittersChecked(
       all, "grp", "item", spark, dir, k = 4).collect()
     assert(postCompact.map(r => (r.getString(1), r.getBoolean(4), r.getBoolean(5))).toSet
       === checked.map(r => (r.getString(1), r.getBoolean(4), r.getBoolean(5))).toSet)
-    val kept = StreamingOps.mergedHeavyHitters(spark, dir, k = 4)
+    val kept = StreamingOps.merged(spark, mg, dir)
       .filter(col("item").isNotNull).count()
     assert(kept <= 4L)
   }
@@ -856,17 +868,17 @@ class StreamingOpsSpec extends SparkSpec {
     import graft.functions.Sketches
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft_cms_compact").toString
-    val sink = StreamingOps.countMinSink("grp", "item", dir)
+    val sink = StreamingOps.sink(cms, dir)
     def batch(seed: Int) =
       (0 until 100).map(i => ("g", s"tok${seed}_${i % 13}")).toDF("grp", "item")
     (0L to 4L).foreach(b => sink(batch(b.toInt), b))
-    def cells() = StreamingOps.mergedCountMinCells(spark, dir).collect()
+    def cells() = StreamingOps.merged(spark, cms, dir).collect()
       .map(r => (r.getInt(1), r.getLong(2)) -> r.getLong(3)).toMap
     def dirs() = new java.io.File(dir).listFiles()
       .filter(_.isDirectory).map(_.getName).toSet
     val before = cells()
     // Fold epochs 0..2 into the base partition batch_id=-3.
-    val removed = StreamingOps.compactCountMinEpochs(spark, dir, keepAfter = 2L)
+    val removed = StreamingOps.compact(spark, cms, dir, keepAfter = 2L)
     assert(removed === 3)
     assert(dirs() === Set("batch_id=-3", "batch_id=3", "batch_id=4"))
     assert(cells() === before, "compaction changed the merged sketch")
@@ -880,8 +892,8 @@ class StreamingOpsSpec extends SparkSpec {
     assert(cells() === before)
     // Advancing the watermark folds base + live epochs + drops the stale
     // replayed dir; same-watermark re-compaction is an explicit no-op.
-    assert(StreamingOps.compactCountMinEpochs(spark, dir, 2L) === 0)
-    val removed2 = StreamingOps.compactCountMinEpochs(spark, dir, 4L)
+    assert(StreamingOps.compact(spark, cms, dir, 2L) === 0)
+    val removed2 = StreamingOps.compact(spark, cms, dir, 4L)
     assert(removed2 === 4) // old base, replayed e1, e3, e4
     assert(dirs() === Set("batch_id=-5"))
     assert(cells() === before, "second compaction changed the merged sketch")
@@ -895,7 +907,7 @@ class StreamingOpsSpec extends SparkSpec {
   test("compaction refuses a keepAfter beyond the newest existing epoch") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft_cms_overreach").toString
-    val sink = StreamingOps.countMinSink("grp", "item", dir)
+    val sink = StreamingOps.sink(cms, dir)
     (0L to 2L).foreach(b =>
       sink((0 until 20).map(i => ("g", s"t${b}_$i")).toDF("grp", "item"), b))
     def dirs() = new java.io.File(dir).listFiles()
@@ -905,12 +917,12 @@ class StreamingOpsSpec extends SparkSpec {
     // would make the sink skip their future batches as replays. Must be
     // refused loudly with the layout untouched.
     val ex = intercept[IllegalArgumentException] {
-      StreamingOps.compactCountMinEpochs(spark, dir, keepAfter = 7L)
+      StreamingOps.compact(spark, cms, dir, keepAfter = 7L)
     }
     assert(ex.getMessage.contains("beyond the newest existing epoch"))
     assert(dirs() === before, "failed compaction mutated the state layout")
     // The boundary itself (newest epoch) is legal.
-    assert(StreamingOps.compactCountMinEpochs(spark, dir, keepAfter = 2L) === 3)
+    assert(StreamingOps.compact(spark, cms, dir, keepAfter = 2L) === 3)
     assert(dirs() === Set("batch_id=-3"))
   }
 
@@ -924,7 +936,7 @@ class StreamingOpsSpec extends SparkSpec {
         .toDF("doc_id", "text", "lang", "source", "n_chars")
     val keptInit = df(0L -> text(0))
     val dir = java.nio.file.Files.createTempDirectory("graft_admission_compact").toString
-    val sink = StreamingOps.corpusAdmissionSink(spark, keptInit, dir)
+    val (sink, release) = StreamingOps.corpusAdmissionSink(spark, keptInit, dir)
     sink(df(100L -> text(2)), 0L)                       // novel → admitted
     sink(df(200L -> text(3)), 1L)                       // novel → admitted
     sink(df(300L -> text(4)), 2L)                       // novel → admitted
@@ -932,7 +944,7 @@ class StreamingOpsSpec extends SparkSpec {
       .collect().map(_.getAs[Long]("doc_id")).toSet
     assert(admitted() === Set(100L, 200L, 300L))
     // Fold epochs 0..1 into the base.
-    assert(StreamingOps.compactAdmissionEpochs(spark, dir, keepAfter = 1L) === 2)
+    assert(StreamingOps.compact(spark, EpochState.Rows, dir, keepAfter = 1L) === 2)
     def dirs() = new java.io.File(dir).listFiles()
       .filter(_.isDirectory).map(_.getName).toSet
     assert(dirs() === Set("batch_id=-2", "batch_id=2"))
@@ -952,16 +964,17 @@ class StreamingOpsSpec extends SparkSpec {
     val want = Curation.admitSnapshot(seqKept, df(400L -> text(2, mutateAt = 7), 401L -> text(5)))
       .collect().map(_.getAs[Long]("doc_id")).toSet
     assert(want === Set(401L))
+    release()
   }
 
   test("a crashed compaction (base without _SUCCESS) carries no authority and rerun recovers") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft_cms_crash").toString
-    val sink = StreamingOps.countMinSink("grp", "item", dir)
+    val sink = StreamingOps.sink(cms, dir)
     def batch(seed: Int) =
       (0 until 100).map(i => ("g", s"tok${seed}_${i % 13}")).toDF("grp", "item")
     (0L to 3L).foreach(b => sink(batch(b.toInt), b))
-    def cells() = StreamingOps.mergedCountMinCells(spark, dir).collect()
+    def cells() = StreamingOps.merged(spark, cms, dir).collect()
       .map(r => (r.getInt(1), r.getLong(2)) -> r.getLong(3)).toMap
     val before = cells()
     // Simulate a compaction that died mid-write: the target base dir
@@ -977,7 +990,7 @@ class StreamingOpsSpec extends SparkSpec {
     assert(StreamingOps.epochWatermark(spark, dir).isEmpty)
     assert(cells() === before, "uncommitted base changed the merged view")
     // Rerunning the same compaction replaces the junk and cleans up.
-    val removed = StreamingOps.compactCountMinEpochs(spark, dir, keepAfter = 2L)
+    val removed = StreamingOps.compact(spark, cms, dir, keepAfter = 2L)
     assert(removed === 3) // epochs 0,1,2 (junk base at -3 is overwritten in place)
     val dirs = new java.io.File(dir).listFiles().filter(_.isDirectory).map(_.getName).toSet
     assert(dirs === Set("batch_id=-3", "batch_id=3"))
@@ -990,28 +1003,27 @@ class StreamingOpsSpec extends SparkSpec {
     // HLL: register-max merge — compaction must not inflate estimates
     // even with cross-epoch duplicate values.
     val hdir = java.nio.file.Files.createTempDirectory("graft_hll_compact").toString
-    val hsink = StreamingOps.hllSink("grp", "v", hdir)
+    val hsink = StreamingOps.sink(hll, hdir)
     hsink((0 until 400).map(i => ("g", i.toLong)).toDF("grp", "v"), 0L)
     hsink((200 until 600).map(i => ("g", i.toLong)).toDF("grp", "v"), 1L)
     hsink((400 until 700).map(i => ("g", i.toLong)).toDF("grp", "v"), 2L)
-    val hBefore = StreamingOps.mergedHllDistinct(spark, hdir)
-      .collect().head.getAs[Double]("est_distinct")
-    assert(StreamingOps.compactHllEpochs(spark, hdir, 1L) === 2)
-    val hAfter = StreamingOps.mergedHllDistinct(spark, hdir)
-      .collect().head.getAs[Double]("est_distinct")
+    val hBefore = hllDistinct(hdir)
+    assert(StreamingOps.compact(spark, hll, hdir, 1L) === 2)
+    val hAfter = hllDistinct(hdir)
     assert(hAfter === hBefore)
     // Passage counts: digest-sum merge.
     val pdir = java.nio.file.Files.createTempDirectory("graft_pass_compact").toString
     def d(id: Long, t: String) = (id, t, "en", "s", t.length.toLong)
-    val psink = StreamingOps.passageCountsSink(pdir, passageLen = 4)
+    val pc = EpochState.PassageCounts(passageLen = 4)
+    val psink = StreamingOps.sink(pc, pdir)
     psink(Seq(d(0L, "terms of service apply alpha beta gamma delta"))
       .toDF("doc_id", "text", "lang", "source", "n_chars"), 0L)
     psink(Seq(d(1L, "terms of service apply epsilon zeta eta theta"))
       .toDF("doc_id", "text", "lang", "source", "n_chars"), 1L)
-    val pBefore = StreamingOps.mergedPassageCounts(spark, pdir)
+    val pBefore = StreamingOps.merged(spark, pc, pdir)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(StreamingOps.compactPassageEpochs(spark, pdir, 0L) === 1)
-    val pAfter = StreamingOps.mergedPassageCounts(spark, pdir)
+    assert(StreamingOps.compact(spark, pc, pdir, 0L) === 1)
+    val pAfter = StreamingOps.merged(spark, pc, pdir)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(pAfter === pBefore)
   }
@@ -1046,7 +1058,7 @@ class StreamingOpsSpec extends SparkSpec {
     // Streaming path WITH REPLAYS: each batch delivered twice
     // (foreachBatch's at-least-once contract after a failure).
     val dir = java.nio.file.Files.createTempDirectory("graft_admission").toString
-    val sink = StreamingOps.corpusAdmissionSink(spark, keptInit, dir)
+    val (sink, release) = StreamingOps.corpusAdmissionSink(spark, keptInit, dir)
     sink(batch0, 0L)
     sink(batch0, 0L) // replay of batch 0
     sink(batch1, 1L)
@@ -1055,14 +1067,16 @@ class StreamingOpsSpec extends SparkSpec {
     assert(streamed.collect().map(_.getAs[Long]("doc_id")).toSet === wantIds,
       "replayed sink admissions must equal the batch-computed admitted set")
     assert(streamed.select("batch_id").distinct().count() === 2L)
+    release()
 
     // And it wires into a real streaming query end-to-end.
     val dir2 = java.nio.file.Files.createTempDirectory("graft_admission_live").toString
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[(Long, String, String, String, Long)]
+    val (liveSink, liveRelease) = StreamingOps.corpusAdmissionSink(spark, keptInit, dir2)
     val q = in.toDF().toDF("doc_id", "text", "lang", "source", "n_chars")
       .writeStream
-      .foreachBatch(StreamingOps.corpusAdmissionSink(spark, keptInit, dir2))
+      .foreachBatch(liveSink)
       .start()
     in.addData(batch0.collect().map(r => (
       r.getAs[Long]("doc_id"), r.getAs[String]("text"), r.getAs[String]("lang"),
@@ -1073,6 +1087,7 @@ class StreamingOpsSpec extends SparkSpec {
       r.getAs[String]("source"), r.getAs[Long]("n_chars"))).toSeq: _*)
     q.processAllAvailable()
     q.stop()
+    liveRelease()
     assert(spark.read.parquet(dir2).collect().map(_.getAs[Long]("doc_id")).toSet === wantIds)
   }
 
@@ -1151,38 +1166,38 @@ class StreamingOpsSpec extends SparkSpec {
     val d1 = mk(10L -> s"x y z $shared w v only here$shared")
     val d2 = mk(20L -> "p q r s t u v w2 none shared")
     val dir = java.nio.file.Files.createTempDirectory("graft_es_takedown").toString
-    val sink = StreamingOps.exactSubstrCountsSink(dir)
+    val sink = StreamingOps.sink(EpochState.ExactSubstrCounts(), dir)
     sink(d0, 0L); sink(d1, 1L); sink(d2, 2L)
     // Before takedown the shared span strips from both carriers.
     val before = Dedup.exactSubstrDedupAgainst(
-        d0.unionByName(d2), StreamingOps.mergedExactSubstrCounts(spark, dir))
+        d0.unionByName(d2), StreamingOps.merged(spark, EpochState.ExactSubstrCounts(), dir))
       .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
     assert(before(0L) > 0L, "shared span must strip while doc 10 is in the state")
     // Subtraction epoch: doc 10 removed. Merged state must now equal the
     // batch occurrence counts over the survivors, digest for digest —
     // doc-10-only digests VANISH (not zero rows), and the shared span's
     // occ drops to 1 so the survivor strip keeps it.
-    StreamingOps.exactSubstrDeleteSink(dir)(d1, 3L)
+    StreamingOps.retractSink(EpochState.ExactSubstrCounts(), dir)(d1, 3L)
     val survivors = d0.unionByName(d2)
-    def stateMap() = StreamingOps.mergedExactSubstrCounts(spark, dir)
+    def stateMap() = StreamingOps.merged(spark, EpochState.ExactSubstrCounts(), dir)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val batchMap = Dedup.rollingOccurrenceCounts(survivors)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(stateMap() === batchMap,
       "merged state after subtraction must equal the survivor batch counts")
     val after = Dedup.exactSubstrDedupAgainst(
-        survivors, StreamingOps.mergedExactSubstrCounts(spark, dir))
+        survivors, StreamingOps.merged(spark, EpochState.ExactSubstrCounts(), dir))
       .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
     val oneShot = Dedup.exactSubstrDedup(survivors)
       .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
     assert(after === oneShot, "survivor strip against the state must equal the batch strip")
     assert(after(0L) === 0L, "with doc 10 gone nothing in doc 0 is duplicated")
     // Replay of the delete epoch: overwrite, not double-subtraction.
-    StreamingOps.exactSubstrDeleteSink(dir)(d1, 3L)
+    StreamingOps.retractSink(EpochState.ExactSubstrCounts(), dir)(d1, 3L)
     assert(stateMap() === batchMap, "a replayed delete epoch must not subtract twice")
     // Compaction folds adds + subtraction through the positive clamp:
     // view unchanged, and the base carries no zero/negative rows.
-    assert(StreamingOps.compactExactSubstrEpochs(spark, dir, keepAfter = 3L) === 4)
+    assert(StreamingOps.compact(spark, EpochState.ExactSubstrCounts(), dir, keepAfter = 3L) === 4)
     assert(stateMap() === batchMap, "compaction changed the merged state")
     val base = spark.read.parquet(dir).filter(col("occ") <= 0L).count()
     assert(base === 0L, s"compacted base carries $base non-positive occurrence rows")
@@ -1201,24 +1216,24 @@ class StreamingOpsSpec extends SparkSpec {
     // Aligned passage state: with d1 deleted the boilerplate df drops to
     // 1 — the survivor strip must keep it (df > 1 is the drop rule).
     val pDir = java.nio.file.Files.createTempDirectory("graft_pc_takedown").toString
-    val pSink = StreamingOps.passageCountsSink(pDir)
+    val pSink = StreamingOps.sink(EpochState.PassageCounts(), pDir)
     pSink(d0, 0L); pSink(d1, 1L); pSink(d2, 2L)
-    StreamingOps.passageCountsDeleteSink(pDir)(d1, 3L)
-    val pState = StreamingOps.mergedPassageCounts(spark, pDir)
+    StreamingOps.retractSink(EpochState.PassageCounts(), pDir)(d1, 3L)
+    val pState = StreamingOps.merged(spark, EpochState.PassageCounts(), pDir)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val pBatch = Dedup.passageDigestCounts(d0.unionByName(d2))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(pState === pBatch, "passage state after subtraction must equal survivor batch counts")
     val pStrip = Dedup.passageDedupAgainst(
-        d0.unionByName(d2), StreamingOps.mergedPassageCounts(spark, pDir))
+        d0.unionByName(d2), StreamingOps.merged(spark, EpochState.PassageCounts(), pDir))
       .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
     assert(pStrip.values.forall(_ === 0L), "nothing should strip once the other carrier is gone")
     // Rolling (dense-window) state: same contract, window digests.
     val rDir = java.nio.file.Files.createTempDirectory("graft_rc_takedown").toString
-    val rSink = StreamingOps.rollingCountsSink(rDir)
+    val rSink = StreamingOps.sink(EpochState.RollingCounts(), rDir)
     rSink(d0, 0L); rSink(d1, 1L); rSink(d2, 2L)
-    StreamingOps.rollingCountsDeleteSink(rDir)(d1, 3L)
-    val rState = StreamingOps.mergedRollingCounts(spark, rDir)
+    StreamingOps.retractSink(EpochState.RollingCounts(), rDir)(d1, 3L)
+    val rState = StreamingOps.merged(spark, EpochState.RollingCounts(), rDir)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val rBatch = Dedup.rollingDigestCounts(d0.unionByName(d2))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -1230,29 +1245,29 @@ class StreamingOpsSpec extends SparkSpec {
     import spark.implicits._
     def rows(xs: (String, String)*) = xs.toDF("grp", "item")
     val dir = java.nio.file.Files.createTempDirectory("graft_cms_takedown").toString
-    val sink = StreamingOps.countMinSink("grp", "item", dir)
+    val sink = StreamingOps.sink(cms, dir)
     val b0 = rows("g" -> "alpha", "g" -> "alpha", "g" -> "beta")
     val b1 = rows("g" -> "alpha", "g" -> "gamma")
     sink(b0, 0L); sink(b1, 1L)
     // Take down b1's contribution; the merged cells must equal the batch
     // sketch of b0 alone, cell for cell (fully-cancelled cells vanish —
     // dense-matrix semantics read them as 0 either way).
-    StreamingOps.countMinDeleteSink("grp", "item", dir)(b1, 2L)
+    StreamingOps.retractSink(cms, dir)(b1, 2L)
     def cellMap(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getString(0), r.getInt(1), r.getLong(2)) -> r.getLong(3)).toMap
-    val merged = cellMap(StreamingOps.mergedCountMinCells(spark, dir))
+    val merged = cellMap(StreamingOps.merged(spark, cms, dir))
     val batch = cellMap(Sketches.countMinCells(b0, "grp", "item"))
     assert(merged === batch, "merged cells after subtraction must equal the survivor batch cells")
     // Probe parity: estimates over the merged state equal the survivor
     // batch sketch's (alpha back to 2; gamma's cells cancelled → 0).
     val probes = rows("g" -> "alpha", "g" -> "gamma").distinct()
-    val est = Sketches.probeCountMin(StreamingOps.mergedCountMinCells(spark, dir), probes)
+    val est = Sketches.probeCountMin(StreamingOps.merged(spark, cms, dir), probes)
       .collect().map(r => r.getAs[String]("item") -> r.getAs[Long]("cms_est")).toMap
     assert(est("alpha") === 2L)
     assert(est("gamma") === 0L, "a fully-taken-down item must read 0, not a stale count")
     // Compaction folds through the positive clamp; view unchanged.
-    assert(StreamingOps.compactCountMinEpochs(spark, dir, keepAfter = 2L) === 3)
-    assert(cellMap(StreamingOps.mergedCountMinCells(spark, dir)) === batch)
+    assert(StreamingOps.compact(spark, cms, dir, keepAfter = 2L) === 3)
+    assert(cellMap(StreamingOps.merged(spark, cms, dir)) === batch)
     assert(spark.read.parquet(dir).filter(col("c") <= 0L).count() === 0L)
   }
 
@@ -1265,12 +1280,12 @@ class StreamingOpsSpec extends SparkSpec {
       .select(col("doc_id"), col("payload"))
     val clip = "identical video payload content here for the dup cluster"
     val dir = java.nio.file.Files.createTempDirectory("graft_vfp_sink").toString
-    val sink = StreamingOps.videoFingerprintsSink(dir)
+    val sink = StreamingOps.sink(EpochState.VideoFingerprints(), dir)
     sink(media(0L -> clip, 2L -> "a wholly different clip"), 0L)
     sink(media(0L -> clip, 2L -> "a wholly different clip"), 0L) // replay: overwrite
     sink(media(1L -> clip, 10L -> clip), 1L)
     def clusters(dels: Option[String]) = {
-      val fp = StreamingOps.mergedVideoFingerprints(spark, dir, dels)
+      val fp = StreamingOps.merged(spark, EpochState.VideoFingerprints(), dir, dels)
       assert(fp.count() === fp.select("doc_id").distinct().count(), "replay duplicated rows")
       fp.filter(col("video_fp").isin(
           fp.groupBy("video_fp").count().filter(col("count") > 1)
@@ -1281,11 +1296,11 @@ class StreamingOpsSpec extends SparkSpec {
       "the cross-epoch dup cluster must surface from the merged state")
     // Takedown: doc 1 tombstones out; the cluster shrinks, nothing else moves.
     val dels = java.nio.file.Files.createTempDirectory("graft_vfp_dels").toString
-    StreamingOps.tombstoneSink(dels, idCol = "doc_id")(Seq(1L).toDF("doc_id"), 0L)
+    StreamingOps.sink(EpochState.Tombstones("doc_id"), dels)(Seq(1L).toDF("doc_id"), 0L)
     assert(clusters(Some(dels)) === Set(0L, 10L))
     // Compaction with deletes: doc 1 leaves the DISK; the view is unchanged.
-    assert(StreamingOps.compactVideoFingerprintEpochs(
-      spark, dir, keepAfter = 1L, deletesPath = Some(dels)) === 2)
+    assert(StreamingOps.compact(
+      spark, EpochState.VideoFingerprints(), dir, keepAfter = 1L, deletesPath = Some(dels)) === 2)
     assert(spark.read.parquet(dir).filter(col("doc_id") === 1L).count() === 0L,
       "physical deletion must remove the tombstoned doc's fingerprint row")
     assert(clusters(Some(dels)) === Set(0L, 10L), "compaction changed the merged view")
@@ -1306,13 +1321,13 @@ class StreamingOpsSpec extends SparkSpec {
       10L -> near, // near-dup of kept 0: must drop
       11L -> "fresh snapshot material with no counterpart in the kept corpus at all")
     val dir = java.nio.file.Files.createTempDirectory("graft_sig_sink").toString
-    val sink = StreamingOps.signatureIndexSink(dir)
+    val sink = StreamingOps.sink(EpochState.SignatureIndex(), dir)
     sink(kept.filter(col("doc_id") === 0L), 0L)
     sink(kept.filter(col("doc_id") === 0L), 0L) // replay: overwrite, not duplicate
     sink(kept.filter(col("doc_id") > 0L), 1L)
     def survivors(dels: Option[String]) =
       Dedup.withNearDupAgainst(kept, snap,
-          keptSignatures = Some(StreamingOps.mergedSignatureIndex(spark, dir, dels))) {
+          keptSignatures = Some(StreamingOps.merged(spark, EpochState.SignatureIndex(), dir, dels))) {
         s => s.collect().map(_.getLong(0)).toSet
       }
     // Merged-index search equals the text-derived batch answer.
@@ -1322,17 +1337,17 @@ class StreamingOpsSpec extends SparkSpec {
     assert(survivors(None) === batch)
     assert(batch === Set(11L), "the planted near-dup must drop against the kept corpus")
     // Replay did not duplicate rows.
-    val merged = StreamingOps.mergedSignatureIndex(spark, dir)
+    val merged = StreamingOps.merged(spark, EpochState.SignatureIndex(), dir)
     assert(merged.count() === merged.select("doc_id").distinct().count())
     // Takedown: kept doc 0 tombstones out -> its near-dup stops being
     // suppressed immediately at read time.
     val dels = java.nio.file.Files.createTempDirectory("graft_sig_dels").toString
-    StreamingOps.tombstoneSink(dels, idCol = "doc_id")(Seq(0L).toDF("doc_id"), 0L)
+    StreamingOps.sink(EpochState.Tombstones("doc_id"), dels)(Seq(0L).toDF("doc_id"), 0L)
     assert(survivors(Some(dels)) === Set(10L, 11L))
     // Compaction with deletes: doc 0's signatures leave the DISK; the
     // merged view (and the search) is unchanged.
-    assert(StreamingOps.compactSignatureIndexEpochs(
-      spark, dir, keepAfter = 1L, deletesPath = Some(dels)) === 2)
+    assert(StreamingOps.compact(
+      spark, EpochState.SignatureIndex(), dir, keepAfter = 1L, deletesPath = Some(dels)) === 2)
     assert(spark.read.parquet(dir).filter(col("doc_id") === 0L).count() === 0L,
       "physical deletion must remove the tombstoned doc's signature rows")
     assert(survivors(Some(dels)) === Set(10L, 11L), "compaction changed the merged search")
@@ -1359,7 +1374,7 @@ class StreamingOpsSpec extends SparkSpec {
     }.toDF("vec_id", "embedding", "label")
     val cents0 = Similarity.placeholderCentroids(rows)
     val dir = java.nio.file.Files.createTempDirectory("graft_ivf_rebuild").toString
-    val sink = StreamingOps.ivfPostingsSink(cents0, dir)
+    val sink = StreamingOps.sink(EpochState.IvfPostings(cents0), dir)
     sink(rows.filter($"vec_id" < 100), 0L)
     sink(rows.filter($"vec_id" >= 100), 1L)
     def pairsOf(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
@@ -1367,11 +1382,11 @@ class StreamingOpsSpec extends SparkSpec {
         .map(r => (r.getLong(0), r.getLong(1))).toSet
     val exact = pairsOf(Similarity.knnBruteForce(rows))
     val frozen = pairsOf(Similarity.ivfSearchOverPostings(
-      StreamingOps.mergedIvfPostings(spark, dir), rows, cents0))
+      StreamingOps.merged(spark, EpochState.IvfPostings(), dir), rows, cents0))
     val rebuiltDir = java.nio.file.Files.createTempDirectory("graft_ivf_rebuilt").toString
     val cents = StreamingOps.rebuildIvfState(spark, dir, rebuiltDir)
     val rebuilt = Similarity.ivfSearchOverPostings(
-      StreamingOps.mergedIvfPostings(spark, rebuiltDir), rows, cents)
+      StreamingOps.merged(spark, EpochState.IvfPostings(), rebuiltDir), rows, cents)
     val rebuiltPairs = pairsOf(rebuilt)
     val recallFrozen = (exact intersect frozen).size.toDouble / exact.size
     val recallRebuilt = (exact intersect rebuiltPairs).size.toDouble / exact.size
@@ -1387,5 +1402,124 @@ class StreamingOpsSpec extends SparkSpec {
     assert(got === learned, "rebuilt-state search must equal the learned batch search")
     // And the centroids themselves match the raw-embedding trainer's.
     assert(cents === Similarity.trainIvfCentroids(rows))
+  }
+
+  test("state table laws: compaction and folded replays keep merged; additive kinds retract to empty; the rest refuse; tombstones vanish physically") {
+    import org.apache.spark.sql.DataFrame
+    import graft.operators.{Multimodal, Similarity}
+    import EpochState._
+    def tmp(p: String) = java.nio.file.Files.createTempDirectory(p).toString
+    // Rows as a multiset, so a merged view can be compared after its files change.
+    def rowsOf(df: DataFrame): Map[Seq[Any], Int] =
+      df.collect().toSeq.map(_.toSeq).groupBy(identity).map { case (r, rs) => r -> rs.size }
+    def epochs(df: DataFrame, id: String): Seq[DataFrame] =
+      (0 to 2).map(b => df.filter(pmod(col(id), lit(3)) === b))
+    val text = (0L until 12L).map { i =>
+      val t = s"shared span alpha beta gamma delta w${i % 2} tail$i unique$i shared span alpha"
+      (i, t, "en", "s", t.length.toLong)
+    }.toDF("doc_id", "text", "lang", "source", "n_chars")
+    val tokens = (0L until 90L).map(i => ("g" + i % 2, s"t${i * i % 11}", i)).toDF("grp", "item", "v")
+    val rnd = new scala.util.Random(43)
+    val emb = (0L until 30L).map { id =>
+      (id, Array.fill(64)(rnd.nextFloat() * 2f - 1f).toSeq, "l" + (id % 3))
+    }.toDF("vec_id", "embedding", "label")
+    // Pair-determined dp (as the graph-ANN sink emits), so (dp DESC, nb) is a total order per src.
+    val pairs = (for (a <- 0L until 12L; b <- 0L until 12L if a != b)
+      yield (a, b, (a * b * 31 + a + b) % 17)).toDF("src", "nb", "dp")
+    val ivf = IvfPostings(Similarity.placeholderCentroids(emb))
+    val fixtures: Seq[(EpochState, Seq[DataFrame])] = Seq(
+      CountMin("grp", "item") -> epochs(tokens, "v"),
+      Hll("grp", "v") -> epochs(tokens, "v"),
+      MisraGries("grp", "item", k = 3) -> epochs(tokens, "v"),
+      PassageCounts(passageLen = 4) -> epochs(text, "doc_id"),
+      RollingCounts(windowLen = 4) -> epochs(text, "doc_id"),
+      CdcCounts(modulus = 4) -> epochs(text, "doc_id"),
+      ExactSubstrCounts(windowLen = 4) -> epochs(text, "doc_id"),
+      VideoFingerprints() -> epochs(Multimodal.toAvi(text).select("doc_id", "payload"), "doc_id"),
+      SignatureIndex() -> epochs(text, "doc_id"),
+      ivf -> epochs(emb, "vec_id"),
+      Tombstones("doc_id") -> epochs(text, "doc_id"),
+      Rows -> epochs(text, "doc_id"),
+      GraphAnnCand(degree = 3) -> epochs(pairs, "src"),
+      GraphAnnFar -> epochs(pairs.select("src", "nb"), "src"),
+      GraphAnnVecs -> epochs(Similarity.lshBucketedVectors(emb), "vec_id"))
+    val kinds = scala.reflect.runtime.universe.typeOf[EpochState].typeSymbol.asClass
+      .knownDirectSubclasses.map(_.name.toString)
+    assert(fixtures.map(_._1.getClass.getSimpleName.stripSuffix("$")).toSet === kinds,
+      "every kind in the state table needs a fixture here")
+    val additive = Set[EpochState](CountMin("grp", "item"), PassageCounts(passageLen = 4),
+      RollingCounts(windowLen = 4), CdcCounts(modulus = 4), ExactSubstrCounts(windowLen = 4))
+    val tombstonedOn = Map[EpochState, Seq[String]](
+      VideoFingerprints() -> Seq("doc_id"), SignatureIndex() -> Seq("doc_id"),
+      ivf -> Seq("vec_id"), GraphAnnCand(degree = 3) -> Seq("src", "nb"),
+      GraphAnnFar -> Seq("src", "nb"), GraphAnnVecs -> Seq("vec_id"))
+    val dels = tmp("graft_law_dels")
+    StreamingOps.sink(Tombstones(), dels)(Seq(1L, 4L).toDF("vec_id"), 0L)
+
+    for ((kind, batches) <- fixtures) {
+      val dir = tmp("graft_law")
+      val sink = StreamingOps.sink(kind, dir)
+      batches.zipWithIndex.foreach { case (b, i) => sink(b, i.toLong) }
+      def view() = StreamingOps.merged(spark, kind, dir)
+      val before = rowsOf(view())
+      assert(before.nonEmpty, s"$kind: empty fixture state")
+      // 1. Compaction at a middle watermark keeps the merged view.
+      assert(StreamingOps.compact(spark, kind, dir, keepAfter = 1L) === 2, s"$kind: folded dirs")
+      val after = rowsOf(view())
+      kind match {
+        case MisraGries(_, _, k) =>
+          // The trim is not associative: a fold may settle on other counters
+          // than the one-shot merge. What survives is the n/(k+1) contract.
+          val exact = rowsOf(tokens.groupBy(col("grp"), col("item")).count())
+            .map { case (r, _) => (r(0), r(1)) -> r(2).asInstanceOf[Long] }
+          for (m <- Seq(before, after)) {
+            val n = m.keys.collect { case Seq(g, null, e: Long) => g -> e }.toMap
+            assert(n === Map("g0" -> 45L, "g1" -> 45L), s"$kind: group totals")
+            m.keys.collect { case Seq(g, i: String, e: Long) => (g, i, e) }.foreach {
+              case (g, i, e) =>
+                val c = exact((g, i))
+                assert(e <= c && (c - e) * (k + 1) <= n(g), s"$kind: $g/$i est $e vs $c")
+            }
+            assert(m.keys.count(_(1) != null) <= 2 * k, s"$kind: more than k counters per group")
+          }
+        case _ => assert(after === before, s"$kind: compaction changed the merged view")
+      }
+      // 2. Replayed epochs at or below the watermark change nothing.
+      sink(batches(0), 0L); sink(batches(1), 1L)
+      assert(rowsOf(view()) === after, s"$kind: a folded-epoch replay changed the merged view")
+
+      if (additive(kind)) {
+        // 3a. An epoch and its retraction merge to empty, before and after a fold.
+        val rdir = tmp("graft_law_retract")
+        StreamingOps.sink(kind, rdir)(batches(0), 0L)
+        StreamingOps.retractSink(kind, rdir)(batches(0), 1L)
+        assert(StreamingOps.merged(spark, kind, rdir).count() === 0L, s"$kind: retraction")
+        StreamingOps.compact(spark, kind, rdir, keepAfter = 1L)
+        assert(spark.read.parquet(rdir).count() === 0L, s"$kind: folded retraction left rows")
+      } else {
+        // 3b. No inverse (or deletion by tombstones): refused when the sink is built.
+        intercept[IllegalArgumentException](StreamingOps.retractSink(kind, dir))
+      }
+      tombstonedOn.get(kind) match {
+        case Some(idCols) =>
+          // 3c. Tombstoned ids vanish from merged and from the compacted base.
+          val hit = idCols.map(c => col(c).isin(1L, 4L)).reduce(_ || _)
+          val maskedView = StreamingOps.merged(spark, kind, dir, Some(dels))
+          assert(maskedView.filter(hit).count() === 0L, s"$kind: tombstoned rows in merged")
+          val masked = rowsOf(maskedView)
+          assert(masked.size < after.size, s"$kind: the tombstones must hit some rows")
+          // Except through the sink-degree prune (mergedGraphAnnState's slack
+          // bound), the mask is exactly a filter of the view.
+          if (kind != GraphAnnCand(degree = 3))
+            assert(masked === rowsOf(view().filter(!hit)), s"$kind: the mask is not a filter")
+          StreamingOps.compact(spark, kind, dir, keepAfter = 2L, deletesPath = Some(dels))
+          assert(spark.read.parquet(s"$dir/batch_id=-3").filter(hit).count() === 0L,
+            s"$kind: tombstoned rows left on disk")
+          assert(rowsOf(StreamingOps.merged(spark, kind, dir)) === masked,
+            s"$kind: the physical delete changed the masked view")
+        case None =>
+          intercept[IllegalArgumentException](StreamingOps.merged(spark, kind, dir, Some(dels)))
+      }
+    }
   }
 }

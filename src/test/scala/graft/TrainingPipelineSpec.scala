@@ -252,26 +252,6 @@ class TrainingPipelineSpec extends SparkSpec {
     assert(rows.last.actions === Seq.fill(5)(0L))
   }
 
-  test("typed TopKRecentActions aggregator matches the window formulation") {
-    import graft.operators.TopKRecentActions
-    val rng = new scala.util.Random(7)
-    val actions = (1 to 200).map { i =>
-      Action(rng.nextInt(5).toLong, rng.nextInt(40).toLong,
-        ts(f"2025-06-${1 + rng.nextInt(20)}%02d 0${rng.nextInt(10)}:00:00"), 1 + rng.nextInt(3))
-    }
-    val ds = spark.createDataset(actions)(org.apache.spark.sql.Encoders.product[Action])
-    val viaAgg = TopKRecentActions.customerHistoryTopK(spark, ds, 7)
-      .collect().map(t => t._1 -> (t._2, t._3)).toMap
-    // Window-based reference
-    val expected = actions.groupBy(_.customer_id).map { case (c, as) =>
-      val top = as.sortBy(a => (-a.action_time.getTime, a.item_id, a.action_type)).take(7)
-      c -> (
-        (top.map(_.item_id) ++ Seq.fill(7)(0L)).take(7),
-        (top.map(_.action_type) ++ Seq.fill(7)(0)).take(7))
-    }
-    assert(viaAgg === expected)
-  }
-
   test("sampleNegatives draws deterministic non-shown items per carousel") {
     val (impressions, _, _, _) = basicFixture
     val negs = TrainingPipeline.sampleNegatives(impressions, numNegatives = 4, numItems = 1000L)
