@@ -232,26 +232,33 @@ object SparkEntry {
 
   private def stagedMixedMedia(s: SparkSession, dir: String): DataFrame = {
     val staged = stagedPathFor(s, "clean:" + dir) {
-        val d = Tables.documents(s, dir)
-        val sel = pmod(col("doc_id"), lit(8L))
-        val jpegOk = length(col("text")) >= 64
-        val pngOk = length(col("text")) >= 6
-        def bucket(m: Int) = d.filter(sel === m)
-        def pp(df: DataFrame) = df.select(col("doc_id"), col("payload"))
-        val media = pp(Multimodal.toPgm(bucket(0)))
-          .unionByName(pp(Multimodal.toPpm(bucket(1))))
-          .unionByName(pp(Multimodal.toWav(bucket(2))))
-          .unionByName(pp(Multimodal.toBmp(bucket(3))))
-          .unionByName(pp(Multimodal.toPng(d.filter(sel === 4 && pngOk))))
-          .unionByName(pp(Multimodal.toJpeg(d.filter(sel === 5 && jpegOk))))
-          .unionByName(pp(Multimodal.toAvi(bucket(6))))
-          .unionByName(pp(Multimodal.toMedia(
-            d.filter(sel === 7 || (sel === 5 && !jpegOk) || (sel === 4 && !pngOk)))))
         val path = exitCleanedTempDir("graft_router_media")
-        media.write.mode("overwrite").parquet(path)
+        mixedMedia(Tables.documents(s, dir)).write.mode("overwrite").parquet(path)
         path
       }
     s.read.parquet(staged)
+  }
+
+  /** The mixed lake's payloads, `(doc_id, payload)`: doc_id % 8 picks
+    * the builder (pgm, ppm, wav, bmp, png, jpeg, avi, raw text), and
+    * docs too short for a PNG (6 chars) or JPEG (64 chars) raster fall
+    * back to the raw bucket.
+    */
+  private[graft] def mixedMedia(d: DataFrame): DataFrame = {
+    val sel = pmod(col("doc_id"), lit(8L))
+    val jpegOk = length(col("text")) >= 64
+    val pngOk = length(col("text")) >= 6
+    def bucket(m: Int) = d.filter(sel === m)
+    def pp(df: DataFrame) = df.select(col("doc_id"), col("payload"))
+    pp(Multimodal.toPgm(bucket(0)))
+      .unionByName(pp(Multimodal.toPpm(bucket(1))))
+      .unionByName(pp(Multimodal.toWav(bucket(2))))
+      .unionByName(pp(Multimodal.toBmp(bucket(3))))
+      .unionByName(pp(Multimodal.toPng(d.filter(sel === 4 && pngOk))))
+      .unionByName(pp(Multimodal.toJpeg(d.filter(sel === 5 && jpegOk))))
+      .unionByName(pp(Multimodal.toAvi(bucket(6))))
+      .unionByName(pp(Multimodal.toMedia(
+        d.filter(sel === 7 || (sel === 5 && !jpegOk) || (sel === 4 && !pngOk)))))
   }
 
   /** q265's TRANSFORMED mixed lake — the clean staged lake pushed
@@ -285,21 +292,13 @@ object SparkEntry {
     s.read.parquet(staged)
   }
 
-  /** The q252/q265 router-geometry projection — ONE definition so the
-    * clean-lake and transformed-lake gates pin the same decode-derived
-    * scalar per kind.
+  /** The q252/q265/q276 router-geometry projection — ONE definition so
+    * the clean-lake, transformed-lake and thumbnail gates pin the same
+    * decode-derived scalar per kind (`Multimodal.routedGeometry`, read
+    * off the media-kind table).
     */
-  private def routerGeometry(routed: DataFrame): DataFrame =
-    routed.select(
-      col("doc_id"), col("kind"),
-      when(col("kind") === "pgm", col("pgm.width").cast("long"))
-        .when(col("kind") === "ppm", col("ppm.width").cast("long"))
-        .when(col("kind") === "wav", col("wav.n_samples"))
-        .when(col("kind") === "bmp", col("bmp.n_px"))
-        .when(col("kind") === "png", col("png.n_px"))
-        .when(col("kind") === "jpeg", col("jpeg.n_blocks"))
-        .when(col("kind") === "avi", col("avi.n_frames").cast("long"))
-        .otherwise(lit(-1L)).as("geom"))
+  private[graft] def routerGeometry(routed: DataFrame): DataFrame =
+    routed.select(col("doc_id"), col("kind"), Multimodal.routedGeometry.as("geom"))
 
   /** q253/q254's deterministic transmission damage over the mixed lake:
     * doc_id % 9 == 4 truncates the payload to its first 8 bytes (mod 9
@@ -1530,11 +1529,11 @@ object SparkEntry {
     // fields, sample count, and exact amplitude moments in one hash.
     "q256_audio_resample" -> ((s, dir) =>
       landed( // q279's fixture-shape notes (repartition + landed-before-order)
-        Multimodal.decodeWavFeatures(s,
+        Multimodal.decodeEach(
             Multimodal.resize(s,
               Multimodal.toWav16(Tables.documents(s, dir)
                 .spreadWide("doc_id")),
-              Codec.Wav, Box(4)))
+              Codec.Wav, Box(4)))(Multimodal.wavFeatures)
           .toDF())
         .orderBy("doc_id")),
 
@@ -1549,11 +1548,11 @@ object SparkEntry {
     // subsumes it, so engine and oracle drop identical doc sets.)
     "q269_png_resize" -> ((s, dir) =>
       landed( // q279's fixture-shape notes (repartition + landed-before-order)
-        Multimodal.decodePngFeatures(s,
+        Multimodal.decodeEach(
             Multimodal.resize(s,
               Multimodal.toPng(Tables.documents(s, dir).filter(col("n_chars") >= 6)
                 .spreadWide("doc_id")),
-              Codec.Png, Box(4)))
+              Codec.Png, Box(4)))(Multimodal.pngFeatures)
           .toDF()
           .drop("idat_len"))
         .orderBy("doc_id")),
@@ -1568,11 +1567,11 @@ object SparkEntry {
     // round-tripped through the decoder.
     "q275_linear_resample" -> ((s, dir) =>
       landed( // q279's fixture-shape notes (repartition + landed-before-order)
-        Multimodal.decodeWavFeatures(s,
+        Multimodal.decodeEach(
             Multimodal.resize(s,
               Multimodal.toWav16(Tables.documents(s, dir)
                 .spreadWide("doc_id")),
-              Codec.Wav, Bilinear(3000)))
+              Codec.Wav, Bilinear(3000)))(Multimodal.wavFeatures)
           .toDF())
         .orderBy("doc_id")),
 
@@ -1601,11 +1600,11 @@ object SparkEntry {
     // values, all of which the oracle replays from text block sums.
     "q277_jpeg_thumbnail" -> ((s, dir) =>
       landed( // q279's fixture-shape notes (repartition + landed-before-order)
-        Multimodal.decodeJpegFeatures(s,
+        Multimodal.decodeEach(
             Multimodal.resize(s,
               Multimodal.toJpeg(Tables.documents(s, dir).filter(col("n_chars") >= 64)
                 .spreadWide("doc_id")),
-              Codec.Jpeg, Bilinear(24, 16)))
+              Codec.Jpeg, Bilinear(24, 16)))(Multimodal.JpegCodec.decode)
           .toDF()
           .drop("scan_bits", "recon_sum"))
         .orderBy("doc_id")),
@@ -1635,10 +1634,10 @@ object SparkEntry {
     // whole codec chain twice.
     "q279_color_jpeg" -> ((s, dir) =>
       landed(
-        Multimodal.decodeJpegColorFeatures(s,
+        Multimodal.decodeEach(
             Multimodal.toJpegColor(
               Tables.documents(s, dir).filter(col("n_chars") >= 3)
-                .spreadWide("doc_id")))
+                .spreadWide("doc_id")))(Multimodal.JpegCodec.decodeColor)
           .toDF())
         .orderBy("doc_id")),
 
@@ -1652,13 +1651,13 @@ object SparkEntry {
     // replays from text bytes: 8 Y blocks collapse to 4 distinct DCs
     // (the 2 block rows are identical), chroma to 2 blocks per channel.
     "q280_color_jpeg_thumbnail" -> ((s, dir) =>
-      landed(
-        Multimodal.decodeJpegColorFeatures(s,
+      landed( // q279's fixture-shape notes
+        Multimodal.decodeEach(
             Multimodal.resize(s,
               Multimodal.toJpegColor(
                 Tables.documents(s, dir).filter(col("n_chars") >= 3)
                   .spreadWide("doc_id")),
-              Codec.Jpeg, Bilinear(24, 16))) // q279's fixture-shape notes
+              Codec.Jpeg, Bilinear(24, 16)))(Multimodal.JpegCodec.decodeColor)
           .toDF())
         .orderBy("doc_id")),
 
@@ -1689,10 +1688,10 @@ object SparkEntry {
     // by the same gate). Half-pixel fixed-point sampling, floor-exact
     // integers end to end, so the oracle replays every output pixel.
     "q272_bilinear_resize" -> ((s, dir) =>
-      Multimodal.decodePgmFeatures(s,
+      Multimodal.decodeEach(
           Multimodal.resize(s,
             Multimodal.toPgm(Tables.documents(s, dir).filter(col("n_chars") >= 1)),
-            Codec.Pgm, Bilinear(48, 1)))
+            Codec.Pgm, Bilinear(48, 1)))(Multimodal.pgmFeatures)
         .toDF()
         .orderBy("doc_id")),
 
@@ -1701,10 +1700,10 @@ object SparkEntry {
     // single source row — the edge-clamp branch under the oracle), so
     // R/G/B independence and the vertical pass both pin.
     "q273_bilinear_color_resize" -> ((s, dir) =>
-      Multimodal.decodePpmFeatures(s,
+      Multimodal.decodeEach(
           Multimodal.resize(s,
             Multimodal.toPpm(Tables.documents(s, dir).filter(col("n_chars") >= 3)),
-            Codec.Ppm, Bilinear(32, 2)))
+            Codec.Ppm, Bilinear(32, 2)))(Multimodal.ppmFeatures)
         .toDF()
         .orderBy("doc_id")),
 
@@ -1719,11 +1718,11 @@ object SparkEntry {
     // extended across a lossy codec).
     "q271_jpeg_resize" -> ((s, dir) =>
       landed( // q279's fixture-shape notes (repartition + landed-before-order)
-        Multimodal.decodeJpegFeatures(s,
+        Multimodal.decodeEach(
             Multimodal.resize(s,
               Multimodal.toJpeg(Tables.documents(s, dir).filter(col("n_chars") >= 64)
                 .spreadWide("doc_id")),
-              Codec.Jpeg, Box(4)))
+              Codec.Jpeg, Box(4)))(Multimodal.JpegCodec.decode)
           .toDF()
           .drop("scan_bits", "recon_sum"))
         .orderBy("doc_id")),
@@ -1737,11 +1736,11 @@ object SparkEntry {
     // swizzle or stride slip anywhere hash-fails.
     "q270_bmp_resize" -> ((s, dir) =>
       landed( // q279's fixture-shape notes (repartition + landed-before-order)
-        Multimodal.decodeBmpFeatures(s,
+        Multimodal.decodeEach(
             Multimodal.resize(s,
               Multimodal.toBmp(Tables.documents(s, dir)
                 .spreadWide("doc_id")),
-              Codec.Bmp, Box(4)))
+              Codec.Bmp, Box(4)))(Multimodal.bmpFeatures)
           .toDF())
         .orderBy("doc_id")),
 
@@ -1753,8 +1752,9 @@ object SparkEntry {
       // Measured 0.34 -> 0.77 s under the q279 fixture-shape treatment
       // (ISO r20): the PPM chain is too cheap for the repartition+landed
       // overhead to pay for the double-eval it removes. Left as-is.
-      Multimodal.decodePpmFeatures(s,
-          Multimodal.resize(s, Multimodal.toPpm(Tables.documents(s, dir)), Codec.Ppm, Box(4)))
+      Multimodal.decodeEach(
+          Multimodal.resize(s, Multimodal.toPpm(Tables.documents(s, dir)), Codec.Ppm, Box(4)))(
+          Multimodal.ppmFeatures)
         .toDF()
         .orderBy("doc_id")),
 
@@ -1764,8 +1764,9 @@ object SparkEntry {
     // the oracle pins every output pixel (floor-mean of its 4-byte
     // block) through resize, re-encode, AND re-decode in one hash.
     "q255_image_resize" -> ((s, dir) =>
-      Multimodal.decodePgmFeatures(s,
-          Multimodal.resize(s, Multimodal.toPgm(Tables.documents(s, dir)), Codec.Pgm, Box(4)))
+      Multimodal.decodeEach(
+          Multimodal.resize(s, Multimodal.toPgm(Tables.documents(s, dir)), Codec.Pgm, Box(4)))(
+          Multimodal.pgmFeatures)
         .toDF()
         .select(
           col("doc_id"), col("width"), col("height"), col("n_px"),
@@ -2144,7 +2145,8 @@ object SparkEntry {
     // codepoint), so the audio path gets the same oracle gate as the
     // netpbm decoders in q24.
     "q114_wav_features" -> ((s, dir) =>
-      Multimodal.decodeWavFeatures(s, Multimodal.toWav(Tables.documents(s, dir))).toDF()
+      Multimodal.decodeEach(Multimodal.toWav(Tables.documents(s, dir)))(Multimodal.wavFeatures)
+        .toDF()
         .orderBy("doc_id")),
 
     // Same oracle gate for the decoder's SIGNED 16-bit branch: toWav16
@@ -2155,9 +2157,9 @@ object SparkEntry {
       // q279's fixture-shape notes: explicit-width repartition before the
       // 1-file scan's codec chain, landed bounded before the total order.
       landed(
-        Multimodal.decodeWavFeatures(s,
+        Multimodal.decodeEach(
             Multimodal.toWav16(Tables.documents(s, dir)
-              .spreadWide("doc_id")))
+              .spreadWide("doc_id")))(Multimodal.wavFeatures)
           .toDF())
         .orderBy("doc_id")),
 
@@ -2168,9 +2170,9 @@ object SparkEntry {
     // compiled 256-entry table.
     "q174_mulaw_features" -> ((s, dir) =>
       landed( // q279's fixture-shape notes (repartition + landed-before-order)
-        Multimodal.decodeWavFeatures(s,
+        Multimodal.decodeEach(
             Multimodal.toWavMuLaw(Tables.documents(s, dir)
-              .spreadWide("doc_id")))
+              .spreadWide("doc_id")))(Multimodal.wavFeatures)
           .toDF())
         .orderBy("doc_id")),
 
@@ -2941,9 +2943,9 @@ object SparkEntry {
     // assumption.
     "q137_bmp_features" -> ((s, dir) =>
       landed( // q279's fixture-shape notes (repartition + landed-before-order)
-        Multimodal.decodeBmpFeatures(s,
+        Multimodal.decodeEach(
             Multimodal.toBmp(Tables.documents(s, dir)
-              .spreadWide("doc_id")))
+              .spreadWide("doc_id")))(Multimodal.bmpFeatures)
           .toDF())
         .orderBy("doc_id")),
 
@@ -3192,9 +3194,9 @@ object SparkEntry {
     // engine-asserted in the spec, not hash-gated.
     "q156_png_features" -> ((s, dir) =>
       landed( // q279's fixture-shape notes (repartition + landed-before-order)
-        Multimodal.decodePngFeatures(s,
+        Multimodal.decodeEach(
             Multimodal.toPng(Tables.documents(s, dir)
-              .spreadWide("doc_id")))
+              .spreadWide("doc_id")))(Multimodal.pngFeatures)
           .toDF()
           .drop("idat_len"))
         .orderBy("doc_id")),
@@ -3207,8 +3209,8 @@ object SparkEntry {
     // oracle replays the surviving lossy surface (quantized DC terms,
     // Huffman bit counts, flat reconstruction) from the source text.
     "q229_jpeg_features" -> ((s, dir) =>
-      Multimodal.decodeJpegFeatures(s, Multimodal.toJpeg(
-          Tables.documents(s, dir).filter(col("n_chars") >= 64)))
+      Multimodal.decodeEach(Multimodal.toJpeg(
+          Tables.documents(s, dir).filter(col("n_chars") >= 64)))(Multimodal.JpegCodec.decode)
         .toDF()
         .orderBy("doc_id")),
 
@@ -3726,18 +3728,18 @@ object SparkEntry {
         .limit(100)),
 
     // Multimodal: binary payload + metadata + feature extraction. Two
-    // decode paths joined: the histogram stub over the text/plain payload
+    // decode paths joined: the byte histogram over the text/plain payload
     // (f0/f6), and a REAL binary-PGM decode — each doc wrapped as a
     // 1-row P5 graymap (header with comment line + raw raster), parsed
-    // back by PgmDecoder, raster reduced to pixel moments. The decoded
+    // back by pgmFeatures, raster reduced to pixel moments. The decoded
     // width/mean/max are checkable in SQL because the raster bytes ARE
     // the document's ASCII bytes.
     "q24_multimodal_features" -> ((s, dir) => {
       val docs = Tables.documents(s, dir)
       val media = Multimodal.toMedia(docs)
-      val feats = Multimodal.extractByteHistogram(s, media).toDF()
-      val pgm = Multimodal.decodePgmFeatures(s, Multimodal.toPgm(docs)).toDF()
-      val ppm = Multimodal.decodePpmFeatures(s, Multimodal.toPpm(docs)).toDF()
+      val feats = Multimodal.decodeEach(media)(Multimodal.histogramFeatures).toDF()
+      val pgm = Multimodal.decodeEach(Multimodal.toPgm(docs))(Multimodal.pgmFeatures).toDF()
+      val ppm = Multimodal.decodeEach(Multimodal.toPpm(docs))(Multimodal.ppmFeatures).toDF()
       // Real multi-frame path: every 4th frame of the concatenated-P5
       // stream, each sampled frame decoded as its own image.
       val frames = Multimodal.decodePgmFrames(

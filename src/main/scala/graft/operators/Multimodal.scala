@@ -5,31 +5,36 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BinaryType, StructField, StructType}
 
+import scala.reflect.runtime.universe.TypeTag
+
 /** Multimodal-column plumbing: opaque `binary` payloads with typed
   * metadata, decoded/feature-extracted in distributed batches.
   *
-  * Decoders:
-  *   - [[PgmDecoder]] — a REAL decoder for binary PGM (netpbm "P5"), the
-  *     minimal grayscale raster: ASCII header (magic, dims, maxval, with
-  *     `#` comments and arbitrary whitespace per the spec) followed by a
-  *     raw byte raster. Pure JVM, no media libraries, deterministic.
-  *   - [[PpmDecoder]] — the color sibling for binary PPM ("P6"): same
-  *     header grammar, 3 bytes (R,G,B) per pixel, reduced to per-channel
-  *     moments.
-  *   - [[MultimodalStub.byteHistogram]] — a 16-bin BYTE-DISTRIBUTION
-  *     feature (NOT media decoding) standing in for codecs whose
-  *     libraries don't exist in this environment (JPEG/PNG/audio); swap
-  *     in a real codec call and everything else carries over unchanged.
+  * Media kinds: ONE table ([[kinds]]) names every decodable format —
+  * netpbm gray (P5) and color (P6), RIFF/WAVE audio, RIFF/AVI video,
+  * 24-bit BMP, truecolor PNG and baseline JPEG — with its content
+  * claim, its [[Codec]], its feature record and the geometry field the
+  * routers report. Everything that iterates formats derives from it:
+  * the feature router ([[extractFeatures]]), the quarantined decode and
+  * transform inventories, the transform routers and the routed
+  * geometry column. A payload no kind claims takes the 16-bin
+  * byte-histogram fallback ([[histogramFeatures]]), a byte-distribution
+  * feature over the undecoded payload, not a decode.
+  *
+  * Decode is one partition-local pass ([[decodeEach]]) over a kind's
+  * feature function. The raster kinds (PGM, PPM, BMP, PNG) and WAV build
+  * their records from the codec's decoded [[Raster]] through one moments
+  * pass; JPEG reports quantized-DC statistics ([[JpegCodec.decode]]) and
+  * AVI a container summary ([[aviFeatures]]).
   *
   * Multi-frame payloads are REAL too: [[toAnimatedPgm]] concatenates
   * fixed-size P5 images the way netpbm streams do, [[sampleFrames]]
   * slices every `stride`-th frame with pure byte arithmetic, and the
-  * sampled frames decode with the same [[PgmDecoder]].
+  * sampled frames decode with the same PGM feature function.
   *
   * Transforms are codec × kernel: [[resize]] decodes each payload
   * through a [[Codec]] into a [[Raster]], applies one [[Kernel]]
-  * ([[Box]] or [[Bilinear]]) and re-encodes into the same format; the
-  * three transform routers iterate one codec table ([[codecs]]).
+  * ([[Box]] or [[Bilinear]]) and re-encodes into the same format.
   *
   * Scale: payloads never leave their partition (decode is `mapPartitions`,
   * no shuffle); metadata lives in a separate small struct column so
@@ -37,8 +42,6 @@ import org.apache.spark.sql.types.{BinaryType, StructField, StructType}
   */
 object Multimodal {
 
-  case class MediaMeta(format: String, n_bytes: Long, n_frames: Int)
-  case class MediaRow(doc_id: Long, payload: Array[Byte], meta: MediaMeta)
   case class MediaFeatures(doc_id: Long, features: Seq[Float])
 
   val FrameBytes = 64
@@ -89,176 +92,177 @@ object Multimodal {
           col("n_frames")).as("meta"))
   }
 
-  /** STUB (not a decoder): 16-bin byte histogram normalized to [0,1] — a
-    * byte-DISTRIBUTION feature over the undecoded payload. Real media
-    * decoding lives in [[PgmDecoder]]/[[PpmDecoder]]; this stands in only
-    * for formats whose codec libraries aren't in this environment.
-    * ??? ← a real implementation calls the media codec here. Deterministic
-    * so tests and resumed runs agree.
+  /** The one partition-local decode pass: `f` maps each row's
+    * `(doc_id, payload)` to one record, typed `mapPartitions` (the Scala
+    * analog of a batched pandas-UDF decode) — payloads never leave their
+    * partition, zero shuffle. Every per-kind feature decode, the
+    * routers' arms and the quarantined passes run through it; `f` is a
+    * kind's feature function ([[pgmFeatures]], [[JpegCodec.decode]], …)
+    * or a wrapper around one.
     */
-  object MultimodalStub {
-    def byteHistogram(payload: Array[Byte]): Seq[Float] = {
-      val bins = new Array[Long](16)
-      payload.foreach(b => bins((b & 0xff) / 16) += 1)
-      val total = math.max(payload.length, 1).toFloat
-      bins.map(_ / total).toSeq
+  def decodeEach[T <: Product : TypeTag](media: DataFrame)(
+      f: (Long, Array[Byte]) => T): Dataset[T] =
+    media.select(col("doc_id"), col("payload"))
+      .as(Encoders.product[(Long, Array[Byte])])
+      .mapPartitions(_.map { case (id, b) => f(id, b) })(Encoders.product[T])
+
+  /** The fallback arm for payloads no kind claims: a 16-bin byte
+    * histogram normalized to [0,1] — a byte-DISTRIBUTION feature over the
+    * undecoded payload, not media decoding. Deterministic, so tests and
+    * resumed runs agree.
+    */
+  def histogramFeatures(id: Long, payload: Array[Byte]): MediaFeatures = {
+    val bins = new Array[Long](16)
+    payload.foreach(b => bins((b & 0xff) / 16) += 1)
+    val total = math.max(payload.length, 1).toFloat
+    MediaFeatures(id, bins.map(_ / total).toSeq)
+  }
+
+  /** One media kind: its name (the router's `kind` value and its
+    * feature column), its content claim over a binary `payload` column,
+    * its [[Codec]], its feature function, and two long-valued fields of
+    * the feature record — `geom`, the decode-derived geometry
+    * [[mediaInventory]] and [[routedGeometry]] report, and `outGeom`,
+    * the geometry [[mediaTransformInventory]] re-decodes from a
+    * transformed payload.
+    */
+  private final case class MediaKind[F <: Product : TypeTag](
+      name: String, claim: Column, codec: Codec,
+      features: (Long, Array[Byte]) => F, geom: String, outGeom: String) {
+
+    /** Every claimed payload's feature record, one row each. */
+    def decoded(media: DataFrame): DataFrame = decodeEach(media.filter(claim))(features).toDF()
+
+    /** Decode one payload and read the long-valued record field `field`. */
+    def read(field: String): (Long, Array[Byte]) => Long = {
+      val i = Encoders.product[F].schema.fieldIndex(field)
+      val f = features
+      (id, b) => f(id, b).productElement(i).asInstanceOf[Number].longValue
     }
   }
 
-  /** Partition-parallel byte-histogram extraction over the binary column:
-    * typed `mapPartitions` (the Scala analog of a batched pandas-UDF
-    * decode) — one pass per partition, zero shuffle. Named for what it
-    * computes: this is the byte-distribution STUB path, not media
-    * decoding — see [[decodePgmFeatures]]/[[decodePpmFeatures]] for the
-    * real decoders sharing the same batch shape.
-    */
-  def extractByteHistogram(spark: SparkSession, media: DataFrame): Dataset[MediaFeatures] = {
-    import spark.implicits._
-    media.select(col("doc_id"), col("payload")).as[(Long, Array[Byte])]
-      .mapPartitions { rows =>
-        rows.map { case (id, payload) =>
-          MediaFeatures(id, MultimodalStub.byteHistogram(payload))
-        }
-      }
-  }
-
-  /** Magic-byte feature router — the entry point when a media frame
-    * mixes formats, so a decodable payload can never silently degrade to
-    * the byte-distribution stub: `P5` payloads decode through
-    * [[PgmDecoder]], `P6` through [[PpmDecoder]], `RIFF…WAVE` through
-    * [[WavDecoder]], `RIFF…AVI ` through [[AviDecoder]] (summarized per
-    * document), `BM`+DIB through [[BmpDecoder]], the PNG signature
-    * through [[PngCodec]], the JPEG SOI through [[JpegCodec]], and ONLY
-    * formats with no decoder in this environment fall back to
-    * [[MultimodalStub.byteHistogram]]. Routing is content-based
-    * (codegen'd `substring` tests on the binary column) — eight narrow
-    * filtered passes over the same frame, no shuffle. Output is a
-    * discriminated union: `kind ∈ {pgm, ppm, wav, avi, bmp, png, jpeg,
-    * histogram}` with exactly one of the feature columns non-null per
-    * row. A payload that CLAIMS a decodable format (netpbm magic, RIFF
-    * form, PNG/JPEG signature) but is malformed THROWS in its decoder
-    * rather than falling back — garbage media should fail loudly, not
-    * quietly become a histogram.
-    */
-  /** The router's format-claim predicates over a binary `payload`
-    * column — ONE definition shared by [[extractFeatures]] and
-    * [[mediaInventory]] so the strict and quarantined routers can never
-    * drift in what claims what.
+  /** The media-kind table, in the router's union and column order.
     *
+    * A payload that CLAIMS a decodable format but is malformed THROWS in
+    * its decoder rather than falling back — garbage media should fail
+    * loudly, not quietly become a histogram. The claims:
     *  - netpbm magics are 2 bytes;
     *  - RIFF's magic is 4 bytes, and 'RIFF' alone claims only the
-    *    CONTAINER — the route also requires the form type at bytes 9-12
+    *    CONTAINER — the claim also requires the form type at bytes 9-12
     *    ('WAVE' / 'AVI '), so a WEBP/ANI payload (no decoder here)
     *    takes the histogram fallback instead of a throwing decoder;
     *  - 'BM' is two bytes of plausible text (the RIFF lesson), so the
-    *    route also requires the BITMAPINFOHEADER size field (LE 40 at
+    *    claim also requires the BITMAPINFOHEADER size field (LE 40 at
     *    bytes 15-18);
     *  - PNG uses its full 8-byte signature; JPEG its 3-byte SOI+marker
     *    prefix FF D8 FF — neither occurs in text payloads.
     */
-  private object RouterClaims {
-    private val ascii = java.nio.charset.StandardCharsets.US_ASCII
-    private def magic = substring(col("payload"), 1, 2)
-    def isP5: Column = magic === lit("P5".getBytes(ascii))
-    def isP6: Column = magic === lit("P6".getBytes(ascii))
-    def isRiff: Column =
-      substring(col("payload"), 1, 4) === lit("RIFF".getBytes(ascii)) &&
-        substring(col("payload"), 9, 4) === lit("WAVE".getBytes(ascii))
-    // The AVI form type of the same container family — now that a real
-    // walker exists ([[AviDecoder]], r16) the histogram fallback this
-    // route used to take would violate the router's own contract.
-    def isAvi: Column =
-      substring(col("payload"), 1, 4) === lit("RIFF".getBytes(ascii)) &&
-        substring(col("payload"), 9, 4) === lit("AVI ".getBytes(ascii))
-    def isPng: Column = substring(col("payload"), 1, 8) === lit(Array[Byte](
-      0x89.toByte, 'P'.toByte, 'N'.toByte, 'G'.toByte, '\r'.toByte, '\n'.toByte,
-      0x1a.toByte, '\n'.toByte))
-    def isJpeg: Column = substring(col("payload"), 1, 3) ===
-      lit(Array[Byte](0xff.toByte, 0xd8.toByte, 0xff.toByte))
-    def isBmp: Column =
-      substring(col("payload"), 1, 2) === lit("BM".getBytes(ascii)) &&
-        substring(col("payload"), 15, 4) === lit(Array[Byte](40, 0, 0, 0))
-    def any: Column = isP5 || isP6 || isRiff || isAvi || isBmp || isPng || isJpeg
+  private lazy val kinds: Seq[MediaKind[_ <: Product]] = {
+    def at(pos: Int, bytes: Array[Byte]): Column =
+      substring(col("payload"), pos, bytes.length) === lit(bytes)
+    def ascii(s: String): Array[Byte] = s.getBytes(java.nio.charset.StandardCharsets.US_ASCII)
+    def riff(form: String): Column = at(1, ascii("RIFF")) && at(9, ascii(form))
+    Seq(
+      MediaKind("pgm", at(1, ascii("P5")), Codec.Pgm, pgmFeatures, "width", "n_px"),
+      MediaKind("ppm", at(1, ascii("P6")), Codec.Ppm, ppmFeatures, "width", "n_px"),
+      MediaKind("wav", riff("WAVE"), Codec.Wav, wavFeatures, "n_samples", "n_samples"),
+      MediaKind("avi", riff("AVI "), Codec.Avi, aviFeatures, "n_frames", "n_frame_bytes"),
+      MediaKind("bmp", at(1, ascii("BM")) && at(15, Array[Byte](40, 0, 0, 0)),
+        Codec.Bmp, bmpFeatures, "n_px", "n_px"),
+      MediaKind("png", at(1, Array(0x89, 'P', 'N', 'G', '\r', '\n', 0x1a, '\n').map(_.toByte)),
+        Codec.Png, pngFeatures, "n_px", "n_px"),
+      MediaKind("jpeg", at(1, Array(0xff, 0xd8, 0xff).map(_.toByte)),
+        Codec.Jpeg, JpegCodec.decode, "n_blocks", "n_blocks"))
   }
 
+  /** Payloads no kind claims — the histogram/passthrough arm of every router. */
+  private def unclaimed(media: DataFrame): DataFrame =
+    media.filter(not(kinds.map(_.claim).reduce(_ || _)))
+
+  /** Magic-byte feature router — the entry point when a media frame
+    * mixes formats, so a decodable payload can never silently degrade to
+    * the byte histogram: each kind's claimed payloads decode through its
+    * feature function, and ONLY unclaimed payloads take
+    * [[histogramFeatures]]. Routing is content-based (codegen'd
+    * `substring` tests on the binary column) — one narrow filtered pass
+    * per kind over the same frame, no shuffle. Output is a discriminated
+    * union: `kind ∈ {pgm, ppm, wav, avi, bmp, png, jpeg, histogram}`
+    * with exactly one of the same-named feature columns non-null per
+    * row.
+    */
   def extractFeatures(spark: SparkSession, media: DataFrame): DataFrame = {
-    import RouterClaims.{isP5, isP6, isRiff, isAvi, isBmp, isPng, isJpeg}
-    def nest(df: DataFrame, kind: String): DataFrame =
-      df.select(
-        col("doc_id"), lit(kind).as("kind"),
-        struct(df.columns.filterNot(_ == "doc_id").map(col).toIndexedSeq: _*).as(kind))
-    val pgm = nest(decodePgmFeatures(spark, media.filter(isP5)).toDF(), "pgm")
-    val ppm = nest(decodePpmFeatures(spark, media.filter(isP6)).toDF(), "ppm")
-    val wav = nest(decodeWavFeatures(spark, media.filter(isRiff)).toDF(), "wav")
-    val avi = nest(decodeAviSummary(spark, media.filter(isAvi)).toDF(), "avi")
-    val bmp = nest(decodeBmpFeatures(spark, media.filter(isBmp)).toDF(), "bmp")
-    val png = nest(decodePngFeatures(spark, media.filter(isPng)).toDF(), "png")
-    val jpeg = nest(decodeJpegFeatures(spark, media.filter(isJpeg)).toDF(), "jpeg")
-    val hist = extractByteHistogram(
-        spark,
-        media.filter(not(isP5 || isP6 || isRiff || isAvi || isBmp || isPng || isJpeg)))
-      .toDF()
+    val hist = decodeEach(unclaimed(media))(histogramFeatures).toDF()
       .select(col("doc_id"), lit("histogram").as("kind"), col("features").as("histogram"))
-    pgm.unionByName(ppm, allowMissingColumns = true)
-      .unionByName(wav, allowMissingColumns = true)
-      .unionByName(avi, allowMissingColumns = true)
-      .unionByName(bmp, allowMissingColumns = true)
-      .unionByName(png, allowMissingColumns = true)
-      .unionByName(jpeg, allowMissingColumns = true)
+    kinds
+      .map { k =>
+        val df = k.decoded(media)
+        df.select(
+          col("doc_id"), lit(k.name).as("kind"),
+          struct(df.columns.filterNot(_ == "doc_id").map(col).toIndexedSeq: _*).as(k.name))
+      }
+      .reduce(_.unionByName(_, allowMissingColumns = true))
       .unionByName(hist, allowMissingColumns = true)
-      .select("doc_id", "kind", "pgm", "ppm", "wav", "avi", "bmp", "png", "jpeg", "histogram")
+      .select((Seq("doc_id", "kind") ++ kinds.map(_.name) :+ "histogram").map(col): _*)
+  }
+
+  /** [[extractFeatures]]' decode-derived geometry per row, as a long:
+    * each kind's `geom` field (pgm/ppm width, wav samples, avi frames,
+    * bmp/png pixels, jpeg blocks), −1 for the histogram fallback — the
+    * value [[mediaInventory]] reports for the same payload.
+    */
+  def routedGeometry: Column = {
+    val arms = kinds.map(k => (col("kind") === k.name, col(s"${k.name}.${k.geom}").cast("long")))
+    arms.tail.foldLeft(when(arms.head._1, arms.head._2)) { case (c, (p, v)) => c.when(p, v) }
+      .otherwise(lit(-1L))
+  }
+
+  /** One kind's QUARANTINED pass: `(doc_id, kind, ok, <column>)` with
+    * `f`'s value, or `ok = false` and NULL when `f` throws.
+    */
+  private def quarantined(media: DataFrame, k: MediaKind[_], column: String)(
+      f: (Long, Array[Byte]) => Long): DataFrame = {
+    val kind = k.name
+    decodeEach(media.filter(k.claim)) { (id, b) =>
+        try (id, kind, true, Option(f(id, b)))
+        catch { case _: Exception => (id, kind, false, Option.empty[Long]) }
+      }
+      .toDF("doc_id", "kind", "ok", column)
   }
 
   /** The QUARANTINED router — what a corpus-scale media ingest actually
-    * runs first: every payload classified by the same claim predicates
-    * as [[extractFeatures]] ([[RouterClaims]], shared so the two can
-    * never drift), decoded, and either its geometry recorded or the
-    * failure landed as an inspectable row — a corrupt payload must
-    * become data, never a task failure that kills a 100 TB scan (the
-    * [[decodeJpegQuarantine]] pattern, applied to the whole router).
+    * runs first: every payload classified by the same claims as
+    * [[extractFeatures]] (the kind table, so the two can never drift),
+    * decoded, and either its geometry recorded or the failure landed as
+    * an inspectable row — a corrupt payload must become data, never a
+    * task failure that kills a 100 TB scan (the [[decodeJpegQuarantine]]
+    * pattern, applied to the whole router).
     *
     * Output: one row per payload — `(doc_id, kind, ok, geom)` where
-    * `geom` is the kind's decode-derived geometry (pgm/ppm width, wav
-    * samples, bmp/png pixels, jpeg blocks, avi frames; −1 for the
-    * histogram fallback, which cannot fail) and NULL on a quarantined
-    * decode. Same shape as [[extractFeatures]]: eight narrow filtered
-    * passes, payloads never leave their partition, no shuffle.
+    * `geom` is the kind's decode-derived geometry ([[routedGeometry]]'s
+    * value; −1 for the histogram fallback, which cannot fail) and NULL on
+    * a quarantined decode. Same shape as [[extractFeatures]]: one narrow
+    * filtered pass per kind, payloads never leave their partition, no
+    * shuffle.
     */
-  def mediaInventory(spark: SparkSession, media: DataFrame): DataFrame = {
-    import spark.implicits._
-    import RouterClaims._
-    def inv(claim: Column, kind: String)(geom: (Long, Array[Byte]) => Long): DataFrame =
-      media.filter(claim).select(col("doc_id"), col("payload"))
-        .as[(Long, Array[Byte])]
-        .mapPartitions(_.map { case (id, b) =>
-          try (id, kind, true, Option(geom(id, b)))
-          catch { case _: Exception => (id, kind, false, Option.empty[Long]) }
-        })
-        .toDF("doc_id", "kind", "ok", "geom")
-    val hist = media.filter(not(any)).select(
-      col("doc_id"), lit("histogram").as("kind"),
-      lit(true).as("ok"), lit(-1L).as("geom"))
-    inv(isP5, "pgm")((id, b) => PgmDecoder.decode(id, b).width.toLong)
-      .unionByName(inv(isP6, "ppm")((id, b) => PpmDecoder.decode(id, b).width.toLong))
-      .unionByName(inv(isRiff, "wav")((id, b) => WavDecoder.decode(id, b).n_samples))
-      .unionByName(inv(isAvi, "avi")((id, b) => AviDecoder.frames(id, b).size.toLong))
-      .unionByName(inv(isBmp, "bmp")((id, b) => BmpDecoder.decode(id, b).n_px))
-      .unionByName(inv(isPng, "png")((id, b) => PngCodec.decode(id, b).n_px))
-      .unionByName(inv(isJpeg, "jpeg")((id, b) => JpegCodec.decode(id, b).n_blocks))
-      .unionByName(hist)
-  }
+  def mediaInventory(spark: SparkSession, media: DataFrame): DataFrame =
+    kinds
+      .map(k => quarantined(media, k, "geom")(k.read(k.geom)))
+      .reduce(_ unionByName _)
+      .unionByName(unclaimed(media).select(
+        col("doc_id"), lit("histogram").as("kind"),
+        lit(true).as("ok"), lit(-1L).as("geom")))
 
   /** The QUARANTINED media TRANSFORM pass — [[mediaInventory]]'s
     * contract extended from decode to transform: a 100 TB transform
     * sweep runs the [[Box]] kernel over a mixed lake where a corrupt
     * payload must become an inspectable `(ok=false, out_geom NULL)` row,
     * never the task failure [[resize]] (correctly, for trusted input)
-    * raises. Every claim in [[codecs]] runs transform-then-re-decode:
-    * `out_geom` is the re-decoded OUTPUT's geometry (resized pixels,
-    * resampled samples, JPEG blocks, total resized frame bytes; 0 when
-    * the input is smaller than one block and the transform emits
-    * nothing), so a transform that emitted an undecodable payload
-    * quarantines too. Every other payload passes through untouched:
+    * raises. Every kind runs transform-then-re-decode: `out_geom` is the
+    * re-decoded OUTPUT's `outGeom` field (resized pixels, resampled
+    * samples, JPEG blocks, total resized frame bytes; 0 when the input is
+    * smaller than one block and the transform emits nothing), so a
+    * transform that emitted an undecodable payload quarantines too.
+    * Every other payload passes through untouched:
     * `kind='passthrough'`, `out_geom=-1` — the transform pass validates
     * ONLY what it transforms; decode-level triage over the rest is
     * [[mediaInventory]]'s job. Narrow filtered passes, payloads never
@@ -268,43 +272,26 @@ object Multimodal {
       spark: SparkSession,
       media: DataFrame,
       kx: Int = 4,
-      k: Int = 4): DataFrame = {
-    import spark.implicits._
-    codecs
-      .map { case (kind, claim, codec) =>
-        val kernel = Box(if (kind == "wav") k else kx)
-        media.filter(claim).select(col("doc_id"), col("payload"))
-          .as[(Long, Array[Byte])]
-          .mapPartitions(_.map { case (id, b) =>
-            try (id, kind, true,
-              Option(codec.transform(id, b, kernel).fold(0L)(outGeometry(kind, id, _))))
-            catch { case _: Exception => (id, kind, false, Option.empty[Long]) }
-          })
-          .toDF("doc_id", "kind", "ok", "out_geom")
+      k: Int = 4): DataFrame =
+    kinds
+      .map { kind =>
+        val codec = kind.codec
+        val kernel = Box(if (codec == Codec.Wav) k else kx)
+        val outGeom = kind.read(kind.outGeom)
+        quarantined(media, kind, "out_geom")((id, b) =>
+          codec.transform(id, b, kernel).fold(0L)(outGeom(id, _)))
       }
       .reduce(_ unionByName _)
-      .unionByName(media.filter(not(RouterClaims.any)).select(
+      .unionByName(unclaimed(media).select(
         col("doc_id"), lit("passthrough").as("kind"),
         lit(true).as("ok"), lit(-1L).as("out_geom")))
-  }
-
-  /** [[mediaTransformInventory]]'s re-decode of one transformed payload. */
-  private def outGeometry(kind: String, id: Long, out: Array[Byte]): Long = kind match {
-    case "pgm"  => PgmDecoder.decode(id, out).n_px
-    case "ppm"  => PpmDecoder.decode(id, out).n_px
-    case "png"  => PngCodec.decode(id, out).n_px
-    case "bmp"  => BmpDecoder.decode(id, out).n_px
-    case "jpeg" => JpegCodec.decode(id, out).n_blocks
-    case "wav"  => WavDecoder.decode(id, out).n_samples
-    case "avi"  => AviDecoder.frames(id, out).iterator.map(_._2.length.toLong).sum
-  }
 
   /** The TRANSFORMED mixed lake — [[mediaTransformInventory]]'s payload
     * twin: where the inventory reports verdicts, this APPLIES the
     * transforms and returns the new lake (the write-back half of a
-    * corpus-scale media transform pass). Every claim in [[codecs]] maps
-    * through [[resize]] with the [[Box]] kernel (`kx` for rasters and
-    * video frames, `k` for audio); everything else passes through
+    * corpus-scale media transform pass). Every kind maps through
+    * [[resize]] with the [[Box]] kernel (`kx` for rasters and video
+    * frames, `k` for audio); everything else passes through
     * byte-identical. Sub-block images/streams DROP (the box kernel's
     * decimation contract), so the output lake can be strictly smaller
     * than the input. Narrow filtered passes, no shuffle.
@@ -314,7 +301,7 @@ object Multimodal {
       media: DataFrame,
       kx: Int = 4,
       k: Int = 4): DataFrame =
-    resizeRouted(spark, media)(kind => Box(if (kind == "wav") k else kx))
+    resizeRouted(spark, media)(codec => Box(if (codec == Codec.Wav) k else kx))
 
   /** The NORMALIZATION pass a multimodal training pipeline actually
     * runs over a media lake: every decodable raster — PGM, PPM, BMP,
@@ -337,21 +324,20 @@ object Multimodal {
       targetH: Int = 16,
       targetRate: Int = 2000): DataFrame =
     resizeRouted(spark, media) {
-      case "wav" => Bilinear(targetRate)
-      case "avi" => Bilinear(targetW)
-      case _     => Bilinear(targetW, targetH)
+      case Codec.Wav => Bilinear(targetRate)
+      case Codec.Avi => Bilinear(targetW)
+      case _         => Bilinear(targetW, targetH)
     }
 
-  /** One [[resize]] per claim in [[codecs]], with the kernel chosen by
-    * kind, unioned with the unclaimed payloads passed through.
+  /** One [[resize]] per kind, with the kernel chosen by its codec,
+    * unioned with the unclaimed payloads passed through.
     */
   private def resizeRouted(spark: SparkSession, media: DataFrame)(
-      kernel: String => Kernel): DataFrame =
-    codecs
-      .map { case (kind, claim, codec) =>
-        resize(spark, media.filter(claim), codec, kernel(kind)) }
+      kernel: Codec => Kernel): DataFrame =
+    kinds
+      .map(k => resize(spark, media.filter(k.claim), k.codec, kernel(k.codec)))
       .reduce(_ unionByName _)
-      .unionByName(media.filter(not(RouterClaims.any)).select(col("doc_id"), col("payload")))
+      .unionByName(unclaimed(media).select(col("doc_id"), col("payload")))
 
   /** Wrap each document as a REAL binary PGM image — a 1-row grayscale
     * strip whose pixels are the document's bytes — including a `#`
@@ -378,22 +364,28 @@ object Multimodal {
       doc_id: Long, width: Int, height: Int, max_val: Int,
       n_px: Long, mean_px: Option[Double], min_px: Option[Int], max_px: Option[Int])
 
-  /** Minimal-but-real decoder for binary PGM ("P5"), the netpbm raw
-    * graymap: `P5`, then width/height/maxval as ASCII decimals separated
-    * by whitespace (with `#`-to-newline comments allowed between tokens),
-    * then EXACTLY ONE whitespace byte, then the `width*height` raw byte
-    * raster (maxval ≤ 255 ⇒ one byte per pixel). Malformed input throws
-    * rather than returning garbage features.
+  /** Features of a binary PGM ("P5"), the netpbm raw graymap:
+    * [[Codec.Pgm]]'s decode (header maxval + raster) reduced to pixel
+    * moments. Malformed input throws rather than returning garbage
+    * features.
     */
-  /** Shared netpbm header scanner: magic + width/height/maxval tokens
-    * with `#` comments and whitespace runs, starting at `off`. Returns
-    * (width, height, maxval, rasterStart).
+  def pgmFeatures(id: Long, b: Array[Byte]): PgmFeatures = {
+    val (maxVal, r) = Codec.Pgm.decode(id, b)
+    val m = new Moments(r)
+    PgmFeatures(id, r.w, r.h, maxVal, m.n, m.mean(0), m.min, m.max)
+  }
+
+  /** The netpbm header both binary forms share: the magic `P<magic>`,
+    * then width/height/maxval as ASCII decimals separated by whitespace
+    * (with `#`-to-newline comments allowed between tokens), then EXACTLY
+    * ONE whitespace byte before the raw raster (maxval ≤ 255 ⇒ one byte
+    * per sample). Returns (width, height, maxval, rasterStart).
     */
   private def parseNetpbmHeader(
-      docId: Long, b: Array[Byte], off: Int, magic: Char): (Int, Int, Int, Int) = {
-    require(b.length - off >= 2 && b(off) == 'P' && b(off + 1) == magic,
-      s"doc $docId: not a binary P$magic netpbm image at offset $off")
-    var i = off + 2
+      docId: Long, b: Array[Byte], magic: Char): (Int, Int, Int, Int) = {
+    require(b.length >= 2 && b(0) == 'P' && b(1) == magic,
+      s"doc $docId: not a binary P$magic netpbm image")
+    var i = 2
     def skipSeparators(): Unit = {
       var scanning = true
       while (scanning && i < b.length) {
@@ -431,6 +423,42 @@ object Multimodal {
     * Audio is an `n×1×1` raster; an AVI frame is a `len×1×1` raster.
     */
   final case class Raster(w: Int, h: Int, ch: Int, px: Array[Int])
+
+  /** The one moments pass behind the PGM, PPM, BMP, PNG and WAV feature
+    * records: over a decoded [[Raster]], per-channel `Long` sums, the
+    * min and max over every sample, and the sum of the top row's
+    * samples. Means divide by the pixel count `n`; an empty raster has
+    * no mean, min or max.
+    */
+  private final class Moments(r: Raster) {
+    val n: Long = r.w.toLong * r.h
+    private val sums = new Array[Long](r.ch)
+    private var top = 0L
+    private var lo = Int.MaxValue
+    private var hi = Int.MinValue
+    locally {
+      val px = r.px
+      val topEnd = r.ch * r.w
+      var i = 0
+      var c = 0
+      while (i < px.length) {
+        val v = px(i)
+        sums(c) += v
+        if (i < topEnd) top += v
+        if (v < lo) lo = v
+        if (v > hi) hi = v
+        i += 1
+        c += 1
+        if (c == r.ch) c = 0
+      }
+    }
+
+    def mean(c: Int): Option[Double] = if (n == 0) None else Some(sums(c).toDouble / n)
+    def min: Option[Int] = if (n == 0) None else Some(lo)
+    def max: Option[Int] = if (n == 0) None else Some(hi)
+    /** Mean over the top row's samples; NaN for a zero-width raster. */
+    def topMean: Double = top / (r.ch.toDouble * r.w)
+  }
 
   /** A resampling kernel over a [[Raster]]; channels never mix. `None`
     * means the source is too small to yield one output sample.
@@ -572,6 +600,54 @@ object Multimodal {
       (colIdx, y) => y * ow + colIdx, (a, colIdx, y, v) => a(y * ow + colIdx) = v)
   }
 
+  /** The 24-bit BMP decode half of [[Codec.Bmp]]: header validation
+    * (24-bit BI_RGB only), stride arithmetic, bottom-up / top-down
+    * normalization, and the BGR→RGB swizzle — an RGB raster in IMAGE
+    * order (row 0 = top).
+    */
+  private def decodeBmp24(docId: Long, b: Array[Byte]): Raster = {
+    def u8(i: Int): Int = b(i) & 0xff
+    def le16(i: Int): Int = u8(i) | (u8(i + 1) << 8)
+    def le32(i: Int): Int =
+      u8(i) | (u8(i + 1) << 8) | (u8(i + 2) << 16) | (u8(i + 3) << 24)
+    require(b.length >= 54, s"doc $docId: truncated BMP header (${b.length} bytes)")
+    require(b(0) == 'B' && b(1) == 'M', s"doc $docId: not a BMP (missing BM magic)")
+    val dataOffset = le32(10)
+    require(le32(14) >= 40, s"doc $docId: BITMAPINFOHEADER expected, got size ${le32(14)}")
+    val width = le32(18)
+    val rawHeight = le32(22)
+    // math.abs(Int.MinValue) is still negative — that height would
+    // skip the row loop yet leave n_px nonzero, silently returning
+    // garbage in violation of the throws-on-malformed contract.
+    require(rawHeight != Int.MinValue, s"doc $docId: height -2^31 is not a valid DIB")
+    val topDown = rawHeight < 0
+    val height = math.abs(rawHeight)
+    require(width >= 0, s"doc $docId: negative width $width")
+    require(le16(26) == 1, s"doc $docId: planes must be 1, got ${le16(26)}")
+    val bitCount = le16(28)
+    require(bitCount == 24, s"doc $docId: only 24-bit BI_RGB supported, got $bitCount")
+    require(le32(30) == 0, s"doc $docId: compressed BMP rejected (BI_RGB only)")
+    val stride = ((width * 3 + 3) / 4) * 4
+    require(b.length.toLong - dataOffset >= stride.toLong * height,
+      s"doc $docId: raster truncated (${b.length - dataOffset} bytes for $height×$stride)")
+    val px = new Array[Int](3 * width * height)
+    var imgRow = 0
+    while (imgRow < height) {
+      val storedRow = if (topDown) imgRow else height - 1 - imgRow
+      val rowStart = dataOffset + storedRow * stride
+      var x = 0
+      while (x < width) {
+        val base = 3 * (imgRow * width + x)
+        px(base) = u8(rowStart + 3 * x + 2)     // R
+        px(base + 1) = u8(rowStart + 3 * x + 1) // G
+        px(base + 2) = u8(rowStart + 3 * x)     // B
+        x += 1
+      }
+      imgRow += 1
+    }
+    Raster(width, height, 3, px)
+  }
+
   /** The 24-bit BMP re-encode half of [[Codec.Bmp]]: canonical 54-byte
     * header, bottom-up rows, BGR order, stride padding.
     */
@@ -667,7 +743,7 @@ object Multimodal {
     /** Binary netpbm, P5 gray (`ch = 1`) or P6 RGB (`ch = 3`). */
     final class Netpbm private[Codec] (magic: Char, ch: Int) extends RasterCodec {
       def decode(id: Long, b: Array[Byte]): (Int, Raster) = {
-        val (w, h, maxVal, start) = parseNetpbmHeader(id, b, 0, magic)
+        val (w, h, maxVal, start) = parseNetpbmHeader(id, b, magic)
         require(start + ch.toLong * w * h <= b.length, s"doc $id: truncated raster")
         (maxVal, Raster(w, h, ch, Array.tabulate(ch * w * h)(i => b(start + i) & 0xff)))
       }
@@ -697,14 +773,11 @@ object Multimodal {
     }
 
     /** 24-bit BI_RGB BMP: the BGR swizzle, bottom-up rows and stride
-      * padding live in the codec halves ([[BmpDecoder.pixels]] /
+      * padding live in the codec halves ([[decodeBmp24]] /
       * [[encodeBmp24]]), never in the kernels.
       */
     object Bmp extends RasterCodec {
-      def decode(id: Long, b: Array[Byte]): (Int, Raster) = {
-        val (w, h, px) = BmpDecoder.pixels(id, b)
-        (0, Raster(w, h, 3, px))
-      }
+      def decode(id: Long, b: Array[Byte]): (Int, Raster) = (0, decodeBmp24(id, b))
 
       def encode(hdr: Int, r: Raster): Array[Byte] = encodeBmp24(r.px, r.w, r.h)
     }
@@ -738,8 +811,8 @@ object Multimodal {
       */
     object Wav extends RasterCodec {
       def decode(id: Long, b: Array[Byte]): (Int, Raster) = {
-        val (rate, s) = WavDecoder.rateAndSamples(id, b)
-        (rate, Raster(s.length, 1, 1, s))
+        val (fmt, s) = WavDecoder.formatAndSamples(id, b)
+        (fmt.rate, Raster(s.length, 1, 1, s))
       }
 
       def encode(rate: Int, r: Raster): Array[Byte] = encodeWav16(r.px, rate)
@@ -775,19 +848,6 @@ object Multimodal {
     }
   }
 
-  /** The transform routers' codec table: `(kind, claim, codec)` for
-    * every transformable format, the claims being [[RouterClaims]]'
-    * (shared with [[extractFeatures]] and [[mediaInventory]], so no
-    * router can drift on what claims what).
-    */
-  private def codecs: Seq[(String, Column, Codec)] = {
-    import RouterClaims._
-    Seq(
-      ("pgm", isP5, Codec.Pgm), ("ppm", isP6, Codec.Ppm), ("png", isPng, Codec.Png),
-      ("bmp", isBmp, Codec.Bmp), ("jpeg", isJpeg, Codec.Jpeg),
-      ("wav", isRiff, Codec.Wav), ("avi", isAvi, Codec.Avi))
-  }
-
   /** REAL media RESIZE — decode → `kernel` → re-encode of every payload
     * through `codec`, one partition-local pass: payloads never leave
     * their partition, zero shuffle. Rows the kernel drops (see [[Box]])
@@ -801,72 +861,21 @@ object Multimodal {
       .toDF("doc_id", "payload")
   }
 
-  object PgmDecoder {
-    def decode(docId: Long, b: Array[Byte]): PgmFeatures = decodeAt(docId, b, 0)._1
-
-    /** Decode ONE image starting at `off`; also returns the offset just
-      * past its raster — netpbm files may hold multiple concatenated
-      * images (the multi-frame form [[toAnimatedPgm]] builds), and the
-      * next frame starts exactly there.
-      */
-    def decodeAt(docId: Long, b: Array[Byte], off: Int): (PgmFeatures, Int) = {
-      val (width, height, maxVal, start) = parseNetpbmHeader(docId, b, off, '5')
-      val nPx = width.toLong * height
-      require(b.length - start >= nPx,
-        s"doc $docId: raster truncated (${b.length - start} bytes for $nPx pixels)")
-      val end = start + nPx.toInt
-      if (nPx == 0) (PgmFeatures(docId, width, height, maxVal, 0L, None, None, None), end)
-      else {
-        var sum = 0L; var lo = 255; var hi = 0; var j = start
-        while (j < end) {
-          val px = b(j) & 0xff
-          sum += px
-          if (px < lo) lo = px
-          if (px > hi) hi = px
-          j += 1
-        }
-        (PgmFeatures(docId, width, height, maxVal, nPx,
-          Some(sum.toDouble / nPx.toDouble), Some(lo), Some(hi)), end)
-      }
-    }
-  }
-
   case class PpmFeatures(
       doc_id: Long, width: Int, height: Int, max_val: Int, n_px: Long,
       r_mean: Option[Double], g_mean: Option[Double], b_mean: Option[Double],
       min_px: Option[Int], max_px: Option[Int])
 
-  /** Binary PPM ("P6") — the COLOR netpbm raster: same header grammar as
-    * P5, then 3 bytes (R, G, B) per pixel. Reduced to per-channel means
-    * plus whole-raster min/max. Malformed input throws rather than
-    * returning garbage features.
+  /** Features of a binary PPM ("P6") — the COLOR netpbm raster, same
+    * header grammar as P5 then 3 bytes (R, G, B) per pixel:
+    * [[Codec.Ppm]]'s decode reduced to per-channel means plus
+    * whole-raster min/max. Malformed input throws rather than returning
+    * garbage features.
     */
-  object PpmDecoder {
-    def decode(docId: Long, b: Array[Byte]): PpmFeatures = {
-      val (width, height, maxVal, start) = parseNetpbmHeader(docId, b, 0, '6')
-      val nPx = width.toLong * height
-      val nBytes = nPx * 3
-      require(b.length - start >= nBytes,
-        s"doc $docId: raster truncated (${b.length - start} bytes for $nPx RGB pixels)")
-      if (nPx == 0)
-        PpmFeatures(docId, width, height, maxVal, 0L, None, None, None, None, None)
-      else {
-        val sums = new Array[Long](3)
-        var lo = 255; var hi = 0; var j = start
-        val end = start + nBytes.toInt
-        while (j < end) {
-          val v = b(j) & 0xff
-          sums((j - start) % 3) += v
-          if (v < lo) lo = v
-          if (v > hi) hi = v
-          j += 1
-        }
-        val n = nPx.toDouble
-        PpmFeatures(docId, width, height, maxVal, nPx,
-          Some(sums(0) / n), Some(sums(1) / n), Some(sums(2) / n),
-          Some(lo), Some(hi))
-      }
-    }
+  def ppmFeatures(id: Long, b: Array[Byte]): PpmFeatures = {
+    val (maxVal, r) = Codec.Ppm.decode(id, b)
+    val m = new Moments(r)
+    PpmFeatures(id, r.w, r.h, maxVal, m.n, m.mean(0), m.mean(1), m.mean(2), m.min, m.max)
   }
 
   /** Wrap each document as a REAL binary PPM color image: a 1-row strip
@@ -888,24 +897,6 @@ object Multimodal {
         lit("image/x-portable-pixmap").as("format"),
         length(bytes).cast("long").as("n_bytes"),
         lit(1).as("n_frames")).as("meta"))
-  }
-
-  /** Partition-parallel REAL color decode of a PPM payload column. */
-  def decodePpmFeatures(spark: SparkSession, media: DataFrame): Dataset[PpmFeatures] = {
-    import spark.implicits._
-    media.select(col("doc_id"), col("payload")).as[(Long, Array[Byte])]
-      .mapPartitions(_.map { case (id, payload) => PpmDecoder.decode(id, payload) })
-  }
-
-  /** Partition-parallel REAL decode of a PGM payload column: header
-    * parsed, raster reduced to pixel moments — one decoder pass per
-    * partition, zero shuffle, same batch shape a pandas-UDF image decode
-    * would use.
-    */
-  def decodePgmFeatures(spark: SparkSession, media: DataFrame): Dataset[PgmFeatures] = {
-    import spark.implicits._
-    media.select(col("doc_id"), col("payload")).as[(Long, Array[Byte])]
-      .mapPartitions(_.map { case (id, payload) => PgmDecoder.decode(id, payload) })
   }
 
   /** Frame sampling: split the payload into fixed-size frames and keep
@@ -1001,40 +992,36 @@ object Multimodal {
     *
     * Pairs with the Hamming machinery (q138's shortlist, q21's SimHash
     * pairing) for the actual dedup join: group by band or XOR-popcount
-    * on this BIGINT. One decoder pass per image, no shuffle; the
-    * mapPartitions is the codec class where no Catalyst expression
-    * fits ([[PgmDecoder]]'s documented exemption).
+    * on this BIGINT. One [[decodeEach]] pass over [[Codec.Pgm]]'s
+    * raster, no shuffle — the codec class where no Catalyst expression
+    * fits.
     */
   def pgmDHash(
       spark: SparkSession,
       media: DataFrame,
       segs: Int = 33): Dataset[DHashRow] = {
-    import spark.implicits._
     require(segs >= 2 && segs <= 64, s"segs=$segs out of range [2, 64]")
-    media.select(col("doc_id"), col("payload")).as[(Long, Array[Byte])]
-      .mapPartitions(_.map { case (id, payload) =>
-        val (width, height, _, start) = parseNetpbmHeader(id, payload, 0, '5')
-        val n = width.toLong * height
-        require(payload.length - start >= n,
-          s"doc $id: raster truncated (${payload.length - start} bytes for $n pixels)")
-        val sums = Array.fill(segs)(0L)
-        val cnts = Array.fill(segs)(0L)
-        var i = 0L
-        while (i < n) {
-          val s = ((i * segs) / n).toInt
-          sums(s) += payload(start + i.toInt) & 0xff
-          cnts(s) += 1L
-          i += 1L
-        }
-        var h = 0L
-        var s = 0
-        while (s < segs - 1) {
-          if (cnts(s) > 0L && cnts(s + 1) > 0L &&
-            sums(s) * cnts(s + 1) > sums(s + 1) * cnts(s)) h |= 1L << s
-          s += 1
-        }
-        DHashRow(id, n, h)
-      })
+    decodeEach(media) { (id, payload) =>
+      val px = Codec.Pgm.decode(id, payload)._2.px
+      val n = px.length.toLong
+      val sums = Array.fill(segs)(0L)
+      val cnts = Array.fill(segs)(0L)
+      var i = 0L
+      while (i < n) {
+        val s = ((i * segs) / n).toInt
+        sums(s) += px(i.toInt)
+        cnts(s) += 1L
+        i += 1L
+      }
+      var h = 0L
+      var s = 0
+      while (s < segs - 1) {
+        if (cnts(s) > 0L && cnts(s + 1) > 0L &&
+          sums(s) * cnts(s + 1) > sums(s + 1) * cnts(s)) h |= 1L << s
+        s += 1
+      }
+      DHashRow(id, n, h)
+    }
   }
 
   case class FramePgmFeatures(
@@ -1043,7 +1030,7 @@ object Multimodal {
 
   /** REAL per-frame decode of [[sampleFrames]] output over a
     * [[toAnimatedPgm]] stream: each sampled frame is a complete P5 image
-    * and goes through [[PgmDecoder]] — explode is the only plan step,
+    * and goes through [[pgmFeatures]] — explode is the only plan step,
     * decode never shuffles.
     */
   def decodePgmFrames(spark: SparkSession, sampled: DataFrame): Dataset[FramePgmFeatures] = {
@@ -1053,7 +1040,7 @@ object Multimodal {
       .select(col("doc_id"), col("f.frame_idx"), col("f.frame"))
       .as[(Long, Int, Array[Byte])]
       .mapPartitions(_.map { case (id, idx, frame) =>
-        val f = PgmDecoder.decode(id, frame)
+        val f = pgmFeatures(id, frame)
         FramePgmFeatures(id, idx, f.n_px, f.mean_px, f.min_px, f.max_px)
       })
   }
@@ -1162,95 +1149,20 @@ object Multimodal {
       r_mean: Option[Double], g_mean: Option[Double], b_mean: Option[Double],
       min_px: Option[Int], max_px: Option[Int], top_row_mean: Option[Double])
 
-  /** Minimal-but-real 24-bit BMP decoder: validates the `BM` magic and
-    * BITMAPINFOHEADER, honors the pixel-array offset, the 4-byte row
-    * stride, the B,G,R channel order, and BOTH row orders (positive
-    * height = bottom-up per the spec, negative = top-down) — features
-    * are reported in IMAGE order (top row first), so `top_row_mean`
-    * proves the row re-ordering really happened. Malformed input
-    * (non-BMP, compressed, non-24-bit, truncated raster) THROWS rather
-    * than returning garbage.
+  /** Features of a 24-bit BMP: [[Codec.Bmp]]'s decode (which validates
+    * the `BM` magic and BITMAPINFOHEADER, honors the pixel-array offset,
+    * the 4-byte row stride, the B,G,R channel order, and BOTH row orders —
+    * positive height = bottom-up per the spec, negative = top-down)
+    * reduced to moments in IMAGE order (top row first), so
+    * `top_row_mean` proves the row re-ordering really happened.
+    * Malformed input (non-BMP, compressed, non-24-bit, truncated raster)
+    * THROWS rather than returning garbage.
     */
-  object BmpDecoder {
-    def decode(docId: Long, b: Array[Byte]): BmpFeatures = {
-      val (width, height, px) = pixels(docId, b)
-      val nPx = width.toLong * height
-      if (nPx == 0)
-        BmpFeatures(docId, width, height, 24, 0L, None, None, None, None, None, None)
-      else {
-        val sums = new Array[Long](3) // R, G, B
-        var topSum = 0L
-        var lo = 255; var hi = 0
-        var i = 0
-        while (i < px.length) {
-          val v = px(i)
-          sums(i % 3) += v
-          if (i < 3 * width) topSum += v
-          if (v < lo) lo = v
-          if (v > hi) hi = v
-          i += 1
-        }
-        val n = nPx.toDouble
-        BmpFeatures(docId, width, height, 24, nPx,
-          Some(sums(0) / n), Some(sums(1) / n), Some(sums(2) / n),
-          Some(lo), Some(hi), Some(topSum / (3.0d * width)))
-      }
-    }
-
-    /** The decode core shared by [[decode]] and [[Codec.Bmp]]: header
-      * validation (24-bit BI_RGB only), stride arithmetic, bottom-up /
-      * top-down normalization, and the BGR→RGB swizzle — returns
-      * `(width, height, pixels)` in IMAGE order (row 0 = top), RGB.
-      */
-    def pixels(docId: Long, b: Array[Byte]): (Int, Int, Array[Int]) = {
-      def u8(i: Int): Int = b(i) & 0xff
-      def le16(i: Int): Int = u8(i) | (u8(i + 1) << 8)
-      def le32(i: Int): Int =
-        u8(i) | (u8(i + 1) << 8) | (u8(i + 2) << 16) | (u8(i + 3) << 24)
-      require(b.length >= 54, s"doc $docId: truncated BMP header (${b.length} bytes)")
-      require(b(0) == 'B' && b(1) == 'M', s"doc $docId: not a BMP (missing BM magic)")
-      val dataOffset = le32(10)
-      require(le32(14) >= 40, s"doc $docId: BITMAPINFOHEADER expected, got size ${le32(14)}")
-      val width = le32(18)
-      val rawHeight = le32(22)
-      // math.abs(Int.MinValue) is still negative — that height would
-      // skip the row loop yet leave n_px nonzero, silently returning
-      // garbage in violation of the throws-on-malformed contract.
-      require(rawHeight != Int.MinValue, s"doc $docId: height -2^31 is not a valid DIB")
-      val topDown = rawHeight < 0
-      val height = math.abs(rawHeight)
-      require(width >= 0, s"doc $docId: negative width $width")
-      require(le16(26) == 1, s"doc $docId: planes must be 1, got ${le16(26)}")
-      val bitCount = le16(28)
-      require(bitCount == 24, s"doc $docId: only 24-bit BI_RGB supported, got $bitCount")
-      require(le32(30) == 0, s"doc $docId: compressed BMP rejected (BI_RGB only)")
-      val stride = ((width * 3 + 3) / 4) * 4
-      require(b.length.toLong - dataOffset >= stride.toLong * height,
-        s"doc $docId: raster truncated (${b.length - dataOffset} bytes for $height×$stride)")
-      val px = new Array[Int](3 * width * height)
-      var imgRow = 0
-      while (imgRow < height) {
-        val storedRow = if (topDown) imgRow else height - 1 - imgRow
-        val rowStart = dataOffset + storedRow * stride
-        var x = 0
-        while (x < width) {
-          val base = 3 * (imgRow * width + x)
-          px(base) = u8(rowStart + 3 * x + 2)     // R
-          px(base + 1) = u8(rowStart + 3 * x + 1) // G
-          px(base + 2) = u8(rowStart + 3 * x)     // B
-          x += 1
-        }
-        imgRow += 1
-      }
-      (width, height, px)
-    }
-  }
-
-  /** Partition-parallel REAL BMP decode of a payload column. */
-  def decodeBmpFeatures(spark: SparkSession, media: DataFrame): Dataset[BmpFeatures] = {
-    import spark.implicits._
-    media.select(col("doc_id"), col("payload")).as[(Long, Array[Byte])]
-      .mapPartitions(_.map { case (id, payload) => BmpDecoder.decode(id, payload) })
+  def bmpFeatures(id: Long, b: Array[Byte]): BmpFeatures = {
+    val (_, r) = Codec.Bmp.decode(id, b)
+    val m = new Moments(r)
+    BmpFeatures(id, r.w, r.h, 24, m.n, m.mean(0), m.mean(1), m.mean(2), m.min, m.max,
+      if (m.n == 0) None else Some(m.topMean))
   }
 
   case class WavFeatures(
@@ -1258,20 +1170,34 @@ object Multimodal {
       n_samples: Long, mean_amp: Option[Double], min_amp: Option[Int],
       max_amp: Option[Int])
 
+  /** Features of a RIFF/WAVE stream: the `fmt ` fields plus amplitude
+    * moments over the decoded samples ([[WavDecoder.formatAndSamples]]
+    * as an `n×1×1` raster, through the same moments pass as the
+    * images). μ-law amplitudes are the EXPANDED linear samples — the
+    * moments describe the signal, not the companded wire bytes.
+    */
+  def wavFeatures(id: Long, b: Array[Byte]): WavFeatures = {
+    val (fmt, s) = WavDecoder.formatAndSamples(id, b)
+    val m = new Moments(Raster(s.length, 1, 1, s))
+    WavFeatures(id, fmt.channels, fmt.rate, fmt.bits, m.n, m.mean(0), m.min, m.max)
+  }
+
   /** Minimal-but-real RIFF/WAVE PCM decoder: validates the RIFF
     * envelope, walks the chunk list (word-aligned, per the spec — a pad
     * byte follows every odd-sized chunk), reads the `fmt ` fields, and
-    * reduces the `data` samples to amplitude moments. 8-bit PCM is
-    * unsigned (0..255), 16-bit is signed little-endian — both per the
-    * WAVE spec. Malformed input (bad tags, truncated chunks, missing
-    * fmt/data, non-PCM codecs) THROWS rather than returning garbage.
+    * decodes the `data` samples. 8-bit PCM is unsigned (0..255), 16-bit
+    * is signed little-endian — both per the WAVE spec. Malformed input
+    * (bad tags, truncated chunks, missing fmt/data, non-PCM codecs)
+    * THROWS rather than returning garbage.
     */
   object WavDecoder {
+    /** The `fmt ` fields a feature record reports. */
+    final case class WavFormat(channels: Int, rate: Int, bits: Int)
+
     private val ascii = java.nio.charset.StandardCharsets.US_ASCII
 
     /** The shared RIFF walk: `(audioFormat, channels, rate, bits,
-      * dataOffset, dataLen)` — validation identical for every consumer
-      * (moments, sample extraction).
+      * dataOffset, dataLen)` — validation identical for every consumer.
       */
     private def parse(docId: Long, b: Array[Byte]): (Int, Int, Int, Int, Int, Int) = {
       def u8(i: Int): Int = b(i) & 0xff
@@ -1331,13 +1257,13 @@ object Multimodal {
       * analysis path ([[Multimodal.audioAutocorr]] is the relational
       * half).
       */
-    def samples(docId: Long, b: Array[Byte]): Array[Int] = rateAndSamples(docId, b)._2
+    def samples(docId: Long, b: Array[Byte]): Array[Int] = formatAndSamples(docId, b)._2
 
-    /** [[samples]] with the stream's sample rate — what a re-encode at
-      * a derived rate ([[Codec.Wav]]) needs.
+    /** [[samples]] with the stream's format fields — what a feature
+      * record and a re-encode at a derived rate ([[Codec.Wav]]) need.
       */
-    def rateAndSamples(docId: Long, b: Array[Byte]): (Int, Array[Int]) = {
-      val (audioFormat, _, rate, bits, off, len) = parse(docId, b)
+    def formatAndSamples(docId: Long, b: Array[Byte]): (WavFormat, Array[Int]) = {
+      val (audioFormat, channels, rate, bits, off, len) = parse(docId, b)
       val bytesPerSample = bits / 8
       val out = new Array[Int](len / bytesPerSample)
       var j = off
@@ -1347,63 +1273,21 @@ object Multimodal {
         j += bytesPerSample
         k += 1
       }
-      (rate, out)
+      (WavFormat(channels, rate, bits), out)
     }
-
-    def decode(docId: Long, b: Array[Byte]): WavFeatures = {
-      def u8(i: Int): Int = b(i) & 0xff
-      def le16(i: Int): Int = u8(i) | (u8(i + 1) << 8)
-      val (audioFormat, channels, rate, bits, off, len) = parse(docId, b)
-      val bytesPerSample = bits / 8
-      val n = (len / bytesPerSample).toLong
-      if (n == 0) WavFeatures(docId, channels, rate, bits, 0L, None, None, None)
-      else {
-        var sum = 0L; var lo = Int.MaxValue; var hi = Int.MinValue
-        var j = off
-        val end = off + len
-        while (j < end) {
-          // mu-law amplitudes are the EXPANDED linear samples — the
-          // moments describe the signal, not the companded wire bytes.
-          val v =
-            if (audioFormat == 7) muLawDecodeByte(u8(j))
-            else if (bits == 8) u8(j)
-            else le16(j).toShort.toInt
-          sum += v
-          if (v < lo) lo = v
-          if (v > hi) hi = v
-          j += bytesPerSample
-        }
-        WavFeatures(docId, channels, rate, bits, n,
-          Some(sum.toDouble / n.toDouble), Some(lo), Some(hi))
-      }
-    }
-  }
-
-  /** Partition-parallel REAL audio decode of a WAV payload column —
-    * same batch shape as the image decoders: one pass per partition,
-    * zero shuffle.
-    */
-  def decodeWavFeatures(spark: SparkSession, media: DataFrame): Dataset[WavFeatures] = {
-    import spark.implicits._
-    media.select(col("doc_id"), col("payload")).as[(Long, Array[Byte])]
-      .mapPartitions(_.map { case (id, payload) => WavDecoder.decode(id, payload) })
   }
 
   /** Partition-parallel decode to the FULL sample vector (one array row
     * per document) — the codec step feeding the relational spectral
-    * analysis ([[audioAutocorr]]). Same batch shape as every decoder
-    * here: one pass per partition, payloads never leave their partition.
+    * analysis ([[audioAutocorr]]), through [[decodeEach]]: payloads
+    * never leave their partition.
     */
-  def decodeWavSamples(spark: SparkSession, media: DataFrame): DataFrame = {
-    import spark.implicits._
+  def decodeWavSamples(spark: SparkSession, media: DataFrame): DataFrame =
     // Samples surface as array<long> so downstream analysis runs on the
     // codegen'd integer kernels ([[graft.expressions.DotProductLong]])
     // with no per-row cast lambda.
-    media.select(col("doc_id"), col("payload")).as[(Long, Array[Byte])]
-      .mapPartitions(_.map { case (id, payload) =>
-        (id, WavDecoder.samples(id, payload).map(_.toLong)) })
+    decodeEach(media)((id, payload) => (id, WavDecoder.samples(id, payload).map(_.toLong)))
       .toDF("doc_id", "samples")
-  }
 
   /** Frame-wise audio profiling over the decoded sample vector — the
     * segmentation pass silence trimming and clipping detection read:
@@ -1459,6 +1343,11 @@ object Multimodal {
     }
   }
 
+  /** The avih main-header fields a re-encode must carry through
+    * ([[Codec.Avi]]): temporal rate, raster geometry.
+    */
+  case class AviHeader(usPerFrame: Long, width: Long, height: Long)
+
   /** RIFF/AVI container walker — the video twin of [[WavDecoder]]:
     * validates the RIFF form and size, reads the `avih` main header out
     * of `LIST('hdrl')`, collects every `00db`/`00dc` frame chunk from
@@ -1467,11 +1356,6 @@ object Multimodal {
     * count against the frames actually present. Total and loud: any
     * structural lie fails the document, never returns garbage frames.
     */
-  /** The avih main-header fields a re-encode must carry through
-    * ([[Codec.Avi]]): temporal rate, raster geometry.
-    */
-  case class AviHeader(usPerFrame: Long, width: Long, height: Long)
-
   object AviDecoder {
     private val ascii = java.nio.charset.StandardCharsets.US_ASCII
 
@@ -1536,21 +1420,16 @@ object Multimodal {
   case class AviFeatures(
       doc_id: Long, n_frames: Int, n_frame_bytes: Long, mean_byte: Option[Double])
 
-  /** Per-document video summary off the container walk — the
-    * router-facing AVI decode ([[extractFeatures]]): frame count, total
-    * frame payload bytes, mean byte value across all frames (None for a
-    * zero-frame document). Same total/loud validation as
-    * [[decodeAviFrames]]; payloads never leave their partition.
+  /** Per-document video summary off the container walk — the AVI
+    * kind's feature function: frame count, total frame payload bytes,
+    * mean byte value across all frames (None for a zero-frame document).
+    * Same total/loud validation as [[decodeAviFrames]].
     */
-  def decodeAviSummary(spark: SparkSession, media: DataFrame): Dataset[AviFeatures] = {
-    import spark.implicits._
-    media.select(col("doc_id"), col("payload")).as[(Long, Array[Byte])]
-      .mapPartitions(_.map { case (id, payload) =>
-        val fs = AviDecoder.frames(id, payload)
-        val n = fs.iterator.map(_._2.length.toLong).sum
-        val s = fs.iterator.map(_._2.iterator.map(b => (b & 0xff).toLong).sum).sum
-        AviFeatures(id, fs.size, n, if (n == 0) None else Some(s.toDouble / n))
-      })
+  def aviFeatures(id: Long, b: Array[Byte]): AviFeatures = {
+    val fs = AviDecoder.frames(id, b)
+    val n = fs.iterator.map(_._2.length.toLong).sum
+    val s = fs.iterator.map(_._2.iterator.map(b => (b & 0xff).toLong).sum).sum
+    AviFeatures(id, fs.size, n, if (n == 0) None else Some(s.toDouble / n))
   }
 
   /** Partition-parallel REAL video decode: one row per (doc, frame) with
@@ -1840,6 +1719,19 @@ object Multimodal {
       b_mean: Option[Double], min_px: Option[Int], max_px: Option[Int],
       top_row_mean: Option[Double], idat_len: Long, raw_len: Long)
 
+  /** Features of a truecolor PNG: [[PngCodec.pixels]]' decoded raster
+    * (CRCs verified, inflated, un-filtered) reduced to per-channel
+    * moments, plus the compressed (`idat_len`) and filtered-raw
+    * (`raw_len`) sizes. A zero-width image has no top-row mean; a
+    * zero-height one of positive width reports 0.
+    */
+  def pngFeatures(id: Long, b: Array[Byte]): PngFeatures = {
+    val (w, h, px, idatLen) = PngCodec.pixels(id, b)
+    val m = new Moments(Raster(w, h, 3, px))
+    PngFeatures(id, w, h, 8, 2, m.n, m.mean(0), m.mean(1), m.mean(2), m.min, m.max,
+      if (w == 0) None else Some(m.topMean), idatLen, (h * (1 + 3 * w)).toLong)
+  }
+
   /** Minimal-but-real PNG codec: 8-byte signature, chunk grammar with
     * VERIFIED CRC-32s, IHDR validation (8-bit truecolor, no interlace),
     * multi-IDAT concatenation, `java.util.zip.Inflater` decompression,
@@ -1911,23 +1803,7 @@ object Multimodal {
         chunk("IEND", Array.emptyByteArray)
     }
 
-    def decode(docId: Long, b: Array[Byte]): PngFeatures = {
-      val (w, h, px, idatLen) = pixels(docId, b)
-      val nPx = h.toLong * w
-      def meanOf(ch: Int): Option[Double] =
-        if (nPx == 0) None
-        else Some(px.indices.collect { case i if i % 3 == ch => px(i) }.sum.toDouble / nPx)
-      val topMean =
-        if (w == 0) None else Some(px.slice(0, 3 * w).sum.toDouble / (3 * w))
-      PngFeatures(
-        docId, w, h, 8, 2, nPx,
-        meanOf(0), meanOf(1), meanOf(2),
-        if (px.isEmpty) None else Some(px.min),
-        if (px.isEmpty) None else Some(px.max),
-        topMean, idatLen, (h * (1 + 3 * w)).toLong)
-    }
-
-    /** The decode core shared by [[decode]] and [[Codec.Png]]: chunk
+    /** The decode core shared by [[pngFeatures]] and [[Codec.Png]]: chunk
       * walk (CRCs verified), IHDR validation, multi-IDAT inflate, and
       * scanline UN-FILTERING into image-order pixel values. Returns
       * `(w, h, pixels, idat bytes)`.
@@ -2005,13 +1881,6 @@ object Multimodal {
     }
   }
 
-  /** Partition-parallel REAL PNG decode of a payload column. */
-  def decodePngFeatures(spark: SparkSession, media: DataFrame): Dataset[PngFeatures] = {
-    import spark.implicits._
-    media.select(col("doc_id"), col("payload")).as[(Long, Array[Byte])]
-      .mapPartitions(_.map { case (id, payload) => PngCodec.decode(id, payload) })
-  }
-
   /** Deterministic baseline-JPEG payloads from document text: each 64
     * consecutive codepoints form one 8×8 grayscale block (image = one
     * block row, width 8·⌊chars/64⌋, height 8), DC-only encoding — the
@@ -2039,24 +1908,6 @@ object Multimodal {
       y_dc_sum: Long, y_dc_min: Long, y_dc_max: Long,
       cb_dc_sum: Long, cb_dc_min: Long, cb_dc_max: Long,
       cr_dc_sum: Long, cr_dc_min: Long, cr_dc_max: Long)
-
-  /** Partition-parallel REAL baseline-JPEG decode of a payload column —
-    * grayscale AND color payloads (the feature shape pools channels;
-    * [[decodeJpegColorFeatures]] is the per-channel color surface).
-    */
-  def decodeJpegFeatures(spark: SparkSession, media: DataFrame): Dataset[JpegFeatures] = {
-    import spark.implicits._
-    media.select(col("doc_id"), col("payload")).as[(Long, Array[Byte])]
-      .mapPartitions(_.map { case (id, payload) => JpegCodec.decode(id, payload) })
-  }
-
-  /** Partition-parallel color-JPEG decode to per-channel DC stats. */
-  def decodeJpegColorFeatures(
-      spark: SparkSession, media: DataFrame): Dataset[JpegColorFeatures] = {
-    import spark.implicits._
-    media.select(col("doc_id"), col("payload")).as[(Long, Array[Byte])]
-      .mapPartitions(_.map { case (id, payload) => JpegCodec.decodeColor(id, payload) })
-  }
 
   /** Deterministic COLOR baseline-JPEG payloads from document text —
     * [[toJpeg]]'s three-channel twin (VERDICT r19 #1): every 3
@@ -2105,7 +1956,8 @@ object Multimodal {
       dc_sum: Long, dc_min: Long, dc_max: Long, scan_bits: Long,
       recon_sum: Long)
 
-  /** [[decodeJpegFeatures]] with QUARANTINE semantics — what a corpus-
+  /** The JPEG feature decode ([[JpegCodec.decode]] through [[decodeEach]])
+    * with QUARANTINE semantics — what a corpus-
     * scale decode actually needs: a malformed payload must become an
     * inspectable row, never a task failure that kills the scan. Decode
     * errors land as `(ok = false, err_kind = <exception class>)` with
@@ -2113,21 +1965,18 @@ object Multimodal {
     * Same pattern as the PERMISSIVE quarantine readers in
     * [[graft.sources]], applied to binary payloads.
     */
-  def decodeJpegQuarantine(spark: SparkSession, media: DataFrame): Dataset[JpegQuarantineRow] = {
-    import spark.implicits._
-    media.select(col("doc_id"), col("payload")).as[(Long, Array[Byte])]
-      .mapPartitions(_.map { case (id, payload) =>
-        try {
-          val f = JpegCodec.decode(id, payload)
-          JpegQuarantineRow(id, ok = true, "", f.width, f.height, f.n_blocks,
-            f.dc_sum, f.dc_min, f.dc_max, f.scan_bits, f.recon_sum)
-        } catch {
-          case e: Exception =>
-            JpegQuarantineRow(id, ok = false, e.getClass.getSimpleName,
-              0, 0, 0L, 0L, 0L, 0L, 0L, 0L)
-        }
-      })
-  }
+  def decodeJpegQuarantine(spark: SparkSession, media: DataFrame): Dataset[JpegQuarantineRow] =
+    decodeEach(media) { (id, payload) =>
+      try {
+        val f = JpegCodec.decode(id, payload)
+        JpegQuarantineRow(id, ok = true, "", f.width, f.height, f.n_blocks,
+          f.dc_sum, f.dc_min, f.dc_max, f.scan_bits, f.recon_sum)
+      } catch {
+        case e: Exception =>
+          JpegQuarantineRow(id, ok = false, e.getClass.getSimpleName,
+            0, 0, 0L, 0L, 0L, 0L, 0L, 0L)
+      }
+    }
 
   /** Minimal-but-real baseline JPEG codec (ITU-T T.81, SOF0): marker/
     * segment grammar, DQT (8-bit, zigzag), SOF0 (8-bit grayscale,
@@ -2564,9 +2413,9 @@ object Multimodal {
       // (3-component YCbCr), and since r20 the router decodes them
       // instead of modeling every image as luma-only (VERDICT r19 #1).
       if (sofComponents(id, p) == 3) colorAsFeatures(id, p)
-      else decodeGrayFeatures(id, p)
+      else grayFeatures(id, p)
 
-    private def decodeGrayFeatures(id: Long, p: Array[Byte]): JpegFeatures = {
+    private def grayFeatures(id: Long, p: Array[Byte]): JpegFeatures = {
       val hd = parseHeaders(id, p)
       var dcSum = 0L
       var dcMin = Long.MaxValue
@@ -2622,17 +2471,6 @@ object Multimodal {
     private val CosT: Array[Array[Double]] =
       Array.tabulate(8, 8)((x, u) => math.cos((2 * x + 1) * u * math.Pi / 16))
 
-    /** General grayscale baseline encoder — the transform path's output
-      * half: edge-replicated 8×8 blocks, DC quantized by the SAME exact
-      * integer formula as [[encode]] (`(Σs − 8192 + 64) quot 128` — so
-      * an SQL oracle replays every decoded DC from the pixel sums),
-      * ACs through the float forward DCT quantized at step [[QDc]]
-      * (round-half-up — compressor-owned precision the gates never
-      * hash), zigzag run-length Huffman coding with ZRL/EOB against the
-      * standard Annex K tables. Emits the same restricted-but-real
-      * stream class the decoder accepts: 8-bit, single component,
-      * multi-block-row SOF0.
-      */
     /** Encode ONE 8×8 block gathered from `plane` (a `pw`×`ph` raster,
       * edge-replicated past its bounds — the standard MCU padding) at
       * block position (bx, by): exact-integer quantized DC
@@ -2743,6 +2581,17 @@ object Multimodal {
       dc.toInt
     }
 
+    /** General grayscale baseline encoder — the transform path's output
+      * half: edge-replicated 8×8 blocks, DC quantized by the SAME exact
+      * integer formula as [[encode]] (`(Σs − 8192 + 64) quot 128` — so
+      * an SQL oracle replays every decoded DC from the pixel sums),
+      * ACs through the float forward DCT quantized at step [[QDc]]
+      * (round-half-up — compressor-owned precision the gates never
+      * hash), zigzag run-length Huffman coding with ZRL/EOB against the
+      * standard Annex K tables. Emits the same restricted-but-real
+      * stream class the decoder accepts: 8-bit, single component,
+      * multi-block-row SOF0.
+      */
     def encodeGray(w: Int, h: Int, pix: Array[Int]): Array[Byte] = {
       require(w >= 1 && h >= 1, s"degenerate raster ${w}x$h")
       require(w <= 65535 && h <= 65535, s"SOF0 geometry overflow: ${w}x$h")

@@ -834,7 +834,7 @@ object StreamingOps {
           .select(col("vec_id"), col("qe"), col("bucket"))
         catch {
           case e: org.apache.spark.sql.AnalysisException
-              if e.getErrorClass == "PATH_NOT_FOUND" => newB.limit(0)
+              if e.getCondition == "PATH_NOT_FOUND" => newB.limit(0)
         }
       landGraphAnnEpoch(spark, basePath, batchId, newB, prior, degree, numPlanes, probeBits)
       newB.unpersist()

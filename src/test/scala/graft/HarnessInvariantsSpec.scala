@@ -145,6 +145,26 @@ class HarnessInvariantsSpec extends AnyFunSuite {
     assert(reads.isEmpty, s"per-kind merged reads: $reads")
   }
 
+  test("Multimodal keeps one table of media kinds (no per-format decode wrapper or kind-name match)") {
+    // Each kind's claim, codec, feature function and geometry field live in
+    // one entry of Multimodal's kind table; decode is one generic pass.
+    val src = read("src/main/scala/graft/operators/Multimodal.scala")
+    val wrappers = """\bdef (decode\w*Features|decodeAviSummary|extractByteHistogram)\b""".r
+      .findAllMatchIn(src).map(_.group(1)).toSeq
+    assert(wrappers.isEmpty, s"per-format decode wrappers: $wrappers")
+    // Each kind name is spelled once — in its table entry — so no code
+    // outside the table can match on it.
+    for (kind <- Seq("pgm", "ppm", "wav", "avi", "bmp", "png", "jpeg")) {
+      val n = s""""$kind"""".r.findAllMatchIn(src).size
+      assert(n === 1, s""""$kind" appears $n times in Multimodal.scala""")
+    }
+    val entry = read("src/main/scala/graft/SparkEntry.scala")
+    val at = entry.indexOf("def routerGeometry(")
+    assert(at >= 0, "SparkEntry.routerGeometry moved")
+    val body = entry.substring(at, entry.indexOf("\n\n", at))
+    assert(!body.contains("when("), s"per-kind arms in routerGeometry:\n$body")
+  }
+
   test("Bench.cpuSuffixed splices the core count before the file extension only") {
     assert(Bench.cpuSuffixed("bench_results.json", 4) === "bench_results_c4.json")
     assert(Bench.cpuSuffixed("out.d/results", 4) === "out.d/results_c4")

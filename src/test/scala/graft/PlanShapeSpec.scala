@@ -594,11 +594,15 @@ class PlanShapeSpec extends SparkSpec {
     val docs = spark.read.parquet(s"$dir/documents.parquet")
     // resize and resample are per-payload codec chains end to end — any
     // exchange means payloads started travelling.
-    val resized = Multimodal.decodePgmFeatures(
-      spark, Multimodal.resize(spark, Multimodal.toPgm(docs), Multimodal.Codec.Pgm, Multimodal.Box(4))).toDF()
+    val resized = Multimodal.decodeEach(
+      Multimodal.resize(spark, Multimodal.toPgm(docs), Multimodal.Codec.Pgm, Multimodal.Box(4)))(
+      Multimodal.pgmFeatures)
+      .toDF()
     assert(shuffles(resized) === 0, s"image resize grew a shuffle:\n${plan(resized)}")
-    val resampled = Multimodal.decodeWavFeatures(
-      spark, Multimodal.resize(spark, Multimodal.toWav16(docs), Multimodal.Codec.Wav, Multimodal.Box(4))).toDF()
+    val resampled = Multimodal.decodeEach(
+      Multimodal.resize(spark, Multimodal.toWav16(docs), Multimodal.Codec.Wav, Multimodal.Box(4)))(
+      Multimodal.wavFeatures)
+      .toDF()
     assert(shuffles(resampled) === 0, s"audio resample grew a shuffle:\n${plan(resampled)}")
     // The quarantined router: eight filtered passes, no shuffle, and no
     // exchange ever carries a payload.
@@ -607,8 +611,10 @@ class PlanShapeSpec extends SparkSpec {
     assert(shuffles(invDf) === 0, s"media inventory grew a shuffle:\n${plan(invDf)}")
     // r18: the video member of the transform triple, and the quarantined
     // transform pass — both stay per-payload codec chains.
-    val vResized = Multimodal.decodeAviSummary(
-      spark, Multimodal.resize(spark, Multimodal.toAvi(docs), Multimodal.Codec.Avi, Multimodal.Box(4))).toDF()
+    val vResized = Multimodal.decodeEach(
+      Multimodal.resize(spark, Multimodal.toAvi(docs), Multimodal.Codec.Avi, Multimodal.Box(4)))(
+      Multimodal.aviFeatures)
+      .toDF()
     assert(shuffles(vResized) === 0, s"video resize grew a shuffle:\n${plan(vResized)}")
     val tInv = Multimodal.mediaTransformInventory(
       spark, Multimodal.toPgm(docs).select("doc_id", "payload"))

@@ -258,14 +258,14 @@ class TextMultimodalSpec extends SparkSpec {
 
   test("stub feature extraction: histogram over byte values sums to 1") {
     val media = Multimodal.toMedia(docs)
-    val feats = Multimodal.extractByteHistogram(spark, media).collect()
+    val feats = Multimodal.decodeEach(media)(Multimodal.histogramFeatures).collect()
     assert(feats.length === 2)
     feats.foreach { f =>
       assert(f.features.length === 16)
       assert(math.abs(f.features.sum - 1.0f) < 1e-3)
     }
     // Deterministic: same input → same features.
-    val again = Multimodal.extractByteHistogram(spark, media).collect()
+    val again = Multimodal.decodeEach(media)(Multimodal.histogramFeatures).collect()
     assert(feats.sortBy(_.doc_id).map(_.features) === again.sortBy(_.doc_id).map(_.features))
   }
 
@@ -289,35 +289,35 @@ class TextMultimodalSpec extends SparkSpec {
     assert(histRow.isNullAt(histRow.fieldIndex("pgm")) && histRow.isNullAt(histRow.fieldIndex("ppm")))
     assert(histRow.getSeq[Float](histRow.fieldIndex("histogram")).length === 16)
     // Router output agrees with the direct decoder paths bit-for-bit.
-    val direct = Multimodal.decodePgmFeatures(
-      spark, Multimodal.toPgm(docs.filter(col("doc_id") === 0L))).collect().head
+    val direct = Multimodal.decodeEach(
+      Multimodal.toPgm(docs.filter(col("doc_id") === 0L)))(Multimodal.pgmFeatures).collect().head
     assert(pgmRow.getAs[org.apache.spark.sql.Row]("pgm").getAs[Double]("mean_px")
       === direct.mean_px.get)
   }
 
   test("PGM decoder parses a hand-built P5 fixture: comments, multi-digit dims, raster moments") {
-    import Multimodal.PgmDecoder
+    import Multimodal.pgmFeatures
     // 13×2 image, maxval 200, comment between magic and dims, mixed
     // whitespace between header tokens — every parser branch exercised.
     val raster = (0 until 26).map(i => (i * 7 % 200).toByte).toArray
     val header = "P5\n# a comment the parser must skip\n13\t2  # trailing comment\n200\n"
-    val f = PgmDecoder.decode(42L, header.getBytes("US-ASCII") ++ raster)
+    val f = pgmFeatures(42L, header.getBytes("US-ASCII") ++ raster)
     assert(f.width === 13 && f.height === 2 && f.max_val === 200 && f.n_px === 26L)
     val px = raster.map(_ & 0xff)
     assert(f.mean_px === Some(px.sum.toDouble / 26.0))
     assert(f.min_px === Some(px.min) && f.max_px === Some(px.max))
     // Zero-pixel image decodes to empty moments, not a crash.
-    val empty = PgmDecoder.decode(7L, "P5\n0 1\n255\n".getBytes("US-ASCII"))
+    val empty = pgmFeatures(7L, "P5\n0 1\n255\n".getBytes("US-ASCII"))
     assert(empty.n_px === 0L && empty.mean_px === None)
     // Malformed inputs THROW instead of returning garbage.
     intercept[IllegalArgumentException] { // wrong magic (P2 is ASCII PGM)
-      PgmDecoder.decode(0L, "P2\n2 1\n255\n ab".getBytes("US-ASCII"))
+      pgmFeatures(0L, "P2\n2 1\n255\n ab".getBytes("US-ASCII"))
     }
     intercept[IllegalArgumentException] { // truncated raster
-      PgmDecoder.decode(0L, ("P5\n5 5\n255\nab").getBytes("US-ASCII"))
+      pgmFeatures(0L, ("P5\n5 5\n255\nab").getBytes("US-ASCII"))
     }
     intercept[IllegalArgumentException] { // maxval needs two bytes/px
-      PgmDecoder.decode(0L, "P5\n1 1\n65535\n  ".getBytes("US-ASCII"))
+      pgmFeatures(0L, "P5\n1 1\n65535\n  ".getBytes("US-ASCII"))
     }
   }
 
@@ -325,7 +325,7 @@ class TextMultimodalSpec extends SparkSpec {
     val media = Multimodal.toPgm(docs)
     // The payload is a real PGM: raster bytes ARE the document bytes, so
     // the decoded moments must equal the text's codepoint moments.
-    val feats = Multimodal.decodePgmFeatures(spark, media)
+    val feats = Multimodal.decodeEach(media)(Multimodal.pgmFeatures)
       .collect().map(f => f.doc_id -> f).toMap
     docs.collect().foreach { r =>
       val id = r.getAs[Long]("doc_id")
@@ -338,25 +338,25 @@ class TextMultimodalSpec extends SparkSpec {
   }
 
   test("PPM decoder parses a hand-built P6 fixture to per-channel means") {
-    import Multimodal.PpmDecoder
+    import Multimodal.ppmFeatures
     // 4×1 RGB image: R = 10,40,70,100; G = 20,50,80,110; B = 30,60,90,120.
     val raster = (0 until 12).map(i => (10 * (i + 1)).toByte).toArray
-    val f = PpmDecoder.decode(1L, "P6\n# color\n4 1\n255\n".getBytes("US-ASCII") ++ raster)
+    val f = ppmFeatures(1L, "P6\n# color\n4 1\n255\n".getBytes("US-ASCII") ++ raster)
     assert(f.width === 4 && f.height === 1 && f.n_px === 4L)
     assert(f.r_mean === Some((10 + 40 + 70 + 100) / 4.0))
     assert(f.g_mean === Some((20 + 50 + 80 + 110) / 4.0))
     assert(f.b_mean === Some((30 + 60 + 90 + 120) / 4.0))
     assert(f.min_px === Some(10) && f.max_px === Some(120))
     intercept[IllegalArgumentException] { // P5 payload is not a P6
-      PpmDecoder.decode(0L, "P5\n1 1\n255\n x".getBytes("US-ASCII"))
+      ppmFeatures(0L, "P5\n1 1\n255\n x".getBytes("US-ASCII"))
     }
     intercept[IllegalArgumentException] { // raster must hold 3 bytes/px
-      PpmDecoder.decode(0L, "P6\n2 1\n255\nabcd".getBytes("US-ASCII"))
+      ppmFeatures(0L, "P6\n2 1\n255\nabcd".getBytes("US-ASCII"))
     }
   }
 
   test("toPpm payloads round-trip through the color decoder to channel byte means") {
-    val feats = Multimodal.decodePpmFeatures(spark, Multimodal.toPpm(docs))
+    val feats = Multimodal.decodeEach(Multimodal.toPpm(docs))(Multimodal.ppmFeatures)
       .collect().map(f => f.doc_id -> f).toMap
     docs.collect().foreach { r =>
       val id = r.getAs[Long]("doc_id")
@@ -511,10 +511,10 @@ class TextMultimodalSpec extends SparkSpec {
   }
 
   test("WAV decoder parses the codegen'd RIFF payload and a hand-built 16-bit PCM fixture") {
-    import Multimodal.{WavDecoder, toWav, decodeWavFeatures}
+    import Multimodal.{decodeEach, toWav, wavFeatures}
     // Round-trip: the expression-built WAV decodes to the text's byte moments.
     val d = Seq((7L, "Hello WAV")).toDF("doc_id", "text")
-    val f = decodeWavFeatures(spark, toWav(d)).collect().head
+    val f = decodeEach(toWav(d))(wavFeatures).collect().head
     val bytes = "Hello WAV".getBytes("US-ASCII").map(_ & 0xff)
     assert(f.n_channels === 1 && f.sample_rate === 8000 && f.bits_per_sample === 8)
     assert(f.n_samples === bytes.length.toLong)
@@ -532,7 +532,7 @@ class TextMultimodalSpec extends SparkSpec {
     val dataCh = "data".getBytes("US-ASCII") ++ le(data.length, 4) ++ data
     val body = "WAVE".getBytes("US-ASCII") ++ extra ++ fmt ++ dataCh
     val wav = "RIFF".getBytes("US-ASCII") ++ le(body.length, 4) ++ body
-    val g = WavDecoder.decode(9L, wav)
+    val g = wavFeatures(9L, wav)
     assert(g.n_channels === 2 && g.sample_rate === 44100 && g.bits_per_sample === 16)
     assert(g.n_samples === samples.length.toLong)
     assert(g.min_amp === Some(-32768) && g.max_amp === Some(32767))
@@ -540,20 +540,20 @@ class TextMultimodalSpec extends SparkSpec {
 
     // Malformed inputs THROW: bad tag, size lie, non-PCM codec.
     intercept[IllegalArgumentException] {
-      WavDecoder.decode(0L, "RIFX1234WAVE".getBytes("US-ASCII") ++ new Array[Byte](32))
+      wavFeatures(0L, "RIFX1234WAVE".getBytes("US-ASCII") ++ new Array[Byte](32))
     }
     intercept[IllegalArgumentException] { // mp3 codec id (0x55) inside fmt
       val badFmt = "fmt ".getBytes("US-ASCII") ++ le(16, 4) ++
         le(0x55, 2) ++ le(1, 2) ++ le(8000, 4) ++ le(8000, 4) ++ le(1, 2) ++ le(8, 2)
       val b2 = "WAVE".getBytes("US-ASCII") ++ badFmt ++ "data".getBytes("US-ASCII") ++ le(0, 4)
-      WavDecoder.decode(0L, "RIFF".getBytes("US-ASCII") ++ le(b2.length, 4) ++ b2)
+      wavFeatures(0L, "RIFF".getBytes("US-ASCII") ++ le(b2.length, 4) ++ b2)
     }
   }
 
   test("toWav16 payloads round-trip through the decoder's signed 16-bit path") {
-    import Multimodal.{toWav16, decodeWavFeatures}
+    import Multimodal.{decodeEach, toWav16, wavFeatures}
     val d = Seq((3L, "Hello WAV"), (4L, "")).toDF("doc_id", "text")
-    val out = decodeWavFeatures(spark, toWav16(d)).collect().sortBy(_.doc_id)
+    val out = decodeEach(toWav16(d))(wavFeatures).collect().sortBy(_.doc_id)
     val amps = "Hello WAV".getBytes("US-ASCII").map(b => ((b & 0xff) - 128) * 256)
     val f = out(0)
     assert(f.n_channels === 1 && f.sample_rate === 8000 && f.bits_per_sample === 16)
@@ -568,7 +568,7 @@ class TextMultimodalSpec extends SparkSpec {
     // Non-ASCII UTF-8 bytes (>= 0x80) must byte-center too, not
     // silently mis-encode: the nibble translate wraps mod 16.
     val uni = Seq((5L, "café")).toDF("doc_id", "text") // bytes: 63 61 66 c3 a9
-    val f2 = decodeWavFeatures(spark, toWav16(uni)).collect().head
+    val f2 = decodeEach(toWav16(uni))(wavFeatures).collect().head
     val uniAmps = "café".getBytes("UTF-8").map(b => ((b & 0xff) - 128) * 256)
     assert(f2.n_samples === uniAmps.length.toLong)
     assert(f2.min_amp === Some(uniAmps.min) && f2.max_amp === Some(uniAmps.max))
@@ -786,9 +786,9 @@ class TextMultimodalSpec extends SparkSpec {
   }
 
   test("toWavMuLaw payloads round-trip through the decoder's format-7 expand path") {
-    import Multimodal.{decodeWavFeatures, muLawDecodeByte, muLawEncodeSample, toWavMuLaw}
+    import Multimodal.{decodeEach, muLawDecodeByte, muLawEncodeSample, toWavMuLaw, wavFeatures}
     val d = Seq((3L, "Hello WAV"), (4L, ""), (5L, "odd")).toDF("doc_id", "text")
-    val out = decodeWavFeatures(spark, toWavMuLaw(d)).collect().sortBy(_.doc_id)
+    val out = decodeEach(toWavMuLaw(d))(wavFeatures).collect().sortBy(_.doc_id)
     val amps = "Hello WAV".getBytes("US-ASCII")
       .map(b => muLawDecodeByte(muLawEncodeSample(((b & 0xff) - 128) * 256)))
     val f = out(0)
@@ -809,7 +809,7 @@ class TextMultimodalSpec extends SparkSpec {
         "concat(substring(payload, 1, 20), unhex('0700'), substring(payload, 23)) AS payload",
         "meta")
     val ex = intercept[org.apache.spark.SparkException] {
-      decodeWavFeatures(spark, bad).collect()
+      decodeEach(bad)(wavFeatures).collect()
     }
     assert(ex.getMessage.contains("mu-law is 8-bit by definition")
       || Option(ex.getCause).exists(_.getMessage.contains("mu-law is 8-bit by definition")))
@@ -858,7 +858,7 @@ class TextMultimodalSpec extends SparkSpec {
 
   test("BMP decoder honors bottom-up AND top-down rows, stride padding, BGR order") {
     for (bottomUp <- Seq(true, false)) {
-      val f = Multimodal.BmpDecoder.decode(7L, bmpFixture(bottomUp))
+      val f = Multimodal.bmpFeatures(7L, bmpFixture(bottomUp))
       assert(f.width === 2 && f.height === 2 && f.bit_count === 24 && f.n_px === 4L)
       assert(f.r_mean === Some((10 + 40 + 70 + 100) / 4.0))
       assert(f.g_mean === Some((20 + 50 + 80 + 110) / 4.0))
@@ -870,13 +870,13 @@ class TextMultimodalSpec extends SparkSpec {
     }
     val bad = bmpFixture(true)
     bad(28) = 8 // bit count 8
-    intercept[IllegalArgumentException](Multimodal.BmpDecoder.decode(7L, bad))
+    intercept[IllegalArgumentException](Multimodal.bmpFeatures(7L, bad))
   }
 
   test("toBmp payloads round-trip through the BMP decoder to text byte moments") {
     val docs = Seq((0L, "abcdefgh", "en", "s", 8L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val f = Multimodal.decodeBmpFeatures(spark, Multimodal.toBmp(docs)).collect().head
+    val f = Multimodal.decodeEach(Multimodal.toBmp(docs))(Multimodal.bmpFeatures).collect().head
     // w = 8 div 6 = 1: top row pixel (97,98,99), bottom (100,101,102);
     // stride 4 (row bytes 3 + 1 pad).
     assert(f.width === 1 && f.height === 2 && f.n_px === 2L)
@@ -945,7 +945,7 @@ class TextMultimodalSpec extends SparkSpec {
     val d = Seq((1L, "abcdefghij", "en", "s", 10L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
     val resized = Multimodal.resize(spark, Multimodal.toPgm(d), Codec.Pgm, Box(4))
-    val f = Multimodal.decodePgmFeatures(spark, resized).collect().head
+    val f = Multimodal.decodeEach(resized)(Multimodal.pgmFeatures).collect().head
     assert(f.width === 2 && f.height === 1 && f.n_px === 2L)
     assert(f.min_px === Some(98) && f.max_px === Some(102))
     assert(f.mean_px === Some(100.0))
@@ -953,8 +953,8 @@ class TextMultimodalSpec extends SparkSpec {
     val raster = Array(10, 20, 30, 40, 50, 60, 70, 80).map(_.toByte)
     val payload = "P5\n4 2\n255\n".getBytes("US-ASCII") ++ raster
     val media2 = Seq((2L, payload)).toDF("doc_id", "payload")
-    val f2 = Multimodal.decodePgmFeatures(
-      spark, Multimodal.resize(spark, media2, Codec.Pgm, Box(2, 2))).collect().head
+    val f2 = Multimodal.decodeEach(
+      Multimodal.resize(spark, media2, Codec.Pgm, Box(2, 2)))(Multimodal.pgmFeatures).collect().head
     assert(f2.width === 2 && f2.height === 1)
     assert(f2.min_px === Some((10 + 20 + 50 + 60) / 4) &&
       f2.max_px === Some((30 + 40 + 70 + 80) / 4))
@@ -972,16 +972,18 @@ class TextMultimodalSpec extends SparkSpec {
     //   amps sum block 0 = ((97+98+99+100)-4*128)*256 = (394-512)*256 = -30208 → /4 = -7552
     //   block 1 = ((101+102+103+104)-512)*256 = (410-512)*256 = -26112 → /4 = -6528
     val d = Seq((1L, "abcdefgh", "en", "s", 8L)).toDF("doc_id", "text", "lang", "source", "n_chars")
-    val f = Multimodal.decodeWavFeatures(
-      spark, Multimodal.resize(spark, Multimodal.toWav16(d), Codec.Wav, Box(4))).collect().head
+    val f = Multimodal.decodeEach(
+      Multimodal.resize(spark, Multimodal.toWav16(d), Codec.Wav, Box(4)))(Multimodal.wavFeatures)
+      .collect().head
     assert(f.n_channels === 1 && f.sample_rate === 2000 && f.bits_per_sample === 16)
     assert(f.n_samples === 2L)
     assert(f.min_amp === Some(-7552) && f.max_amp === Some(-6528))
     assert(f.mean_amp === Some((-7552.0 - 6528.0) / 2))
     // mu-law input accepted (decodes to values that don't divide evenly);
     // tail block dropped; resampled stream still a decodable WAV.
-    val mu = Multimodal.decodeWavFeatures(
-      spark, Multimodal.resize(spark, Multimodal.toWavMuLaw(d), Codec.Wav, Box(3))).collect().head
+    val mu = Multimodal.decodeEach(
+      Multimodal.resize(spark, Multimodal.toWavMuLaw(d), Codec.Wav, Box(3)))(Multimodal.wavFeatures)
+      .collect().head
     assert(mu.n_samples === 2L && mu.sample_rate === 2666)
     assert(mu.bits_per_sample === 16)
     // TRUNCATED mean on a negative non-divisible sum — DuckDB's // rounds
@@ -999,8 +1001,8 @@ class TextMultimodalSpec extends SparkSpec {
       .put("data".getBytes("US-ASCII")).putInt(6)
     neg.foreach(bb.putShort)
     val negWav = Seq((9L, bb.array())).toDF("doc_id", "payload")
-    val nf = Multimodal.decodeWavFeatures(
-      spark, Multimodal.resize(spark, negWav, Codec.Wav, Box(3))).collect().head
+    val nf = Multimodal.decodeEach(
+      Multimodal.resize(spark, negWav, Codec.Wav, Box(3)))(Multimodal.wavFeatures).collect().head
     assert(nf.n_samples === 1L && nf.min_amp === Some(-2) && nf.max_amp === Some(-2))
     // A stream shorter than one block yields NO row (the oracle's empty
     // GROUP BY), not an n_samples=0 WAV.
@@ -1012,7 +1014,7 @@ class TextMultimodalSpec extends SparkSpec {
     val d = Seq((1L, "abcdefghijklmnopqrstuv", "en", "s", 22L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
     val resized = Multimodal.resize(spark, Multimodal.toAvi(d), Codec.Avi, Box(4))
-    val sum = Multimodal.decodeAviSummary(spark, resized).collect().head
+    val sum = Multimodal.decodeEach(resized)(Multimodal.aviFeatures).collect().head
     assert(sum.n_frames === 2 && sum.n_frame_bytes === 5L)
     // f0 means: (97..100)/4=98, 102, 106, 110; f1: (113..116)/4=114.
     assert(sum.mean_byte === Some((98 + 102 + 106 + 110 + 114) / 5.0))
@@ -1080,8 +1082,9 @@ class TextMultimodalSpec extends SparkSpec {
     // R = mean('a','d','g','j') = (97+100+103+106)/4 = 101.
     val d = Seq((1L, "abcdefghijklmnopqrstuvwx", "en", "s", 24L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val f = Multimodal.decodePpmFeatures(
-      spark, Multimodal.resize(spark, Multimodal.toPpm(d), Codec.Ppm, Box(4))).collect().head
+    val f = Multimodal.decodeEach(
+      Multimodal.resize(spark, Multimodal.toPpm(d), Codec.Ppm, Box(4)))(Multimodal.ppmFeatures)
+      .collect().head
     assert(f.width === 2 && f.height === 1 && f.n_px === 2L)
     assert(f.r_mean === Some((101 + 113) / 2.0))
     assert(f.g_mean === Some((102 + 114) / 2.0))
@@ -1098,8 +1101,9 @@ class TextMultimodalSpec extends SparkSpec {
     // Row 0 ch0 = mean('a','d','g','j') = 101; row 1 ch0 = 113 (trunc).
     val d = Seq((1L, "abcdefghijklmnopqrstuvwx", "en", "s", 24L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val f = Multimodal.decodePngFeatures(
-      spark, Multimodal.resize(spark, Multimodal.toPng(d), Codec.Png, Box(4))).collect().head
+    val f = Multimodal.decodeEach(
+      Multimodal.resize(spark, Multimodal.toPng(d), Codec.Png, Box(4)))(Multimodal.pngFeatures)
+      .collect().head
     assert(f.width === 1 && f.height === 2 && f.n_px === 2L)
     assert(f.r_mean === Some((101 + 113) / 2.0))
     assert(f.g_mean === Some((102 + 114) / 2.0))
@@ -1107,8 +1111,9 @@ class TextMultimodalSpec extends SparkSpec {
     assert(f.min_px === Some(101) && f.max_px === Some(115))
     assert(f.top_row_mean === Some((101 + 102 + 103) / 3.0))
     // 2-D: ky=2 folds both rows into one; block = 2×2 pixels per channel.
-    val f2 = Multimodal.decodePngFeatures(
-      spark, Multimodal.resize(spark, Multimodal.toPng(d), Codec.Png, Box(2, 2))).collect().head
+    val f2 = Multimodal.decodeEach(
+      Multimodal.resize(spark, Multimodal.toPng(d), Codec.Png, Box(2, 2)))(Multimodal.pngFeatures)
+      .collect().head
     assert(f2.width === 2 && f2.height === 1)
     assert(f2.min_px === Some((97 + 100 + 109 + 112) / 4))
     // Sub-block input drops; the router still claims the resized output.
@@ -1126,8 +1131,9 @@ class TextMultimodalSpec extends SparkSpec {
     // slip in either codec half shows up as a disagreement here.
     val d = Seq((1L, "abcdefghijklmnopqrstuvwx", "en", "s", 24L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val f = Multimodal.decodeBmpFeatures(
-      spark, Multimodal.resize(spark, Multimodal.toBmp(d), Codec.Bmp, Box(4))).collect().head
+    val f = Multimodal.decodeEach(
+      Multimodal.resize(spark, Multimodal.toBmp(d), Codec.Bmp, Box(4)))(Multimodal.bmpFeatures)
+      .collect().head
     assert(f.width === 1 && f.height === 2 && f.n_px === 2L && f.bit_count === 24)
     assert(f.r_mean === Some((101 + 113) / 2.0))
     assert(f.g_mean === Some((102 + 114) / 2.0))
@@ -1135,8 +1141,9 @@ class TextMultimodalSpec extends SparkSpec {
     assert(f.min_px === Some(101) && f.max_px === Some(115))
     assert(f.top_row_mean === Some((101 + 102 + 103) / 3.0))
     // ky=2: both rows fold — matches resizePng's 2-D case exactly.
-    val f2 = Multimodal.decodeBmpFeatures(
-      spark, Multimodal.resize(spark, Multimodal.toBmp(d), Codec.Bmp, Box(2, 2))).collect().head
+    val f2 = Multimodal.decodeEach(
+      Multimodal.resize(spark, Multimodal.toBmp(d), Codec.Bmp, Box(2, 2)))(Multimodal.bmpFeatures)
+      .collect().head
     assert(f2.width === 2 && f2.height === 1)
     assert(f2.min_px === Some((97 + 100 + 109 + 112) / 4))
     // Sub-block drops; output stride padding still decodes (width 1 →
@@ -1526,7 +1533,7 @@ class TextMultimodalSpec extends SparkSpec {
   test("PNG codec: real zlib round-trip, Sub filter un-filtered, compression observed") {
     val text = ("abcdef" * 40) + "xyzw"  // 244 bytes -> w=40, trailing 4 dropped
     val corpus = Seq(doc(5L, text)).toDF("doc_id", "text", "lang", "source", "n_chars")
-    val f = Multimodal.decodePngFeatures(spark, Multimodal.toPng(corpus)).collect()(0)
+    val f = Multimodal.decodeEach(Multimodal.toPng(corpus))(Multimodal.pngFeatures).collect()(0)
     assert(f.width === 40 && f.height === 2 && f.bit_depth === 8 && f.color_type === 2)
     assert(f.n_px === 80L)
     // Expected moments straight from the text bytes (image order).
@@ -1545,9 +1552,9 @@ class TextMultimodalSpec extends SparkSpec {
     // Flip one byte inside the IDAT data region: CRC must catch it.
     val corrupted = good.clone()
     corrupted(good.length - 20) = (corrupted(good.length - 20) ^ 0x5a).toByte
-    intercept[Exception] { Multimodal.PngCodec.decode(0L, corrupted) }
-    intercept[Exception] { Multimodal.PngCodec.decode(0L, good.take(good.length - 6)) }
-    intercept[Exception] { Multimodal.PngCodec.decode(0L, "not a png at all".getBytes) }
+    intercept[Exception] { Multimodal.pngFeatures(0L, corrupted) }
+    intercept[Exception] { Multimodal.pngFeatures(0L, good.take(good.length - 6)) }
+    intercept[Exception] { Multimodal.pngFeatures(0L, "not a png at all".getBytes) }
     // Foreign file with an Up-filtered second row: build it by hand.
     def be32(v: Long) = Array(((v >> 24) & 0xff).toByte, ((v >> 16) & 0xff).toByte,
       ((v >> 8) & 0xff).toByte, (v & 0xff).toByte)
@@ -1566,7 +1573,7 @@ class TextMultimodalSpec extends SparkSpec {
     val sig = Array(0x89, 'P', 'N', 'G', '\r', '\n', 0x1a, '\n').map(_.toByte)
     val png = sig ++ chunk("IHDR", be32(w.toLong) ++ be32(2L) ++ Array[Byte](8, 2, 0, 0, 0)) ++
       chunk("IDAT", out.toByteArray) ++ chunk("IEND", Array.emptyByteArray)
-    val f = Multimodal.PngCodec.decode(9L, png)
+    val f = Multimodal.pngFeatures(9L, png)
     assert(f.top_row_mean.get === (10 + 20 + 30 + 40 + 50 + 60) / 6.0)
     // Overall means include the Up-reconstructed second row (11..66).
     assert(f.r_mean.get === (10 + 40 + 11 + 44) / 4.0)
@@ -1835,7 +1842,7 @@ class TextMultimodalSpec extends SparkSpec {
     val docs = texts.toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("t"))
       .withColumn("n_chars", length(col("text")).cast("long"))
-    val got = Multimodal.decodeJpegFeatures(spark, Multimodal.toJpeg(docs))
+    val got = Multimodal.decodeEach(Multimodal.toJpeg(docs))(Multimodal.JpegCodec.decode)
       .collect().map(f => f.doc_id -> f).toMap
     texts.foreach { case (id, t) =>
       val nb = t.length / 64
@@ -1951,8 +1958,9 @@ class TextMultimodalSpec extends SparkSpec {
       .toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("t"))
       .withColumn("n_chars", length(col("text")).cast("long"))
-    val pg = Multimodal.decodePgmFeatures(spark,
-        Multimodal.resize(spark, Multimodal.toPgm(docs), Codec.Pgm, Bilinear(48, 1)))
+    val pg = Multimodal.decodeEach(
+        Multimodal.resize(spark, Multimodal.toPgm(docs), Codec.Pgm, Bilinear(48, 1)))(
+        Multimodal.pgmFeatures)
       .collect().map(f => f.doc_id -> f).toMap
     assert(pg.size === 3)
     docs.select("doc_id", "text").as[(Long, String)].collect().foreach { case (id, t) =>
@@ -1976,8 +1984,9 @@ class TextMultimodalSpec extends SparkSpec {
     val cdocs = Seq(4L -> ("abc" * 20)).toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("t"))
       .withColumn("n_chars", length(col("text")).cast("long"))
-    val pp = Multimodal.decodePpmFeatures(spark,
-        Multimodal.resize(spark, Multimodal.toPpm(cdocs), Codec.Ppm, Bilinear(32, 2)))
+    val pp = Multimodal.decodeEach(
+        Multimodal.resize(spark, Multimodal.toPpm(cdocs), Codec.Ppm, Bilinear(32, 2)))(
+        Multimodal.ppmFeatures)
       .collect().head
     assert(pp.width === 32 && pp.height === 2 && pp.n_px === 64L)
     assert(pp.r_mean.get === 'a'.toInt.toDouble && pp.g_mean.get === 'b'.toInt.toDouble &&
@@ -1994,8 +2003,9 @@ class TextMultimodalSpec extends SparkSpec {
       .toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("t"))
       .withColumn("n_chars", length(col("text")).cast("long"))
-    val got = Multimodal.decodeWavFeatures(spark,
-        Multimodal.resize(spark, Multimodal.toWav16(docs), Codec.Wav, Bilinear(3000)))
+    val got = Multimodal.decodeEach(
+        Multimodal.resize(spark, Multimodal.toWav16(docs), Codec.Wav, Bilinear(3000)))(
+        Multimodal.wavFeatures)
       .collect().map(f => f.doc_id -> f).toMap
     assert(got.keySet === Set(1L, 3L), "sub-sample doc must drop")
     docs.filter(col("doc_id") =!= 2L).select("doc_id", "text").as[(Long, String)]
@@ -2169,15 +2179,18 @@ class TextMultimodalSpec extends SparkSpec {
     val d = Seq((1L, "abcdefghij", "en", "s", 10L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
     val media = Multimodal.toJpegColor(d) // 3 MCUs, 48×16
-    val f0 = Multimodal.decodeJpegColorFeatures(spark, media).collect().head
+    val f0 = Multimodal.decodeEach(media)(Multimodal.JpegCodec.decodeColor).collect().head
     assert(f0.width === 48 && f0.height === 16 && f0.n_mcus === 3L)
     // Stride 4×4: 48×16 → 12×4, still color.
-    val fr = Multimodal.decodeJpegColorFeatures(spark,
-      Multimodal.resize(spark, media, Codec.Jpeg, Box(4, 4))).collect().head
+    val fr = Multimodal.decodeEach(
+      Multimodal.resize(spark, media, Codec.Jpeg, Box(4, 4)))(Multimodal.JpegCodec.decodeColor)
+      .collect().head
     assert(fr.width === 12 && fr.height === 4 && fr.n_mcus === 1L)
     // Explicit-target 24×16 thumbnail, still color.
-    val ft = Multimodal.decodeJpegColorFeatures(spark,
-      Multimodal.resize(spark, media, Codec.Jpeg, Bilinear(24, 16))).collect().head
+    val ft = Multimodal.decodeEach(
+      Multimodal.resize(spark, media, Codec.Jpeg, Bilinear(24, 16)))(
+      Multimodal.JpegCodec.decodeColor)
+      .collect().head
     assert(ft.width === 24 && ft.height === 16 && ft.n_mcus === 2L)
     // The router's jpeg arm decodes color instead of throwing.
     val routed = Multimodal.extractFeatures(spark, media).collect().head
@@ -2267,8 +2280,9 @@ class TextMultimodalSpec extends SparkSpec {
     val docs = texts.toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("t"))
       .withColumn("n_chars", length(col("text")).cast("long"))
-    val got = Multimodal.decodeJpegFeatures(spark,
-        Multimodal.resize(spark, Multimodal.toJpeg(docs), Codec.Jpeg, Box(4)))
+    val got = Multimodal.decodeEach(
+        Multimodal.resize(spark, Multimodal.toJpeg(docs), Codec.Jpeg, Box(4)))(
+        Multimodal.JpegCodec.decode)
       .collect().map(f => f.doc_id -> f).toMap
     texts.foreach { case (id, t) =>
       val nb = t.length / 64
@@ -2296,9 +2310,10 @@ class TextMultimodalSpec extends SparkSpec {
     val d = Seq((1L, t, "en", "s", t.length.toLong))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
     val at44k = Multimodal.resize(spark, Multimodal.toWav16(d), Codec.Wav, Bilinear(44100))
-    assert(Multimodal.decodeWavFeatures(spark, at44k).collect().head.sample_rate === 44100)
-    val f = Multimodal.decodeWavFeatures(
-      spark, Multimodal.resize(spark, at44k, Codec.Wav, Box(4))).collect().head
+    assert(Multimodal.decodeEach(at44k)(Multimodal.wavFeatures)
+    .collect().head.sample_rate === 44100)
+    val f = Multimodal.decodeEach(
+      Multimodal.resize(spark, at44k, Codec.Wav, Box(4)))(Multimodal.wavFeatures).collect().head
     assert(f.sample_rate === 11025)
     assert(f.n_samples === (t.length * 44100L / 8000) / 4)
   }
@@ -2429,5 +2444,149 @@ class TextMultimodalSpec extends SparkSpec {
       .foreach(b => assert(nullability(b(fx)) === expected(framesNullable = false)))
     assert(Multimodal.toBmp(fx.withColumn("doc_id", lit(null).cast("long")))
       .schema("doc_id").nullable)
+  }
+
+  // --- the media-kind table ----------------------------------------------
+
+  /** A hand-cut truecolor PNG (CRCs real) of any geometry, including the
+    * degenerate ones [[Multimodal.PngCodec.encodeRaster]] refuses.
+    */
+  private def rawPng(w: Int, h: Int, rows: Array[Byte]): Array[Byte] = {
+    def be32(v: Long) = Array(((v >> 24) & 0xff).toByte, ((v >> 16) & 0xff).toByte,
+      ((v >> 8) & 0xff).toByte, (v & 0xff).toByte)
+    def chunk(tag: String, data: Array[Byte]) = {
+      val t = tag.getBytes("US-ASCII")
+      val c = new java.util.zip.CRC32
+      c.update(t); c.update(data)
+      be32(data.length.toLong) ++ t ++ data ++ be32(c.getValue)
+    }
+    val z = new java.util.zip.Deflater
+    z.setInput(rows); z.finish()
+    val buf = new Array[Byte](rows.length + 64)
+    val idat = java.util.Arrays.copyOf(buf, z.deflate(buf))
+    z.end()
+    Array(0x89, 'P', 'N', 'G', '\r', '\n', 0x1a, '\n').map(_.toByte) ++
+      chunk("IHDR", be32(w.toLong) ++ be32(h.toLong) ++ Array[Byte](8, 2, 0, 0, 0)) ++
+      chunk("IDAT", idat) ++ chunk("IEND", Array.emptyByteArray)
+  }
+
+  /** Fixed payloads per kind: builder output over texts from empty to
+    * multi-block, plus hand-cut edge cases — empty rasters, zero-sample
+    * WAVs, zero-frame AVIs. Doc ids are unique across kinds.
+    */
+  private def lawPayloads: Seq[(String, org.apache.spark.sql.DataFrame)] = {
+    val texts = Seq("", "ab", "abcdefg", "the quick brown fox",
+      "Pack my box with five dozen liquor jugs. Sphinx of black quartz, judge my vow!",
+      "x" * 130 + "yz" * 70)
+    def docsFrom(base: Long, ts: Seq[String]) =
+      ts.zipWithIndex.map { case (t, i) => (base + i, t) }.toDF("doc_id", "text")
+    def pp(df: org.apache.spark.sql.DataFrame) = df.select(col("doc_id"), col("payload"))
+    def raw(base: Long, bs: Array[Byte]*) =
+      bs.zipWithIndex.map { case (b, i) => (base + i, b) }.toDF("doc_id", "payload")
+    def ascii(s: String) = s.getBytes("US-ASCII")
+    val rgb = (0 until 12).map(i => (17 * i + 3).toByte).toArray
+    Seq(
+      "pgm" -> pp(Multimodal.toPgm(docsFrom(100, texts)))
+        .unionByName(raw(150, ascii("P5\n3 2\n7\n") ++ Array[Byte](0, 7, 3, 5, 1, 6),
+          ascii("P5\n4 0\n255\n"))),
+      "ppm" -> pp(Multimodal.toPpm(docsFrom(200, texts)))
+        .unionByName(raw(250, ascii("P6 2 2 255\n") ++ rgb, ascii("P6\n0 3\n255\n"))),
+      "wav" -> pp(Multimodal.toWav(docsFrom(300, texts)))
+        .unionByName(pp(Multimodal.toWav16(docsFrom(320, texts))))
+        .unionByName(pp(Multimodal.toWavMuLaw(docsFrom(340, texts))))
+        .unionByName(raw(360, Codec.Wav.encode(44100, Multimodal.Raster(0, 1, 1, Array.empty)),
+          Codec.Wav.encode(11025, Multimodal.Raster(3, 1, 1, Array(-32768, 0, 32767))))),
+      "avi" -> pp(Multimodal.toAvi(docsFrom(400, texts))),
+      "bmp" -> pp(Multimodal.toBmp(docsFrom(500, texts)))
+        .unionByName(raw(550, Codec.Bmp.encode(0, Multimodal.Raster(2, 2, 3, rgb.map(_ & 0xff))),
+          Codec.Bmp.encode(0, Multimodal.Raster(0, 2, 3, Array.empty)))),
+      "png" -> pp(Multimodal.toPng(docsFrom(600, texts.filter(_.length >= 6))))
+        .unionByName(raw(650,
+          rawPng(2, 2, Array[Byte](0) ++ rgb.take(6) ++ Array[Byte](2) ++ rgb.drop(6)),
+          rawPng(2, 0, Array.empty), rawPng(0, 2, Array[Byte](0, 0)))),
+      "jpeg" -> pp(Multimodal.toJpeg(docsFrom(700, texts.filter(_.length >= 64))))
+        .unionByName(pp(Multimodal.toJpegColor(docsFrom(720, texts.filter(_.length >= 3))))),
+      "histogram" -> pp(Multimodal.toMedia(docsFrom(800, texts))))
+  }
+
+  /** md5 over a frame's schema (with nullability) and its rows in `order`. */
+  private def rowsMd5(df: org.apache.spark.sql.DataFrame, order: String*): String = {
+    val rows = df.orderBy(order.map(col): _*).collect().map(_.toString)
+    val text = (df.schema.json +: rows).mkString("\n")
+    java.security.MessageDigest.getInstance("MD5").digest(text.getBytes("UTF-8"))
+      .map("%02x".format(_)).mkString
+  }
+
+  test("media-kind table laws: every kind's feature rows and the three routers match their goldens") {
+    val payloads = lawPayloads
+    val by = payloads.toMap
+    val features: Seq[(String, org.apache.spark.sql.DataFrame)] = Seq(
+      "pgm" -> Multimodal.decodeEach(by("pgm"))(Multimodal.pgmFeatures).toDF(),
+      "ppm" -> Multimodal.decodeEach(by("ppm"))(Multimodal.ppmFeatures).toDF(),
+      "wav" -> Multimodal.decodeEach(by("wav"))(Multimodal.wavFeatures).toDF(),
+      "avi" -> Multimodal.decodeEach(by("avi"))(Multimodal.aviFeatures).toDF(),
+      "bmp" -> Multimodal.decodeEach(by("bmp"))(Multimodal.bmpFeatures).toDF(),
+      "png" -> Multimodal.decodeEach(by("png"))(Multimodal.pngFeatures).toDF(),
+      "jpeg" -> Multimodal.decodeEach(by("jpeg"))(Multimodal.JpegCodec.decode).toDF(),
+      "jpeg_color" -> Multimodal.decodeEach(by("jpeg").filter(col("doc_id") >= 720L))(
+        Multimodal.JpegCodec.decodeColor).toDF(),
+      "histogram" -> Multimodal.decodeEach(by("histogram"))(Multimodal.histogramFeatures).toDF())
+    val lake = payloads.map(_._2).reduce(_ unionByName _)
+    val routers = Seq(
+      "extractFeatures" -> Multimodal.extractFeatures(spark, lake),
+      "mediaInventory" -> Multimodal.mediaInventory(spark, lake),
+      "mediaTransformInventory" -> Multimodal.mediaTransformInventory(spark, lake))
+    val got = features.map { case (k, df) => k -> rowsMd5(df, "doc_id") } ++
+      routers.map { case (k, df) => k -> rowsMd5(df, "doc_id", "kind") }
+    // Recorded before the per-format decode wrappers folded into the table.
+    val golden = Seq(
+      "pgm" -> "1a4b06d6ef5259d3da3ced60c5bff98a",
+      "ppm" -> "80f96f4395158e7a99363472d406c392",
+      "wav" -> "1c221fbbd5a8c5de6123f4c0270b5aef",
+      "avi" -> "72b08bc413657d793e1f935c58cd30f2",
+      "bmp" -> "b05ca546650d549175138b33e3673103",
+      "png" -> "23f62552c8d37f0f98c0f212bc22ff72",
+      "jpeg" -> "8aa754b1827bdcad4c0f26f86afd4ece",
+      "jpeg_color" -> "1f24e5392bb1124291b6b900431154c7",
+      "histogram" -> "47734b33f7add12e190309859c997e8a",
+      "extractFeatures" -> "03571a2048eb9220d2d8dd2beb5d90ba",
+      "mediaInventory" -> "1e3fd0c589590dac754ff431196e8da7",
+      "mediaTransformInventory" -> "0ee19cac195f6a8773e1eb73c8b5fc8b")
+    assert(got === golden)
+    // Every kind and the fallback route, and none quarantines.
+    val kinds = Multimodal.mediaInventory(spark, lake).collect()
+    assert(kinds.map(_.getString(1)).toSet ===
+      Set("pgm", "ppm", "wav", "avi", "bmp", "png", "jpeg", "histogram"))
+    assert(kinds.forall(_.getBoolean(2)))
+  }
+
+  test("mediaInventory's geom equals the routed geometry of extractFeatures on every mixed-lake payload") {
+    val docs = (0 until 48).map { i =>
+      (i.toLong, Seq.tabulate(i * 7 % 97)(j => ('a' + (i * 31 + j * j) % 26).toChar).mkString)
+    }.toDF("doc_id", "text")
+    val lake = SparkEntry.mixedMedia(docs)
+    val inv = Multimodal.mediaInventory(spark, lake)
+    val routed = SparkEntry.routerGeometry(Multimodal.extractFeatures(spark, lake))
+    val rows = inv.join(routed.withColumnRenamed("kind", "routed_kind")
+        .withColumnRenamed("geom", "routed_geom"), "doc_id")
+      .collect()
+    assert(rows.length === 48)
+    assert(rows.map(_.getAs[String]("kind")).toSet ===
+      Set("pgm", "ppm", "wav", "avi", "bmp", "png", "jpeg", "histogram"))
+    rows.foreach { r =>
+      assert(r.getAs[Boolean]("ok"), r)
+      assert(r.getAs[String]("kind") === r.getAs[String]("routed_kind"), r)
+      assert(r.getAs[Long]("geom") === r.getAs[Long]("routed_geom"), r)
+    }
+  }
+
+  test("PNG channel means stay exact past 2^31/255 pixels") {
+    // 4096×2160 white: each channel sums to 255·8,847,360 > 2^31.
+    val (w, h) = (4096, 2160)
+    val png = Multimodal.PngCodec.encodeRaster(Array.fill[Byte](3 * w * h)(-1), w, h)
+    val f = Multimodal.pngFeatures(1L, png)
+    assert(f.n_px === w.toLong * h)
+    assert(f.r_mean === Some(255.0) && f.g_mean === Some(255.0) && f.b_mean === Some(255.0))
+    assert(f.top_row_mean === Some(255.0))
   }
 }
